@@ -2,21 +2,18 @@ package graft.sources
 
 import scala.collection.mutable
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{CoordSystem, Region}
-import graft.formats.{BamCodec, Bgzf, BgzfRangeInputStream, GenomicIndex, SeekableInputs}
+import graft.core.CoordSystem
+import graft.formats.{BamCodec, BgzfRangeInputStream, GenomicIndex, SeekableInputs}
 import graft.formats.Bgzf.VirtualPosition
-import graft.sources.common.LineSourceUtil
+import graft.sources.common.{BgzfIndexPlanner, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown}
 
 /** DSv2 binary BAM reader (SURVEY §2.1 S2-S6).
   *
@@ -64,8 +61,14 @@ class BamDataSource extends TableProvider
         s"(${fixed.map(_.name).mkString(",")}[, tags]); got " +
         s"${schema.fieldNames.mkString(",")} — project with select() " +
         "instead of a reordered/subset schema")
-    new BamTable(schema, LineSourceUtil.resolvePaths(opts),
-      LineSourceUtil.optionsMap(opts))
+    val paths = LineSourceUtil.resolvePaths(opts)
+    // M5 catalog surface: chrom names/sizes from the header dictionary,
+    // record counts from the index pseudo-bins (bam.rs:74-89).
+    new GenomicTable(s"bam:${paths.mkString(",")}", schema,
+      LineSourceUtil.optionsMap(opts),
+      GraftTableProps.forPaths(paths, indexStats = true))(o =>
+      new GenomicScanBuilder(schema, Some("rname"))(
+        new BamScan(schema, paths, o, _)))
   }
 }
 
@@ -168,52 +171,6 @@ object BamSource {
   }
 }
 
-class BamTable(tableSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = s"bam:${paths.mkString(",")}"
-  override def schema(): StructType = tableSchema
-  // M5 catalog surface: chrom names/sizes from the header dictionary,
-  // record counts from the index pseudo-bins (bam.rs:74-89).
-  private lazy val tableProps =
-    graft.sources.common.GraftTableProps.forPaths(paths, indexStats = true)
-  override def properties(): java.util.Map[String, String] = tableProps
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new BamScanBuilder(tableSchema, paths,
-      options ++ LineSourceUtil.optionsMap(o))
-}
-
-class BamScanBuilder(fullSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = fullSchema
-  // verbatim Catalyst pruning, incl. nested tag pruning (parse hint only)
-  private var requiredNested: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(fullSchema.fields.filter(f => keep(f.name)))
-    requiredNested = requiredSchema
-  }
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case EqualTo("rname", _) => true
-      case In("rname", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pushLimit(n: Int): Boolean = { limit = n; true }
-  override def build(): Scan =
-    new BamScan(fullSchema, required, requiredNested, paths, options,
-      pushed, limit)
-}
-
 /** A BAM partition: one or more record-aligned virtual-position ranges
   * of one file (region queries pack scattered index chunks into shared
   * partitions — `GenomicIndex.packRanges`), with optional residual
@@ -226,47 +183,20 @@ case class BamInputPartition(pathStr: String, ranges: Seq[(Long, Long)],
     regions: Seq[(String, Long, Long)],
     unmappedOnly: Boolean = false) extends InputPartition
 
-class BamScan(fullSchema: StructType, required: StructType,
-    requiredNested: StructType, paths: Seq[Path],
-    options: Map[String, String], pushed: Array[Filter], limit: Int)
-    extends Scan with Batch {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = s"graft-bam ${paths.mkString(",")}" +
-    (if (pushed.nonEmpty) s" pushed=[${pushed.mkString(",")}]" else "")
-
-  private def parseRegions: Seq[Region] = {
-    val fromOption =
-      graft.sources.common.LineSourceUtil.parseRegionsOption(options)
-    // null comparands never match — drop them instead of NPE-ing the
-    // planner (isin("chr1", null) pushes an In containing null)
-    val fromFilters: Seq[Region] = pushed.toSeq.flatMap {
-      case EqualTo("rname", v) if v != null =>
-        Seq(Region(v.toString, 0L, None))
-      case In("rname", vs) =>
-        vs.toSeq.filter(_ != null).map(v => Region(v.toString, 0L, None))
-      case _ => Nil
-    }
-    // regions option takes precedence (more specific)
-    if (fromOption.nonEmpty) fromOption else fromFilters
-  }
+class BamScan(fullSchema: StructType, paths: Seq[Path],
+    options: Map[String, String], pushdown: Pushdown)
+    extends GenomicScan("bam", paths, pushdown) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
     val unmappedOnly = options.get("unmapped").exists(_.toBoolean)
-    val regions = parseRegions
+    val regions = GenomicScan.regions(options, pushdown.filters.toSeq, "rname")
 
     // caller-precomputed virtual-position ranges (scan_virtual_ranges,
     // `alignment/scanner/bam.rs:263-279`): bounds must be record starts.
     // Handled before any file-status lookup — this path needs no
     // lengths, so it stays RPC-free at planning time.
-    val explicit = options.get("virtual_ranges").toSeq
-      .flatMap(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
-      .map { s =>
-        val Array(a, b) = s.split("-")
-        (a.trim.toLong, b.trim.toLong)
-      }
+    val explicit = LineSourceUtil.parseRangesOption(options, "virtual_ranges")
     if (explicit.nonEmpty) {
       // explicit vpos ranges address one file's offsets; replaying them
       // per path would scan other files mid-record
@@ -284,7 +214,7 @@ class BamScan(fullSchema: StructType, required: StructType,
       }).toArray
     }
 
-    val (pathLens, maxSplit) = graft.sources.common.LineSourceUtil
+    val (pathLens, maxSplit) = LineSourceUtil
       .pathLensAndBudget(paths, conf, options, 64L * 1024 * 1024)
     pathLens.flatMap { case (p, fileLen) =>
       val fs = p.getFileSystem(conf)
@@ -304,7 +234,6 @@ class BamScan(fullSchema: StructType, required: StructType,
         // partition is planned
         (h, s.alignedVirtualPosition)
       } finally si.close()
-      val eof = VirtualPosition(fileLen, 0)
 
       if (unmappedOnly) {
         // start after the last indexed (mapped) chunk; prefer the metadata
@@ -316,54 +245,24 @@ class BamScan(fullSchema: StructType, required: StructType,
               .flatMap(_.bins.valuesIterator.flatMap(_.chunks.map(_.end.value)))
               .maxOption)
         }.map(VirtualPosition(_)).getOrElse(headEnd)
-        Seq(BamInputPartition(p.toString, Seq((lastMapped.value, eof.value)),
+        Seq(BamInputPartition(p.toString,
+          Seq((lastMapped.value, VirtualPosition(fileLen, 0).value)),
           Nil, unmappedOnly = true))
-      } else if (regions.nonEmpty && index.isDefined) {
-        // S3: indexed region query — resolve chrom → refId via the
-        // already-read header
-        val refIds = header.refNames.zipWithIndex.toMap
-        // resolve every region, union + merge the chunk lists, and attach
-        // the FULL region list as each partition's residual — per-region
-        // partitions double-emit records when regions share a bin or a
-        // record overlaps two query regions
-        val resolved = regions.flatMap { r =>
-          refIds.get(r.name).map { refId =>
-            val endPos = r.end.getOrElse(
-              header.refLengths(refId).toLong.max(r.start + 1))
-            (refId, r.name, r.start, endPos)
-          }
-        }
-        // coalesce near-adjacent chunks into few bounded ranges (the
-        // residual predicate drops gap records — µs of decode for
-        // hundreds fewer tasks), then pack the survivors into
-        // multi-range partitions so the task count follows data volume,
-        // not BAI chunk scatter
-        val chunks = GenomicIndex.coalesceChunks(resolved.flatMap {
-          case (refId, _, s, e) => index.get.query(refId, s, e)
-        }, gapBytes = 1L << 20, spanBytes = maxSplit)
-        val residual = resolved.map { case (_, n, s, e) => (n, s, e) }
-        GenomicIndex.packRanges(chunks, maxSplit).map { group =>
-          BamInputPartition(p.toString,
-            group.map(ch => (ch.begin.value, ch.end.value)), residual)
-        }
       } else {
-        // full scan: split at index-derived record boundaries (R1)
-        val splits = index.map(GenomicIndex.partitionFromIndex(_, maxSplit))
-          .getOrElse(Nil)
-          .filter(v => v.value > headEnd.value && v.compressedOffset < fileLen)
-        val bounds = (headEnd +: splits) :+ eof
-        bounds.sliding(2).collect {
-          case Seq(a, b) if a.value < b.value =>
-            BamInputPartition(p.toString, Seq((a.value, b.value)),
-              regions.map(r => (r.name, r.start,
-                r.end.getOrElse(Long.MaxValue))))
-        }.toSeq
+        // indexed region query or index-split full scan; region names
+        // resolve through the already-read header
+        lazy val refIds = header.refNames.zipWithIndex.toMap
+        val plan = BgzfIndexPlanner.plan(fileLen, index, headEnd, regions,
+          refIds.get(_).map(id => (id, header.refLengths(id).toLong)),
+          maxSplit)
+        plan.groups.map(BamInputPartition(p.toString, _, plan.residual))
       }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BamReaderFactory(fullSchema, required, requiredNested, options, limit)
+    new BamReaderFactory(fullSchema, pushdown.required,
+      pushdown.requiredNested, options, pushdown.limit)
 }
 
 class BamReaderFactory(fullSchema: StructType, required: StructType,
@@ -491,19 +390,8 @@ class BamPartitionReader(fullSchema: StructType, required: StructType,
       val keep = (!part.unmappedOnly || (rec.flag & 0x4) != 0) &&
         (regionIds.length == 0 || overlapsAnyRegion(rec))
       if (keep) {
-        current =
-          if (identityProj) rec.row
-          else {
-            val out = new Array[Any](projIdx.length)
-            var i = 0
-            while (i < projIdx.length) {
-              val idx = projIdx(i)
-              out(i) = if (rec.row.isNullAt(idx)) null
-                else rec.row.get(idx, fullSchema(idx).dataType)
-              i += 1
-            }
-            new GenericInternalRow(out)
-          }
+        current = LineSourceUtil.projectRow(rec.row, projIdx, fullSchema,
+          identityProj)
         emitted += 1
         return true
       }

@@ -1,20 +1,17 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{CoordSystem, Region}
 import graft.formats.{BbiCodec, SeekableInputs}
-import graft.sources.common.LineSourceUtil
+import graft.sources.common.{GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown}
 
 /** BigWig / BigBed / BBI-zoom DSv2 readers (SURVEY §2.1 S16-S18).
   *
@@ -47,8 +44,20 @@ abstract class BbiDataSource(wig: Boolean) extends TableProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new BbiTable(wig, schema, LineSourceUtil.resolvePaths(opts),
-      LineSourceUtil.optionsMap(opts))
+    val options = LineSourceUtil.optionsMap(opts)
+    // BBI emits native 0-based half-open coordinates; accepting and
+    // ignoring coords=11 would silently hand the user off-by-one rows
+    require(options.getOrElse("coords", "01") == "01",
+      "bigwig/bigbed coordinates are 0-based half-open; coords=" +
+        s"'${options("coords")}' is not supported")
+    val paths = LineSourceUtil.resolvePaths(opts)
+    val label = if (wig) "bigwig" else "bigbed"
+    // M5 catalog surface: chrom B+ tree names/sizes and zoom reduction
+    // levels (bigwig.rs:94-117).
+    new GenomicTable(s"$label:${paths.mkString(",")}", schema, options,
+      GraftTableProps.forPaths(paths, zoom = true))(o =>
+      new GenomicScanBuilder(schema, Some("chrom"))(
+        new BbiScan(wig, schema, paths, o, _)))
   }
 }
 
@@ -135,55 +144,6 @@ object BbiSource {
   }
 }
 
-class BbiTable(wig: Boolean, tableSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String =
-    s"${if (wig) "bigwig" else "bigbed"}:${paths.mkString(",")}"
-  override def schema(): StructType = tableSchema
-  // M5 catalog surface: chrom B+ tree names/sizes and zoom reduction
-  // levels (bigwig.rs:94-117).
-  private lazy val tableProps =
-    graft.sources.common.GraftTableProps.forPaths(paths, zoom = true)
-  override def properties(): java.util.Map[String, String] = tableProps
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = options ++ LineSourceUtil.optionsMap(o)
-    // BBI emits native 0-based half-open coordinates; accepting and
-    // ignoring coords=11 would silently hand the user off-by-one rows
-    require(merged.getOrElse("coords", "01") == "01",
-      "bigwig/bigbed coordinates are 0-based half-open; coords=" +
-        s"'${merged("coords")}' is not supported")
-    new BbiScanBuilder(wig, tableSchema, paths, merged)
-  }
-}
-
-class BbiScanBuilder(wig: Boolean, fullSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(fullSchema.fields.filter(f => keep(f.name)))
-  }
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case EqualTo("chrom", _) => true
-      case In("chrom", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pushLimit(n: Int): Boolean = { limit = n; true }
-  override def build(): Scan =
-    new BbiScan(wig, fullSchema, required, paths, options, pushed, limit)
-}
-
 /** One r-tree section of one file. */
 case class BbiInputPartition(pathStr: String, dataOffset: Long,
     dataSize: Long, startChromId: Int, startBase: Long, endChromId: Int,
@@ -195,34 +155,13 @@ case class BbiInputPartition(pathStr: String, dataOffset: Long,
     header: graft.formats.BbiCodec.Header,
     chroms: Seq[graft.formats.BbiCodec.Chrom]) extends InputPartition
 
-class BbiScan(wig: Boolean, fullSchema: StructType, required: StructType,
-    paths: Seq[Path], options: Map[String, String], pushed: Array[Filter],
-    limit: Int) extends Scan with Batch {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-${if (wig) "bigwig" else "bigbed"} ${paths.mkString(",")}" +
-      (if (pushed.nonEmpty) s" pushed=[${pushed.mkString(",")}]" else "")
-
-  private def parseRegions: Seq[Region] = {
-    val fromOpt =
-      graft.sources.common.LineSourceUtil.parseRegionsOption(options)
-    // null comparands never match - drop them instead of NPE-ing the
-    // planner (same convention as every other source)
-    val fromFilters: Seq[Region] = pushed.toSeq.flatMap {
-      case EqualTo("chrom", v) if v != null =>
-        Seq(Region(v.toString, 0L, None))
-      case In("chrom", vs) =>
-        vs.toSeq.filter(_ != null).map(v => Region(v.toString, 0L, None))
-      case _ => Nil
-    }
-    if (fromOpt.nonEmpty) fromOpt else fromFilters
-  }
+class BbiScan(wig: Boolean, fullSchema: StructType, paths: Seq[Path],
+    options: Map[String, String], pushdown: Pushdown)
+    extends GenomicScan(if (wig) "bigwig" else "bigbed", paths, pushdown) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
-    val regions = parseRegions
+    val regions = GenomicScan.regions(options, pushdown.filters.toSeq, "chrom")
     paths.flatMap { p =>
       val fs = p.getFileSystem(conf)
       val in = SeekableInputs.forHadoop(fs, p)
@@ -275,7 +214,8 @@ class BbiScan(wig: Boolean, fullSchema: StructType, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BbiReaderFactory(wig, fullSchema, required, options, limit)
+    new BbiReaderFactory(wig, fullSchema, pushdown.required, options,
+      pushdown.limit)
 }
 
 class BbiReaderFactory(wig: Boolean, fullSchema: StructType,

@@ -1,22 +1,20 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{CoordSystem, Region}
-import graft.formats.{BamCodec, BcfCodec, Bgzf, BgzfRangeInputStream, GenomicIndex, SeekableInputs}
+import graft.core.CoordSystem
+import graft.formats.{BamCodec, BcfCodec, BgzfRangeInputStream, GenomicIndex, SeekableInputs}
 import graft.formats.Bgzf.VirtualPosition
-import graft.sources.common.LineSourceUtil
+import graft.sources.common.{BgzfIndexPlanner, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown}
 
 /** DSv2 binary BCF reader (SURVEY §2.1 S9).
   *
@@ -60,8 +58,13 @@ class BcfDataSource extends TableProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new BcfTable(schema, LineSourceUtil.resolvePaths(opts),
-      LineSourceUtil.optionsMap(opts))
+    val paths = LineSourceUtil.resolvePaths(opts)
+    // M5 catalog surface: ##contig dictionary + CSI record stats
+    new GenomicTable(s"bcf:${paths.mkString(",")}", schema,
+      LineSourceUtil.optionsMap(opts),
+      GraftTableProps.forPaths(paths, indexStats = true))(o =>
+      new GenomicScanBuilder(schema, Some("chrom"))(
+        new BcfScan(schema, paths, o, _)))
   }
 }
 
@@ -114,131 +117,35 @@ object BcfSource {
       VcfHeader.fromLines(headerText.linesIterator), options)
 }
 
-class BcfTable(tableSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = s"bcf:${paths.mkString(",")}"
-  override def schema(): StructType = tableSchema
-  // M5 catalog surface: ##contig dictionary + CSI record stats
-  private lazy val tableProps =
-    graft.sources.common.GraftTableProps.forPaths(paths, indexStats = true)
-  override def properties(): java.util.Map[String, String] = tableProps
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new BcfScanBuilder(tableSchema, paths,
-      options ++ LineSourceUtil.optionsMap(o))
-}
-
-class BcfScanBuilder(fullSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = fullSchema
-  // verbatim Catalyst pruning, incl. nested info/sample pruning (a parse
-  // hint only — readSchema stays whole-struct)
-  private var requiredNested: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(fullSchema.fields.filter(f => keep(f.name)))
-    requiredNested = requiredSchema
-  }
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case EqualTo("chrom", _) => true
-      case In("chrom", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pushLimit(n: Int): Boolean = { limit = n; true }
-  override def build(): Scan =
-    new BcfScan(fullSchema, required, requiredNested, paths, options,
-      pushed, limit)
-}
-
 case class BcfInputPartition(pathStr: String, ranges: Seq[(Long, Long)],
     regions: Seq[(String, Long, Long)]) extends InputPartition
 
-class BcfScan(fullSchema: StructType, required: StructType,
-    requiredNested: StructType, paths: Seq[Path],
-    options: Map[String, String], pushed: Array[Filter], limit: Int)
-    extends Scan with Batch {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = s"graft-bcf ${paths.mkString(",")}" +
-    (if (pushed.nonEmpty) s" pushed=[${pushed.mkString(",")}]" else "")
-
-  private def parseRegions: Seq[Region] = {
-    val fromOpt =
-      graft.sources.common.LineSourceUtil.parseRegionsOption(options)
-    // null comparands never match — drop them instead of NPE-ing the
-    // planner (same convention as BamSource/CramSource/LineSource)
-    val fromFilters: Seq[Region] = pushed.toSeq.flatMap {
-      case EqualTo("chrom", v) if v != null =>
-        Seq(Region(v.toString, 0L, None))
-      case In("chrom", vs) =>
-        vs.toSeq.filter(_ != null).map(v => Region(v.toString, 0L, None))
-      case _ => Nil
-    }
-    if (fromOpt.nonEmpty) fromOpt else fromFilters
-  }
+class BcfScan(fullSchema: StructType, paths: Seq[Path],
+    options: Map[String, String], pushdown: Pushdown)
+    extends GenomicScan("bcf", paths, pushdown) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
-    val (pathLens, maxSplit) = graft.sources.common.LineSourceUtil
+    val (pathLens, maxSplit) = LineSourceUtil
       .pathLensAndBudget(paths, conf, options, 64L * 1024 * 1024)
-    val regions = parseRegions
+    val regions = GenomicScan.regions(options, pushdown.filters.toSeq, "chrom")
     pathLens.flatMap { case (p, fileLen) =>
-      val fs = p.getFileSystem(conf)
-      val index = GenomicIndex.findFor(fs, p)
-      val eof = VirtualPosition(fileLen, 0)
-      if (regions.nonEmpty && index.isDefined) {
-        val dict = BcfCodec.dictionaries(BcfSource.readHeaderText(p))
-        val refIds = dict.contigs.zipWithIndex.toMap
-        // union + merge chunks across regions; attach ALL regions as the
-        // residual so a record is emitted at most once (see BamScan)
-        val resolved = regions.flatMap { r =>
-          refIds.get(r.name).map { refId =>
-            (refId, r.name, r.start, r.end.getOrElse(Long.MaxValue >> 17))
-          }
-        }
-        // coalesce near-adjacent chunks, then pack the survivors into
-        // multi-range partitions (see GenomicIndex.coalesceChunks /
-        // packRanges) so the task count follows data volume
-        val chunks = GenomicIndex.coalesceChunks(resolved.flatMap {
-          case (refId, _, s, e) => index.get.query(refId, s, e)
-        }, gapBytes = 1L << 20, spanBytes = maxSplit)
-        val residual = resolved.map { case (_, n, s, e) => (n, s, e) }
-        GenomicIndex.packRanges(chunks, maxSplit).map { group =>
-          BcfInputPartition(p.toString,
-            group.map(ch => (ch.begin.value, ch.end.value)), residual)
-        }
-      } else {
-        // header decompression only on the branch that needs its end
-        // vpos: the region branch above reads the header for its
-        // dictionaries already, a second inflate would be pure waste
-        val headEnd = BcfSource.headerEndVpos(p)
-        val splits = index.map(GenomicIndex.partitionFromIndex(_, maxSplit))
-          .getOrElse(Nil)
-          .filter(v => v.value > headEnd.value && v.compressedOffset < fileLen)
-        val bounds = (headEnd +: splits) :+ eof
-        bounds.sliding(2).collect {
-          case Seq(a, b) if a.value < b.value =>
-            BcfInputPartition(p.toString, Seq((a.value, b.value)),
-              regions.map(r => (r.name, r.start,
-                r.end.getOrElse(Long.MaxValue))))
-        }.toSeq
-      }
+      val index = GenomicIndex.findFor(p.getFileSystem(conf), p)
+      // each header read only on the branch that needs it: the region
+      // query resolves names through the header dictionaries, the full
+      // scan starts at the header-end vpos
+      lazy val refIds = BcfCodec.dictionaries(BcfSource.readHeaderText(p))
+        .contigs.zipWithIndex.toMap
+      val plan = BgzfIndexPlanner.plan(fileLen, index,
+        BcfSource.headerEndVpos(p), regions,
+        refIds.get(_).map(_ -> (Long.MaxValue >> 17)), maxSplit)
+      plan.groups.map(BcfInputPartition(p.toString, _, plan.residual))
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BcfReaderFactory(fullSchema, required, requiredNested, options, limit)
+    new BcfReaderFactory(fullSchema, pushdown.required,
+      pushdown.requiredNested, options, pushdown.limit)
 }
 
 class BcfReaderFactory(fullSchema: StructType, required: StructType,
@@ -623,18 +530,7 @@ class BcfPartitionReader(fullSchema: StructType, required: StructType,
   }
 
   private def project(row: InternalRow): InternalRow =
-    if (identityProj) row
-    else {
-      val out = new Array[Any](projIdx.length)
-      var i = 0
-      while (i < projIdx.length) {
-        val idx = projIdx(i)
-        out(i) = if (row.isNullAt(idx)) null
-          else row.get(idx, fullSchema(idx).dataType)
-        i += 1
-      }
-      new GenericInternalRow(out)
-    }
+    LineSourceUtil.projectRow(row, projIdx, fullSchema, identityProj)
 
   override def get(): InternalRow = current
   override def close(): Unit = stream.close()

@@ -2,21 +2,19 @@ package graft.sources
 
 import java.io.InputStream
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{CoordSystem, Region}
 import graft.formats.{CramCodec, FaiIndex, SeekableInputs}
-import graft.sources.common.LineSourceUtil
+import graft.sources.common.{GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown}
 
 /** DSv2 CRAM reader (SURVEY §2.1 S7) — the reference's CRAM scanner
   * surface (`/root/reference/oxbow/src/alignment/scanner/cram.rs:42-120`)
@@ -47,8 +45,12 @@ class CramDataSource extends TableProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new CramTable(schema, LineSourceUtil.resolvePaths(opts),
-      LineSourceUtil.optionsMap(opts))
+    val paths = LineSourceUtil.resolvePaths(opts)
+    // M5 catalog surface: @SQ dictionary from the SAM header container
+    new GenomicTable(s"cram:${paths.mkString(",")}", schema,
+      LineSourceUtil.optionsMap(opts), GraftTableProps.forPaths(paths))(o =>
+      new GenomicScanBuilder(schema, Some("rname"))(
+        new CramScan(schema, paths, o, _)))
   }
 }
 
@@ -186,47 +188,6 @@ object CramSource {
     }
 }
 
-class CramTable(tableSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = s"cram:${paths.mkString(",")}"
-  override def schema(): StructType = tableSchema
-  // M5 catalog surface: @SQ dictionary from the SAM header container
-  private lazy val tableProps =
-    graft.sources.common.GraftTableProps.forPaths(paths)
-  override def properties(): java.util.Map[String, String] = tableProps
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new CramScanBuilder(tableSchema, paths,
-      options ++ LineSourceUtil.optionsMap(o))
-}
-
-class CramScanBuilder(fullSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(fullSchema.fields.filter(f => keep(f.name)))
-  }
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case EqualTo("rname", _) => true
-      case In("rname", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pushLimit(n: Int): Boolean = { limit = n; true }
-  override def build(): Scan =
-    new CramScan(fullSchema, required, paths, options, pushed, limit)
-}
-
 /** One data container, with the residual region list (0-based half-open).
   * `unmappedOnly` keeps only records with the BAM unmapped flag (0x4) —
   * needed because unmapped-placed records may live inside multi-ref (-2)
@@ -235,33 +196,13 @@ case class CramInputPartition(pathStr: String, containerOffset: Long,
     regions: Seq[(String, Long, Long)],
     unmappedOnly: Boolean = false) extends InputPartition
 
-class CramScan(fullSchema: StructType, required: StructType, paths: Seq[Path],
-    options: Map[String, String], pushed: Array[Filter], limit: Int)
-    extends Scan with Batch {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = s"graft-cram ${paths.mkString(",")}" +
-    (if (pushed.nonEmpty) s" pushed=[${pushed.mkString(",")}]" else "")
-
-  private def parseRegions: Seq[Region] = {
-    val fromOpt =
-      graft.sources.common.LineSourceUtil.parseRegionsOption(options)
-    // null comparands never match — drop them instead of NPE-ing the
-    // planner (same convention as BamSource/LineSource)
-    val fromFilters: Seq[Region] = pushed.toSeq.flatMap {
-      case EqualTo("rname", v) if v != null =>
-        Seq(Region(v.toString, 0L, None))
-      case In("rname", vs) =>
-        vs.toSeq.filter(_ != null).map(v => Region(v.toString, 0L, None))
-      case _ => Nil
-    }
-    if (fromOpt.nonEmpty) fromOpt else fromFilters
-  }
+class CramScan(fullSchema: StructType, paths: Seq[Path],
+    options: Map[String, String], pushdown: Pushdown)
+    extends GenomicScan("cram", paths, pushdown) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
-    val regions = parseRegions
+    val regions = GenomicScan.regions(options, pushdown.filters.toSeq, "rname")
     val unmappedOnly = options.get("unmapped").exists(_.toBoolean)
     paths.flatMap { p =>
       val fs = p.getFileSystem(conf)
@@ -320,7 +261,8 @@ class CramScan(fullSchema: StructType, required: StructType, paths: Seq[Path],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CramReaderFactory(fullSchema, required, options, limit)
+    new CramReaderFactory(fullSchema, pushdown.required, options,
+      pushdown.limit)
 }
 
 class CramReaderFactory(fullSchema: StructType, required: StructType,
@@ -665,19 +607,8 @@ class CramPartitionReader(fullSchema: StructType, required: StructType,
     while (rows.hasNext) {
       val row = rows.next()
       if (keepRow(row)) {
-        current =
-          if (identityProj) row
-          else {
-            val out = new Array[Any](projIdx.length)
-            var i = 0
-            while (i < projIdx.length) {
-              val idx = projIdx(i)
-              out(i) = if (row.isNullAt(idx)) null
-                else row.get(idx, fullSchema(idx).dataType)
-              i += 1
-            }
-            new GenericInternalRow(out)
-          }
+        current = LineSourceUtil.projectRow(row, projIdx, fullSchema,
+          identityProj)
         emitted += 1
         return true
       }

@@ -2,19 +2,16 @@ package graft.sources
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{CoordSystem, Region}
+import graft.core.Region
 import graft.formats.{Bgzf, FaiIndex, GziIndex, SeekableInputs}
-import graft.sources.common.LineSourceUtil
+import graft.sources.common.{GenomicScan, LineSourceUtil, Pushdown}
 
 /** FAI-indexed FASTA region slicing (SURVEY §2.1 S14): one partition per
   * (sequence × overlapping region), each reading ONLY the bytes covering
@@ -59,39 +56,9 @@ case class FaiSlice(name: String, length: Long, offset: Long,
 case class FaiSlicePartition(pathStr: String, gzi: Boolean,
     slices: Seq[FaiSlice]) extends InputPartition
 
-class FaiSliceTable(tableSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = s"fasta-fai:${paths.mkString(",")}"
-  override def schema(): StructType = tableSchema
-  // M5 catalog surface: sequence names/lengths from the .fai companion.
-  private lazy val tableProps =
-    graft.sources.common.GraftTableProps.forPaths(paths)
-  override def properties(): java.util.Map[String, String] = tableProps
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new FaiSliceScanBuilder(tableSchema, paths,
-      options ++ LineSourceUtil.optionsMap(o))
-}
-
-class FaiSliceScanBuilder(fullSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(fullSchema.fields.filter(f => keep(f.name)))
-  }
-  override def build(): Scan =
-    new FaiSliceScan(fullSchema, required, paths, options)
-}
-
-class FaiSliceScan(fullSchema: StructType, required: StructType,
-    paths: Seq[Path], options: Map[String, String]) extends Scan with Batch {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = s"graft-fasta-fai ${paths.mkString(",")}"
+class FaiSliceScan(fullSchema: StructType, paths: Seq[Path],
+    options: Map[String, String], pushdown: Pushdown)
+    extends GenomicScan("fasta-fai", paths, pushdown) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
@@ -162,7 +129,7 @@ class FaiSliceScan(fullSchema: StructType, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FaiSliceReaderFactory(fullSchema, required)
+    new FaiSliceReaderFactory(fullSchema, pushdown.required)
 }
 
 class FaiSliceReaderFactory(fullSchema: StructType, required: StructType)

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{CoordSystem, Region}
-import graft.sources.common.{LineFormat, LineParser, LineTableProvider}
+import graft.core.Region
+import graft.sources.common.{GenomicScanBuilder, GenomicTable, GraftTableProps, LineFormat, LineParser, LineTableProvider}
 
 /** FASTA reader (SURVEY §2.1 S13/S14).
   *
@@ -128,7 +128,14 @@ class FastaDataSource extends LineTableProvider {
         (!graft.sources.common.LineSourceUtil.isGzip(p) ||
           graft.formats.GziIndex.readFor(p, conf).isDefined)
     }
-    if (indexable) new FaiSliceTable(schema, paths, options)
+    // the fast path takes its regions from the option only: no filter
+    // is pushed, and the slice reader does not stop at a pushed limit
+    // (Spark keeps its own); catalog properties come from the .fai (M5)
+    if (indexable)
+      new GenomicTable(s"fasta-fai:${paths.mkString(",")}", schema, options,
+        GraftTableProps.forPaths(paths))(o =>
+        new GenomicScanBuilder(schema, chrom = None)(
+          new FaiSliceScan(schema, paths, o, _)))
     else super.getTable(schema, partitioning, properties)
   }
 }

@@ -7,13 +7,12 @@ import java.util.zip.GZIPInputStream
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types.{BooleanType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -120,11 +119,29 @@ object LineSourceUtil {
       .map(graft.core.Region.parse(_,
         graft.core.CoordSystem.OneBasedClosed))
 
-  /** The ONE row projector shared by every partition reader (line,
-    * BBI, FAI-slice): copy the required ordinals out of a full-schema
-    * row, with the identity short-circuit. Three hand-rolled copies of
-    * this loop existed before; keeping the null handling in one place
-    * means it cannot drift. */
+  /** The ONE parse of the caller-precomputed partitioning options
+    * `byte_ranges` / `virtual_ranges` (reference scan_byte_ranges /
+    * scan_virtual_ranges, `alignment/scanner/bam.rs:239-279`):
+    * ";"-separated "start-end" pairs. A malformed pair fails naming the
+    * option and the token. */
+  def parseRangesOption(options: Map[String, String], key: String)
+      : Seq[(Long, Long)] =
+    options.get(key).toSeq
+      .flatMap(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
+      .map { tok =>
+        def bad = throw new IllegalArgumentException(
+          s"$key: malformed range '$tok', expected start-end")
+        tok.split("-", -1) match {
+          case Array(a, b) => (a.trim.toLongOption.getOrElse(bad),
+            b.trim.toLongOption.getOrElse(bad))
+          case _ => bad
+        }
+      }
+
+  /** The ONE row projector shared by every partition reader (line, BAM,
+    * BCF, CRAM, BBI, FAI-slice): copy the required ordinals out of a
+    * full-schema row, with the identity short-circuit, so the null
+    * handling cannot drift between readers. */
   def projectRow(row: InternalRow, projIdx: Array[Int],
       fullSchema: StructType, identityProj: Boolean): InternalRow =
     if (identityProj) row
@@ -342,75 +359,17 @@ abstract class LineTableProvider extends TableProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new LineTable(format, schema, LineSourceUtil.resolvePaths(opts),
-      LineSourceUtil.optionsMap(opts))
+    val paths = LineSourceUtil.resolvePaths(opts)
+    // M5 catalog surface (best-effort): VCF ##contig / SAM @SQ dictionaries
+    // + tabix record stats; formats without header metadata (bed/gff) just
+    // return an empty map
+    new GenomicTable(s"${format.shortName}:${paths.mkString(",")}", schema,
+      LineSourceUtil.optionsMap(opts),
+      GraftTableProps.forPaths(paths, indexStats = true))(o =>
+      new GenomicScanBuilder(schema, format.regionColumns.map(_._1),
+        format.regionColumns.map { case (_, s, e) => (s, e) })(
+        new LineScan(format, schema, paths, o, _)))
   }
-}
-
-class LineTable(format: LineFormat, tableSchema: StructType, paths: Seq[Path],
-    options: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String =
-    s"${format.shortName}:${paths.map(_.toString).mkString(",")}"
-  override def schema(): StructType = tableSchema
-  // M5 catalog surface (best-effort): VCF ##contig / SAM @SQ dictionaries
-  // + tabix record stats; formats without header metadata (bed/gff) just
-  // return an empty map
-  private lazy val tableProps =
-    GraftTableProps.forPaths(paths, indexStats = true)
-  override def properties(): java.util.Map[String, String] = tableProps
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new LineScanBuilder(format, tableSchema, paths,
-      options ++ LineSourceUtil.optionsMap(o))
-}
-
-class LineScanBuilder(format: LineFormat, fullSchema: StructType,
-    paths: Seq[Path], options: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-
-  private var required: StructType = fullSchema
-  // the schema exactly as Catalyst pruned it, including NESTED pruning
-  // (e.g. samples.s1.GT only) — readSchema still answers whole top-level
-  // structs, but formats able to skip un-requested nested parsing get
-  // this as their parse hint
-  private var requiredNested: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // keep full-schema field order for the projection mapping
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(fullSchema.fields.filter(f => keep(f.name)))
-    requiredNested = requiredSchema
-  }
-
-  /** Recognize chrom/start/end comparisons for region-style row skipping;
-    * everything is also left for Spark to re-apply (we only prune). */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = format.regionColumns match {
-      case Some((c, s, e)) =>
-        filters.filter {
-          case EqualTo(a, _) if a == c => true
-          case In(a, _) if a == c => true
-          case LessThan(a, _) if a == s => true
-          case LessThanOrEqual(a, _) if a == s => true
-          case GreaterThan(a, _) if a == e => true
-          case GreaterThanOrEqual(a, _) if a == e => true
-          case _ => false
-        }
-      case None => Array.empty[Filter]
-    }
-    filters // all residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(n: Int): Boolean = { limit = n; true }
-
-  override def build(): Scan =
-    new LineScan(format, fullSchema, required, requiredNested, paths,
-      options, pushed, limit)
 }
 
 /** One input split. Three addressing modes:
@@ -426,13 +385,12 @@ case class LineInputPartition(pathStr: String, start: Long, end: Long,
       * (region queries over scattered index chunks; vpos-only) */
     moreRanges: Seq[(Long, Long)] = Nil) extends InputPartition
 
-class LineScan(format: LineFormat, fullSchema: StructType,
-    required: StructType, requiredNested: StructType, paths: Seq[Path],
-    options: Map[String, String],
-    pushed: Array[Filter], limit: Int) extends Scan with Batch {
+class LineScan(format: LineFormat, fullSchema: StructType, paths: Seq[Path],
+    options: Map[String, String], pushdown: Pushdown)
+    extends GenomicScan(format.shortName, paths, pushdown) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+  private val pushed = pushdown.filters.toSeq
+
   override def description(): String =
     s"graft-${format.shortName} ${paths.mkString(",")}"
 
@@ -441,47 +399,29 @@ class LineScan(format: LineFormat, fullSchema: StructType,
     val (pathLens, maxSplit) = LineSourceUtil
       .pathLensAndBudget(paths, conf, options, 128L * 1024 * 1024)
     // regions requested via option or pushed chrom equality
-    val regions: Seq[graft.core.Region] = {
-      val fromOpt = LineSourceUtil.parseRegionsOption(options)
-      val fromFilters = format.regionColumns.toSeq.flatMap { case (c, s, e) =>
-        // pushed coordinate bounds narrow the index window: kept rows
-        // satisfy startOut < startLt and endOut > endGt (the same
-        // folding the residual applies), which in 0-based half-open
-        // space is the window [endGt, startLt + startOffset) — so
-        // `chrom='chr1' AND pos BETWEEN a AND b` plans a's..b's chunks,
-        // not the whole chromosome
-        val (startLt, endGt) = LineSourceUtil.pushedBounds(pushed.toSeq, s, e)
-        val cs = format.coordSystem(options)
-        val qs = math.max(0L, endGt.getOrElse(0L))
-        val qe = startLt.map(v => math.max(v + cs.startOffset, qs))
-        val names = pushed.toSeq.flatMap {
-          case EqualTo(a, v) if a == c && v != null => Seq(v.toString)
-          // a null In-list element never equals anything — drop it
-          // instead of NPE-ing the planner
-          case In(a, vs) if a == c =>
-            vs.toSeq.filter(_ != null).map(_.toString)
-          case _ => Nil
-        }
-        names.map(n => graft.core.Region(n, qs, qe))
+    val regions: Seq[graft.core.Region] =
+      format.regionColumns.fold(LineSourceUtil.parseRegionsOption(options)) {
+        case (c, s, e) =>
+          // pushed coordinate bounds narrow the index window: kept rows
+          // satisfy startOut < startLt and endOut > endGt (the same
+          // folding the residual applies), which in 0-based half-open
+          // space is the window [endGt, startLt + startOffset) — so
+          // `chrom='chr1' AND pos BETWEEN a AND b` plans a's..b's chunks,
+          // not the whole chromosome
+          val (startLt, endGt) = LineSourceUtil.pushedBounds(pushed, s, e)
+          val cs = format.coordSystem(options)
+          val qs = math.max(0L, endGt.getOrElse(0L))
+          val qe = startLt.map(v => math.max(v + cs.startOffset, qs))
+          GenomicScan.regions(options, pushed, c, qs, qe)
       }
-      if (fromOpt.nonEmpty) fromOpt else fromFilters
-    }
-    // caller-precomputed partitioning (reference scan_byte_ranges /
-    // scan_virtual_ranges, `alignment/scanner/bam.rs:239-279`): explicit
-    // "start-end;start-end" pairs. byte_ranges addresses plain-text
+    // caller-precomputed partitioning: byte_ranges addresses plain-text
     // bytes — split points may fall mid-line, the reader's
     // first-line-skip/last-line-finish ownership keeps rows exactly-once;
     // virtual_ranges addresses BGZF virtual positions, whose bounds must
     // be record starts (chunk begins from an index), as in the reference.
-    def parseRanges(key: String): Seq[(Long, Long)] =
-      options.get(key).toSeq
-        .flatMap(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
-        .map { s =>
-          val Array(a, b) = s.split("-")
-          (a.trim.toLong, b.trim.toLong)
-        }
-    val byteRanges = parseRanges("byte_ranges")
-    val virtualRanges = parseRanges("virtual_ranges")
+    val byteRanges = LineSourceUtil.parseRangesOption(options, "byte_ranges")
+    val virtualRanges =
+      LineSourceUtil.parseRangesOption(options, "virtual_ranges")
     // explicit ranges address offsets of ONE file; replaying them per
     // path would scan other files at foreign positions (mid-record in a
     // BGZF stream) — fail loudly instead
@@ -501,50 +441,27 @@ class LineScan(format: LineFormat, fullSchema: StructType,
           LineInputPartition(p.toString, a, math.min(b, len), gzip = false)
         }
       } else if (LineSourceUtil.isGzip(p)) {
-        // BGZF + tabix index → vpos partitions (region chunks or splits)
+        // BGZF + tabix index → vpos partitions (region chunks or splits).
+        // Names must be present to narrow by region: a CSI written
+        // without its tabix aux block parses with an EMPTY name map, and
+        // planning region chunks against it would find no refs and
+        // return zero partitions — silently empty results. Such a file
+        // takes the split/full scan; the reader's residual predicate
+        // still applies the regions per record.
         GenomicIndex.findFor(fs, p) match {
-          // names must be present to narrow by region: a CSI written
-          // without its tabix aux block parses with an EMPTY name map,
-          // and planning region chunks against it would find no refs
-          // and return zero partitions — silently empty results. Fall
-          // through to the split/full scan; the residual predicate
-          // still applies the regions per record.
-          case Some(index) if regions.nonEmpty && index.names.nonEmpty =>
-            // union the chunk lists of ALL regions, then merge/dedupe:
-            // two regions hitting the same bin must not plan the same
-            // compressed range twice (the reader's residual predicate
-            // accepts records matching ANY region)
-            val chunks = regions.flatMap { r =>
-              index.names.get(r.name).toSeq.flatMap { refId =>
-                val endPos = r.end.getOrElse(Long.MaxValue >> 16)
-                index.query(refId, r.start, endPos)
-              }
-            }
-            // coalesce near-adjacent chunks into bounded ranges (the
-            // per-record region predicate drops gap records), then pack
-            // scattered survivors into multi-range partitions so the
-            // task count follows data volume, not index chunk scatter
-            GenomicIndex.packRanges(
-                GenomicIndex.coalesceChunks(chunks, gapBytes = 1L << 20,
-                  spanBytes = maxSplit), maxSplit).map { group =>
-              LineInputPartition(p.toString, group.head.begin.value,
-                group.head.end.value, gzip = false, vpos = true,
-                moreRanges = group.tail.map(ch =>
-                  (ch.begin.value, ch.end.value)))
-            }
-          case Some(index) if format.splittable =>
-            val splits = GenomicIndex.partitionFromIndex(index, maxSplit)
-              .filter(_.compressedOffset < len)
-            if (splits.isEmpty)
+          case Some(index) if format.splittable ||
+              regions.nonEmpty && index.names.nonEmpty =>
+            val byRegion = regions.nonEmpty && index.names.nonEmpty
+            val groups = BgzfIndexPlanner.plan(len, Some(index),
+              Bgzf.VirtualPosition(0L), if (byRegion) regions else Nil,
+              index.names.get(_).map(_ -> (Long.MaxValue >> 16)),
+              maxSplit).groups
+            // a split scan with no interior split point streams whole
+            if (!byRegion && groups.lengthCompare(1) <= 0)
               Seq(LineInputPartition(p.toString, 0L, Long.MaxValue, gzip = true))
-            else {
-              val bounds = (Bgzf.VirtualPosition(0L) +: splits) :+
-                Bgzf.VirtualPosition(len, 0)
-              bounds.sliding(2).collect {
-                case Seq(a, b) if a.value < b.value =>
-                  LineInputPartition(p.toString, a.value, b.value,
-                    gzip = false, vpos = true)
-              }.toSeq
+            else groups.map { g =>
+              LineInputPartition(p.toString, g.head._1, g.head._2,
+                gzip = false, vpos = true, moreRanges = g.tail)
             }
           case _ =>
             Seq(LineInputPartition(p.toString, 0L, Long.MaxValue, gzip = true))
@@ -561,8 +478,8 @@ class LineScan(format: LineFormat, fullSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new LineReaderFactory(format, fullSchema, required, requiredNested,
-      options, pushed, limit)
+    new LineReaderFactory(format, fullSchema, pushdown.required,
+      pushdown.requiredNested, options, pushdown.filters, pushdown.limit)
 }
 
 class LineReaderFactory(format: LineFormat, fullSchema: StructType,

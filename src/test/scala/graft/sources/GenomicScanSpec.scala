@@ -1,0 +1,113 @@
+package graft.sources
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkSuite
+import graft.fixtures.{BbiFixture, BcfFixture, BenchCorpus}
+import graft.fixtures.BbiFixture.BedItem
+import graft.fixtures.BcfFixture.BcfRec
+
+/** The contract of the DSv2 scaffold every genomic reader shares
+  * (`graft.sources.common.GenomicScan`): pushed chrom filters, the
+  * `regions` option, limit pushdown, the plan description, and the
+  * explicit-range options. */
+class GenomicScanSpec extends SparkSuite {
+
+  private lazy val corpus = BenchCorpus.ensure(
+    java.nio.file.Files.createTempDirectory("graft-scaffold").toString,
+    nBam = 3000, nVcf = 3000, nBed = 3000, nCram = 1000)
+
+  private lazy val bcfPath: String = {
+    val p = java.nio.file.Files.createTempDirectory("graft-scaffold-bcf")
+      .resolve("s.bcf").toString
+    val header = Seq(
+      "##fileformat=VCFv4.2",
+      "##FILTER=<ID=PASS,Description=\"ok\">",
+      "##INFO=<ID=DP,Number=1,Type=Integer,Description=\"depth\">",
+      "##contig=<ID=chr1,length=100000>",
+      "##contig=<ID=chr2,length=50000>",
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO").mkString("\n")
+    def rec(contig: Int, pos0: Int) = BcfRec(contig, pos0, 1, None, Nil,
+      Seq("A", "G"), Seq(0), Seq(1 -> BcfFixture.typedInt(10)), Nil, 0)
+    BcfFixture.write(p, header, Seq(rec(0, 99), rec(0, 4999), rec(1, 199)))
+    p
+  }
+
+  private lazy val bigbedPath: String = {
+    val p = java.nio.file.Files.createTempDirectory("graft-scaffold-bb")
+      .resolve("s.bb").toString
+    BbiFixture.write(p, Seq(("chr1", 0), ("chr2", 1)), wigSections = Nil,
+      bedItems = Seq(BedItem(0, 10, 50, "a\t1"), BedItem(0, 60, 90, "b\t2"),
+        BedItem(1, 5, 25, "c\t3")),
+      zooms = Nil)
+    p
+  }
+
+  /** One reader under test: its chrom column and a `regions` value that
+    * covers part of chr1. */
+  private case class Fx(fmt: String, path: () => String, chrom: String,
+      region: String)
+
+  private val fixtures = Seq(
+    Fx("bam", () => corpus.bam, "rname", "chr1:1-20000000"),
+    Fx("bcf", () => bcfPath, "chrom", "chr1:1-1000"),
+    Fx("cram", () => corpus.cram, "rname", "chr1:1-300"),
+    Fx("bigbed", () => bigbedPath, "chrom", "chr1:1-55"),
+    Fx("vcf", () => corpus.vcf, "chrom", "chr1:1-20000000"),
+    Fx("bed", () => corpus.bed, "chrom", "chr1:1-20000000"))
+
+  private def load(fx: Fx, regions: Option[String] = None): DataFrame = {
+    val r = spark.read.format(fx.fmt)
+    regions.fold(r)(r.option("regions", _)).load(fx.path())
+  }
+
+  fixtures.foreach { fx =>
+    test(s"${fx.fmt}: isin(chrom, null) drops the null comparand") {
+      val df = load(fx)
+      val chr1 = df.where(col(fx.chrom) === "chr1").count()
+      assert(chr1 > 0)
+      assert(df.where(col(fx.chrom).isin("chr1", null)).count() == chr1)
+    }
+
+    test(s"${fx.fmt}: the regions option wins over a pushed chrom filter") {
+      val inRegion = load(fx, Some(fx.region)).count()
+      val chr1 = load(fx).where(col(fx.chrom) === "chr1").count()
+      assert(inRegion > 0 && inRegion < chr1, (inRegion, chr1))
+      assert(load(fx, Some(fx.region)).where(col(fx.chrom) === "chr1")
+        .count() == inRegion)
+    }
+
+    test(s"${fx.fmt}: a pushed limit returns that many rows") {
+      assert(load(fx).limit(2).collect().length == 2)
+    }
+
+    test(s"${fx.fmt}: the plan names graft-${fx.fmt}") {
+      val plan = load(fx).where(col(fx.chrom) === "chr1")
+        .queryExecution.executedPlan.toString
+      assert(plan.contains(s"graft-${fx.fmt}"), plan)
+    }
+  }
+
+  /** The IllegalArgumentException somewhere in the cause chain of `f`. */
+  private def argumentError(f: => Any): IllegalArgumentException = {
+    val e = intercept[Throwable](f)
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case iae: IllegalArgumentException => iae }
+      .getOrElse(fail(s"no IllegalArgumentException in $e"))
+  }
+
+  Seq(("bam", () => corpus.bam, "virtual_ranges"),
+      ("bed", () => corpus.bed, "virtual_ranges"),
+      ("bed", () => corpus.bed, "byte_ranges")).foreach {
+    case (fmt, path, key) =>
+      test(s"$fmt: a malformed $key value names the option and the token") {
+        Seq("5", "1-2-3", "0-x").foreach { bad =>
+          val e = argumentError(spark.read.format(fmt)
+            .option(key, s"0-65536;$bad").load(path()).count())
+          assert(e.getMessage.contains(key) &&
+            e.getMessage.contains(s"'$bad'"), e.getMessage)
+        }
+      }
+  }
+}
