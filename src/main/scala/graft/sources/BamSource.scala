@@ -13,7 +13,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.core.CoordSystem
 import graft.formats.{BamCodec, BgzfRangeInputStream, GenomicIndex, SeekableInputs}
 import graft.formats.Bgzf.VirtualPosition
-import graft.sources.common.{BgzfIndexPlanner, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown}
+import graft.sources.common.{BgzfIndexPlanner, GenomicPartitionReader, GenomicReaderFactory, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown, RegionResidual}
 
 /** DSv2 binary BAM reader (SURVEY §2.1 S2-S6).
   *
@@ -185,7 +185,8 @@ case class BamInputPartition(pathStr: String, ranges: Seq[(Long, Long)],
 
 class BamScan(fullSchema: StructType, paths: Seq[Path],
     options: Map[String, String], pushdown: Pushdown)
-    extends GenomicScan("bam", paths, pushdown) {
+    extends GenomicScan("bam", fullSchema, paths, options, pushdown,
+      BamPartitionReader.ctor) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
@@ -259,54 +260,17 @@ class BamScan(fullSchema: StructType, paths: Seq[Path],
       }
     }.toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BamReaderFactory(fullSchema, pushdown.required,
-      pushdown.requiredNested, options, pushdown.limit)
 }
 
-class BamReaderFactory(fullSchema: StructType, required: StructType,
-    requiredNested: StructType,
-    options: Map[String, String], limit: Int) extends PartitionReaderFactory {
-
-  /** Columnar reads (SURVEY §4.2), opt-in via `columnar=true`: every
-    * fixed BAM column is a primitive or string, so any projection
-    * excluding the `tags` struct can batch into `OnHeapColumnVector`s.
-    * Off by default on measurement: record decode dominates and stock
-    * Spark re-materializes rows at ColumnarToRow, so the batch copy is
-    * pure overhead. Round-10 A/B at bench scale (345 MB BAM,
-    * qname..cigar projection, min of interleaved passes, local[32],
-    * x01-x04 in BENCH_r10/bench_out): columnar NEVER wins — +8-21% on
-    * an idle heap, and up to 3× on the 32-way split scan inside the
-    * full 73-row bench run, where 32 concurrent tasks' per-batch
-    * OnHeapColumnVector allocation meets an already-busy heap; the
-    * columnar plan also pays a much larger first-use codegen warmup
-    * (4-7 s vs <1 s cold). Row stays the default; the path is the
-    * integration surface for vector-consuming engines that elide
-    * ColumnarToRow — the in-tree consumer is
-    * `ArrowShim.toIpcBytesColumnar` (round 11), which serializes the
-    * batches to Arrow IPC executor-side with no row round-trip and
-    * beats the row-path sink ~5.6× at bench scale. */
-  private val columnarOk: Boolean =
-    graft.sources.common.RangeStreams.columnarEligible(options, required)
-
-  override def supportColumnarReads(p: InputPartition): Boolean = columnarOk
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new BamPartitionReader(fullSchema, required, requiredNested, options, limit,
-      p.asInstanceOf[BamInputPartition])
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new graft.sources.common.ColumnarRowBatcher(
-      new BamPartitionReader(fullSchema, required, requiredNested, options, limit,
-        p.asInstanceOf[BamInputPartition]), required)
+object BamPartitionReader {
+  val ctor: GenomicReaderFactory.Ctor = (schema, pushdown, options, part) =>
+    new BamPartitionReader(schema, pushdown, options,
+      part.asInstanceOf[BamInputPartition])
 }
 
-class BamPartitionReader(fullSchema: StructType, required: StructType,
-    requiredNested: StructType,
-    options: Map[String, String], limit: Int, part: BamInputPartition)
-    extends PartitionReader[InternalRow] {
+class BamPartitionReader(fullSchema: StructType, pushdown: Pushdown,
+    options: Map[String, String], part: BamInputPartition)
+    extends GenomicPartitionReader(fullSchema, pushdown) {
 
   private val conf = graft.sources.common.GraftHadoop.conf()
   private val path = new Path(part.pathStr)
@@ -329,16 +293,16 @@ class BamPartitionReader(fullSchema: StructType, required: StructType,
     graft.sources.common.RangeStreams.bgzfRanges(fs, path, part.ranges)
   private val le = new BamCodec.LEInput(stream)
 
+  private val required = pushdown.required
   private val tagSchema: Option[StructType] =
     if (fullSchema.fieldNames.contains("tags"))
       Some(fullSchema("tags").dataType.asInstanceOf[StructType])
     else None
+  // the region residual reads RawRecord.refId/pos0/refLen, which the
+  // decoder extracts unconditionally — region checks need no column
+  // materialization, so the projection is used as-is
   private val need: Array[Boolean] = {
     val req = required.fieldNames.toSet
-    // region re-check needs rname/pos/end regardless of projection
-    // NOTE: the region residual reads RawRecord.refId/pos0/refLen,
-    // which the decoder extracts unconditionally — region checks need
-    // no column materialization, so `req` is used as-is
     BamSource.FixedFields.map(f => req(f.name)).toArray
   }
   private val coords =
@@ -350,55 +314,24 @@ class BamPartitionReader(fullSchema: StructType, required: StructType,
     },
     parseTags = required.fieldNames.contains("tags"),
     neededTags = graft.sources.common.LineSourceUtil
-      .nestedStruct(requiredNested, "tags").map(_.fieldNames.toSet))
+      .nestedStruct(pushdown.requiredNested, "tags").map(_.fieldNames.toSet))
 
-  private val refIdByName = header.refNames.zipWithIndex.toMap
-  private val regionsById: Seq[(Int, Long, Long)] = part.regions.flatMap {
-    case (name, s, e) => refIdByName.get(name).map(id => (id, s, e))
-  }
-  // flat arrays for the per-record residual check: Seq.exists allocated
-  // an iterator + closure per record (r14 JIT-stability audit)
-  private val regionIds: Array[Int] = regionsById.map(_._1).toArray
-  private val regionStarts: Array[Long] = regionsById.map(_._2).toArray
-  private val regionEnds: Array[Long] = regionsById.map(_._3).toArray
+  private val residual =
+    new RegionResidual(part.regions, header.refNames.zipWithIndex)
 
-  private val projIdx: Array[Int] =
-    required.fieldNames.map(fullSchema.fieldIndex)
-  private val identityProj = projIdx.sameElements(fullSchema.indices)
-
-  private var current: InternalRow = _
-  private var emitted = 0
-
-  // htslib bam_endpos convention: zero-reference-length records (no
-  // CIGAR, all-clip/insert) span length 1
-  private def overlapsAnyRegion(rec: BamCodec.RawRecord): Boolean = {
-    var i = 0
-    while (i < regionIds.length) {
-      if (rec.refId == regionIds(i) && rec.pos0 < regionEnds(i) &&
-          (rec.pos0 + math.max(rec.refLen, 1L)) > regionStarts(i))
-        return true
-      i += 1
-    }
-    false
-  }
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
+  override protected def nextRow(): InternalRow = {
     while (true) {
       val rec = decoder.read(le)
-      if (rec == null) return false
-      val keep = (!part.unmappedOnly || (rec.flag & 0x4) != 0) &&
-        (regionIds.length == 0 || overlapsAnyRegion(rec))
-      if (keep) {
-        current = LineSourceUtil.projectRow(rec.row, projIdx, fullSchema,
-          identityProj)
-        emitted += 1
-        return true
-      }
+      if (rec == null) return null
+      // htslib bam_endpos convention: zero-reference-length records (no
+      // CIGAR, all-clip/insert) span length 1
+      if ((!part.unmappedOnly || (rec.flag & 0x4) != 0) &&
+          (residual.isEmpty || residual.overlaps(rec.refId, rec.pos0,
+            rec.pos0 + math.max(rec.refLen, 1L))))
+        return rec.row
     }
-    false
+    null
   }
 
-  override def get(): InternalRow = current
   override def close(): Unit = stream.close()
 }

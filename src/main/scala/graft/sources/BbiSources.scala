@@ -11,7 +11,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.formats.{BbiCodec, SeekableInputs}
-import graft.sources.common.{GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown}
+import graft.sources.common.{GenomicPartitionReader, GenomicReaderFactory, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown, RegionResidual}
 
 /** BigWig / BigBed / BBI-zoom DSv2 readers (SURVEY §2.1 S16-S18).
   *
@@ -157,7 +157,8 @@ case class BbiInputPartition(pathStr: String, dataOffset: Long,
 
 class BbiScan(wig: Boolean, fullSchema: StructType, paths: Seq[Path],
     options: Map[String, String], pushdown: Pushdown)
-    extends GenomicScan(if (wig) "bigwig" else "bigbed", paths, pushdown) {
+    extends GenomicScan(if (wig) "bigwig" else "bigbed", fullSchema, paths,
+      options, pushdown, BbiPartitionReader.ctor) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
@@ -212,23 +213,17 @@ class BbiScan(wig: Boolean, fullSchema: StructType, paths: Seq[Path],
       } finally in.close()
     }.toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BbiReaderFactory(wig, fullSchema, pushdown.required, options,
-      pushdown.limit)
 }
 
-class BbiReaderFactory(wig: Boolean, fullSchema: StructType,
-    required: StructType, options: Map[String, String], limit: Int)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new BbiPartitionReader(wig, fullSchema, required, options, limit,
-      p.asInstanceOf[BbiInputPartition])
+object BbiPartitionReader {
+  val ctor: GenomicReaderFactory.Ctor = (schema, pushdown, options, part) =>
+    new BbiPartitionReader(schema, pushdown, options,
+      part.asInstanceOf[BbiInputPartition])
 }
 
-class BbiPartitionReader(wig: Boolean, fullSchema: StructType,
-    required: StructType, options: Map[String, String], limit: Int,
-    part: BbiInputPartition) extends PartitionReader[InternalRow] {
+class BbiPartitionReader(fullSchema: StructType, pushdown: Pushdown,
+    options: Map[String, String], part: BbiInputPartition)
+    extends GenomicPartitionReader(fullSchema, pushdown) {
 
   private val path = new Path(part.pathStr)
   private val fs = path.getFileSystem(graft.sources.common.GraftHadoop.conf())
@@ -237,19 +232,17 @@ class BbiPartitionReader(wig: Boolean, fullSchema: StructType,
   private val header = part.header
   private val chroms = part.chroms
   private val nameById = chroms.map(c => c.id -> c.name).toMap
-  private val idByName = chroms.map(c => c.name -> c.id).toMap
+  // planning checked that the file's magic matches the format read
+  private val wig = header.isBigWig
   private val zoom = BbiSource.zoomLevel(options)
 
   private val section = BbiCodec.Section(part.startChromId, part.startBase,
     part.endChromId, part.endBase, part.dataOffset, part.dataSize)
 
-  private val regionsById: Seq[(Int, Long, Long)] = part.regions.flatMap {
-    case (n, s, e) => idByName.get(n).map(id => (id, s, e))
-  }
+  private val residual =
+    new RegionResidual(part.regions, chroms.map(c => c.name -> c.id))
   private def keep(chromId: Int, start: Long, end: Long): Boolean =
-    regionsById.isEmpty || regionsById.exists { case (id, s, e) =>
-      chromId == id && start < e && end > s
-    }
+    residual.isEmpty || residual.overlaps(chromId, start, end)
 
   // derive the typed rest columns from the SCHEMA, not by re-reading
   // the file header/options per partition: row arity then matches
@@ -268,9 +261,9 @@ class BbiPartitionReader(wig: Boolean, fullSchema: StructType,
   private val rows: Iterator[InternalRow] = {
     def chromName(id: Int): Any =
       nameById.get(id).map(UTF8String.fromString).orNull
-    val all: Seq[InternalRow] = zoom match {
+    zoom match {
       case Some(_) =>
-        BbiCodec.readZoomSection(in, header, section)
+        BbiCodec.readZoomSection(in, header, section).iterator
           .filter(z => keep(z.chromId, z.start, z.end))
           .map { z =>
             new GenericInternalRow(Array[Any](chromName(z.chromId), z.start,
@@ -278,14 +271,14 @@ class BbiPartitionReader(wig: Boolean, fullSchema: StructType,
               z.sumData.toDouble, z.sumSquares.toDouble))
           }
       case None if wig =>
-        BbiCodec.readWigSection(in, header, section)
+        BbiCodec.readWigSection(in, header, section).iterator
           .filter(i => keep(i.chromId, i.start, i.end))
           .map { i =>
             new GenericInternalRow(Array[Any](chromName(i.chromId), i.start,
               i.end, i.value))
           }
       case None =>
-        BbiCodec.readBedSection(in, header, section)
+        BbiCodec.readBedSection(in, header, section).iterator
           .filter(i => keep(i.chromId, i.start, i.end))
           .map { i =>
             val base = Array[Any](chromName(i.chromId), i.start, i.end)
@@ -302,8 +295,6 @@ class BbiPartitionReader(wig: Boolean, fullSchema: StructType,
             new GenericInternalRow(base ++ restCols)
           }
     }
-    val capped = if (limit >= 0) all.take(limit) else all
-    capped.iterator
   }
 
   /** AutoSql lists and sets arrive as comma-separated text (often with a
@@ -322,18 +313,8 @@ class BbiPartitionReader(wig: Boolean, fullSchema: StructType,
       s"unsupported bigbed field type $other")
   }
 
-  private val projIdx: Array[Int] =
-    required.fieldNames.map(fullSchema.fieldIndex)
-  private val identityProj = projIdx.sameElements(fullSchema.indices)
-  private var current: InternalRow = _
+  override protected def nextRow(): InternalRow =
+    if (rows.hasNext) rows.next() else null
 
-  override def next(): Boolean = {
-    if (!rows.hasNext) return false
-    current = graft.sources.common.LineSourceUtil.projectRow(
-      rows.next(), projIdx, fullSchema, identityProj)
-    true
-  }
-
-  override def get(): InternalRow = current
   override def close(): Unit = in.close()
 }

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.CoordSystem
 import graft.formats.{BamCodec, BcfCodec, BgzfRangeInputStream, GenomicIndex, SeekableInputs}
 import graft.formats.Bgzf.VirtualPosition
-import graft.sources.common.{BgzfIndexPlanner, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown}
+import graft.sources.common.{BgzfIndexPlanner, GenomicPartitionReader, GenomicReaderFactory, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown, RegionResidual}
 
 /** DSv2 binary BCF reader (SURVEY §2.1 S9).
   *
@@ -122,7 +122,8 @@ case class BcfInputPartition(pathStr: String, ranges: Seq[(Long, Long)],
 
 class BcfScan(fullSchema: StructType, paths: Seq[Path],
     options: Map[String, String], pushdown: Pushdown)
-    extends GenomicScan("bcf", paths, pushdown) {
+    extends GenomicScan("bcf", fullSchema, paths, options, pushdown,
+      BcfPartitionReader.ctor) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
@@ -142,24 +143,17 @@ class BcfScan(fullSchema: StructType, paths: Seq[Path],
       plan.groups.map(BcfInputPartition(p.toString, _, plan.residual))
     }.toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BcfReaderFactory(fullSchema, pushdown.required,
-      pushdown.requiredNested, options, pushdown.limit)
 }
 
-class BcfReaderFactory(fullSchema: StructType, required: StructType,
-    requiredNested: StructType,
-    options: Map[String, String], limit: Int) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new BcfPartitionReader(fullSchema, required, requiredNested, options, limit,
-      p.asInstanceOf[BcfInputPartition])
+object BcfPartitionReader {
+  val ctor: GenomicReaderFactory.Ctor = (schema, pushdown, options, part) =>
+    new BcfPartitionReader(schema, pushdown, options,
+      part.asInstanceOf[BcfInputPartition])
 }
 
-class BcfPartitionReader(fullSchema: StructType, required: StructType,
-    requiredNested: StructType,
-    options: Map[String, String], limit: Int, part: BcfInputPartition)
-    extends PartitionReader[InternalRow] {
+class BcfPartitionReader(fullSchema: StructType, pushdown: Pushdown,
+    options: Map[String, String], part: BcfInputPartition)
+    extends GenomicPartitionReader(fullSchema, pushdown) {
 
   private val path = new Path(part.pathStr)
   private val fs = path.getFileSystem(graft.sources.common.GraftHadoop.conf())
@@ -182,28 +176,19 @@ class BcfPartitionReader(fullSchema: StructType, required: StructType,
     fullSchema.fieldNames.find(_ == "samples").map(_ =>
       fullSchema("samples").dataType.asInstanceOf[StructType])
 
-  private val regionsById: Seq[(Int, Long, Long)] = {
-    val ids = dict.contigs.zipWithIndex.toMap
-    part.regions.flatMap { case (n, s, e) => ids.get(n).map(id => (id, s, e)) }
-  }
-
-  private val projIdx: Array[Int] =
-    required.fieldNames.map(fullSchema.fieldIndex)
-  private val identityProj = projIdx.sameElements(fullSchema.indices)
-
-  private var current: InternalRow = _
-  private var emitted = 0
+  private val residual =
+    new RegionResidual(part.regions, dict.contigs.zipWithIndex)
 
   // projection-aware decode: un-projected INFO values / the whole
   // per-sample block skip typed decoding (region residual checks use
   // contigId/pos0/rlen, which are always decoded, so this is safe even
   // under region queries)
-  private val wantInfo = required.fieldNames.contains("info")
-  private val wantSamples = required.fieldNames.contains("samples")
+  private val wantInfo = pushdown.required.fieldNames.contains("info")
+  private val wantSamples = pushdown.required.fieldNames.contains("samples")
   // nested pruning → string-dictionary index predicates: un-requested
   // INFO keys / FORMAT fields are size-skipped in the codec, never boxed
   private def nestedStruct(name: String): Option[StructType] =
-    graft.sources.common.LineSourceUtil.nestedStruct(requiredNested, name)
+    LineSourceUtil.nestedStruct(pushdown.requiredNested, name)
   private def dictIdx(names: Set[String]): Set[Int] =
     names.flatMap(n => Some(dict.strings.indexOf(n)).filter(_ >= 0))
   private val wantedInfoIdx: Option[Set[Int]] =
@@ -275,36 +260,27 @@ class BcfPartitionReader(fullSchema: StructType, required: StructType,
     options.getOrElse("mode", "FAILFAST").equalsIgnoreCase("permissive")
   private var skipped = 0L
 
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
+  override protected def nextRow(): InternalRow = {
     while (true) {
       BcfCodec.readRecord(le, wantInfo, wantSamples,
         wantInfoKey, wantFmtKey) match {
-        case None => return false
-        case Some(rec) =>
-          val keep = regionsById.isEmpty || regionsById.exists {
-            case (id, s, e) =>
-              rec.contigId == id && rec.pos0 < e && (rec.pos0 + rec.rlen) > s
-          }
-          if (keep) {
-            val row =
-              if (!permissive) project(toRow(rec))
-              else try project(toRow(rec)) catch {
-                case e: Exception =>
-                  skipped += 1
-                  if (skipped <= 10) BcfSource.log.warn(
-                    s"skipping malformed BCF record: ${e.getMessage}")
-                  null
-              }
-            if (row != null) {
-              current = row
-              emitted += 1
-              return true
+        case None => return null
+        case Some(rec) if residual.isEmpty || residual.overlaps(
+            rec.contigId, rec.pos0, rec.pos0 + rec.rlen) =>
+          val row =
+            if (!permissive) toRow(rec)
+            else try toRow(rec) catch {
+              case e: Exception =>
+                skipped += 1
+                if (skipped <= 10) BcfSource.log.warn(
+                  s"skipping malformed BCF record: ${e.getMessage}")
+                null
             }
-          }
+          if (row != null) return row
+        case _ => ()
       }
     }
-    false
+    null
   }
 
   private def utf8(s: String) = UTF8String.fromString(s)
@@ -529,9 +505,5 @@ class BcfPartitionReader(fullSchema: StructType, required: StructType,
     }
   }
 
-  private def project(row: InternalRow): InternalRow =
-    LineSourceUtil.projectRow(row, projIdx, fullSchema, identityProj)
-
-  override def get(): InternalRow = current
   override def close(): Unit = stream.close()
 }

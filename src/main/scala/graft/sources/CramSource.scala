@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{CoordSystem, Region}
 import graft.formats.{CramCodec, FaiIndex, SeekableInputs}
-import graft.sources.common.{GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown}
+import graft.sources.common.{GenomicPartitionReader, GenomicReaderFactory, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown, RegionResidual}
 
 /** DSv2 CRAM reader (SURVEY §2.1 S7) — the reference's CRAM scanner
   * surface (`/root/reference/oxbow/src/alignment/scanner/cram.rs:42-120`)
@@ -198,7 +198,8 @@ case class CramInputPartition(pathStr: String, containerOffset: Long,
 
 class CramScan(fullSchema: StructType, paths: Seq[Path],
     options: Map[String, String], pushdown: Pushdown)
-    extends GenomicScan("cram", paths, pushdown) {
+    extends GenomicScan("cram", fullSchema, paths, options, pushdown,
+      CramPartitionReader.ctor) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
@@ -259,22 +260,17 @@ class CramScan(fullSchema: StructType, paths: Seq[Path],
       }
     }.toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CramReaderFactory(fullSchema, pushdown.required, options,
-      pushdown.limit)
 }
 
-class CramReaderFactory(fullSchema: StructType, required: StructType,
-    options: Map[String, String], limit: Int) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new CramPartitionReader(fullSchema, required, options, limit,
-      p.asInstanceOf[CramInputPartition])
+object CramPartitionReader {
+  val ctor: GenomicReaderFactory.Ctor = (schema, pushdown, options, part) =>
+    new CramPartitionReader(schema, pushdown, options,
+      part.asInstanceOf[CramInputPartition])
 }
 
-class CramPartitionReader(fullSchema: StructType, required: StructType,
-    options: Map[String, String], limit: Int, part: CramInputPartition)
-    extends PartitionReader[InternalRow] {
+class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
+    options: Map[String, String], part: CramInputPartition)
+    extends GenomicPartitionReader(fullSchema, pushdown) {
 
   private val conf = graft.sources.common.GraftHadoop.conf()
   private val path = new Path(part.pathStr)
@@ -300,11 +296,7 @@ class CramPartitionReader(fullSchema: StructType, required: StructType,
   }
   private val refNames: IndexedSeq[String] =
     CramSource.refDictionary(headerText).map(_._1).toIndexedSeq
-  private val refIdByName = refNames.zipWithIndex.toMap
-
-  private val regionsById: Seq[(Int, Long, Long)] = part.regions.flatMap {
-    case (n, s, e) => refIdByName.get(n).map(id => (id, s, e))
-  }
+  private val residual = new RegionResidual(part.regions, refNames.zipWithIndex)
 
   private val tagSchema: Option[StructType] =
     if (fullSchema.fieldNames.contains("tags"))
@@ -316,6 +308,7 @@ class CramPartitionReader(fullSchema: StructType, required: StructType,
   // (for purely-external series) their blocks are never decompressed.
   // Region predicates only consult refId/start/refLen, which are always
   // decoded, so required-based skipping is safe under region queries too.
+  private val required = pushdown.required
   private val wantQual = required.fieldNames.contains("qual")
   private val wantQname = required.fieldNames.contains("qname")
   private val wantTags = required.fieldNames.contains("tags")
@@ -333,11 +326,12 @@ class CramPartitionReader(fullSchema: StructType, required: StructType,
       FaiIndex.readFor(rp, conf).map(entries => (rp, entries))
     }
 
-  /** Decode the partition's container into records lazily per slice. */
-  private val rows: Iterator[InternalRow] = {
+  /** Decode the partition's container lazily per slice: each call
+    * returns the next kept record's row, null at the end. */
+  private val rows: () => InternalRow = {
     val s = new CramSource.CountingStream(in, part.containerOffset)
     val container = CramCodec.readContainerHeader(s)
-    if (container.isEof || container.nRecords == 0) Iterator.empty
+    if (container.isEof || container.nRecords == 0) () => null
     else {
       val comp = {
         val b = CramCodec.readBlock(s)
@@ -412,13 +406,13 @@ class CramPartitionReader(fullSchema: StructType, required: StructType,
         slices += ((slice, core, ext.result()))
         blocksRead += 1 + slice.nBlocks
       }
-      // explicit per-record iterator instead of
+      // explicit per-record loop instead of
       // slices.iterator.flatMap { records.iterator.map(toRow) }: the
       // per-record dispatch is a direct monomorphic toRow call, not a
       // lambda under two generic iterator adapters whose steady-state
       // cost depends on whether C2 happens to inline them (the same
       // per-JVM coin flip fixed in the text-scan path this round)
-      new Iterator[InternalRow] {
+      new (() => InternalRow) {
         private var si = 0
         private var records: collection.IndexedSeq[CramCodec.CramRecord] = null
         private var ri = 0
@@ -459,17 +453,16 @@ class CramPartitionReader(fullSchema: StructType, required: StructType,
             })
         }
 
-        override def hasNext: Boolean = {
-          while ((records == null || ri >= records.length) &&
-            si < slices.length) loadSlice()
-          records != null && ri < records.length
-        }
-
-        override def next(): InternalRow = {
-          if (!hasNext) throw new NoSuchElementException("CRAM iterator")
-          val rec = records(ri)
-          ri += 1
-          toRow(rec, comp, refSlice)
+        override def apply(): InternalRow = {
+          while (true) {
+            while ((records == null || ri >= records.length) &&
+              si < slices.length) loadSlice()
+            if (records == null || ri >= records.length) return null
+            val rec = records(ri)
+            ri += 1
+            if (keep(rec)) return toRow(rec, comp, refSlice)
+          }
+          null
         }
       }
     }
@@ -577,45 +570,18 @@ class CramPartitionReader(fullSchema: StructType, required: StructType,
     case _ => null
   }
 
-  private val projIdx: Array[Int] =
-    required.fieldNames.map(fullSchema.fieldIndex)
-  private val identityProj = projIdx.sameElements(fullSchema.indices)
+  // an unmapped record has no position, so no region keeps it; placed
+  // records with no reference span count as length 1 (htslib
+  // bam_endpos convention)
+  private def keep(rec: CramCodec.CramRecord): Boolean =
+    (!part.unmappedOnly || rec.isUnmapped) && (residual.isEmpty ||
+      !rec.isUnmapped && {
+        val start0 = rec.alignmentStart - 1L
+        residual.overlaps(rec.refId, start0,
+          start0 + math.max(rec.referenceLength, 1))
+      })
 
-  private var current: InternalRow = _
-  private var emitted = 0
+  override protected def nextRow(): InternalRow = rows()
 
-  private def keepRow(row: InternalRow): Boolean = {
-    if (part.unmappedOnly && (row.getInt(1) & 0x4) == 0) return false
-    if (regionsById.isEmpty) return true
-    val rnameIdx = 2; val posIdx = 3; val endIdx = 11
-    if (row.isNullAt(rnameIdx) || row.isNullAt(posIdx)) return false
-    val name = row.getUTF8String(rnameIdx).toString
-    val start0 = row.getLong(posIdx) - 1 - posShift
-    // 1-based closed end == half-open end; placed records with no
-    // reference span (null/zero end) count as length 1 (htslib
-    // bam_endpos convention)
-    val end0 =
-      if (row.isNullAt(endIdx)) start0 + 1
-      else math.max(row.getLong(endIdx), start0 + 1)
-    regionsById.exists { case (id, s, e) =>
-      refNames.lift(id).contains(name) && start0 < e && end0 > s
-    }
-  }
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (rows.hasNext) {
-      val row = rows.next()
-      if (keepRow(row)) {
-        current = LineSourceUtil.projectRow(row, projIdx, fullSchema,
-          identityProj)
-        emitted += 1
-        return true
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
   override def close(): Unit = in.close()
 }

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Region
 import graft.formats.{Bgzf, FaiIndex, GziIndex, SeekableInputs}
-import graft.sources.common.{GenomicScan, LineSourceUtil, Pushdown}
+import graft.sources.common.{GenomicPartitionReader, GenomicReaderFactory, GenomicScan, LineSourceUtil, Pushdown}
 
 /** FAI-indexed FASTA region slicing (SURVEY §2.1 S14): one partition per
   * (sequence × overlapping region), each reading ONLY the bytes covering
@@ -58,7 +58,8 @@ case class FaiSlicePartition(pathStr: String, gzi: Boolean,
 
 class FaiSliceScan(fullSchema: StructType, paths: Seq[Path],
     options: Map[String, String], pushdown: Pushdown)
-    extends GenomicScan("fasta-fai", paths, pushdown) {
+    extends GenomicScan("fasta-fai", fullSchema, paths, options, pushdown,
+      FaiSliceReader.ctor) {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
@@ -127,19 +128,16 @@ class FaiSliceScan(fullSchema: StructType, paths: Seq[Path],
       packed.result()
     }.toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FaiSliceReaderFactory(fullSchema, pushdown.required)
 }
 
-class FaiSliceReaderFactory(fullSchema: StructType, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new FaiSliceReader(fullSchema, required, p.asInstanceOf[FaiSlicePartition])
+object FaiSliceReader {
+  val ctor: GenomicReaderFactory.Ctor = (schema, pushdown, _, part) =>
+    new FaiSliceReader(schema, pushdown, part.asInstanceOf[FaiSlicePartition])
 }
 
-class FaiSliceReader(fullSchema: StructType, required: StructType,
-    part: FaiSlicePartition) extends PartitionReader[InternalRow] {
+class FaiSliceReader(fullSchema: StructType, pushdown: Pushdown,
+    part: FaiSlicePartition)
+    extends GenomicPartitionReader(fullSchema, pushdown) {
 
   private val path = new Path(part.pathStr)
   private val raw = new FastaFaiSource.Counting(
@@ -161,16 +159,13 @@ class FaiSliceReader(fullSchema: StructType, required: StructType,
   // us (supportsExternalMetadata lets a user declare a subset/reorder
   // of the canonical columns): a positional 5-slot row under a 2-field
   // user schema would silently serve the description as the sequence
-  private val projIdx: Array[Int] =
-    required.fieldNames.map(fullSchema.fieldIndex)
-  private val identityProj = projIdx.sameElements(fullSchema.indices)
   private val fullNames = fullSchema.fieldNames
+  private val required = pushdown.required
 
   private val slices = part.slices.iterator
-  private var current: InternalRow = _
 
-  override def next(): Boolean = {
-    if (!slices.hasNext) return false
+  override protected def nextRow(): InternalRow = {
+    if (!slices.hasNext) return null
     val s = slices.next()
     val entry = FaiIndex.Entry(s.name, s.length, s.offset,
       s.lineBases, s.lineWidth)
@@ -215,12 +210,8 @@ class FaiSliceReader(fullSchema: StructType, required: StructType,
         if (seq == null) null else UTF8String.fromString(seq)
       case _ => null // unknown user-declared column → null, not garbage
     }
-    val full = new GenericInternalRow(values)
-    current = LineSourceUtil.projectRow(full, projIdx, fullSchema,
-      identityProj)
-    true
+    new GenericInternalRow(values)
   }
 
-  override def get(): InternalRow = current
   override def close(): Unit = in.close()
 }

@@ -17,8 +17,9 @@ import graft.formats.Bgzf.VirtualPosition
   * [[GenomicTable]] → [[GenomicScanBuilder]] → a [[GenomicScan]]
   * subclass whose `planInputPartitions` turns [[GenomicScan.regions]]
   * into partitions, through [[BgzfIndexPlanner]] for BGZF files with a
-  * BAI/CSI/TBI index. Readers keep only their format's own planning and
-  * per-record decode. */
+  * BAI/CSI/TBI index, and whose [[GenomicReaderFactory]] runs the
+  * format's [[GenomicPartitionReader]]. Readers keep only their format's
+  * own planning and per-record decode. */
 
 /** What Catalyst pushed into a scan: the pruned top-level columns (in
   * full-schema order), the schema exactly as pruned — nested fields
@@ -82,12 +83,16 @@ class GenomicScanBuilder(fullSchema: StructType, chrom: Option[String],
     scan(Pushdown(required, requiredNested, pushed, limit))
 }
 
-/** Base of every genomic scan: the pruned read schema and the
-  * `graft-<label> <paths>[ pushed=[...]]` plan description. */
-abstract class GenomicScan(label: String, paths: Seq[Path],
-    pushdown: Pushdown) extends Scan with Batch {
+/** Base of every genomic scan: the pruned read schema, the
+  * `graft-<label> <paths>[ pushed=[...]]` plan description and the
+  * [[GenomicReaderFactory]] over the format's `reader`. */
+abstract class GenomicScan(label: String, fullSchema: StructType,
+    paths: Seq[Path], options: Map[String, String], pushdown: Pushdown,
+    reader: GenomicReaderFactory.Ctor) extends Scan with Batch {
   override def readSchema(): StructType = pushdown.required
   override def toBatch: Batch = this
+  override def createReaderFactory(): PartitionReaderFactory =
+    new GenomicReaderFactory(fullSchema, pushdown, options, reader)
   override def description(): String = s"graft-$label ${paths.mkString(",")}" +
     (if (pushdown.filters.nonEmpty)
       s" pushed=[${pushdown.filters.mkString(",")}]" else "")

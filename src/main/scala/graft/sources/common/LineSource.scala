@@ -12,8 +12,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, In}
-import org.apache.spark.sql.types.{BooleanType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.sources.{EqualTo, In}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.{CoordSystem, Region}
@@ -138,10 +138,8 @@ object LineSourceUtil {
         }
       }
 
-  /** The ONE row projector shared by every partition reader (line, BAM,
-    * BCF, CRAM, BBI, FAI-slice): copy the required ordinals out of a
-    * full-schema row, with the identity short-circuit, so the null
-    * handling cannot drift between readers. */
+  /** The row projector of [[GenomicPartitionReader]]: copy the required
+    * ordinals out of a full-schema row, with the identity short-circuit. */
   def projectRow(row: InternalRow, projIdx: Array[Int],
       fullSchema: StructType, identityProj: Boolean): InternalRow =
     if (identityProj) row
@@ -267,8 +265,11 @@ object LineSourceUtil {
   def maxSplitBytes(options: Map[String, String], fallback: Long,
       totalBytes: Long = 0L): Long = {
     val session = org.apache.spark.sql.SparkSession.getActiveSession
-    val budget = options.get("maxpartitionbytes").map(_.toLong)
-      .orElse(session
+    val budget = options.get("maxpartitionbytes").map { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"option maxpartitionbytes must be a positive byte count, got '$v'"))
+    }.orElse(session
         .filter(_.sessionState.conf.contains(
           "spark.sql.files.maxPartitionBytes"))
         .map(_.sessionState.conf.filesMaxPartitionBytes))
@@ -387,7 +388,8 @@ case class LineInputPartition(pathStr: String, start: Long, end: Long,
 
 class LineScan(format: LineFormat, fullSchema: StructType, paths: Seq[Path],
     options: Map[String, String], pushdown: Pushdown)
-    extends GenomicScan(format.shortName, paths, pushdown) {
+    extends GenomicScan(format.shortName, fullSchema, paths, options,
+      pushdown, LineReader.ctor(format)) {
 
   private val pushed = pushdown.filters.toSeq
 
@@ -476,117 +478,23 @@ class LineScan(format: LineFormat, fullSchema: StructType, paths: Seq[Path],
       }
     }.toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LineReaderFactory(format, fullSchema, pushdown.required,
-      pushdown.requiredNested, options, pushdown.filters, pushdown.limit)
-}
-
-class LineReaderFactory(format: LineFormat, fullSchema: StructType,
-    required: StructType, requiredNested: StructType,
-    options: Map[String, String], pushed: Array[Filter],
-    limit: Int) extends PartitionReaderFactory {
-
-  /** Columnar reads (SURVEY §4.2), opt-in via `columnar=true` for flat
-    * primitive/string projections — BED/bedgraph and the fixed text
-    * columns generally; nested/array projections (VCF structs, bed9+
-    * itemRgb) always keep the row path. Off by default on measurement:
-    * stock Spark re-materializes rows at `ColumnarToRow` for the
-    * codegen pipeline, so with parse-dominated per-record cost the
-    * batch copy is pure overhead. Round-10 A/B at bench scale (x05/x06:
-    * 66 MB BGZF BED, chrom/start/end projection, min of interleaved
-    * passes, local[32]): 1.58 s row vs 1.65 s columnar — columnar loses
-    * ~4%, consistent with the BAM pairs (x01–x04, ~8-9%), so the row
-    * path stays the default. The path exists as the integration surface
-    * for vector-consuming engines (RAPIDS/Gluten-style columnar
-    * plugins, Arrow hand-off), which elide ColumnarToRow entirely. */
-  private val columnarOk: Boolean =
-    RangeStreams.columnarEligible(options, required)
-
-  override def supportColumnarReads(p: InputPartition): Boolean = columnarOk
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new LineReader(format, fullSchema, required, requiredNested, options,
-      pushed, limit, p.asInstanceOf[LineInputPartition])
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new ColumnarRowBatcher(
-      new LineReader(format, fullSchema, required, requiredNested, options,
-        pushed, limit, p.asInstanceOf[LineInputPartition]), required)
-}
-
-/** Batches any row-producing partition reader into `OnHeapColumnVector`s
-  * (used by the text readers and the BAM reader alike). The per-record
-  * parse stays row-at-a-time (format decode is inherently so) but
-  * downstream operators read column vectors, and the scan boundary
-  * amortizes to one virtual call per 4096 rows instead of per row. */
-class ColumnarRowBatcher(rows: PartitionReader[InternalRow],
-    schema: StructType)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val capacity = 4096
-  private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(capacity, schema)
-  private val batch =
-    new ColumnarBatch(vectors.map(v => v: ColumnVector), 0)
-
-  // per-column writers resolved ONCE — the type dispatch must not run
-  // per cell in the loop this batch path exists to make cheap
-  private val writers: Array[(InternalRow, Int) => Unit] =
-    Array.tabulate(schema.fields.length) { c =>
-      val v = vectors(c)
-      val put: (InternalRow, Int) => Unit = schema.fields(c).dataType match {
-        case LongType => (row, n) => v.putLong(n, row.getLong(c))
-        case IntegerType => (row, n) => v.putInt(n, row.getInt(c))
-        case DoubleType => (row, n) => v.putDouble(n, row.getDouble(c))
-        case FloatType => (row, n) => v.putFloat(n, row.getFloat(c))
-        case BooleanType => (row, n) => v.putBoolean(n, row.getBoolean(c))
-        case StringType => (row, n) => {
-          val b = row.getUTF8String(c).getBytes
-          v.putByteArray(n, b, 0, b.length)
-        }
-        case other =>
-          throw new IllegalStateException(
-            s"unsupported columnar type $other") // guarded by factory
-      }
-      (row: InternalRow, n: Int) =>
-        if (row.isNullAt(c)) v.putNull(n) else put(row, n)
-    }
-
-  override def next(): Boolean = {
-    var n = 0
-    var i = 0
-    while (i < vectors.length) { vectors(i).reset(); i += 1 }
-    while (n < capacity && rows.next()) {
-      val row = rows.get()
-      var c = 0
-      while (c < writers.length) {
-        writers(c)(row, n)
-        c += 1
-      }
-      n += 1
-    }
-    batch.setNumRows(n)
-    n > 0
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = rows.close()
 }
 
 object LineReader {
   private[common] val log =
     org.slf4j.LoggerFactory.getLogger(classOf[LineReader])
+
+  def ctor(format: LineFormat): GenomicReaderFactory.Ctor =
+    (schema, pushdown, options, part) => new LineReader(format, schema,
+      pushdown, options, part.asInstanceOf[LineInputPartition])
 }
 
 class LineReader(format: LineFormat, fullSchema: StructType,
-    required: StructType, requiredNested: StructType,
-    options: Map[String, String], pushed: Array[Filter],
-    limit: Int, part: LineInputPartition)
-    extends PartitionReader[InternalRow] {
+    pushdown: Pushdown, options: Map[String, String],
+    part: LineInputPartition)
+    extends GenomicPartitionReader(fullSchema, pushdown) {
+
+  private val pushed = pushdown.filters
 
   private val conf = graft.sources.common.GraftHadoop.conf()
   private val path = new Path(part.pathStr)
@@ -625,14 +533,14 @@ class LineReader(format: LineFormat, fullSchema: StructType,
     // not a thousand
     val predicateActive = options.get("regions").isDefined || pushed.nonEmpty
     val parseSchema =
-      if (!predicateActive) requiredNested
+      if (!predicateActive) pushdown.requiredNested
       else {
         val regionTop = format.regionColumns.toSeq
           .flatMap { case (c, s, e) => Seq(c, s, e) }
         val filterTop = pushed.toSeq
           .flatMap(_.references.toSeq.map(_.takeWhile(_ != '.')))
         val (extraTop, extraNested) = format.predicateNeeds(options)
-        LineSourceUtil.mergeNeeded(fullSchema, requiredNested,
+        LineSourceUtil.mergeNeeded(fullSchema, pushdown.requiredNested,
           (regionTop ++ filterTop ++ extraTop).distinct, extraNested)
       }
     format.newParser(fullSchema, options, parseSchema)
@@ -690,13 +598,7 @@ class LineReader(format: LineFormat, fullSchema: StructType,
 
   // region/filter predicate from `regions` option + pushed filters
   private val regionPred: InternalRow => Boolean = buildRegionPred()
-  // projection full → required
-  private val projIdx: Array[Int] =
-    required.fieldNames.map(fullSchema.fieldIndex)
-  private val identityProj = projIdx.sameElements(fullSchema.indices)
 
-  private var current: InternalRow = _
-  private var emitted = 0
   private var exhausted = false
 
   private def buildRegionPred(): InternalRow => Boolean = {
@@ -863,62 +765,45 @@ class LineReader(format: LineFormat, fullSchema: StructType,
   }
   private val singleRow = !parser.emitsMany
 
-  private def emitFromPending(): Boolean = {
+  /** The next queued row that passes the predicate, or null. */
+  private def pendingRow(): InternalRow = {
     while (pending.nonEmpty) {
       val row = pending.dequeue()
-      if (regionPred(row)) {
-        current = project(row); emitted += 1; return true
-      }
+      if (regionPred(row)) return row
     }
-    false
+    null
   }
 
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    if (emitFromPending()) return true
-    if (exhausted) return false
-    while (true) {
+  override protected def nextRow(): InternalRow = {
+    var row = pendingRow()
+    while (row == null && !exhausted) {
       val line = readLineExact()
-      if (line == null) {
-        exhausted = true
-        pending ++= flushSafe()
-        return emitFromPending()
-      }
-      pos += lastLineBytes
-      val skip = startedMidLine
-      startedMidLine = false
-      // Hadoop line-split ownership: this split owns every line it reads
-      // (except the skipped partial first line); the line whose end
-      // crosses part.end is the last owned one. (vpos streams end exactly
-      // at a record boundary instead.)
-      if (!part.gzip && !part.vpos && pos > part.end) exhausted = true
-      if (!skip && (line.nonEmpty || !format.skipEmptyLines) &&
-          !isComment(line)) {
-        if (singleRow && !exhausted) {
-          // hot path: parse straight to the row, no Option/Seq/Queue.
-          // (pending is empty here by construction: every entry point
-          // into this loop drains it first.)
-          val row = parseOneSafe(line)
-          if (row != null && regionPred(row)) {
-            current = project(row); emitted += 1; return true
-          }
-        } else {
-          pending ++= parseSafe(line)
-          if (exhausted) pending ++= flushSafe()
-          if (emitFromPending()) return true
+      if (line == null) exhausted = true
+      else {
+        pos += lastLineBytes
+        val skip = startedMidLine
+        startedMidLine = false
+        // Hadoop line-split ownership: this split owns every line it
+        // reads (except the skipped partial first line); the line whose
+        // end crosses part.end is the last owned one. (vpos streams end
+        // exactly at a record boundary instead.)
+        if (!part.gzip && !part.vpos && pos > part.end) exhausted = true
+        if (!skip && (line.nonEmpty || !format.skipEmptyLines) &&
+            !isComment(line)) {
+          if (singleRow && !exhausted) {
+            // hot path: parse straight to the row, no Option/Seq/Queue.
+            // (pending is empty here by construction: every pass of
+            // this loop drains it.)
+            val parsed = parseOneSafe(line)
+            if (parsed != null && regionPred(parsed)) return parsed
+          } else pending ++= parseSafe(line)
         }
-      } else if (exhausted) {
-        pending ++= flushSafe()
-        return emitFromPending()
       }
-      if (exhausted) return false
+      if (exhausted) pending ++= flushSafe()
+      row = pendingRow()
     }
-    false
+    row
   }
 
-  private def project(row: InternalRow): InternalRow =
-    LineSourceUtil.projectRow(row, projIdx, fullSchema, identityProj)
-
-  override def get(): InternalRow = current
   override def close(): Unit = reader.close()
 }

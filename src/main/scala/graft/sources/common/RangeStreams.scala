@@ -97,9 +97,9 @@ object RangeStreams {
       onClose = () => if (shared != null) shared.close())
   }
 
-  /** Columnar-read eligibility shared by the reader factories: opt-in
-    * (`columnar=true` — off by default, see the factories' measurement
-    * notes) and a flat primitive/string projection. */
+  /** Columnar-read eligibility of [[GenomicReaderFactory]]: opt-in
+    * (`columnar=true` — off by default, see its measurement note) and a
+    * flat primitive/string projection. */
   def columnarEligible(options: Map[String, String],
       required: StructType): Boolean =
     (options.getOrElse("columnar", "false").toLowerCase match {

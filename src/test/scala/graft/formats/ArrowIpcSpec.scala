@@ -108,6 +108,20 @@ class ArrowIpcSpec extends SparkSuite {
       .toIpcBytesColumnar(bam)
     assert(bamCol.sameElements(bamRow))
     assert(readAll(bamCol).size == 500)
+
+    // flat CRAM projection: one container, so one partition
+    val cramPath = bamDir.resolve("c.cram").toString
+    graft.fixtures.CramFixture.write(cramPath,
+      "@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:100000\n",
+      Seq((1 to 500).map(i => graft.fixtures.CramFixture.CRec(s"r$i", 0, 0,
+        i * 100, 60, 4))))
+    val cram = spark.read.format("cram").option("columnar", "true")
+      .load(cramPath).select("qname", "flag", "pos", "mapq", "end")
+    val cramRow = org.apache.spark.sql.graftshim.ArrowShim.toIpcBytes(cram)
+    val cramCol = org.apache.spark.sql.graftshim.ArrowShim
+      .toIpcBytesColumnar(cram)
+    assert(cramCol.sameElements(cramRow))
+    assert(readAll(cramCol).size == 500)
   }
 
   test("columnar IPC splices multi-partition streams value-identically") {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -97,17 +97,74 @@ class GenomicScanSpec extends SparkSuite {
       .getOrElse(fail(s"no IllegalArgumentException in $e"))
   }
 
-  Seq(("bam", () => corpus.bam, "virtual_ranges"),
-      ("bed", () => corpus.bed, "virtual_ranges"),
-      ("bed", () => corpus.bed, "byte_ranges")).foreach {
-    case (fmt, path, key) =>
+  // (format, path, option, valid prefix, malformed tokens)
+  private val badRanges = ("0-65536;", Seq("5", "1-2-3", "0-x"))
+  private val badBudgets = ("", Seq("-1", "0", "abc"))
+  Seq(("bam", () => corpus.bam, "virtual_ranges", badRanges),
+      ("bed", () => corpus.bed, "virtual_ranges", badRanges),
+      ("bed", () => corpus.bed, "byte_ranges", badRanges),
+      ("bam", () => corpus.bam, "maxpartitionbytes", badBudgets),
+      ("bed", () => corpus.bed, "maxpartitionbytes", badBudgets)).foreach {
+    case (fmt, path, key, (prefix, bads)) =>
       test(s"$fmt: a malformed $key value names the option and the token") {
-        Seq("5", "1-2-3", "0-x").foreach { bad =>
+        bads.foreach { bad =>
           val e = argumentError(spark.read.format(fmt)
-            .option(key, s"0-65536;$bad").load(path()).count())
+            .option(key, s"$prefix$bad").load(path()).count())
           assert(e.getMessage.contains(key) &&
             e.getMessage.contains(s"'$bad'"), e.getMessage)
         }
       }
   }
+
+  test("bam: without an index, a region name the header lacks keeps no row") {
+    val p = java.nio.file.Files.createTempDirectory("graft-scaffold-noidx")
+      .resolve("c.bam")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(corpus.bam), p)
+    assert(spark.read.format("bam").option("regions", "chrZZ:1-100")
+      .load(p.toString).count() == 0)
+  }
+
+  /** The documented overlap rule: a row's (chrom, start0, end0), 0-based
+    * half-open, or None when the row has no position. BAM and CRAM count
+    * a zero-span read as length 1; a BCF record spans its REF allele. */
+  private def span(fmt: String, r: Row): Option[(String, Long, Long)] =
+    fmt match {
+      case "bam" | "cram" =>
+        Option(r.getAs[java.lang.Long]("pos")).map { pos =>
+          val end = Option(r.getAs[java.lang.Long]("end"))
+            .fold(pos.longValue)(e => math.max(e, pos))
+          (r.getAs[String]("rname"), pos - 1, end)
+        }
+      case "bcf" =>
+        val start0 = r.getAs[Long]("pos") - 1
+        Some((r.getAs[String]("chrom"), start0,
+          start0 + r.getAs[String]("ref").length))
+      case "bigbed" =>
+        Some((r.getAs[String]("chrom"), r.getAs[Long]("start"),
+          r.getAs[Long]("end")))
+    }
+
+  fixtures.filter(fx => Set("bam", "bcf", "cram", "bigbed")(fx.fmt))
+    .foreach { fx =>
+      test(s"${fx.fmt}: the region residual keeps each overlapping row once") {
+        val full = load(fx).collect().toSeq
+        val starts = full.flatMap(span(fx.fmt, _))
+          .collect { case ("chr1", s, _) => s }.distinct.sorted
+        val (first, last) = (starts.head, starts.last)
+        // 0-based half-open windows: two overlapping on the first chr1
+        // record's first base, one ending on the base before the last
+        // chr1 record starts
+        val windows = Seq((math.max(0L, first - 10), first + 1),
+          (first, first + 10), (last - 50, last))
+        val regions = windows.map { case (s, e) => s"chr1:${s + 1}-$e" }
+        val expected = full.filter(r => span(fx.fmt, r).exists {
+          case (c, s, e) => c == "chr1" &&
+            windows.exists { case (ws, we) => s < we && e > ws }
+        })
+        val got = load(fx, Some(regions.mkString(";"))).collect().toSeq
+        assert(got.map(_.toString).sorted == expected.map(_.toString).sorted)
+        assert(got.exists(r => span(fx.fmt, r).exists(_._2 == first)))
+        assert(!got.exists(r => span(fx.fmt, r).exists(_._2 == last)))
+      }
+    }
 }
