@@ -1,6 +1,7 @@
 package graft.formats
 
-import java.io.{DataInputStream, InputStream}
+import java.io.{ByteArrayInputStream, InputStream}
+import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.GZIPInputStream
 
 import scala.collection.mutable
@@ -211,8 +212,11 @@ object GenomicIndex {
 
   // ---------------------------------------------------------------- parsing
 
+  /** Every reader below takes the whole index in one bulk read and parses
+    * it from memory: a per-field stream read costs a Hadoop `read()` call
+    * per byte of BAI, and a JNI inflate call per byte of TBI/CSI. */
   def readBai(in: InputStream): Index = {
-    val d = new LEData(in)
+    val d = new LEData(in.readAllBytes())
     require(d.readBytes(4).sameElements("BAI\u0001".getBytes), "bad BAI magic")
     val nRef = d.readInt()
     val refs = (0 until nRef).map(_ => readRef(d, csi = false, depth = 5))
@@ -220,7 +224,7 @@ object GenomicIndex {
   }
 
   def readCsi(in: InputStream): Index = {
-    val d = new LEData(new GZIPInputStream(in))
+    val d = new LEData(inflate(in))
     require(d.readBytes(4).sameElements("CSI\u0001".getBytes), "bad CSI magic")
     val minShift = d.readInt()
     val depth = d.readInt()
@@ -240,7 +244,7 @@ object GenomicIndex {
   }
 
   def readTbi(in: InputStream): Index = {
-    val d = new LEData(new GZIPInputStream(in))
+    val d = new LEData(inflate(in))
     require(d.readBytes(4).sameElements("TBI\u0001".getBytes), "bad TBI magic")
     val nRef = d.readInt()
     val format = d.readInt()
@@ -257,10 +261,16 @@ object GenomicIndex {
       Some((colSeq, colBeg, colEnd, zeroBased)))
   }
 
+  /** The whole gzip (or BGZF: concatenated gzip members) stream `in`,
+    * read in one bulk read and inflated in one buffered pass. */
+  private def inflate(in: InputStream): Array[Byte] =
+    new GZIPInputStream(new ByteArrayInputStream(in.readAllBytes()), 1 << 16)
+      .readAllBytes()
+
   private def parseCsiAux(aux: Array[Byte]):
       (Map[String, Int], Option[(Int, Int, Int, Boolean)]) = {
     if (aux.length < 28) return (Map.empty, None)
-    val bb = java.nio.ByteBuffer.wrap(aux).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val bb = ByteBuffer.wrap(aux).order(ByteOrder.LITTLE_ENDIAN)
     val format = bb.getInt; val colSeq = bb.getInt
     val colBeg = bb.getInt; val colEnd = bb.getInt
     bb.getInt; bb.getInt // meta, skip
@@ -329,7 +339,7 @@ object GenomicIndex {
       catch {
         case e: Exception =>
           System.err.println(
-            s"[graft] unreadable index $p (${e.getMessage}) — " +
+            s"[graft] unreadable index $p ($e) — " +
               "falling back to the next index suffix or a full scan")
           None
       } finally in.close()
@@ -342,34 +352,48 @@ object GenomicIndex {
   // ----------------------------------------------------- split planning (R1)
 
   /** Compute record-aligned split points from an index: every chunk-begin
-    * virtual position, deduplicated and pruned so consecutive boundaries
-    * are ≥ `chunksize` compressed bytes apart. Returns split-start vpos in
-    * ascending order (callers pair them into [start, next) ranges). */
+    * and linear-index virtual position, deduplicated and pruned so
+    * consecutive boundaries are ≥ `chunksize` compressed bytes apart.
+    * Returns split-start vpos in ascending order (callers pair them into
+    * [start, next) ranges). An index holds an offset per chunk and per
+    * 16 kbp window, so they go into one primitive array: one sort, then
+    * one greedy walk, with no per-offset boxing. `chunksize` is positive. */
   def partitionFromIndex(index: Index, chunksize: Long): Seq[VirtualPosition] = {
-    val offsets = index.refs.iterator
-      .flatMap(r => r.bins.valuesIterator.flatMap(_.chunks.iterator.map(_.begin))
-        ++ r.linear.iterator)
-      .map(_.value).filter(_ > 0).toArray.sorted.distinct
-    if (offsets.isEmpty) return Nil
-    val out = mutable.ArrayBuffer(VirtualPosition(offsets.head))
+    require(chunksize > 0, s"split size must be positive, got $chunksize")
+    val offsets = new Array[Long](index.refs.iterator.map(r =>
+      r.bins.valuesIterator.map(_.chunks.size).sum + r.linear.size).sum)
+    var n = 0
+    index.refs.foreach { r =>
+      r.bins.valuesIterator.foreach(_.chunks.foreach { c =>
+        offsets(n) = c.begin.value; n += 1
+      })
+      r.linear.foreach { v => offsets(n) = v.value; n += 1 }
+    }
+    java.util.Arrays.sort(offsets)
+    // a repeat is 0 bytes from its first copy, so it is never taken
+    // twice; offsets <= 0 (zero linear entries) are never splits
+    val out = mutable.ArrayBuffer.empty[VirtualPosition]
+    var last = 0L
     offsets.foreach { v =>
-      val vp = VirtualPosition(v)
-      if (vp.compressedOffset - out.last.compressedOffset >= chunksize)
-        out += vp
+      if (v > 0 && (out.isEmpty || (v >>> 16) - last >= chunksize)) {
+        out += VirtualPosition(v); last = v >>> 16
+      }
     }
     out.toSeq
   }
 
-  /** Little-endian primitive reader over a stream. */
-  private[formats] final class LEData(in: InputStream) {
-    private val d = new DataInputStream(in)
+  /** Little-endian primitive reader over an index held in memory. A
+    * truncated index raises `BufferUnderflowException`, a hostile length
+    * field an `IllegalArgumentException`: parse errors that [[findFor]]
+    * turns into a fallback. */
+  private[formats] final class LEData(bytes: Array[Byte]) {
+    private val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     def readBytes(n: Int): Array[Byte] = {
-      // a hostile/corrupt length field must raise a parse error (which
-      // findFor converts into a fallback), not NegativeArraySizeException
-      require(n >= 0, s"negative length field in index: $n")
-      val b = new Array[Byte](n); d.readFully(b); b
+      require(n >= 0 && n <= bb.remaining,
+        s"length field $n in index exceeds the ${bb.remaining} bytes left")
+      val b = new Array[Byte](n); bb.get(b); b
     }
-    def readInt(): Int = java.lang.Integer.reverseBytes(d.readInt())
-    def readLong(): Long = java.lang.Long.reverseBytes(d.readLong())
+    def readInt(): Int = bb.getInt()
+    def readLong(): Long = bb.getLong()
   }
 }

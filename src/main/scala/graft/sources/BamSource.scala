@@ -216,7 +216,8 @@ class BamScan(fullSchema: StructType, paths: Seq[Path],
     }
 
     val (pathLens, maxSplit) = LineSourceUtil
-      .pathLensAndBudget(paths, conf, options, 64L * 1024 * 1024)
+      .pathLensAndBudget(paths, conf, options, 64L * 1024 * 1024,
+        LineSourceUtil.BgzfSplitFloor)
     pathLens.flatMap { case (p, fileLen) =>
       val fs = p.getFileSystem(conf)
       val index = GenomicIndex.findFor(fs, p)

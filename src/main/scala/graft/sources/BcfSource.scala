@@ -128,7 +128,8 @@ class BcfScan(fullSchema: StructType, paths: Seq[Path],
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
     val (pathLens, maxSplit) = LineSourceUtil
-      .pathLensAndBudget(paths, conf, options, 64L * 1024 * 1024)
+      .pathLensAndBudget(paths, conf, options, 64L * 1024 * 1024,
+        LineSourceUtil.BgzfSplitFloor)
     val regions = GenomicScan.regions(options, pushdown.filters.toSeq, "chrom")
     pathLens.flatMap { case (p, fileLen) =>
       val index = GenomicIndex.findFor(p.getFileSystem(conf), p)

@@ -249,7 +249,11 @@ class CramScan(fullSchema: StructType, paths: Seq[Path],
               resolved.exists { case (id, _, s, en) =>
                 c.refSeqId == id && c.start - 1 < en &&
                   (c.start - 1 + c.span) > s
-              } || c.refSeqId == -2 // multi-ref containers always checked
+              } ||
+                // multi-ref containers are checked per record, unless no
+                // region names a reference of this file: an empty
+                // residual would then keep their records whole
+                c.refSeqId == -2 && resolved.nonEmpty
             }.map(_.offset)
           }
         val residual = resolved.map { case (_, n, s, e) => (n, s, e) }

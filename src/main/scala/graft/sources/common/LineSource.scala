@@ -255,15 +255,20 @@ object LineSourceUtil {
     * must not override a format-appropriate fallback), then `fallback`.
     *
     * When `totalBytes` of the planned input is known, the budget then
-    * shrinks to `max(openCostInBytes, totalBytes / defaultParallelism)`
-    * — Spark's own `FilePartition.maxSplitBytes` heuristic — so a
+    * shrinks to `max(floor, totalBytes / defaultParallelism)` — Spark's
+    * own `FilePartition.maxSplitBytes` heuristic — so a
     * small-vs-the-budget input still fans out across every core
     * instead of planning one oversized partition (a 69 MB indexed VCF
-    * on 32 cores must be 32-ish tasks, not 1). The open-cost floor
-    * keeps tiny fixtures at one task. Planning runs on the driver, so
-    * the active session is reachable. */
+    * on 32 cores must be 32-ish tasks, not 1). The floor is Spark's
+    * `filesOpenCostInBytes` (4 MB) unless the caller passes its own:
+    * that is Spark's rule for plain-text byte ranges, and it keeps tiny
+    * text fixtures at one task. A BGZF-encoded scan (BAM, BCF,
+    * bgzipped tabix text) passes [[BgzfSplitFloor]] instead: its splits
+    * fall on index chunk starts, so a 3 MB BGZF file still plans one
+    * record-aligned partition per core rather than one 3 MB task.
+    * Planning runs on the driver, so the active session is reachable. */
   def maxSplitBytes(options: Map[String, String], fallback: Long,
-      totalBytes: Long = 0L): Long = {
+      totalBytes: Long = 0L, floor: Option[Long] = None): Long = {
     val session = org.apache.spark.sql.SparkSession.getActiveSession
     val budget = options.get("maxpartitionbytes").map { v =>
       v.trim.toLongOption.filter(_ > 0).getOrElse(
@@ -276,23 +281,27 @@ object LineSourceUtil {
       .getOrElse(fallback)
     session match {
       case Some(s) if totalBytes > 0 =>
-        val openCost = s.sessionState.conf.filesOpenCostInBytes
+        val minSplit =
+          floor.getOrElse(s.sessionState.conf.filesOpenCostInBytes)
         val bytesPerCore = totalBytes / s.sparkContext.defaultParallelism
-        math.min(budget, math.max(openCost, bytesPerCore))
+        math.min(budget, math.max(minSplit, bytesPerCore))
       case _ => budget
     }
   }
 
+  /** The split floor of a BGZF-encoded scan: one BGZF block. */
+  val BgzfSplitFloor: Option[Long] = Some(Bgzf.MaxBlockSize.toLong)
+
   /** File lengths of `paths` plus the [[maxSplitBytes]] budget shrunk
-    * for their total size — the shared planning preamble of every
-    * splittable scan. */
+    * for their total size with `floor` — the shared planning preamble of
+    * every splittable scan. */
   def pathLensAndBudget(paths: Seq[Path],
       conf: org.apache.hadoop.conf.Configuration,
-      options: Map[String, String], fallback: Long)
+      options: Map[String, String], fallback: Long, floor: Option[Long])
       : (Seq[(Path, Long)], Long) = {
     val lens = paths.map(p =>
       p -> p.getFileSystem(conf).getFileStatus(p).getLen)
-    (lens, maxSplitBytes(options, fallback, lens.map(_._2).sum))
+    (lens, maxSplitBytes(options, fallback, lens.map(_._2).sum, floor))
   }
 
   def resolvePaths(options: CaseInsensitiveStringMap): Seq[Path] = {
@@ -398,8 +407,11 @@ class LineScan(format: LineFormat, fullSchema: StructType, paths: Seq[Path],
 
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
-    val (pathLens, maxSplit) = LineSourceUtil
-      .pathLensAndBudget(paths, conf, options, 128L * 1024 * 1024)
+    val fallback = 128L * 1024 * 1024
+    val (pathLens, maxSplit) =
+      LineSourceUtil.pathLensAndBudget(paths, conf, options, fallback, None)
+    val bgzfSplit = LineSourceUtil.maxSplitBytes(options, fallback,
+      pathLens.map(_._2).sum, LineSourceUtil.BgzfSplitFloor)
     // regions requested via option or pushed chrom equality
     val regions: Seq[graft.core.Region] =
       format.regionColumns.fold(LineSourceUtil.parseRegionsOption(options)) {
@@ -457,7 +469,7 @@ class LineScan(format: LineFormat, fullSchema: StructType, paths: Seq[Path],
             val groups = BgzfIndexPlanner.plan(len, Some(index),
               Bgzf.VirtualPosition(0L), if (byRegion) regions else Nil,
               index.names.get(_).map(_ -> (Long.MaxValue >> 16)),
-              maxSplit).groups
+              bgzfSplit).groups
             // a split scan with no interior split point streams whole
             if (!byRegion && groups.lengthCompare(1) <= 0)
               Seq(LineInputPartition(p.toString, 0L, Long.MaxValue, gzip = true))

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.fixtures.{BbiFixture, BcfFixture, BenchCorpus}
+import graft.fixtures.{BbiFixture, BcfFixture, BenchCorpus, CramFixture}
 import graft.fixtures.BbiFixture.BedItem
 import graft.fixtures.BcfFixture.BcfRec
+import graft.fixtures.CramFixture.CRec
 
 /** The contract of the DSv2 scaffold every genomic reader shares
   * (`graft.sources.common.GenomicScan`): pushed chrom filters, the
@@ -122,6 +123,48 @@ class GenomicScanSpec extends SparkSuite {
     java.nio.file.Files.copy(java.nio.file.Paths.get(corpus.bam), p)
     assert(spark.read.format("bam").option("regions", "chrZZ:1-100")
       .load(p.toString).count() == 0)
+  }
+
+  test("cram: without a .crai, a region name the header lacks keeps no row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scaffold-cram")
+    val p = dir.resolve("c.cram").toString
+    val (chr1, chr2) = ("ACGT" * 25, "GGCC" * 15)
+    // one container whose two slices sit on different references: its
+    // refSeqId is -2, the mixed-reference marker
+    CramFixture.writeSliced(p,
+      "@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:100\n@SQ\tSN:chr2\tLN:60\n",
+      Seq(Seq(Seq(CRec("m1", 0, 0, 5, 60, 8)),
+        Seq(CRec("m2", 0, 1, 9, 60, 8)))),
+      embeddedRefs = Map(0 -> chr1, 1 -> chr2))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(p + ".crai"))
+    assert(spark.read.format("cram").load(p).count() == 2)
+    assert(spark.read.format("cram").option("regions", "chrZZ:1-100")
+      .load(p).count() == 0)
+  }
+
+  private lazy val wideCorpus = BenchCorpus.ensure(
+    java.nio.file.Files.createTempDirectory("graft-scaffold-wide").toString,
+    nBam = 6000, nVcf = 100, nBed = 30000, nCram = 100)
+
+  Seq(("bam", () => wideCorpus.bam, Map.empty[String, String], "qname", 6000),
+      ("bed", () => wideCorpus.bed, Map("bed_schema" -> "bed4"), "name",
+        30000)).foreach {
+    case (fmt, path, opts, key, n) =>
+      test(s"$fmt: a BGZF file of a few blocks per core fills every core") {
+        val cores = spark.sparkContext.defaultParallelism
+        assert(new java.io.File(path()).length > cores * 65536L)
+        def load(more: Map[String, String]) =
+          spark.read.format(fmt).options(opts ++ more).load(path())
+        val df = load(Map.empty)
+        val narrow = load(Map("maxpartitionbytes" -> "65536"))
+        val parts = df.rdd.getNumPartitions
+        assert(parts >= math.min(cores, 4), parts)
+        assert(narrow.rdd.getNumPartitions > parts)
+        val rows = df.collect().map(_.toString).sorted.toSeq
+        assert(rows.length == n)
+        assert(df.select(key).distinct().count() == n)
+        assert(narrow.collect().map(_.toString).sorted.toSeq == rows)
+      }
   }
 
   /** The documented overlap rule: a row's (chrom, start0, end0), 0-based

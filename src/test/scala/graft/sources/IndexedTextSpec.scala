@@ -148,7 +148,7 @@ class IndexedTextSpec extends SparkSuite {
   }
 
   test("split budget shrinks for small inputs (bytes-per-core heuristic)") {
-    import graft.sources.common.LineSourceUtil.maxSplitBytes
+    import graft.sources.common.LineSourceUtil.{BgzfSplitFloor, maxSplitBytes}
     spark.sparkContext // force session so the heuristic is active
     val p = spark.sparkContext.defaultParallelism
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
@@ -160,6 +160,9 @@ class IndexedTextSpec extends SparkSuite {
     assert(maxSplitBytes(Map.empty, budget, mid) == 8L * openCost)
     // tiny input: open-cost floor keeps fixtures at one task
     assert(maxSplitBytes(Map.empty, budget, 100L) == openCost)
+    // a BGZF scan's floor is one BGZF block, so it fans out below 4 MB
+    assert(maxSplitBytes(Map.empty, budget, 100L, BgzfSplitFloor) ==
+      Bgzf.MaxBlockSize)
     // an explicit option is a hard cap the shrink never exceeds
     assert(maxSplitBytes(Map("maxpartitionbytes" -> "1"), budget, mid) == 1L)
     // unknown size: plain budget resolution, unchanged

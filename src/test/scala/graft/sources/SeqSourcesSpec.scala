@@ -266,5 +266,45 @@ class SeqSourcesSpec extends SparkSuite {
       .option("regions", "chr1:1-100")
       .load(bed.toString).collect()
     assert(rows.length == 2, rows.mkString(","))
+
+    // a non-empty BAI and TBI cut inside the first bin's first chunk: the
+    // scan returns exactly the rows of the same file with no index
+    val corpus = graft.fixtures.BenchCorpus.ensure(
+      dir.resolve("corpus").toString, nBam = 500, nVcf = 10, nBed = 500,
+      nCram = 10)
+    def gunzip(b: Array[Byte]) = new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(b)).readAllBytes()
+    def gzip(b: Array[Byte]) = {
+      val bo = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bo)
+      gz.write(b); gz.close(); bo.toByteArray
+    }
+    Seq(("bam", corpus.bam, ".bai"), ("bed", corpus.bed, ".tbi")).foreach {
+      case (fmt, src, ext) =>
+        val whole = java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(src + ext))
+        val raw = if (ext == ".tbi") gunzip(whole) else whole
+        // the first reference starts after the magic and n_ref (BAI), or
+        // after the tabix header and its l_nm name bytes (TBI); cut after
+        // its n_bin, bin id, n_chunk and half a chunk
+        val refStart = if (ext == ".bai") 8 else 36 +
+          java.nio.ByteBuffer.wrap(raw, 32, 4)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        val cut = raw.take(refStart + 20)
+        val name = java.nio.file.Paths.get(src).getFileName.toString
+        def scan(index: Option[Array[Byte]]) = {
+          val d = java.nio.file.Files.createTempDirectory("graft-cutidx")
+          val f = d.resolve(name)
+          java.nio.file.Files.copy(java.nio.file.Paths.get(src), f)
+          index.foreach(b => java.nio.file.Files.write(
+            java.nio.file.Paths.get(f.toString + ext),
+            if (ext == ".tbi") gzip(b) else b))
+          spark.read.format(fmt).option("regions", "chr1:1-50000000")
+            .load(f.toString).collect().map(_.toString).sorted.toSeq
+        }
+        val want = scan(None)
+        assert(want.nonEmpty)
+        assert(scan(Some(cut)) == want, fmt)
+    }
   }
 }
