@@ -403,13 +403,13 @@ object Bench {
       .select("chrom", "start", "end")
     // standing IPC-sink pair (K1's one consumer): the SAME flat BED
     // projection collected to Arrow IPC bytes through the row sink
-    // (executeCollect + driver re-encode) and the columnar sink
-    // (executor-parallel per-partition IPC streams spliced driver-side,
-    // ArrowShim.toIpcBytesColumnar). The encode runs eagerly inside the
-    // timed thunk; the returned one-row frame just records the byte
-    // count. Timings are END-TO-END (BGZF scan + parse + encode), so
-    // the pair's ratio is smaller than the encode-only 5.6x measured at
-    // introduction — the scan cost is shared; what must not regress is
+    // (ArrowShim.toIpcBytes: an ArrowWriter over the ColumnarToRow rows)
+    // and the columnar sink (ArrowShim.toIpcBytesColumnar: the batches
+    // copied straight into Arrow vectors). Both encode each partition
+    // executor-side and splice the streams driver-side. The encode runs
+    // eagerly inside the timed thunk; the returned one-row frame just
+    // records the byte count. Timings are END-TO-END (BGZF scan + parse
+    // + encode), so the scan cost is shared; what must not regress is
     // the x07-x08 delta.
     def ipcSink(s: SparkSession, columnar: Boolean) = {
       val df = bedProj(s, columnar)

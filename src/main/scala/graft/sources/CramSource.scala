@@ -86,14 +86,7 @@ object CramSource {
     val fs = path.getFileSystem(graft.sources.common.GraftHadoop.conf())
     val in = SeekableInputs.forHadoop(fs, path)
     try {
-      val s = new CountingStream(in, 0L)
-      CramCodec.readFileDefinition(s)
-      val h0 = CramCodec.readContainerHeader(s)
-      val afterHeader = {
-        CramCodec.readBlock(s) // SAM header block
-        s.pos
-      }
-      val _ = (h0, afterHeader)
+      val s = new CountingStream(in, readHeader(in)._2)
       if (s.pos >= in.length) return Nil
       val ch = CramCodec.readContainerHeader(s)
       if (ch.isEof || ch.nRecords == 0) return Nil
@@ -135,10 +128,10 @@ object CramSource {
   final case class ContainerRef(offset: Long, refSeqId: Int, start: Int,
       span: Int, nRecords: Int)
 
-  /** Walk container headers (cheap seeks, no block decode) and return the
-    * SAM header text plus the data containers. */
-  def scanContainers(in: graft.formats.Bgzf.SeekableInput)
-      : (String, Seq[ContainerRef]) = {
+  /** The SAM header text and the offset of the first data container,
+    * from the file definition and the header container alone. */
+  private def readHeader(in: graft.formats.Bgzf.SeekableInput)
+      : (String, Long) = {
     val s = new CountingStream(in, 0L)
     CramCodec.readFileDefinition(s)
     // first container holds the SAM header block; samtools pads this
@@ -148,14 +141,23 @@ object CramSource {
     // (spec §9; bug found against /root/reference/fixtures/sample.cram)
     val h0 = CramCodec.readContainerHeader(s)
     val h0DataStart = s.pos
-    val headerBlock = CramCodec.readBlock(s)
-    val headerText = {
-      val d = headerBlock.data
-      val len = (d(0) & 0xff) | ((d(1) & 0xff) << 8) |
-        ((d(2) & 0xff) << 16) | ((d(3) & 0xff) << 24)
-      new String(d, 4, math.min(len, d.length - 4), "UTF-8")
-    }
-    val afterHeader = h0DataStart + h0.length
+    val d = CramCodec.readBlock(s).data
+    val len = (d(0) & 0xff) | ((d(1) & 0xff) << 8) |
+      ((d(2) & 0xff) << 16) | ((d(3) & 0xff) << 24)
+    (new String(d, 4, math.min(len, d.length - 4), "UTF-8"),
+      h0DataStart + h0.length)
+  }
+
+  /** The SAM header text; reads no data container. */
+  def readHeaderText(in: graft.formats.Bgzf.SeekableInput): String =
+    readHeader(in)._1
+
+  /** Walk container headers (cheap seeks, no block decode) and return the
+    * SAM header text plus the data containers. */
+  def scanContainers(in: graft.formats.Bgzf.SeekableInput)
+      : (String, Seq[ContainerRef]) = {
+    val (headerText, afterHeader) = readHeader(in)
+    val s = new CountingStream(in, afterHeader)
     val out = scala.collection.mutable.ArrayBuffer.empty[ContainerRef]
     var offset = afterHeader
     var done = false
@@ -207,12 +209,19 @@ class CramScan(fullSchema: StructType, paths: Seq[Path],
     val unmappedOnly = options.get("unmapped").exists(_.toBoolean)
     paths.flatMap { p =>
       val fs = p.getFileSystem(conf)
+      val craiPath = new Path(p.toString + ".crai")
+      // a .crai region query never uses the container list, which costs
+      // a header read per container: read the header container only
+      val useCrai = !unmappedOnly && regions.nonEmpty && fs.exists(craiPath)
       val in = SeekableInputs.forHadoop(fs, p)
       val (headerText, containers) =
-        try CramSource.scanContainers(in) finally in.close()
-      val refIds = CramSource.refDictionary(headerText)
-        .map(_._1).zipWithIndex.toMap
-      val refLens = CramSource.refDictionary(headerText).map(_._2)
+        try {
+          if (useCrai) (CramSource.readHeaderText(in), Nil)
+          else CramSource.scanContainers(in)
+        } finally in.close()
+      val dict = CramSource.refDictionary(headerText)
+      val refIds = dict.map(_._1).zipWithIndex.toMap
+      val refLens = dict.map(_._2)
       if (unmappedOnly) {
         // -1 containers hold the unplaced tail; -2 (multi-ref) containers
         // may interleave unmapped-placed records with mapped ones, so they
@@ -233,9 +242,8 @@ class CramScan(fullSchema: StructType, paths: Seq[Path],
         }
         // .crai narrows to overlapping slices' containers; fall back to
         // header-level container spans when no index exists
-        val craiPath = new Path(p.toString + ".crai")
         val offsets: Seq[Long] =
-          if (fs.exists(craiPath)) {
+          if (useCrai) {
             val cin = fs.open(craiPath)
             val entries = try CramCodec.readCrai(cin) finally cin.close()
             entries.filter { e =>
@@ -287,19 +295,10 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
       case CoordSystem.ZeroBasedHalfOpen => -1L
     }
 
-  // SAM header (reference dictionary) from the first container
-  private val headerText: String = {
-    val s = new CramSource.CountingStream(in, 0L)
-    CramCodec.readFileDefinition(s)
-    CramCodec.readContainerHeader(s)
-    val block = CramCodec.readBlock(s)
-    val d = block.data
-    val len = (d(0) & 0xff) | ((d(1) & 0xff) << 8) |
-      ((d(2) & 0xff) << 16) | ((d(3) & 0xff) << 24)
-    new String(d, 4, math.min(len, d.length - 4), "UTF-8")
-  }
+  // reference dictionary from the SAM header container
   private val refNames: IndexedSeq[String] =
-    CramSource.refDictionary(headerText).map(_._1).toIndexedSeq
+    CramSource.refDictionary(CramSource.readHeaderText(in)).map(_._1)
+      .toIndexedSeq
   private val residual = new RegionResidual(part.regions, refNames.zipWithIndex)
 
   private val tagSchema: Option[StructType] =

@@ -32,8 +32,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * codegen warmup (<1 s row). The path is the integration surface for
   * vector-consuming engines that elide ColumnarToRow: in tree,
   * `ArrowShim.toIpcBytesColumnar` serializes the batches to Arrow IPC
-  * executor-side with no row round-trip, ~5.6× faster than the row-path
-  * sink at bench scale. */
+  * executor-side with no row round-trip. */
 class GenomicReaderFactory(fullSchema: StructType, pushdown: Pushdown,
     options: Map[String, String], reader: GenomicReaderFactory.Ctor)
     extends PartitionReaderFactory {

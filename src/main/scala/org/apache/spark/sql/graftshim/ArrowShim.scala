@@ -5,6 +5,8 @@ import java.io.ByteArrayOutputStream
 import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.ipc.ArrowStreamWriter
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.arrow.ArrowWriter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.ArrowUtils
@@ -12,42 +14,38 @@ import org.apache.spark.sql.util.ArrowUtils
 /** Arrow IPC sink (SURVEY §2.2 K1): serialize a DataFrame's rows to a
   * single Arrow IPC stream byte array — the analogue of the reference's
   * `batches_to_ipc` (`/root/reference/oxbow/src/util.rs:10-18`) /
-  * Python `to_ipc`. Driver-side collect; intended for result-sized
-  * frames, not the 100 TB path (that's parquet). Lives in the shim
-  * namespace for access to Spark's internal Arrow utilities. */
+  * Python `to_ipc`. Executor-side encode: each task writes its
+  * partition as one complete IPC stream, and the driver only splices
+  * the streams at the message layer (one schema header, every
+  * record-batch message verbatim, one EOS). The joined stream is built
+  * in driver memory, so this is for result-sized frames, not the 100 TB
+  * path (that's parquet). Lives in the shim namespace for access to
+  * Spark's internal Arrow utilities. */
 object ArrowShim {
 
+  /** Batches hold at most `maxRecordsPerBatch` rows and never span two
+    * partitions, so a partition's last batch may be short. A local
+    * relation's rows are already on the driver and are encoded there as
+    * one partition. */
   def toIpcBytes(df: DataFrame, maxRecordsPerBatch: Int = 1 << 16): Array[Byte] = {
-    // <= 0 would loop forever writing empty batches below (and the
-    // columnar path would silently never flush) — reject loudly
+    // <= 0 would never cut a batch (and the columnar path would
+    // silently never flush) — reject loudly
     require(maxRecordsPerBatch > 0,
       s"maxRecordsPerBatch must be positive, got $maxRecordsPerBatch")
+    val schema = df.schema
     val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
-    val arrowSchema = ArrowUtils.toArrowSchema(df.schema, tz,
-      errorOnDuplicatedFieldNames = true, largeVarTypes = false)
-    val allocator = ArrowUtils.rootAllocator
-      .newChildAllocator("graft-ipc", 0, Long.MaxValue)
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
-    try {
-      val arrowWriter = ArrowWriter.create(root)
-      val out = new ByteArrayOutputStream()
-      val writer = new ArrowStreamWriter(root, null, out)
-      writer.start()
-      val rows = df.queryExecution.executedPlan.executeCollect()
-      var i = 0
-      while (i < rows.length) {
-        val batchEnd = math.min(i + maxRecordsPerBatch, rows.length)
-        while (i < batchEnd) { arrowWriter.write(rows(i)); i += 1 }
-        arrowWriter.finish()
-        writer.writeBatch()
-        arrowWriter.reset()
-      }
-      writer.end()
-      out.toByteArray
-    } finally {
-      root.close()
-      allocator.close()
+    val maxRecs = maxRecordsPerBatch
+    val parts = df.queryExecution.executedPlan match {
+      // no job to ship driver-resident rows out and back, and no batch
+      // per parallelized slice
+      case local: LocalTableScanExec =>
+        Array(rowPartitionIpc(local.executeCollect().iterator, schema, tz,
+          maxRecs))
+      case plan => plan.execute().mapPartitionsInternal { rows =>
+          Iterator.single(rowPartitionIpc(rows, schema, tz, maxRecs))
+        }.collect()
     }
+    joinStreams(parts, schema, tz)
   }
 
   /** Columnar Arrow IPC sink: serialize a COLUMNAR scan (the opt-in
@@ -57,32 +55,19 @@ object ArrowShim {
     * row pipeline inserts. This is the integration surface the batch
     * path exists for (`BamSource` factory scaladoc): executor-side the
     * Spark column vectors are copied column-at-a-time into Arrow field
-    * vectors and each partition emits its own complete IPC stream;
-    * driver-side the partition streams are spliced at the IPC message
-    * layer (one schema header, every record-batch message verbatim, one
-    * EOS) — record batches are never re-encoded on the driver.
+    * vectors, and the partition streams are spliced exactly as
+    * [[toIpcBytes]] splices its own.
     *
-    * Output contract: for a single-partition scan with
-    * `maxRecordsPerBatch` segmentation this is byte-identical to
-    * [[toIpcBytes]] (pinned by `ArrowIpcSpec`); multi-partition scans
-    * carry each partition's final short batch where the row path would
-    * have merged across partitions, so the streams are value-identical
-    * but segment differently.
+    * Output contract: byte-identical to [[toIpcBytes]] for the same
+    * frame and `maxRecordsPerBatch` (pinned by `ArrowIpcSpec`) — both
+    * faces cut batches inside each partition.
     *
     * The plan must BE the columnar scan (optionally projected/filtered
     * inside the scan via pushdown): anything computed above
     * `ColumnarToRow` executes in the row domain, so bypassing it would
     * silently drop that work — rejected with `IllegalArgumentException`
     * rather than computed wrong. Use [[toIpcBytes]] for arbitrary
-    * frames.
-    *
-    * Measured (66 MB BGZF BED bench corpus, 6M rows → 139 MiB stream,
-    * local[16], 2nd pass): 1.8 s columnar vs 9.9 s row — ~5.6×, because
-    * the row path funnels every row through one driver-side
-    * `ArrowWriter` while this path serializes partitions in parallel
-    * executor-side and the driver only splices buffers. This is the
-    * first consumer for which the opt-in batch scan beats the row
-    * default (the x01–x06 A/B showed it losing under ColumnarToRow). */
+    * frames. */
   def toIpcBytesColumnar(df: DataFrame,
       maxRecordsPerBatch: Int = 1 << 16): Array[Byte] = {
     // same guard as toIpcBytes: a non-positive cap would mean "never
@@ -108,29 +93,69 @@ object ArrowShim {
     val parts = colPlan.executeColumnar().mapPartitions { batches =>
       Iterator.single(partitionIpc(batches, schema, tz, maxRecs))
     }.collect()
-    if (parts.isEmpty)
-      return toIpcBytes(df.limit(0)) // schema + EOS only
-    spliceIpcStreams(parts)
+    joinStreams(parts, schema, tz)
   }
+
+  /** One complete IPC stream over a fresh root for `schema`: schema
+    * message, whatever record batches `body` writes, EOS. */
+  private def ipcStream(schema: StructType, tz: String)(
+      body: (VectorSchemaRoot, ArrowStreamWriter) => Unit): Array[Byte] = {
+    val arrowSchema = ArrowUtils.toArrowSchema(schema, tz,
+      errorOnDuplicatedFieldNames = true, largeVarTypes = false)
+    val allocator = ArrowUtils.rootAllocator
+      .newChildAllocator("graft-ipc", 0, Long.MaxValue)
+    val root = VectorSchemaRoot.create(arrowSchema, allocator)
+    try {
+      val out = new ByteArrayOutputStream()
+      val writer = new ArrowStreamWriter(root, null, out)
+      writer.start()
+      body(root, writer)
+      writer.end()
+      out.toByteArray
+    } finally {
+      root.close()
+      allocator.close()
+    }
+  }
+
+  /** The partitions' streams as one; a plan with no partitions gives the
+    * schema-only stream. */
+  private def joinStreams(parts: Array[Array[Byte]], schema: StructType,
+      tz: String): Array[Byte] =
+    if (parts.isEmpty) ipcStream(schema, tz)((_, _) => ())
+    else spliceIpcStreams(parts)
+
+  /** One partition's complete IPC stream from its rows, cut into
+    * `maxRecs`-row batches. */
+  private def rowPartitionIpc(rows: Iterator[InternalRow],
+      schema: StructType, tz: String, maxRecs: Int): Array[Byte] =
+    ipcStream(schema, tz) { (root, writer) =>
+      val arrowWriter = ArrowWriter.create(root)
+      var n = 0
+      def flush(): Unit = if (n > 0) {
+        arrowWriter.finish()
+        writer.writeBatch()
+        arrowWriter.reset()
+        n = 0
+      }
+      while (rows.hasNext) {
+        arrowWriter.write(rows.next())
+        n += 1
+        if (n == maxRecs) flush()
+      }
+      flush()
+    }
 
   /** One partition's complete IPC stream from its columnar batches —
     * column-vector-to-arrow-vector copies, re-batched to
     * `maxRecordsPerBatch` row boundaries. Runs executor-side. */
   private def partitionIpc(
       batches: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch],
-      schema: StructType, tz: String, maxRecs: Int): Array[Byte] = {
-    import org.apache.arrow.vector._
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.vectorized.ColumnVector
-    val arrowSchema = ArrowUtils.toArrowSchema(schema, tz,
-      errorOnDuplicatedFieldNames = true, largeVarTypes = false)
-    val allocator = ArrowUtils.rootAllocator
-      .newChildAllocator("graft-ipc-col", 0, Long.MaxValue)
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
-    try {
-      val out = new ByteArrayOutputStream()
-      val writer = new ArrowStreamWriter(root, null, out)
-      writer.start()
+      schema: StructType, tz: String, maxRecs: Int): Array[Byte] =
+    ipcStream(schema, tz) { (root, writer) =>
+      import org.apache.arrow.vector._
+      import org.apache.spark.sql.types._
+      import org.apache.spark.sql.vectorized.ColumnVector
       // per-column copier resolved once (type dispatch out of the loop,
       // same discipline as ColumnarRowBatcher's writers)
       val copiers: Array[(ColumnVector, Int, Int) => Unit] =
@@ -189,13 +214,7 @@ object ArrowShim {
         }
       }
       flush()
-      writer.end()
-      out.toByteArray
-    } finally {
-      root.close()
-      allocator.close()
     }
-  }
 
   /** Splice complete per-partition IPC streams into one: the first
     * stream's schema message, every stream's record-batch messages
@@ -219,14 +238,19 @@ object ArrowShim {
         p.slice(p.length - 8, p.length).sameElements(eos),
         "partition stream missing EOS tail")
     }
-    val head = parts(0).slice(0, schemaEnd(parts(0)))
-    val out = new ByteArrayOutputStream()
-    out.write(head, 0, head.length)
-    parts.foreach { p =>
-      val start = schemaEnd(p)
-      out.write(p, start, p.length - 8 - start)
+    // sized up front: one copy of every batch, no buffer regrowth
+    val starts = parts.map(schemaEnd)
+    val head = starts(0)
+    val out = new Array[Byte](
+      head + parts.indices.map(i => parts(i).length - 8 - starts(i)).sum + 8)
+    System.arraycopy(parts(0), 0, out, 0, head)
+    var pos = head
+    parts.indices.foreach { i =>
+      val len = parts(i).length - 8 - starts(i)
+      System.arraycopy(parts(i), starts(i), out, pos, len)
+      pos += len
     }
-    out.write(eos, 0, eos.length)
-    out.toByteArray
+    System.arraycopy(eos, 0, out, pos, eos.length)
+    out
   }
 }

@@ -134,8 +134,10 @@ class ArrowIpcSpec extends SparkSuite {
     assert(df.rdd.getNumPartitions > 1, "need a multi-partition scan")
     val col = org.apache.spark.sql.graftshim.ArrowShim.toIpcBytesColumnar(df)
     val row = org.apache.spark.sql.graftshim.ArrowShim.toIpcBytes(df)
-    // partition tails segment differently, but rows and order must match
     assert(readAll(col) == readAll(row))
+    // both faces cut batches inside each partition: same bytes
+    assert(col.sameElements(row),
+      s"columnar IPC diverged: ${col.length} vs ${row.length} bytes")
   }
 
   test("columnar IPC rejects plans with row-domain work on top") {
@@ -165,5 +167,112 @@ class ArrowIpcSpec extends SparkSuite {
       while (reader.loadNextBatch()) n += root.getRowCount
     } finally { reader.close(); alloc.close() }
     assert(n == 100)
+  }
+
+  /** Every IPC row as plain Scala values: structs and lists as Seqs,
+    * strings as String — the shape [[plainRow]] gives a collected Row. */
+  private def plainIpc(ipc: Array[Byte]): (Seq[String], Seq[Seq[Any]]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.arrow.vector.ValueVector
+    import org.apache.arrow.vector.complex.{ListVector, StructVector}
+    def plain(v: ValueVector, i: Int): Any = v match {
+      case _ if v.isNull(i) => null
+      case s: StructVector =>
+        s.getChildrenFromFields.asScala.toSeq.map(plain(_, i))
+      case l: ListVector =>
+        (l.getElementStartIndex(i) until l.getElementEndIndex(i))
+          .map(plain(l.getDataVector, _))
+      case t: VarCharVector => new String(t.get(i), "UTF-8")
+      case o => o.getObject(i)
+    }
+    val alloc = new RootAllocator(Long.MaxValue)
+    val reader = new ArrowStreamReader(new ByteArrayInputStream(ipc), alloc)
+    try {
+      val root = reader.getVectorSchemaRoot
+      val names = root.getSchema.getFields.asScala.toSeq.map(_.getName)
+      val got = mutable.ArrayBuffer.empty[Seq[Any]]
+      while (reader.loadNextBatch()) {
+        (0 until root.getRowCount).foreach { i =>
+          got += root.getFieldVectors.asScala.toSeq.map(plain(_, i))
+        }
+      }
+      (names, got.toSeq)
+    } finally { reader.close(); alloc.close() }
+  }
+
+  private def plainRow(x: Any): Any = x match {
+    case r: org.apache.spark.sql.Row => r.toSeq.map(plainRow)
+    case s: scala.collection.Seq[_] => s.toSeq.map(plainRow)
+    case o => o
+  }
+
+  test("row IPC of a multi-partition nested frame equals collect, in order") {
+    val header = Seq(
+      "##fileformat=VCFv4.1",
+      "##INFO=<ID=AC,Number=A,Type=Integer,Description=\"Allele count\">",
+      "##INFO=<ID=DP,Number=1,Type=Integer,Description=\"Depth\">",
+      "##INFO=<ID=DB,Number=0,Type=Flag,Description=\"dbSNP\">",
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO")
+    // every third record drops DP and every fifth has no ALT and QUAL,
+    // so the info struct and the top level both carry nulls
+    val body = (0 until 20000).map { i =>
+      val info = Seq(Some(s"AC=${i % 7}"),
+        Option.when(i % 3 != 0)(s"DP=$i"),
+        Option.when(i % 2 == 0)("DB")).flatten.mkString(";")
+      val (alt, qual) = if (i % 5 == 0) (".", ".") else ("G", s"${i % 50}.5")
+      s"chr${i % 3 + 1}\t${i + 1}\trs$i\tA\t$alt\t$qual\tPASS\t$info"
+    }
+    val df = spark.read.format("vcf")
+      .option("maxpartitionbytes", (128L * 1024).toString)
+      .load(tempFile("nested.vcf", header ++ body))
+      .select("chrom", "pos", "id", "alt", "qual", "info")
+    assert(df.rdd.getNumPartitions > 2, "need a multi-partition scan")
+    val (names, got) = plainIpc(
+      org.apache.spark.sql.graftshim.ArrowShim.toIpcBytes(df,
+        maxRecordsPerBatch = 1000))
+    assert(names == df.columns.toSeq)
+    val want = df.collect().toSeq.map(r => plainRow(r))
+    assert(got.size == 20000)
+    assert(got == want)
+  }
+
+  test("row IPC keeps an orderBy's global order across partitions") {
+    val conf = spark.conf
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = conf.getOption(key)
+    conf.set(key, "false") // keep the sort's range partitions apart
+    try {
+      val df = spark.range(0, 3000, 1, 4)
+        .selectExpr("id", "(id * 7919) % 3001 as k", "cast(id as string) as s")
+        .orderBy("k")
+      assert(df.queryExecution.toRdd.getNumPartitions >= 3)
+      val (_, got) = plainIpc(org.apache.spark.sql.graftshim.ArrowShim
+        .toIpcBytes(df, maxRecordsPerBatch = 100))
+      val keys = got.map(_(1).asInstanceOf[Long])
+      assert(keys.size == 3000 && keys == keys.sorted)
+      assert(got == df.collect().toSeq.map(r => plainRow(r)))
+    } finally prev.fold(conf.unset(key))(conf.set(key, _))
+  }
+
+  test("empty results give a readable schema-only stream") {
+    val shim = org.apache.spark.sql.graftshim.ArrowShim
+    // every one of 4 partitions empty
+    val filtered = spark.range(0, 100, 1, 4).where("id < 0")
+      .selectExpr("id", "cast(id as string) as s")
+    assert(filtered.rdd.getNumPartitions == 4)
+    assert(plainIpc(shim.toIpcBytes(filtered)) == (Seq("id", "s"), Nil))
+
+    // a region query naming no reference of the file plans no partition
+    // (and so plans as a row scan even with columnar=true)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ipc-empty")
+    val cramPath = dir.resolve("e.cram").toString
+    graft.fixtures.CramFixture.write(cramPath,
+      "@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:100000\n",
+      Seq((1 to 50).map(i => graft.fixtures.CramFixture.CRec(s"r$i", 0, 0,
+        i * 100, 60, 4))))
+    val none = spark.read.format("cram").option("regions", "chrZZ:1-100")
+      .load(cramPath).select("qname", "pos")
+    assert(none.queryExecution.executedPlan.execute().getNumPartitions == 0)
+    assert(plainIpc(shim.toIpcBytes(none)) == (Seq("qname", "pos"), Nil))
   }
 }

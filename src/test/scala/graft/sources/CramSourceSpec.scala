@@ -87,6 +87,40 @@ class CramSourceSpec extends SparkSuite {
     assert(q3.select("qname").collect().map(_.getString(0)).toSeq == Seq("c4"))
   }
 
+  test("cram: tag discovery skips the header container's padding") {
+    // samtools pads the SAM header container past its header block; the
+    // first data container starts at the container's declared length
+    val p = dir.resolve("tagged-unpadded.cram").toString
+    CramFixture.write(p, samHeader, Seq(Seq(
+      CRec("t1", 0, 0, 5, 60, 4, tags = Seq(("NM", 'i', 2))),
+      CRec("t2", 0, 0, 8, 60, 4))))
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
+    val in = new java.io.ByteArrayInputStream(bytes, 26, bytes.length - 26)
+    val h0 = CramCodec.readContainerHeader(in)
+    val blocksAt = bytes.length - in.available()
+    val pad = 64
+    val head = new java.io.ByteArrayOutputStream()
+    head.write(java.nio.ByteBuffer.allocate(4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(h0.length + pad).array())
+    Seq(h0.refSeqId, h0.startPos, h0.span, h0.nRecords)
+      .foreach(CramCodec.writeItf8(head, _))
+    CramCodec.writeLtf8(head, h0.recordCounter)
+    CramCodec.writeLtf8(head, h0.bases)
+    (Seq(h0.nBlocks, h0.landmarks.size) ++ h0.landmarks)
+      .foreach(CramCodec.writeItf8(head, _))
+    head.write(CramFixture.crc32le(head.toByteArray))
+    val padded = dir.resolve("tagged-padded.cram")
+    java.nio.file.Files.write(padded, bytes.take(26) ++ head.toByteArray ++
+      bytes.slice(blocksAt, blocksAt + h0.length) ++ new Array[Byte](pad) ++
+      bytes.drop(blocksAt + h0.length))
+    def read(path: String) = spark.read.format("cram")
+      .option("reference", refPath).load(path)
+    assert(read(padded.toString).schema == read(p).schema)
+    assert(read(padded.toString).schema.fieldNames.contains("tags"))
+    assert(read(padded.toString).orderBy("qname").collect().toSeq ==
+      read(p).orderBy("qname").collect().toSeq)
+  }
+
   test("cram: pushed rname filter and unmapped scan") {
     val pushed = readCram.where(col("rname") === "chr2")
     assert(pushed.select("qname").collect().map(_.getString(0)).toSeq ==
@@ -360,5 +394,74 @@ class CramSourceSpec extends SparkSuite {
     assert(ok.length == 2 && ok(0).getLong(0) == 5 &&
       ok(0).getString(1) == "ACGTACAC" && ok(0).getLong(2) == 12)
     assert(ok(1).getLong(0) == 10)
+  }
+
+  test("cram: crai region planning reads only the header container") {
+    // five data containers, the first with two slices; no region below
+    // falls in the gap between a container's slices, where the .crai
+    // (per slice) and the container spans (per container) legitimately
+    // disagree
+    val p = dir.resolve("planned.cram").toString
+    CramFixture.writeSliced(p, samHeader, Seq(
+      Seq(Seq(CRec("a1", 0, 0, 5, 60, 8), CRec("a2", 0, 0, 12, 60, 6)),
+        Seq(CRec("a3", 0, 0, 20, 60, 5))),
+      Seq(Seq(CRec("b1", 0, 0, 40, 60, 10), CRec("b2", 0, 0, 45, 60, 8))),
+      Seq(Seq(CRec("c1", 0, 0, 70, 60, 10))),
+      Seq(Seq(CRec("d1", 0, 1, 5, 60, 8))),
+      Seq(Seq(CRec("e1", 0, 1, 30, 60, 10), CRec("e2", 0, 1, 40, 60, 5)))))
+    val noCrai = dir.resolve("planned-nocrai.cram")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(p), noCrai)
+    def query(path: String, regions: String) = spark.read.format("cram")
+      .option("reference", refPath).option("regions", regions).load(path)
+    def planned(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.inputPartitions.map { case c: CramInputPartition =>
+            (c.containerOffset, c.regions, c.unmappedOnly) }
+      }.get
+    val regionSets = Seq("chr1:1-9", "chr1:41-42", "chr1:60-100", "chr2",
+      "chr1:1-100;chr2:35-36", "chr1:21-45;chrZZ:1-5", "chrZZ:1-5")
+    regionSets.foreach { r =>
+      assert(planned(query(p, r)) == planned(query(noCrai.toString, r)), r)
+    }
+    assert(planned(query(p, "chr1:1-100")).size == 3)
+
+    // corrupt the header CRC of the chr1:70 container, which the query
+    // below never reads: flipping refSeqId 0 -> 1 keeps the header's
+    // shape, so only the stored CRC disagrees
+    val bad = java.nio.file.Files.createTempDirectory("graft-cram-crc")
+      .resolve("bad.cram")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(p), bad)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(p + ".crai"),
+      java.nio.file.Paths.get(bad.toString + ".crai"))
+    val crai = {
+      val in = new java.io.FileInputStream(p + ".crai")
+      try CramCodec.readCrai(in) finally in.close()
+    }
+    val off = crai.find(e => e.refSeqId == 0 && e.start == 70).get
+      .containerOffset.toInt
+    val bytes = java.nio.file.Files.readAllBytes(bad)
+    assert(bytes(off + 4) == 0) // itf8 refSeqId after the int32 length
+    bytes(off + 4) = 1
+    java.nio.file.Files.write(bad, bytes)
+    val e = intercept[Exception] {
+      spark.read.format("cram").load(bad.toString).count()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CRC mismatch")))
+
+    val regions = "chr1:1-50;chr2"
+    def overlaps(r: org.apache.spark.sql.Row): Boolean = {
+      val pos = r.getAs[Long]("pos")
+      val end = math.max(r.getAs[Long]("end"), pos)
+      (r.getAs[String]("rname") == "chr1" && pos <= 50 && end >= 1) ||
+        r.getAs[String]("rname") == "chr2"
+    }
+    val want = spark.read.format("cram").option("reference", refPath)
+      .load(p).collect().filter(overlaps).map(_.toString).sorted.toSeq
+    val got = query(bad.toString, regions).collect().map(_.toString)
+      .sorted.toSeq
+    assert(want.size == 8)
+    assert(got == want)
   }
 }

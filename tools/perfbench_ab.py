@@ -17,7 +17,11 @@ and quartiles, the change's win count (ties count for neither side), and
 the verdict of the choosing-metrics rule: a gain needs wins in at least
 9/10 of the pairs and a median gap, in the better direction, wider than
 the parent's interquartile range; a median worse than the parent's by more
-than the metric's bound is flagged. Every run's figures go to
+than the metric's bound is flagged. It then prints each side's median
+latency per operation kind (the record's `kind_median_s`, read from
+`.bench_build/graft/records/<workload>-seed<n>-trace0.json` in that
+side's checkout), which ties a change in the latency quantiles to the
+kind of operation that carries it. Every run's figures go to
 `.bench_build/ab/<rev>-<workload>.json`.
 """
 import argparse
@@ -66,7 +70,8 @@ def share_corpus(a, b):
 
 
 def run(checkout, workload, seed, seconds, log):
-    """One benchmark run; returns its final JSON line."""
+    """One benchmark run: its final JSON line plus the record's
+    `kind_median_s`."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -75,7 +80,12 @@ def run(checkout, workload, seed, seconds, log):
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
         sys.exit(f"run failed in {checkout} (seed {seed}); see {log.name}")
-    return json.loads(lines[-1])
+    result = json.loads(lines[-1])
+    record = os.path.join(checkout, ".bench_build", "graft", "records",
+                          f"{workload}-seed{seed}-trace0.json")
+    with open(record) as f:
+        result["kind_median_s"] = json.load(f)["kind_median_s"]
+    return result
 
 
 def quartiles(xs):
@@ -148,6 +158,23 @@ def main():
         print(f"{name:14} {f'{pmed:.4g} [{pq1:.4g}, {pq3:.4g}]':30} "
               f"{f'{cmed:.4g} [{cq1:.4g}, {cq3:.4g}]':30} "
               f"{wins:>3}/{n:<2}  {verdict}")
+    kinds = sorted({k for r in runs for side in ("parent", "change")
+                    for k in r[side]["kind_median_s"]})
+    print(f"\n{'kind (ms)':14} {'parent median [q1, q3]':30} "
+          f"{'change median [q1, q3]':30} {'faster':>6}")
+    for k in kinds:
+        both = [r for r in runs if k in r["parent"]["kind_median_s"] and
+                k in r["change"]["kind_median_s"]]
+        if not both:
+            continue
+        p = [1e3 * r["parent"]["kind_median_s"][k] for r in both]
+        c = [1e3 * r["change"]["kind_median_s"][k] for r in both]
+        wins = sum(y < x for x, y in zip(p, c))
+        pq1, pmed, pq3 = quartiles(p)
+        cq1, cmed, cq3 = quartiles(c)
+        print(f"{k:14} {f'{pmed:.4g} [{pq1:.4g}, {pq3:.4g}]':30} "
+              f"{f'{cmed:.4g} [{cq1:.4g}, {cq3:.4g}]':30} "
+              f"{wins:>3}/{len(both):<2}")
     print(f"\nevery run: {out_path}")
 
 
