@@ -92,13 +92,16 @@ import graft.functions.GenomicFunctions
   *    Scala API)
   *
   * The single-table interval TVFs accept an optional trailing
-  * (chrom, start, end) column-name triple. NOTE: coverage/complement/
-  * closest run their small pass-A driver jobs eagerly when the TVF is
-  * ANALYZED (the same eager-planning contract as the Scala API).
+  * (chrom, start, end) column-name triple. NOTE: operators that
+  * materialize a shared intermediate (subtract, cluster, jaccard, ...)
+  * run that job when the TVF is ANALYZED, as the Scala API does when
+  * the frame is built; the range sweeps run only with the query.
   *
   * Also injects [[graft.plans.IntervalJoinRewrite]], the optimizer rule
   * that turns naive chrom-equality + range-overlap joins into binned
-  * equi-joins (disable with `spark.graft.intervalJoin.binSize=0`).
+  * equi-joins (disable with `spark.graft.intervalJoin.binSize=0`), and
+  * the planner strategy for the range sweeps
+  * ([[org.apache.spark.sql.graftshim.RangeSweepStrategy]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -120,12 +123,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     * so one is always active).
     *
     * Rejects NONDETERMINISTIC inputs up front: the two-pass
-    * range-partitioned operators behind many of these TVFs freeze
-    * their pass-A summaries at construction, and an executor loss
+    * range-partitioned operators behind many of these TVFs resolve
+    * their pass-A summaries before pass B, and an executor loss
     * recomputing a `rand()`-bearing child during pass B could
     * disagree with them (see
     * [[graft.operators.IntervalOps.mergeIntervalsRange]]'s
-    * eager-execution contract). The check walks the OPTIMIZED plan,
+    * determinism contract). The check walks the OPTIMIZED plan,
     * so a persisted/cached derivation passes — its nondeterminism is
     * frozen behind an InMemoryRelation leaf, which is exactly the
     * documented remedy. */
@@ -136,9 +139,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       _.expressions.exists(_.exists(!_.deterministic)))
     if (nondet) throw new IllegalArgumentException(
       s"table '$name' has a nondeterministic derivation (rand()/uuid()" +
-        "/...); graft table functions freeze driver-side summaries at " +
-        "construction, so recomputation under executor loss could " +
-        "disagree — cache/persist (and materialize) the table first")
+        "/...); graft table functions resolve driver-side summaries " +
+        "before their second pass, so recomputation under executor " +
+        "loss could disagree — cache/persist (and materialize) the table first")
     df
   }
 
@@ -199,6 +202,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
+    ext.injectPlannerStrategy(_ =>
+      org.apache.spark.sql.graftshim.RangeSweepStrategy)
     ext.injectTableFunction((
       FunctionIdentifier("interval_merge"),
       info("interval_merge",

@@ -1103,8 +1103,8 @@ object SparkEntry {
   /** bedtools-style merge over deterministic intervals derived from
     * orders, through the skew-robust production path
     * ([[graft.operators.IntervalOps.mergeIntervalsRange]]: range
-    * repartition → per-partition linear sweep → window over surviving
-    * runs). The DuckDB oracle replays the equivalent single window
+    * repartition → one two-pass range sweep carrying each open group
+    * across partitions). The DuckDB oracle replays the equivalent single window
     * construction — both formulations are provably identical, so the
     * gate validates the scale path against the simple spec. */
   private def q36_merge_intervals(s: SparkSession, dir: String): DataFrame = {

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * [[forwardRange]] are the skew-robust twins: identical results
   * through [[RangeFill]]'s range-partitioned two-pass fill, where a
   * hot key spreads across ALL partitions; they cost one extra
-  * sampling pass plus an external-row round trip, so the window
+  * sampling pass plus the small pass-A summary job, so the window
   * variants stay the default for balanced keys.
   */
 object AsofJoin {

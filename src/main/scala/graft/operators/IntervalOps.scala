@@ -1,10 +1,15 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{RangeSweep, SweepInput, SweepIterator, SweepKernel}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Interval-set algebra over (chrom, start, end) frames — the
   * bedtools-merge family the reference leaves to downstream engines
@@ -394,50 +399,34 @@ object IntervalOps {
   /** Skew-robust merge for few-contig loads. [[mergeIntervals]]'s window
     * puts an entire chromosome in one task; here the data is
     * range-repartitioned ONCE on (chrom, start) and merged end-to-end by
-    * streaming linear sweeps with a coverage-style boundary handoff —
-    * NO per-chromosome window anywhere, so even the sparse no-overlap
-    * worst case (surviving runs ≈ rows, the shape that used to fall
-    * back to one window task per contig) stays spread across all range
-    * partitions. Results are identical to [[mergeIntervals]], including
-    * the output schema: the chromosome column keeps the caller's name
-    * and type (the sweep widens coordinates to long internally and
-    * casts back).
+    * one [[RangeSweep]] — NO per-chromosome window anywhere, so even the
+    * sparse no-overlap worst case (surviving runs ≈ rows, the shape that
+    * used to fall back to one window task per contig) stays spread
+    * across all range partitions. Results are identical to
+    * [[mergeIntervals]], including the output schema: the chromosome
+    * column keeps the caller's name and type (the sweep widens
+    * coordinates to long internally and casts back).
     *
-    * Scale shape (the [[coverage]] two-pass pattern): pass A streams
-    * each sorted partition once and summarizes it into five scalars —
-    * first chromosome, and the last LOCAL merged group's (chrom, start,
-    * max end) — O(partitions) driver state. The driver chains carry-in
-    * ends across partitions: range partitions are contiguous in
-    * (chrom, start), so only a partition's FIRST chromosome can
-    * continue an earlier partition's chain, and a carried end `c`
+    * Scale shape: pass A is the plain sweep of each sorted partition,
+    * summarized as its first and last local merged groups and its row
+    * count — O(partitions) driver state. The driver chains the open
+    * group across partitions: only a partition's FIRST chromosome can
+    * continue an earlier partition's group, and a carried end `c`
     * reaches a partition's last local group iff `c >= lastGroupStart`
     * (sorted starts make every intermediate group's start a smaller
-    * threshold, so one comparison settles the whole chain — including
-    * a single earlier interval spanning MANY of this partition's
-    * groups). Pass B re-streams each partition seeded with its
-    * broadcast carry as a virtual open group and emits complete
-    * interior groups distributed; only the first- and last-emitted
-    * groups per partition (≤ 2·partitions rows) are collected and
-    * stitched on the driver by the same sweep rule. Both passes share
-    * one RDD, so the range shuffle's map stage runs once. Calling this
-    * method runs pass A and the boundary collect eagerly — the same
-    * driver-side-constant pattern as [[coverage]] — and this
-    * eager-execution contract is inherited by every caller
-    * ([[subtract]], [[cluster]], the `interval_merge_range` /
-    * `interval_subtract` / `interval_cluster` TVFs): constructing the
-    * DataFrame runs cluster jobs.
+    * threshold, so one comparison settles the whole chain); the whole
+    * partition then joins the group. Pass B emits every merged group
+    * exactly once: a group that spans partitions is emitted by the
+    * partition where it ends.
     *
-    * Determinism contract (the flip side of baking collected carries
-    * into the returned plan): pass B re-reads the range shuffle's
-    * files, and if an executor loss forces their recomputation Spark
-    * re-runs the upstream map stage — a NONDETERMINISTIC input
-    * (unseeded sampling, a table mutating mid-job) could then disagree
-    * with the frozen pass-A summaries and mis-stitch. Deterministic
-    * inputs (every graft source; any pure plan over stable files) are
-    * safe by construction. Callers feeding nondeterministic frames
-    * should persist/checkpoint them FIRST — the standard Spark rule
-    * for any multi-action pipeline, stated here because the second
-    * action is hidden inside the operator.
+    * Determinism contract: pass B re-reads the range shuffle's files,
+    * and if an executor loss forces their recomputation Spark re-runs
+    * the upstream map stage — a NONDETERMINISTIC input (unseeded
+    * sampling, a table mutating mid-job) could then disagree with the
+    * pass-A summaries of the same execution and mis-stitch.
+    * Deterministic inputs (every graft source; any pure plan over
+    * stable files) are safe by construction. Callers feeding
+    * nondeterministic frames should persist/checkpoint them FIRST.
     *
     * INTEGRAL coordinates only (enforced below): the sweep's long cast
     * would TRUNCATE fractional coordinates, silently merging intervals
@@ -447,202 +436,77 @@ object IntervalOps {
     * [[mergeIntervals]].
     *
     * `maxGap` (bedtools `merge -d`): intervals separated by at most
-    * that many bases merge too; every comparison in the sweep, the
-    * driver chain, and the boundary stitch carries the same slack, so
-    * the handoff derivation holds unchanged (carry reaches the last
-    * local group iff `carry + maxGap >= lastGroupStart`). */
+    * that many bases merge too; every comparison in the sweep and the
+    * driver chain carries the same slack, so the handoff derivation
+    * holds unchanged (carry reaches the last local group iff
+    * `carry + maxGap >= lastGroupStart`). */
   def mergeIntervalsRange(df: DataFrame, chrom: String = "chrom",
       start: String = "start", end: String = "end",
       partitions: Int = 0, maxGap: Long = 0L): DataFrame = {
     requireMaxGap(maxGap, "mergeIntervalsRange")
-    val session = df.sparkSession
-    import session.implicits._
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType,
-      org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.LongType)
     Seq(start, end).foreach { c =>
-      require(integral.contains(df.schema(c).dataType),
+      require(Integral.contains(df.schema(c).dataType),
         s"mergeIntervalsRange requires integral coordinates, got " +
           s"$c: ${df.schema(c).dataType.simpleString} — " +
           "use mergeIntervals for fractional domains")
     }
-    val n = if (partitions > 0) partitions
-      else session.sessionState.conf.numShufflePartitions
-    // same null-coordinate drop as mergeIntervals — without it the
-    // primitive-Long tuple decode below dies on the first null row.
-    // Points/inverted rows clamp to points here (greatest), exactly
-    // the window formulation's greatest(end, start) participation
-    val typed = dropNullCoords(df, chrom, start, end)
-      .select(col(chrom).cast("string").as("_1"),
-        col(start).cast("long").as("_2"),
+    sweepCoords(df, chrom, start, end, longCoords(df, chrom, start, end),
+      MergeSweep(maxGap), Seq("__c", "__s", "__e"), Seq(col("__e")),
+      partitions)
+  }
+
+  /** `df`'s rows with non-null coordinates as (__c string, __s long,
+    * __e long) plus `extra`; inverted rows clamp to points (greatest),
+    * exactly the window formulation's greatest(end, start). */
+  private def longCoords(df: DataFrame, chrom: String, start: String,
+      end: String, extra: Column*): DataFrame =
+    dropNullCoords(df, chrom, start, end)
+      .select(Seq(col(chrom).cast("string").as("__c"),
+        col(start).cast("long").as("__s"),
         greatest(col(end).cast("long"), col(start).cast("long"))
-          .as("_3"))
-      .as[(String, Long, Long)]
-    // ONE shared RDD: pass B and the boundary collect reuse pass A's
-    // completed range-shuffle map stage instead of re-shuffling.
-    // All three consumers run on the plan's InternalRows (r22): the
-    // former typed `.as[(String, Long, Long)].rdd` leg decoded every
-    // row into a fresh String + Tuple3 in pass A, pass B AND the
-    // boundary collect, then re-encoded every merged group through the
-    // product encoder. Chromosome values detach (UTF8String copy) only
-    // on change-of-contig.
-    val rdd = org.apache.spark.sql.graftshim.RangeShuffle
-      .rangeSortedDf(typed.toDF, Seq(col("_1"), col("_2")),
-        Seq(col("_3")), n, adapt = partitions <= 0)
-      .queryExecution.toRdd
-    // pass A: (pid, nonEmpty, firstChrom, lastGroupChrom,
-    // lastGroupStart, lastGroupEnd) — the last LOCAL merged group of
-    // each sorted partition, from the plain un-seeded sweep
-    val summaries = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var any = false
-      var firstC: String = null
-      var curC: org.apache.spark.unsafe.types.UTF8String = null
-      var gC: String = null
-      var gS = 0L
-      var gE = 0L
-      it.foreach { r =>
-        val c = r.getUTF8String(0)
-        val st = r.getLong(1)
-        val en = r.getLong(2)
-        val sameC = curC != null && c == curC
-        if (!sameC) { curC = c.copy() }
-        val cs = if (sameC) gC else curC.toString
-        if (!any) { any = true; firstC = cs; gC = cs; gS = st; gE = en }
-        else if (sameC && st <= gE + maxGap) gE = math.max(gE, en)
-        else { gC = cs; gS = st; gE = en }
-      }
-      Iterator.single((pid, any, firstC, gC, gS, gE))
-    }.collect().sortBy(_._1)
-    // driver: one forward pass, O(partitions). carries(p) = the open
-    // chain's (chrom, end) entering partition p — set only when the
-    // latest non-empty partition's trailing chromosome equals p's
-    // first. chainEnd(p) folds the carry in iff it reaches p's last
-    // local group (carry >= lastGroupStart; see scaladoc derivation).
-    val carries = Array.fill[(String, Long)](summaries.length)(null)
-    var prev: (String, Long) = null
-    summaries.foreach { case (pid, any, firstC, lastC, lgS, lgE) =>
-      if (any) {
-        if (prev != null && prev._1 == firstC) carries(pid) = prev
-        val chainEnd =
-          if (carries(pid) != null && lastC == firstC &&
-            carries(pid)._2 + maxGap >= lgS)
-            math.max(carries(pid)._2, lgE)
-          else lgE
-        prev = (lastC, chainEnd)
-      }
-    }
-    val bc = session.sparkContext.broadcast(carries)
-    // pass B: one seeded streaming sweep per sorted partition. The
-    // carry opens a VIRTUAL group (end = carried end, zero count):
-    // local rows it reaches — however many groups they would have
-    // formed alone — fold into one leading piece whose start is its
-    // first local row's. Emitted groups carry a boundary flag on the
-    // first- and last-emitted of each partition; everything else is a
-    // complete merged interval by construction.
-    val grouped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val carry = bc.value(pid)
-      new Iterator[InternalRow] {
-        private var pending: InternalRow = null
-        private var open = carry != null
-        private var curC: org.apache.spark.unsafe.types.UTF8String =
-          if (carry != null)
-            org.apache.spark.unsafe.types.UTF8String
-              .fromString(carry._1)
-          else null
-        private var gC: String = if (carry != null) carry._1 else null
-        private var gS = 0L
-        private var gE: Long = if (carry != null) carry._2 else 0L
-        private var gN = 0L
-        private var emittedAny = false
-        private def emit(boundary: Boolean): Unit = {
-          pending = new GenericInternalRow(Array[Any](
-            org.apache.spark.unsafe.types.UTF8String.fromString(gC),
-            gS, gE, gN, boundary))
-        }
-        private def advance(): Unit = {
-          while (pending == null && it.hasNext) {
-            val r = it.next()
-            val c = r.getUTF8String(0)
-            val st = r.getLong(1)
-            val en = r.getLong(2)
-            val sameC = curC != null && c == curC
-            if (!sameC) curC = c.copy()
-            if (!open) {
-              open = true
-              gC = curC.toString; gS = st; gE = en; gN = 1L
-            } else if (sameC && gC != null && st <= gE + maxGap) {
-              if (gN == 0L) gS = st // first local row joining the carry
-              gE = math.max(gE, en); gN += 1L
-            } else {
-              if (gN > 0L) {
-                emit(!emittedAny)
-                emittedAny = true
-              }
-              gC = curC.toString; gS = st; gE = en; gN = 1L
-            }
-          }
-          if (pending == null && open && !it.hasNext) {
-            // the trailing group is ALWAYS a boundary piece: the next
-            // partition may continue it (an empty virtual-only group
-            // means the carry reached nothing local — emit nothing)
-            if (gN > 0L) emit(true)
-            open = false
-          }
-        }
-        def hasNext: Boolean = { advance(); pending != null }
-        def next(): InternalRow = {
-          advance(); val r = pending; pending = null; r
-        }
-      }
-    }
-    val groupSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__mc",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("__ms",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("__me",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_merged",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("__bd",
-        org.apache.spark.sql.types.BooleanType)))
-    // boundary stitch: ≤ 2·partitions pieces, walked in global
-    // (chrom, start) order with the same sweep rule. Two pieces that
-    // must merge are always adjacent here: any complete group lying
-    // between them would itself have folded into the chain in pass B
-    // (its start is below the carried end), contradiction.
-    val pieces = grouped.filter(_.getBoolean(4))
-      .map(r => (r.getUTF8String(0).toString, r.getLong(1),
-        r.getLong(2), r.getLong(3)))
-      .collect()
-      .sortBy(t => (t._1, t._2))
-    val stitched = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long)]
-    var openPiece: (String, Long, Long, Long) = null
-    pieces.foreach { case (c, s, e, cnt) =>
-      if (openPiece != null && openPiece._1 == c &&
-        s <= openPiece._3 + maxGap)
-        openPiece = (c, openPiece._2, math.max(openPiece._3, e),
-          openPiece._4 + cnt)
-      else {
-        if (openPiece != null) stitched += openPiece
-        openPiece = (c, s, e, cnt)
-      }
-    }
-    if (openPiece != null) stitched += openPiece
-    val complete = org.apache.spark.sql.graftshim.PlanShim
-      .internalCreateDataFrame(session,
-        grouped.filter(r => !r.getBoolean(4)), groupSchema)
-      .select(col("__mc"), col("__ms"), col("__me"), col("n_merged"))
-    val boundary = session.createDataset(stitched.toSeq)
-      .toDF("__mc", "__ms", "__me", "n_merged")
-    complete.unionByName(boundary)
-      .select(col("__mc").cast(df.schema(chrom).dataType).as(chrom),
-        col("__ms").cast(df.schema(start).dataType).as("start"),
-        col("__me").cast(df.schema(end).dataType).as("end"),
-        col("n_merged"))
+          .as("__e")) ++ extra: _*)
+
+  /** `rows` range-sorted on (__c, inputs(1)) and swept by `kernel`,
+    * with the output's leading (__c, __s, __e) cast back to the
+    * caller's column types; the kernel's other columns follow. */
+  private def sweepCoords(df: DataFrame, chrom: String, start: String,
+      end: String, rows: DataFrame, kernel: SweepKernel[_, _],
+      inputs: Seq[String], localSort: Seq[Column],
+      partitions: Int): DataFrame = {
+    val swept = RangeSweep.frame(rows, kernel, inputs,
+      Seq(col("__c"), col(inputs(1))), localSort, partitions)
+    swept.select(Seq(col("__c").cast(df.schema(chrom).dataType).as(chrom),
+      col("__s").cast(df.schema(start).dataType).as("start"),
+      col("__e").cast(df.schema(end).dataType).as("end")) ++
+      swept.columns.drop(3).map(col): _*)
+  }
+
+  /** Fresh (__c, __s, __e) sweep output attributes plus `more`. */
+  private[operators] def segmentAttrs(more: (String, DataType)*)
+      : Seq[Attribute] =
+    (Seq("__c" -> StringType, "__s" -> LongType, "__e" -> LongType) ++ more)
+      .map { case (n, t) => AttributeReference(n, t)() }
+
+  /** [[coverage]] and [[multiinter]]: the 2n (chrom, pos, ±1) events
+    * netted per (chrom, pos[, label]) with map-side combine, zero-net
+    * rows dropped (they would only split equal segments), then swept. */
+  private def breakpointSweep(df: DataFrame, chrom: String, start: String,
+      end: String, label: Option[String], kernel: BreakpointSweep,
+      partitions: Int): DataFrame = {
+    requireSharedIntegralCoords(df, start, end, kernel.op)
+    val set = label.map(l => col(l).cast("string").as("__set")).toSeq
+    val events = longCoords(label.fold(df)(l => df.where(col(l).isNotNull)),
+        chrom, start, end, set: _*)
+      .select(Seq(col("__c")) ++ set.map(_ => col("__set")) :+
+        explode(array(
+          struct(col("__s").as("pos"), lit(1L).as("d")),
+          struct(col("__e").as("pos"), lit(-1L).as("d")))).as("__ev"): _*)
+      .groupBy(Seq(col("__c"), col("__ev.pos").as("__p")) ++
+        set.map(_ => col("__set")): _*)
+      .agg(sum(col("__ev.d")).as("__d"))
+      .where(col("__d") =!= 0L)
+    sweepCoords(df, chrom, start, end, events, kernel,
+      Seq("__c", "__p", "__d") ++ set.map(_ => "__set"), Nil, partitions)
   }
 
   /** Per-base coverage depth of an interval set (the bedtools
@@ -658,181 +522,24 @@ object IntervalOps {
     * events net to zero are removed, so adjacent segments ALWAYS
     * differ in depth — the output is the canonical coalesced form.
     *
-    * Scale shape (the 100 TB plan): ONE hash shuffle aggregates the
-    * 2n (chrom, pos, ±1) events into net breakpoints with map-side
-    * combine (distinct breakpoints are usually far below row count for
-    * dense coverage); one range shuffle orders them; then the classic
-    * two-pass distributed prefix sum — pass A collects per-partition
-    * per-chromosome delta totals plus first breakpoints (driver-sized,
-    * O(partitions + contigs)), pass B streams each sorted partition
-    * once, seeding every chromosome's running depth from the broadcast
-    * entering-depth offsets and closing each partition's last segment
-    * against the next non-empty partition's first breakpoint. No
-    * per-chromosome window: a single-contig load spreads across ALL
-    * range partitions, unlike the textbook
+    * Scale shape (the 100 TB plan): ONE hash shuffle nets the 2n
+    * (chrom, pos, ±1) events into breakpoints with map-side combine;
+    * then one [[RangeSweep]] runs the classic two-pass distributed
+    * prefix sum (see [[BreakpointSweep]]). No per-chromosome window: a
+    * single-contig load spreads across ALL range partitions, unlike the
+    * textbook
     * `sum(d) OVER (PARTITION BY chrom ORDER BY pos)` formulation whose
     * one-task-per-contig skew this exists to avoid (the q74 oracle IS
     * that window formulation, in DuckDB, over the same breakpoints).
-    * Both passes share one RDD, so the range shuffle's map stage runs
-    * once and pass B reuses its shuffle files. Calling this method
-    * runs pass A eagerly (one small collect) — the same driver-side-
-    * constant pattern as the k-means/IVF/BM25 operators.
     *
-    * INTEGRAL coordinates only, enforced exactly as
-    * [[mergeIntervalsRange]] (the sweep widens to long and casts
-    * back). */
+    * INTEGRAL coordinates of one shared type only: the sweep widens to
+    * long and casts back, and segment boundaries MIX the two coordinate
+    * domains (a segment can start at an input END), so an int start
+    * column would silently wrap a long end value. */
   def coverage(df: DataFrame, chrom: String = "chrom",
       start: String = "start", end: String = "end",
-      partitions: Int = 0): DataFrame = {
-    val session = df.sparkSession
-    import session.implicits._
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType,
-      org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.LongType)
-    Seq(start, end).foreach { c =>
-      require(integral.contains(df.schema(c).dataType),
-        s"coverage requires integral coordinates, got " +
-          s"$c: ${df.schema(c).dataType.simpleString}")
-    }
-    // segment boundaries MIX the two coordinate domains (a segment can
-    // start at an input END), so unlike mergeIntervalsRange the
-    // back-casts below are only safe when both columns share one type —
-    // an int start column would silently wrap a long end value
-    require(df.schema(start).dataType == df.schema(end).dataType,
-      s"coverage requires $start and $end to share a type, got " +
-        s"${df.schema(start).dataType.simpleString} vs " +
-        s"${df.schema(end).dataType.simpleString}")
-    val n = if (partitions > 0) partitions
-      else session.sessionState.conf.numShufflePartitions
-    // 2n events -> net breakpoints (map-side combined), zero-net
-    // breakpoints dropped (they would only split equal-depth segments)
-    val bp = dropNullCoords(df, chrom, start, end)
-      .select(col(chrom).cast("string").as("__c"),
-        col(start).cast("long").as("__s"),
-        greatest(col(end).cast("long"), col(start).cast("long"))
-          .as("__e"))
-      .select(col("__c"), explode(array(
-        struct(col("__s").as("pos"), lit(1L).as("d")),
-        struct(col("__e").as("pos"), lit(-1L).as("d")))).as("__ev"))
-      .groupBy(col("__c"), col("__ev.pos").as("__p"))
-      .agg(sum(col("__ev.d")).as("__d"))
-      .where(col("__d") =!= 0L)
-    // ONE shared RDD for both passes: pass B's job reuses pass A's
-    // completed range-shuffle map stage instead of re-shuffling.
-    // Both passes run on the plan's InternalRows (r22): the former
-    // typed `.as[(String, Long, Long)].rdd` leg decoded every
-    // breakpoint into a fresh String + Tuple3 in BOTH passes and
-    // re-encoded every emitted segment through the product encoder —
-    // per-row allocation the sweep never needed. Chromosome values
-    // detach (UTF8String copy) only on change-of-contig.
-    val rdd = org.apache.spark.sql.graftshim.RangeShuffle
-      .rangeSortedDf(bp, Seq(col("__c"), col("__p")), Nil, n,
-        adapt = partitions <= 0)
-      .queryExecution.toRdd
-    // pass A: (pid, nonEmpty, firstChrom, firstPos, per-chrom sums)
-    val summaries = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var any = false
-      var firstC: String = null
-      var firstP = 0L
-      var curC: org.apache.spark.unsafe.types.UTF8String = null
-      var curCs: String = null
-      val sums = scala.collection.mutable.LinkedHashMap[String, Long]()
-      it.foreach { r =>
-        val c = r.getUTF8String(0)
-        if (curC == null || c != curC) { curC = c.copy(); curCs = curC.toString }
-        if (!any) { any = true; firstC = curCs; firstP = r.getLong(1) }
-        sums.update(curCs, sums.getOrElse(curCs, 0L) + r.getLong(2))
-      }
-      Iterator.single((pid, any, firstC, firstP, sums.toSeq))
-    }.collect().sortBy(_._1)
-    // entering depth per (partition, chrom): prefix over partitions
-    val offs = Array.fill(summaries.length)(Map.empty[String, Long])
-    val running = scala.collection.mutable.Map[String, Long]()
-    summaries.foreach { case (pid, _, _, _, sums) =>
-      offs(pid) = running.toMap
-      sums.foreach { case (c, v) =>
-        running.update(c, running.getOrElse(c, 0L) + v)
-      }
-    }
-    // terminator per partition: the nearest LATER non-empty
-    // partition's first breakpoint (closes the last open segment)
-    val terms = Array.fill(summaries.length)(null: (String, Long))
-    var nextFirst: (String, Long) = null
-    summaries.reverseIterator.foreach { case (pid, any, fc, fp, _) =>
-      terms(pid) = nextFirst
-      if (any) nextFirst = (fc, fp)
-    }
-    val bcOffs = session.sparkContext.broadcast(offs)
-    val bcTerms = session.sparkContext.broadcast(terms)
-    // pass B: one streaming sweep per sorted partition. The former
-    // formulation peeked at the NEXT row (BufferedIterator.head) to
-    // close each segment — unsafe on the plan's reused row buffers —
-    // so the InternalRow sweep inverts it: each row closes the
-    // PREVIOUS breakpoint's segment (same emission set: a row emits
-    // iff its same-chrom successor exists in this partition, else the
-    // terminator closes it).
-    val segs = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val off = bcOffs.value(pid)
-      val term = bcTerms.value(pid)
-      new Iterator[InternalRow] {
-        private var curC: org.apache.spark.unsafe.types.UTF8String = null
-        private var curCs: String = null
-        private var depth = 0L
-        private var havePrev = false
-        private var prevP = 0L
-        private var prevDepth = 0L
-        private var done = false
-        private var out: InternalRow = null
-        private def emit(endP: Long): Unit =
-          out = new GenericInternalRow(
-            Array[Any](curC, prevP, endP, prevDepth))
-        private def advance(): Unit = {
-          while (out == null && !done) {
-            if (it.hasNext) {
-              val r = it.next()
-              val c = r.getUTF8String(0)
-              val p = r.getLong(1)
-              val d = r.getLong(2)
-              if (curC == null || c != curC) {
-                // change of contig: the previous breakpoint had no
-                // same-chrom successor (net depth 0 — nothing opens)
-                curC = c.copy(); curCs = curC.toString
-                depth = off.getOrElse(curCs, 0L)
-                havePrev = false
-              } else if (havePrev) emit(p)
-              depth += d
-              prevP = p; prevDepth = depth; havePrev = true
-            } else {
-              done = true
-              if (havePrev && term != null && term._1 == curCs)
-                emit(term._2)
-            }
-          }
-        }
-        def hasNext: Boolean = { advance(); out != null }
-        def next(): InternalRow = {
-          advance(); val r = out; out = null; r
-        }
-      }
-    }
-    val segSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__c",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("__s",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("__e",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("depth",
-        org.apache.spark.sql.types.LongType)))
-    org.apache.spark.sql.graftshim.PlanShim
-      .internalCreateDataFrame(session, segs, segSchema)
-      .select(col("__c").cast(df.schema(chrom).dataType).as(chrom),
-        col("__s").cast(df.schema(start).dataType).as("start"),
-        col("__e").cast(df.schema(end).dataType).as("end"),
-        col("depth"))
-  }
+      partitions: Int = 0): DataFrame =
+    breakpointSweep(df, chrom, start, end, None, CoverageSweep, partitions)
 
   /** N-set breakpoint partition — the bedtools `multiinter` analogue:
     * the atomic segments between consecutive NET breakpoints of the
@@ -850,174 +557,14 @@ object IntervalOps {
     * form a DataFrame pipeline naturally has; [[multiinterOf]] wraps
     * separate frames.
     *
-    * Scale shape: [[coverage]]'s two-pass range-partitioned sweep,
-    * generalized from a scalar depth to a per-set depth vector. One
-    * hash shuffle nets the 2n events per (chrom, pos, set) with
-    * map-side combine, one range shuffle orders the breakpoints; pass
-    * A collects per-partition per-(chrom, set) delta totals — driver
-    * state O(partitions × contigs × sets), sets being small by
-    * construction — and pass B streams each partition once, seeded.
-    * No per-chromosome window anywhere. */
+    * Scale shape: [[coverage]]'s, generalized from a scalar depth to a
+    * per-set depth vector — pass-A driver state O(partitions × contigs
+    * × sets), sets being small by construction. */
   def multiinter(df: DataFrame, setCol: String = "set",
       chrom: String = "chrom", start: String = "start",
-      end: String = "end", partitions: Int = 0): DataFrame = {
-    val session = df.sparkSession
-    import session.implicits._
-    requireSharedIntegralCoords(df, start, end, "multiinter")
-    val n = if (partitions > 0) partitions
-      else session.sessionState.conf.numShufflePartitions
-    // 2n events -> net per-(chrom, pos, set) deltas, ONE map-side-
-    // combined shuffle (all-zero rows dropped: they separate equal
-    // segments only). The r21 shape keeps the deltas FLAT — the old
-    // second groupBy that collected a per-breakpoint map was a full
-    // extra shuffle whose only job the pass-B sweep below absorbs by
-    // draining every equal-(chrom, pos) row before emitting a segment
-    // (equal range-partition keys never straddle a partition).
-    val bp = dropNullCoords(df, chrom, start, end)
-      .where(col(setCol).isNotNull)
-      .select(col(chrom).cast("string").as("__c"),
-        col(setCol).cast("string").as("__set"),
-        col(start).cast("long").as("__s"),
-        greatest(col(end).cast("long"), col(start).cast("long"))
-          .as("__e"))
-      .select(col("__c"), col("__set"), explode(array(
-        struct(col("__s").as("pos"), lit(1L).as("d")),
-        struct(col("__e").as("pos"), lit(-1L).as("d")))).as("__ev"))
-      .groupBy(col("__c"), col("__ev.pos").as("__p"), col("__set"))
-      .agg(sum(col("__ev.d")).as("__d"))
-      .where(col("__d") =!= 0L)
-    // Both passes on InternalRows (r22, the merge/coverage port): no
-    // per-row String/Tuple4 decode; set names detach (UTF8String copy)
-    // only when first seen per partition, chroms on change-of-contig.
-    val rdd = org.apache.spark.sql.graftshim.RangeShuffle
-      .rangeSortedDf(bp, Seq(col("__c"), col("__p")), Nil, n,
-        adapt = partitions <= 0)
-      .queryExecution.toRdd
-    // pass A: per-partition first breakpoint + per-(chrom, set) sums
-    val summaries = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var any = false
-      var firstC: String = null
-      var firstP = 0L
-      var curC: org.apache.spark.unsafe.types.UTF8String = null
-      var curCs: String = null
-      val sums =
-        scala.collection.mutable.LinkedHashMap[(String, String), Long]()
-      it.foreach { r =>
-        val c = r.getUTF8String(0)
-        if (curC == null || c != curC) { curC = c.copy(); curCs = curC.toString }
-        if (!any) { any = true; firstC = curCs; firstP = r.getLong(1) }
-        val k = (curCs, r.getUTF8String(2).toString)
-        sums.update(k, sums.getOrElse(k, 0L) + r.getLong(3))
-      }
-      Iterator.single((pid, any, firstC, firstP, sums.toSeq))
-    }.collect().sortBy(_._1)
-    // entering per-set depth per (partition, chrom)
-    val offs = Array.fill(summaries.length)(
-      Map.empty[(String, String), Long])
-    val running = scala.collection.mutable.Map[(String, String), Long]()
-    summaries.foreach { case (pid, _, _, _, sums) =>
-      offs(pid) = running.toMap
-      sums.foreach { case (k, v) =>
-        running.update(k, running.getOrElse(k, 0L) + v)
-      }
-    }
-    val terms = Array.fill(summaries.length)(null: (String, Long))
-    var nextFirst: (String, Long) = null
-    summaries.reverseIterator.foreach { case (pid, any, fc, fp, _) =>
-      terms(pid) = nextFirst
-      if (any) nextFirst = (fc, fp)
-    }
-    val bcOffs = session.sparkContext.broadcast(offs)
-    val bcTerms = session.sparkContext.broadcast(terms)
-    // pass B: one streaming sweep per sorted partition, per-set
-    // depths; all rows of one (chrom, pos) breakpoint drain before
-    // the segment is emitted (they are adjacent in the sort, and a
-    // range partition never splits equal keys). The InternalRow form
-    // inverts the old next-row peek (unsafe on reused buffers): a new
-    // (chrom, pos) group first closes the PREVIOUS breakpoint's
-    // segment — the emission set is identical (a breakpoint emits iff
-    // a same-chrom successor exists here, else the terminator).
-    val segs = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val off = bcOffs.value(pid)
-      val term = bcTerms.value(pid)
-      type U = org.apache.spark.unsafe.types.UTF8String
-      new Iterator[InternalRow] {
-        private var curC: U = null
-        private var curCs: String = null
-        private var curP = 0L
-        private var haveGroup = false
-        private val depth = scala.collection.mutable.Map[U, Long]()
-        private var out: InternalRow = null
-        private var done = false
-        private def applyDelta(s: U, d: Long): Unit = {
-          depth.get(s) match {
-            case Some(old) =>
-              val nd = old + d
-              if (nd == 0L) depth.remove(s) else depth.update(s, nd)
-            case None => if (d != 0L) depth.update(s.copy(), d)
-          }
-        }
-        private def closeGroup(segEnd: Long): Unit =
-          if (depth.nonEmpty) {
-            val names = depth.keysIterator.map(_.toString).toArray.sorted
-            out = new GenericInternalRow(Array[Any](curC, curP, segEnd,
-              names.length.toLong,
-              org.apache.spark.unsafe.types.UTF8String
-                .fromString(names.mkString(","))))
-          }
-        private def advance(): Unit = {
-          while (out == null && !done) {
-            if (it.hasNext) {
-              val r = it.next()
-              val c = r.getUTF8String(0)
-              val p = r.getLong(1)
-              val sameC = curC != null && c == curC
-              if (!sameC || p != curP) {
-                // a new breakpoint: the previous one's segment closes
-                // here (same chrom) or not at all (chrom changed)
-                if (haveGroup && sameC) closeGroup(p)
-                if (!sameC) {
-                  curC = c.copy(); curCs = curC.toString
-                  depth.clear()
-                  off.foreach { case ((oc, s), d) =>
-                    if (oc == curCs && d != 0L)
-                      depth.update(org.apache.spark.unsafe.types
-                        .UTF8String.fromString(s), d)
-                  }
-                }
-                curP = p
-                haveGroup = true
-              }
-              applyDelta(r.getUTF8String(2), r.getLong(3))
-            } else {
-              done = true
-              if (haveGroup && term != null && term._1 == curCs)
-                closeGroup(term._2)
-            }
-          }
-        }
-        def hasNext: Boolean = { advance(); out != null }
-        def next(): InternalRow = { advance(); val r = out; out = null; r }
-      }
-    }
-    val segSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__c",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("__s",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("__e",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_sets",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("sets",
-        org.apache.spark.sql.types.StringType)))
-    org.apache.spark.sql.graftshim.PlanShim
-      .internalCreateDataFrame(session, segs, segSchema)
-      .select(col("__c").cast(df.schema(chrom).dataType).as(chrom),
-        col("__s").cast(df.schema(start).dataType).as("start"),
-        col("__e").cast(df.schema(end).dataType).as("end"),
-        col("n_sets"), col("sets"))
-  }
+      end: String = "end", partitions: Int = 0): DataFrame =
+    breakpointSweep(df, chrom, start, end, Some(setCol), MultiinterSweep,
+      partitions)
 
   /** Relative-distance statistic — the bedtools `reldist` analogue's
     * per-A core: every A interval's midpoint against its flanking B
@@ -1155,7 +702,10 @@ object IntervalOps {
       start: String = "start", end: String = "end",
       partitions: Int = 0,
       chromSizes: Option[DataFrame] = None): DataFrame = {
-    val cov = coverage(df, chrom, start, end, partitions)
+    val cov0 = coverage(df, chrom, start, end, partitions)
+    // with sizes, the segments feed the gaps and three boundary
+    // branches: materialized once instead of sweeping four times
+    val cov = if (chromSizes.isEmpty) cov0 else materializeInputs(cov0)
     val base = cov.where(col("depth") === 0L).drop("depth")
     chromSizes match {
       case None => base
@@ -1233,9 +783,9 @@ object IntervalOps {
     * parallelism is per A INTERVAL (not per chromosome), so this stage
     * has no single-contig skew at all.
     *
-    * Inherits [[mergeIntervalsRange]]'s eager-execution and
-    * determinism contracts: constructing the frame runs the B-side
-    * merge's driver-summary jobs.
+    * Inherits [[mergeIntervalsRange]]'s determinism contract.
+    * Constructing the frame runs jobs: the merged B side and the marked
+    * join are materialized.
     *
     * @param aId unique id column in `a`, carried to the output (one A
     *            can split into many rows; the id says which) */
@@ -1259,7 +809,9 @@ object IntervalOps {
           .as("__ae"))
       .where(col("__aid").isNotNull && col("__as") < col("__ae") &&
         col("__c").isNotNull))
-    val mb = mergeIntervalsRange(
+    // mb feeds the binned join and its existence probe: materialized
+    // once instead of sweeping per reference
+    val mb = materializeInputs(mergeIntervalsRange(
         dropNullCoords(b, chrom, start, end)
           .select(compositeKey(col(chrom).cast("string"), sk.map(_._2))
             .as("__c"),
@@ -1274,7 +826,7 @@ object IntervalOps {
       // and survive the merge when isolated) cover no bases, but the
       // strict overlap predicate below would still match one strictly
       // inside an A interval and split A's output at p — drop them
-      .where(col("__bs") < col("__be"))
+      .where(col("__bs") < col("__be")))
     val ov = IntervalJoin.overlapJoin(a2,
       mb.withColumnRenamed("__c", "__c2"),
       leftCols = ("__c", "__as", "__ae"),
@@ -1596,8 +1148,8 @@ object IntervalOps {
     * merged set feeds BOTH its length aggregate and the join, so both
     * are persisted for the duration and the statistics computed
     * EAGERLY (merging a 100-TB input twice is not acceptable; the
-    * same eager-stats contract as the k-means/IVF/BM25 operators and
-    * [[coverage]]'s pass A) — the returned frame is one literal row. */
+    * same eager-stats contract as the k-means/IVF/BM25 operators) —
+    * the returned frame is one literal row. */
   def jaccard(a: DataFrame, b: DataFrame, chrom: String = "chrom",
       start: String = "start", end: String = "end",
       binSize: Long = 1000L): DataFrame = {
@@ -1843,15 +1395,13 @@ object IntervalOps {
     out.select(df.columns.map(col).toIndexedSeq: _*)
   }
 
+  private val Integral =
+    Set[DataType](ByteType, ShortType, IntegerType, LongType)
+
   private def requireSharedIntegralCoords(df: DataFrame, start: String,
       end: String, op: String): Unit = {
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType,
-      org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.LongType)
     Seq(start, end).foreach { c =>
-      require(integral.contains(df.schema(c).dataType),
+      require(Integral.contains(df.schema(c).dataType),
         s"$op requires integral coordinates, got " +
           s"$c: ${df.schema(c).dataType.simpleString}")
     }
@@ -2213,9 +1763,7 @@ object IntervalOps {
     * exactly `rs <= s <= re`, the membership rule, and merged runs
     * never touch, so each row joins exactly one run. No window over
     * input rows, no per-contig stage. Inherits
-    * [[mergeIntervalsRange]]'s eager-execution and determinism
-    * contracts: constructing the frame runs the merge's
-    * driver-summary jobs. */
+    * [[mergeIntervalsRange]]'s determinism contract. */
   def cluster(df: DataFrame, chrom: String = "chrom",
       start: String = "start", end: String = "end",
       binSize: Long = 1000L, maxGap: Long = 0L): DataFrame = {
@@ -2968,4 +2516,245 @@ object IntervalOps {
         col("__d").as("distance"),
         signedCol.as("signed_distance"),
         col("__rk").cast("long").as("rank"))
+}
+
+/** One merged group of [[IntervalOps.mergeIntervalsRange]]. */
+private[operators] final case class MergeGroup(chrom: String, start: Long,
+    end: Long, n: Long)
+
+/** The open group a partition continues (null when none), and whether
+  * the next partition continues this partition's trailing group. */
+private[operators] final case class MergeCarry(group: MergeGroup,
+    continued: Boolean)
+
+/** The [[IntervalOps.mergeIntervalsRange]] sweep over sorted
+  * (chrom, start, clamped end) rows. Pass A is the un-seeded sweep: a
+  * partition's first and last local groups and its row count. */
+private[operators] final case class MergeSweep(maxGap: Long)
+    extends SweepKernel[Option[(MergeGroup, MergeGroup, Long)], MergeCarry] {
+
+  def output(child: Seq[Attribute], inputs: Seq[Attribute])
+      : Seq[Attribute] = IntervalOps.segmentAttrs("n_merged" -> LongType)
+
+  def summarize(rows: Iterator[InternalRow], in: SweepInput)
+      : Option[(MergeGroup, MergeGroup, Long)] = {
+    sweep(rows, in, MergeCarry(null, continued = false)).map(g =>
+      MergeGroup(g.getUTF8String(0).toString, g.getLong(1), g.getLong(2),
+        g.getLong(3))
+    ).foldLeft(Option.empty[(MergeGroup, MergeGroup, Long)]) {
+      case (None, g) => Some((g, g, g.n))
+      case (Some((first, _, n)), g) => Some((first, g, n + g.n))
+    }
+  }
+
+  /** One forward pass: a partition takes the previous non-empty
+    * partition's trailing group when its first row joins it; the group
+    * then absorbs the whole partition iff it reaches the partition's
+    * last local group (see mergeIntervalsRange's derivation). */
+  def resolve(s: IndexedSeq[Option[(MergeGroup, MergeGroup, Long)]])
+      : IndexedSeq[MergeCarry] = {
+    val carries = Array.fill(s.length)(MergeCarry(null, continued = false))
+    var prev = -1
+    var open: MergeGroup = null // prev's trailing group
+    for (p <- s.indices; (first, last, rows) <- s(p)) {
+      val joins = open != null && open.chrom == first.chrom &&
+        first.start <= open.end + maxGap
+      if (joins) {
+        carries(prev) = carries(prev).copy(continued = true)
+        carries(p) = MergeCarry(open, continued = false)
+      }
+      open =
+        if (joins && first.chrom == last.chrom &&
+          open.end + maxGap >= last.start)
+          MergeGroup(last.chrom, open.start, math.max(open.end, last.end),
+            open.n + rows)
+        else last
+      prev = p
+    }
+    carries.toIndexedSeq
+  }
+
+  def sweep(rows: Iterator[InternalRow], in: SweepInput, carry: MergeCarry)
+      : Iterator[InternalRow] = new SweepIterator(rows) {
+    private val Seq(cO, sO, eO) = in.cols.map(_.ordinal)
+    private var open = carry.group != null
+    private val g = if (open) carry.group else MergeGroup(null, 0L, 0L, 0L)
+    private var curC = if (open) UTF8String.fromString(g.chrom) else null
+    private var (gS, gE, gN) = (g.start, g.end, g.n)
+    private def close(): Unit =
+      emit(new GenericInternalRow(Array[Any](curC, gS, gE, gN)))
+    protected def step(r: InternalRow): Unit = {
+      val c = r.getUTF8String(cO)
+      val st = r.getLong(sO)
+      val en = r.getLong(eO)
+      val sameC = curC != null && c == curC
+      if (open && sameC && st <= gE + maxGap) {
+        gE = math.max(gE, en); gN += 1L
+      } else {
+        if (open) close()
+        if (!sameC) curC = c.copy()
+        gS = st; gE = en; gN = 1L; open = true
+      }
+    }
+    // a trailing group the next partition continues is emitted there
+    override protected def finish(): Unit =
+      if (open && !carry.continued) close()
+  }
+}
+
+/** Pass A of the breakpoint sweeps: a partition's first breakpoint and
+  * its net delta per (chrom, label). */
+private[operators] final case class BreakpointSums(first: (String, Long),
+    sums: Seq[((String, String), Long)])
+
+/** The entering depth per label of a partition's first chromosome (no
+  * other chromosome of the partition has rows in earlier partitions),
+  * and the next non-empty partition's first breakpoint, which closes
+  * the last open segment (null when none). */
+private[operators] final case class BreakpointCarry(depth: Map[String, Long],
+    term: (String, Long))
+
+/** [[IntervalOps.coverage]] and [[IntervalOps.multiinter]]: a prefix
+  * sum over sorted (chrom, pos, delta[, label]) net breakpoints. Pass A
+  * collects per-partition per-(chrom, label) delta totals plus first
+  * breakpoints; pass B streams each partition once, seeding the first
+  * chromosome's depth and closing the last segment against the next
+  * non-empty partition's first breakpoint. */
+private[operators] abstract class BreakpointSweep(val op: String)
+    extends SweepKernel[Option[BreakpointSums], BreakpointCarry] {
+
+  protected def label(r: InternalRow, in: SweepInput): String
+
+  def summarize(rows: Iterator[InternalRow], in: SweepInput)
+      : Option[BreakpointSums] = {
+    val Seq(cO, pO, dO) = in.cols.take(3).map(_.ordinal)
+    var first: (String, Long) = null
+    var curC: UTF8String = null
+    var curCs: String = null
+    val sums = mutable.LinkedHashMap.empty[(String, String), Long]
+    rows.foreach { r =>
+      val c = r.getUTF8String(cO)
+      if (curC == null || c != curC) {
+        curC = c.copy(); curCs = curC.toString
+        if (first == null) first = (curCs, r.getLong(pO))
+      }
+      val k = (curCs, label(r, in))
+      sums(k) = sums.getOrElse(k, 0L) + r.getLong(dO)
+    }
+    Option(first).map(BreakpointSums(_, sums.toSeq))
+  }
+
+  /** Entering depths: a prefix over partitions (a chromosome's deltas
+    * net to zero once it ends, so only open ones stay). Terminators:
+    * the nearest LATER non-empty partition's first breakpoint. */
+  def resolve(s: IndexedSeq[Option[BreakpointSums]])
+      : IndexedSeq[BreakpointCarry] = {
+    val running = mutable.HashMap.empty[(String, String), Long]
+    val depths = s.map(_.fold(Map.empty[String, Long]) { b =>
+      val entering = running.collect {
+        case ((c, l), d) if c == b.first._1 => l -> d
+      }.toMap
+      b.sums.foreach { case (k, d) =>
+        val nd = running.getOrElse(k, 0L) + d
+        if (nd == 0L) running.remove(k) else running(k) = nd
+      }
+      entering
+    })
+    var next: (String, Long) = null
+    s.indices.reverse.map { p =>
+      val carry = BreakpointCarry(depths(p), next)
+      s(p).foreach(b => next = b.first)
+      carry
+    }.reverse
+  }
+
+  /** Pass B: walks the breakpoints, closing each one's segment at the
+    * next breakpoint of the same chromosome (or at the terminator). All
+    * rows of one (chrom, pos) are adjacent in the sort, and a range
+    * partition never splits equal keys. */
+  protected abstract class Segments(rows: Iterator[InternalRow],
+      in: SweepInput, carry: BreakpointCarry) extends SweepIterator(rows) {
+    private val cO = in.cols(0).ordinal
+    private val pO = in.cols(1).ordinal
+    protected var chrom: UTF8String = null
+    protected var pos = 0L
+    private var seed = carry.depth
+    protected def reset(seed: Map[String, Long]): Unit
+    protected def add(r: InternalRow): Unit
+    /** Emits the segment [pos, end) of `chrom`, if it has one. */
+    protected def close(end: Long): Unit
+    protected def step(r: InternalRow): Unit = {
+      val c = r.getUTF8String(cO)
+      val p = r.getLong(pO)
+      val sameC = chrom != null && c == chrom
+      if (!sameC || p != pos) {
+        // a new breakpoint: the previous one's segment closes here
+        // (same chrom) or not at all (chrom changed: net depth 0)
+        if (sameC) close(p)
+        else { chrom = c.copy(); reset(seed); seed = Map.empty }
+        pos = p
+      }
+      add(r)
+    }
+    override protected def finish(): Unit =
+      if (chrom != null && carry.term != null &&
+        chrom.toString == carry.term._1) close(carry.term._2)
+  }
+}
+
+private[operators] case object CoverageSweep
+    extends BreakpointSweep("coverage") {
+
+  def output(child: Seq[Attribute], inputs: Seq[Attribute])
+      : Seq[Attribute] = IntervalOps.segmentAttrs("depth" -> LongType)
+
+  protected def label(r: InternalRow, in: SweepInput): String = ""
+
+  def sweep(rows: Iterator[InternalRow], in: SweepInput,
+      carry: BreakpointCarry): Iterator[InternalRow] =
+    new Segments(rows, in, carry) {
+      private val dO = in.cols(2).ordinal
+      private var depth = 0L
+      protected def reset(seed: Map[String, Long]): Unit =
+        depth = seed.getOrElse("", 0L)
+      protected def add(r: InternalRow): Unit = depth += r.getLong(dO)
+      protected def close(end: Long): Unit =
+        emit(new GenericInternalRow(Array[Any](chrom, pos, end, depth)))
+    }
+}
+
+private[operators] case object MultiinterSweep
+    extends BreakpointSweep("multiinter") {
+
+  def output(child: Seq[Attribute], inputs: Seq[Attribute])
+      : Seq[Attribute] = IntervalOps.segmentAttrs("n_sets" -> LongType,
+    "sets" -> StringType)
+
+  protected def label(r: InternalRow, in: SweepInput): String =
+    r.getUTF8String(in.cols(3).ordinal).toString
+
+  def sweep(rows: Iterator[InternalRow], in: SweepInput,
+      carry: BreakpointCarry): Iterator[InternalRow] =
+    new Segments(rows, in, carry) {
+      private val dO = in.cols(2).ordinal
+      private val sO = in.cols(3).ordinal
+      // per-set depth; sets at depth 0 are removed
+      private val depth = mutable.HashMap.empty[UTF8String, Long]
+      protected def reset(seed: Map[String, Long]): Unit = {
+        depth.clear()
+        seed.foreach { case (s, d) => depth(UTF8String.fromString(s)) = d }
+      }
+      protected def add(r: InternalRow): Unit = {
+        val s = r.getUTF8String(sO)
+        val d = depth.getOrElse(s, 0L) + r.getLong(dO)
+        if (d == 0L) depth.remove(s)
+        else if (depth.contains(s)) depth(s) = d
+        else depth(s.copy()) = d
+      }
+      protected def close(end: Long): Unit = if (depth.nonEmpty) {
+        val names = depth.keysIterator.map(_.toString).toArray.sorted
+        emit(new GenericInternalRow(Array[Any](chrom, pos, end,
+          names.length.toLong, UTF8String.fromString(names.mkString(",")))))
+      }
+    }
 }

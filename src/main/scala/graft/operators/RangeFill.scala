@@ -1,10 +1,14 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.PlanShim
+import org.apache.spark.sql.graftshim.{RangeSweep, SweepCol, SweepInput, SweepIterator, SweepKernel}
+import org.apache.spark.sql.types.{ArrayType, BooleanType}
 
 /** Skew-robust distributed running fill: the range-partitioned two-pass
   * replacement for the textbook
@@ -15,24 +19,13 @@ import org.apache.spark.sql.graftshim.PlanShim
   * ticks). Results are IDENTICAL to the window formulation; only the
   * physical plan changes.
   *
-  * Scale shape (the same two-pass pattern as [[IntervalOps.coverage]]'s
-  * breakpoint prefix sum): ONE range shuffle on (key, ordering) spreads
-  * every key across as many partitions as its row share demands — a
-  * single-key load uses ALL partitions, not one task. Pass A summarizes
-  * each sorted partition into four scalars (first key, last key, last
-  * non-null fill value of the trailing key run) — O(partitions) driver
-  * state, INDEPENDENT of key cardinality: range partitions are
-  * contiguous in the total order, so only a partition's FIRST key can
-  * continue from earlier partitions, and its carry-in is found by
-  * walking summaries backward while the previous partition's last key
-  * still matches (chaining across all-null runs). Pass B streams each
-  * sorted partition once, seeded from the broadcast carries. Both
-  * passes share one RDD, so the range shuffle's map stage runs once.
+  * Scale shape: one [[RangeSweep]] over a range shuffle on
+  * (key, ordering) — a single-key load uses ALL partitions, not one
+  * task. The driver state is O(partitions), INDEPENDENT of key
+  * cardinality (see [[KeyRuns]]).
   *
-  * Both passes run on the plan's `InternalRow`s directly (the sorted
-  * rows pass through untouched unless they need a fill, and the
-  * re-wrap is [[PlanShim.internalCreateDataFrame]]) — no external-Row
-  * decode/re-encode leg. Cost vs the window: one range-boundary
+  * Both passes run on the plan's `InternalRow`s: rows that need no fill
+  * pass through untouched. Cost vs the window: one range-boundary
   * sampling job plus the (tiny) pass-A summary job — the price of skew
   * robustness. Callers with guaranteed-balanced high-cardinality keys
   * can keep the plain window; callers that cannot bound the largest
@@ -55,115 +48,12 @@ object RangeFill {
     * @return the input rows (in range-partition order) with `fillCol`
     *         filled; schema unchanged */
   def fill(df: DataFrame, key: String, fillCol: String,
-      order: Seq[Column], partitions: Int = 0): DataFrame = {
-    val session = df.sparkSession
-    val n = if (partitions > 0) partitions
-      else session.sessionState.conf.numShufflePartitions
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(key)
-    val fillIdx = schema.fieldIndex(fillCol)
-    val fieldTypes = schema.fields.map(_.dataType)
-    val keyType = fieldTypes(keyIdx)
-    val fillType = fieldTypes(fillIdx)
-    val numFields = fieldTypes.length
+      order: Seq[Column], partitions: Int = 0): DataFrame =
     // the range exprs ARE the full window ordering (key first): range
     // partitions then concatenate to the exact global sort the window
     // would produce, and equal key tuples never straddle a boundary
-    val sortExprs = col(key).asc +: order
-    // ONE shared RDD for both passes (pass B reuses pass A's completed
-    // range-shuffle map stage instead of re-shuffling). toRdd hands
-    // back the plan's own (possibly reused) UnsafeRows, so every value
-    // retained ACROSS rows below is detached via InternalRow.copyValue;
-    // values forwarded within one iterator step ride the live buffer
-    // (the consumer projects each row before pulling the next).
-    // RangeShuffle (r22): the shuffle width adapts to the plan's size
-    // estimate when the caller left the count at the session default
-    // (an explicit `partitions` argument is honored exactly).
-    val rdd = org.apache.spark.sql.graftshim.RangeShuffle
-      .rangeSortedDf(df, sortExprs, Nil, n, adapt = partitions <= 0)
-      .queryExecution.toRdd
-    def keyOf(r: InternalRow): Any =
-      if (r.isNullAt(keyIdx)) null else r.get(keyIdx, keyType)
-    // pass A: (pid, nonEmpty, firstKey, lastKey, lastVal) where lastVal
-    // is the last non-null fill among the TRAILING run of lastKey rows
-    // (the only rows a later partition can continue from)
-    val summaries = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var any = false
-      var firstKey: Any = null
-      var curKey: Any = null
-      var curVal: Any = null
-      it.foreach { r =>
-        val k = keyOf(r)
-        if (!any) {
-          any = true
-          firstKey = InternalRow.copyValue(k)
-          curKey = firstKey
-        } else if (k != curKey) {
-          curKey = InternalRow.copyValue(k); curVal = null
-        }
-        if (!r.isNullAt(fillIdx))
-          curVal = InternalRow.copyValue(r.get(fillIdx, fillType))
-      }
-      Iterator.single((pid, any, firstKey, curKey, curVal))
-    }.collect().sortBy(_._1)
-    // driver: one forward pass, O(partitions). carries(p) = the
-    // running value entering partition p (applies only to p's FIRST
-    // key); resolved(q) = the running value at q's END for q's LAST
-    // key. A partition continues the chain when the previous non-empty
-    // partition's last key equals its first key; an all-null
-    // whole-partition key run propagates its own carry-in, and a key
-    // that began mid-partition with no non-null value resolves to null
-    // (no earlier partition can hold it).
-    val carries = Array.fill[Any](summaries.length)(null)
-    val resolved = Array.fill[Any](summaries.length)(null)
-    var prevIdx = -1
-    summaries.foreach { case (pid, any, firstKey, lastKey, lastVal) =>
-      if (any) {
-        if (prevIdx >= 0 && summaries(prevIdx)._4 == firstKey)
-          carries(pid) = resolved(prevIdx)
-        resolved(pid) =
-          if (lastVal != null) lastVal
-          else if (firstKey == lastKey) carries(pid)
-          else null
-        prevIdx = pid
-      }
-    }
-    val bc = session.sparkContext.broadcast(carries)
-    // pass B: one streaming sweep per sorted partition, seeded from the
-    // broadcast carry (which applies only until the first key changes).
-    // Unfilled rows pass through as the plan's own rows; filled rows
-    // are rebuilt as GenericInternalRows (fields other than the fill
-    // still reference the live buffer — consumed before the next pull).
-    val filled = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var first = true
-      var curKey: Any = null
-      var curVal: Any = bc.value(pid)
-      it.map { r =>
-        val k = keyOf(r)
-        if (first) {
-          first = false
-          curKey = InternalRow.copyValue(k)
-        } else if (k != curKey) {
-          curKey = InternalRow.copyValue(k); curVal = null
-        }
-        if (!r.isNullAt(fillIdx)) {
-          curVal = InternalRow.copyValue(r.get(fillIdx, fillType))
-          r
-        } else if (curVal == null) r
-        else {
-          val vals = new Array[Any](numFields)
-          var i = 0
-          while (i < numFields) {
-            vals(i) = if (r.isNullAt(i)) null else r.get(i, fieldTypes(i))
-            i += 1
-          }
-          vals(fillIdx) = curVal
-          new GenericInternalRow(vals)
-        }
-      }
-    }
-    PlanShim.internalCreateDataFrame(session, filled, schema)
-  }
+    RangeSweep.frame(df, FillSweep, Seq(key, fillCol), col(key).asc +: order,
+      Nil, partitions)
 
   /** Bidirectional [[fill]] over ONE range shuffle: `fwdCol` fills with
     * the latest non-null value at-or-before each row in (key, order)
@@ -175,15 +65,12 @@ object RangeFill {
     * pay one range-boundary sampling job, one pass-A summary job, and
     * one shuffle instead of two of each.
     *
-    * Scale shape: pass A additionally records each partition's LEADING
-    * key run's first non-null `bwdCol` value; the driver resolves
-    * backward carries with the mirror of the forward chain walk (still
-    * O(partitions)). Pass B streams forward once: rows whose `bwdCol`
-    * is null are buffered (copied) until the next non-null value of
-    * their key arrives — or their key ends (no later value exists →
-    * stays null), or the partition ends (the trailing run takes the
-    * broadcast backward carry). Buffer memory is the longest gap
-    * between consecutive non-null `bwdCol` values within one key — the
+    * Scale shape: pass B streams forward once: rows whose `bwdCol` is
+    * null are buffered (copied) until the next non-null value of their
+    * key arrives — or their key ends (no later value exists → stays
+    * null), or the partition ends (the trailing run takes the backward
+    * carry). Buffer memory is the longest gap between
+    * consecutive non-null `bwdCol` values within one key — the
     * distance between adjacent reference rows on a timeline, NOT the
     * partition (a whole partition only when a key has no reference
     * rows at all).
@@ -202,177 +89,10 @@ object RangeFill {
     *                 preserved (both callers filter + aggregate). */
   def fillBoth(df: DataFrame, key: String, fwdCol: String,
       bwdCol: String, order: Seq[Column], partitions: Int = 0,
-      probeCol: Option[String] = None): DataFrame = {
-    val session = df.sparkSession
-    val n = if (partitions > 0) partitions
-      else session.sessionState.conf.numShufflePartitions
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(key)
-    val fwdIdx = schema.fieldIndex(fwdCol)
-    val bwdIdx = schema.fieldIndex(bwdCol)
-    val probeIdx = probeCol.map { p =>
-      require(schema(p).dataType ==
-        org.apache.spark.sql.types.BooleanType,
-        s"probeCol $p must be boolean, got " +
-          schema(p).dataType.simpleString)
-      schema.fieldIndex(p)
-    }.getOrElse(-1)
-    val fieldTypes = schema.fields.map(_.dataType)
-    val keyType = fieldTypes(keyIdx)
-    val fwdType = fieldTypes(fwdIdx)
-    val bwdType = fieldTypes(bwdIdx)
-    val numFields = fieldTypes.length
-    val sortExprs = col(key).asc +: order
-    val rdd = org.apache.spark.sql.graftshim.RangeShuffle
-      .rangeSortedDf(df, sortExprs, Nil, n, adapt = partitions <= 0)
-      .queryExecution.toRdd
-    def keyOf(r: InternalRow): Any =
-      if (r.isNullAt(keyIdx)) null else r.get(keyIdx, keyType)
-    // pass A: fill()'s forward summary (firstKey, lastKey, lastFwdVal
-    // of the trailing key run) plus the backward mirror: the FIRST
-    // non-null bwd value among the LEADING run of firstKey rows (the
-    // only rows an earlier partition can take its carry from)
-    val summaries = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var any = false
-      var firstKey: Any = null
-      var curKey: Any = null
-      var curFwd: Any = null
-      var leadBwd: Any = null
-      var inLeading = true
-      it.foreach { r =>
-        val k = keyOf(r)
-        if (!any) {
-          any = true
-          firstKey = InternalRow.copyValue(k)
-          curKey = firstKey
-        } else if (k != curKey) {
-          curKey = InternalRow.copyValue(k); curFwd = null
-          inLeading = false
-        }
-        if (!r.isNullAt(fwdIdx))
-          curFwd = InternalRow.copyValue(r.get(fwdIdx, fwdType))
-        if (inLeading && leadBwd == null && !r.isNullAt(bwdIdx))
-          leadBwd = InternalRow.copyValue(r.get(bwdIdx, bwdType))
-      }
-      Iterator.single((pid, any, firstKey, curKey, curFwd, leadBwd))
-    }.collect().sortBy(_._1)
-    // forward carries: fill()'s chain walk verbatim
-    val carriesF = Array.fill[Any](summaries.length)(null)
-    val resolvedF = Array.fill[Any](summaries.length)(null)
-    var prevIdx = -1
-    summaries.foreach { case (pid, any, firstKey, lastKey, lastFwd, _) =>
-      if (any) {
-        if (prevIdx >= 0 && summaries(prevIdx)._4 == firstKey)
-          carriesF(pid) = resolvedF(prevIdx)
-        resolvedF(pid) =
-          if (lastFwd != null) lastFwd
-          else if (firstKey == lastKey) carriesF(pid)
-          else null
-        prevIdx = pid
-      }
-    }
-    // backward carries: the mirror walk — carriesB(p) applies to p's
-    // TRAILING lastKey run; a later partition continues the chain when
-    // its first key equals this partition's last key
-    val carriesB = Array.fill[Any](summaries.length)(null)
-    val resolvedB = Array.fill[Any](summaries.length)(null)
-    var nextIdx = -1
-    summaries.reverseIterator.foreach {
-      case (pid, any, firstKey, lastKey, _, leadBwd) =>
-        if (any) {
-          if (nextIdx >= 0 && summaries(nextIdx)._3 == lastKey)
-            carriesB(pid) = resolvedB(nextIdx)
-          resolvedB(pid) =
-            if (leadBwd != null) leadBwd
-            else if (firstKey == lastKey) carriesB(pid)
-            else null
-          nextIdx = pid
-        }
-    }
-    val bcF = session.sparkContext.broadcast(carriesF)
-    val bcB = session.sparkContext.broadcast(carriesB)
-    // pass B: ONE forward stream per sorted partition. Forward fill as
-    // fill(); backward fill buffers null-bwd rows (as detached field
-    // arrays — the plan reuses its UnsafeRow buffer across pulls) until
-    // their key's next non-null value, the key's end (stay null), or
-    // the partition's end (broadcast carry).
-    val filled = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val bwdCarry = bcB.value(pid)
-      new Iterator[InternalRow] {
-        private val outQ =
-          scala.collection.mutable.Queue.empty[InternalRow]
-        private val pend =
-          scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-        private var first = true
-        private var curKey: Any = null
-        private var curFwd: Any = bcF.value(pid)
-        private var exhausted = false
-        private def copyFields(r: InternalRow): Array[Any] = {
-          val vals = new Array[Any](numFields)
-          var i = 0
-          while (i < numFields) {
-            vals(i) =
-              if (r.isNullAt(i)) null
-              else InternalRow.copyValue(r.get(i, fieldTypes(i)))
-            i += 1
-          }
-          vals
-        }
-        private def flushPend(bwdVal: Any): Unit = {
-          pend.foreach { vals =>
-            if (bwdVal != null) vals(bwdIdx) = bwdVal
-            outQ.enqueue(new GenericInternalRow(vals))
-          }
-          pend.clear()
-        }
-        private def step(): Unit = {
-          val r = it.next()
-          val k = keyOf(r)
-          if (first) {
-            first = false
-            curKey = InternalRow.copyValue(k)
-          } else if (k != curKey) {
-            curKey = InternalRow.copyValue(k); curFwd = null
-            flushPend(null) // the old key ended: no later value exists
-          }
-          val fwdNull = r.isNullAt(fwdIdx)
-          if (!fwdNull)
-            curFwd = InternalRow.copyValue(r.get(fwdIdx, fwdType))
-          val bwdNull = r.isNullAt(bwdIdx)
-          if (!bwdNull) // a reference row: release everything waiting
-            flushPend(InternalRow.copyValue(r.get(bwdIdx, bwdType)))
-          val isProbe = probeIdx < 0 ||
-            (!r.isNullAt(probeIdx) && r.getBoolean(probeIdx))
-          if (!isProbe) {
-            // pass-through: never filled, never buffered (live row —
-            // safe because no further it.next() happens until the
-            // queue drains)
-            outQ.enqueue(r)
-          } else if (bwdNull) {
-            val vals = copyFields(r)
-            if (fwdNull && curFwd != null) vals(fwdIdx) = curFwd
-            pend += vals
-          } else if (fwdNull && curFwd != null) {
-            val vals = copyFields(r)
-            vals(fwdIdx) = curFwd
-            outQ.enqueue(new GenericInternalRow(vals))
-          } else outQ.enqueue(r) // live buffer: dequeued before next pull
-        }
-        private def advance(): Unit = {
-          while (outQ.isEmpty && !exhausted) {
-            if (it.hasNext) step()
-            else {
-              exhausted = true
-              flushPend(bwdCarry) // trailing run: later partitions' value
-            }
-          }
-        }
-        def hasNext: Boolean = { advance(); outQ.nonEmpty }
-        def next(): InternalRow = { advance(); outQ.dequeue() }
-      }
-    }
-    PlanShim.internalCreateDataFrame(session, filled, schema)
-  }
+      probeCol: Option[String] = None): DataFrame =
+    RangeSweep.frame(df, FillSweep,
+      Seq(key, fwdCol, bwdCol) ++ probeOf(df, probeCol),
+      col(key).asc +: order, Nil, partitions)
 
   /** K-deep [[fillBoth]]: instead of ONE value per direction, every
     * probe row receives the last `k` non-null `fwdCol` values
@@ -387,15 +107,11 @@ object RangeFill {
     * directions — [[fillBoth]]'s inclusive at-or-before / at-or-after
     * contract.
     *
-    * Scale shape — identical to [[fillBoth]]: ONE range shuffle on
-    * (key, ordering); pass A summarizes each sorted partition into the
-    * trailing key run's last ≤k fwd values and the leading run's first
-    * ≤k bwd values; the driver chain walk concatenates deques across
-    * partitions of one key and caps at k — O(partitions × k) driver
+    * Scale shape — [[fillBoth]]'s, with O(partitions × k) driver
     * state. Pass B streams forward once keeping a k-deep deque; probes
     * awaiting backward values buffer until k values arrive, their key
-    * ends, or the partition ends (broadcast carry tops up). Buffer
-    * memory is k × the gap between reference rows, not the partition.
+    * ends, or the partition ends (the carry tops up). Buffer memory is
+    * k × the gap between reference rows, not the partition.
     *
     * Within-partition output ORDER is not preserved (buffered probes
     * flush behind pass-through rows) — callers filter + aggregate,
@@ -405,203 +121,207 @@ object RangeFill {
       order: Seq[Column], partitions: Int = 0,
       probeCol: Option[String] = None): DataFrame = {
     require(k >= 1, s"fillBothK needs k >= 1, got $k")
-    val session = df.sparkSession
-    val n = if (partitions > 0) partitions
-      else session.sessionState.conf.numShufflePartitions
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(key)
-    val fwdIdx = schema.fieldIndex(fwdCol)
-    val bwdIdx = schema.fieldIndex(bwdCol)
-    val probeIdx = probeCol.map { p =>
-      require(schema(p).dataType ==
-        org.apache.spark.sql.types.BooleanType,
-        s"probeCol $p must be boolean, got " +
-          schema(p).dataType.simpleString)
-      schema.fieldIndex(p)
-    }.getOrElse(-1)
-    val fieldTypes = schema.fields.map(_.dataType)
-    val keyType = fieldTypes(keyIdx)
-    val fwdType = fieldTypes(fwdIdx)
-    val bwdType = fieldTypes(bwdIdx)
-    val numFields = fieldTypes.length
-    val sortExprs = col(key).asc +: order
-    val rdd = org.apache.spark.sql.graftshim.RangeShuffle
-      .rangeSortedDf(df, sortExprs, Nil, n, adapt = partitions <= 0)
-      .queryExecution.toRdd
-    def keyOf(r: InternalRow): Any =
-      if (r.isNullAt(keyIdx)) null else r.get(keyIdx, keyType)
-    // pass A: the k-deep mirror of fillBoth's summary — trailing run's
-    // last ≤k fwd values (most-recent-first) and leading run's first
-    // ≤k bwd values (earliest-first)
-    val summaries = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var any = false
-      var firstKey: Any = null
-      var curKey: Any = null
-      val tailFwd = scala.collection.mutable.ArrayDeque.empty[Any]
-      val leadBwd = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var inLeading = true
-      it.foreach { r =>
-        val kv = keyOf(r)
-        if (!any) {
-          any = true
-          firstKey = InternalRow.copyValue(kv)
-          curKey = firstKey
-        } else if (kv != curKey) {
-          curKey = InternalRow.copyValue(kv); tailFwd.clear()
-          inLeading = false
-        }
-        if (!r.isNullAt(fwdIdx)) {
-          tailFwd.prepend(InternalRow.copyValue(r.get(fwdIdx, fwdType)))
-          if (tailFwd.length > k) tailFwd.remove(k)
-        }
-        if (inLeading && leadBwd.length < k && !r.isNullAt(bwdIdx))
-          leadBwd += InternalRow.copyValue(r.get(bwdIdx, bwdType))
-      }
-      Iterator.single((pid, any, firstKey, curKey, tailFwd.toList,
-        leadBwd.toList))
-    }.collect().sortBy(_._1)
-    // forward chain walk (fill()'s, list-valued): a single-key
-    // partition continues its predecessor's resolved deque
-    val carriesF = Array.fill[List[Any]](summaries.length)(Nil)
-    val resolvedF = Array.fill[List[Any]](summaries.length)(Nil)
-    var prevIdx = -1
-    summaries.foreach { case (pid, any, firstKey, lastKey, tailF, _) =>
-      if (any) {
-        if (prevIdx >= 0 && summaries(prevIdx)._4 == firstKey)
-          carriesF(pid) = resolvedF(prevIdx)
-        resolvedF(pid) =
-          (tailF ++ (if (firstKey == lastKey) carriesF(pid) else Nil))
-            .take(k)
-        prevIdx = pid
+    RangeSweep.frame(df, FillKSweep(k, outFwd, outBwd),
+      Seq(key, fwdCol, bwdCol) ++ probeOf(df, probeCol),
+      col(key).asc +: order, Nil, partitions)
+  }
+
+  private def probeOf(df: DataFrame, probeCol: Option[String])
+      : Option[String] = probeCol.map { p =>
+    require(df.schema(p).dataType == BooleanType,
+      s"probeCol $p must be boolean, got " +
+        df.schema(p).dataType.simpleString)
+    p
+  }
+}
+
+/** A sorted partition's key runs as the carry walks need them: its
+  * first and last key, the last ≤k non-null forward values of the
+  * trailing key run (most recent first) and the first ≤k non-null
+  * backward values of the leading key run (earliest first). Range
+  * partitions are contiguous in the total order, so only a partition's
+  * FIRST key can continue from earlier partitions (and only its LAST
+  * key into later ones). */
+private[operators] final case class KeyRuns(first: Any, last: Any,
+    tailFwd: List[Any], leadBwd: List[Any])
+
+/** The ≤k forward values entering a partition's first key run and the
+  * ≤k backward values following its last key run. */
+private[operators] final case class RunCarry(fwd: List[Any], bwd: List[Any])
+
+/** The fill family's pass A and carry walks. Inputs are (key, fwd,
+  * [bwd, [probe]]). */
+private[operators] abstract class RunSweep(k: Int)
+    extends SweepKernel[Option[KeyRuns], RunCarry] {
+
+  def summarize(rows: Iterator[InternalRow], in: SweepInput)
+      : Option[KeyRuns] = {
+    val run = new KeyRun(in.cols(0))
+    val fwd = in.cols(1)
+    val bwd = in.cols.lift(2).orNull
+    var tail: List[Any] = Nil
+    var lead: List[Any] = Nil
+    var leadN = 0
+    var inLeading = true
+    rows.foreach { r =>
+      if (run.changed(r)) { tail = Nil; inLeading = false }
+      if (!fwd.isNull(r)) tail = (fwd.copy(r) :: tail).take(k)
+      if (bwd != null && inLeading && leadN < k && !bwd.isNull(r)) {
+        lead = bwd.copy(r) :: lead; leadN += 1
       }
     }
-    // backward mirror: earliest-first lists, appended from later
-    // partitions of the same key
-    val carriesB = Array.fill[List[Any]](summaries.length)(Nil)
-    val resolvedB = Array.fill[List[Any]](summaries.length)(Nil)
-    var nextIdx = -1
-    summaries.reverseIterator.foreach {
-      case (pid, any, firstKey, lastKey, _, leadB) =>
-        if (any) {
-          if (nextIdx >= 0 && summaries(nextIdx)._3 == lastKey)
-            carriesB(pid) = resolvedB(nextIdx)
-          resolvedB(pid) =
-            (leadB ++ (if (firstKey == lastKey) carriesB(pid) else Nil))
-              .take(k)
-          nextIdx = pid
-        }
+    if (run.seen) Some(KeyRuns(run.first, run.cur, tail, lead.reverse))
+    else None
+  }
+
+  /** Forward: a partition continues the chain when the previous
+    * non-empty partition's last key equals its first key; a
+    * single-key partition passes its carry-in on below its own values,
+    * and a key that began mid-partition takes nothing from earlier
+    * partitions. Backward is the mirror walk. */
+  def resolve(s: IndexedSeq[Option[KeyRuns]]): IndexedSeq[RunCarry] = {
+    def walk(order: Seq[Int], joins: (KeyRuns, KeyRuns) => Boolean,
+        own: KeyRuns => List[Any]): Array[List[Any]] = {
+      val carry = Array.fill[List[Any]](s.length)(Nil)
+      var prev: KeyRuns = null
+      var prevOut: List[Any] = Nil
+      for (p <- order; r <- s(p)) {
+        if (prev != null && joins(prev, r)) carry(p) = prevOut
+        prevOut = (own(r) ++ (if (r.first == r.last) carry(p) else Nil))
+          .take(k)
+        prev = r
+      }
+      carry
     }
-    val bcF = session.sparkContext.broadcast(carriesF)
-    val bcB = session.sparkContext.broadcast(carriesB)
-    val outSchema = schema
-      .add(outFwd, org.apache.spark.sql.types.ArrayType(fwdType))
-      .add(outBwd, org.apache.spark.sql.types.ArrayType(bwdType))
-    // pass B: one forward stream; every row is rebuilt (the schema
-    // widens by two fields, so UnsafeRow pass-through is impossible)
-    val filled = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val bwdCarry = bcB.value(pid)
-      new Iterator[InternalRow] {
-        private val outQ =
-          scala.collection.mutable.Queue.empty[InternalRow]
-        // pending probes: field copies + the backward values collected
-        // so far (earliest-first)
-        private val pend = scala.collection.mutable.ArrayBuffer
-          .empty[(Array[Any], scala.collection.mutable.ArrayBuffer[Any])]
-        private val deque =
-          scala.collection.mutable.ArrayDeque.empty[Any]
-        private var first = true
-        private var curKey: Any = null
-        private var exhausted = false
-        deque.appendAll(bcF.value(pid))
-        private def copyFields(r: InternalRow): Array[Any] = {
-          val vals = new Array[Any](numFields + 2)
-          var i = 0
-          while (i < numFields) {
-            vals(i) =
-              if (r.isNullAt(i)) null
-              else InternalRow.copyValue(r.get(i, fieldTypes(i)))
-            i += 1
-          }
-          vals
-        }
-        private def emit(vals: Array[Any],
-            bwd: scala.collection.mutable.ArrayBuffer[Any]): Unit = {
-          vals(numFields + 1) =
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(
-              bwd.toArray)
-          outQ.enqueue(new GenericInternalRow(vals))
-        }
-        private def flushPendAll(
-            carry: List[Any]): Unit = {
-          pend.foreach { case (vals, buf) =>
-            carry.iterator.takeWhile(_ => buf.length < k)
-              .foreach(buf += _)
-            emit(vals, buf)
-          }
-          pend.clear()
-        }
-        private def onBwdValue(v: Any): Unit = {
-          var i = 0
-          while (i < pend.length) {
-            pend(i)._2 += v
-            i += 1
-          }
-          val (done, wait) = pend.partition(_._2.length >= k)
-          done.foreach { case (vals, buf) => emit(vals, buf) }
-          pend.clear(); pend ++= wait
-        }
-        private def step(): Unit = {
-          val r = it.next()
-          val kv = keyOf(r)
-          if (first) {
-            first = false
-            curKey = InternalRow.copyValue(kv)
-          } else if (kv != curKey) {
-            curKey = InternalRow.copyValue(kv)
-            deque.clear()
-            flushPendAll(Nil) // the old key ended: no later values
-          }
-          if (!r.isNullAt(fwdIdx)) {
-            deque.prepend(InternalRow.copyValue(r.get(fwdIdx, fwdType)))
-            if (deque.length > k) deque.remove(k)
-          }
-          val bwdNull = r.isNullAt(bwdIdx)
-          val bwdVal =
-            if (bwdNull) null
-            else InternalRow.copyValue(r.get(bwdIdx, bwdType))
-          val isProbe = probeIdx < 0 ||
-            (!r.isNullAt(probeIdx) && r.getBoolean(probeIdx))
-          if (isProbe) {
-            val vals = copyFields(r)
-            vals(numFields) =
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                deque.toArray)
-            // enqueued with an empty buffer BEFORE onBwdValue runs, so
-            // a probe that is also a reference row collects its own
-            // value exactly once (the inclusive at-or-after contract)
-            pend += ((vals,
-              scala.collection.mutable.ArrayBuffer.empty[Any]))
-          } else {
-            val vals = copyFields(r)
-            vals(numFields) = null
-            vals(numFields + 1) = null
-            outQ.enqueue(new GenericInternalRow(vals))
-          }
-          if (!bwdNull) onBwdValue(bwdVal)
-        }
-        private def advance(): Unit = {
-          while (outQ.isEmpty && !exhausted) {
-            if (it.hasNext) step()
-            else {
-              exhausted = true
-              flushPendAll(bwdCarry)
-            }
-          }
-        }
-        def hasNext: Boolean = { advance(); outQ.nonEmpty }
-        def next(): InternalRow = { advance(); outQ.dequeue() }
+    val fwd = walk(s.indices, _.last == _.first, _.tailFwd)
+    val bwd = walk(s.indices.reverse, _.first == _.last, _.leadBwd)
+    s.indices.map(p => RunCarry(fwd(p), bwd(p)))
+  }
+
+  /** The current key of a sorted stream, detached from the row buffer. */
+  protected final class KeyRun(key: SweepCol) {
+    var seen = false
+    var first: Any = null
+    var cur: Any = null
+    /** Whether `r` starts a new key after the first row. */
+    def changed(r: InternalRow): Boolean = {
+      val kv = key.get(r)
+      val isNew = seen && kv != cur
+      if (!seen || isNew) cur = InternalRow.copyValue(kv)
+      if (!seen) { seen = true; first = cur }
+      isNew
+    }
+  }
+
+  protected def isProbe(r: InternalRow, in: SweepInput): Boolean =
+    in.cols.length < 4 || {
+      val p = in.cols(3)
+      !p.isNull(r) && r.getBoolean(p.ordinal)
+    }
+}
+
+/** [[RangeFill.fill]] and [[RangeFill.fillBoth]]: fills in place. */
+private[operators] case object FillSweep extends RunSweep(1) {
+
+  def output(child: Seq[Attribute], inputs: Seq[Attribute])
+      : Seq[Attribute] = {
+    val filled = inputs.slice(1, 3).map(_.exprId).toSet
+    child.map(a => if (filled(a.exprId)) a.newInstance() else a)
+  }
+
+  def sweep(rows: Iterator[InternalRow], in: SweepInput, carry: RunCarry)
+      : Iterator[InternalRow] = new SweepIterator(rows) {
+    private val run = new KeyRun(in.cols(0))
+    private val fwd = in.cols(1)
+    private val bwd = in.cols.lift(2).orNull
+    // null-bwd probes wait, detached, for their key's next bwd value
+    private val pend = mutable.ArrayBuffer.empty[Array[Any]]
+    private var curFwd: Any = carry.fwd.headOption.orNull
+    private def flush(bwdVal: Any): Unit = {
+      pend.foreach { vals =>
+        if (bwdVal != null) vals(bwd.ordinal) = bwdVal
+        emit(new GenericInternalRow(vals))
+      }
+      pend.clear()
+    }
+    protected def step(r: InternalRow): Unit = {
+      if (run.changed(r)) {
+        curFwd = null
+        flush(null) // the old key ended: no later value exists
+      }
+      val fwdNull = fwd.isNull(r)
+      if (!fwdNull) curFwd = fwd.copy(r)
+      val bwdNull = bwd != null && bwd.isNull(r)
+      if (bwd != null && !bwdNull) flush(bwd.copy(r))
+      if (!isProbe(r, in)) emit(r)
+      else if (bwdNull) {
+        val vals = in.fields(r, detach = true)
+        if (fwdNull && curFwd != null) vals(fwd.ordinal) = curFwd
+        pend += vals
+      } else if (fwdNull && curFwd != null) {
+        val vals = in.fields(r)
+        vals(fwd.ordinal) = curFwd
+        emit(new GenericInternalRow(vals))
+      } else emit(r)
+    }
+    // the trailing run takes the value from later partitions
+    override protected def finish(): Unit =
+      flush(carry.bwd.headOption.orNull)
+  }
+}
+
+/** [[RangeFill.fillBothK]]: appends the two k-deep array columns. */
+private[operators] final case class FillKSweep(k: Int, outFwd: String,
+    outBwd: String) extends RunSweep(k) {
+
+  def output(child: Seq[Attribute], inputs: Seq[Attribute])
+      : Seq[Attribute] = child ++ Seq(
+    AttributeReference(outFwd, ArrayType(inputs(1).dataType))(),
+    AttributeReference(outBwd, ArrayType(inputs(2).dataType))())
+
+  def sweep(rows: Iterator[InternalRow], in: SweepInput, carry: RunCarry)
+      : Iterator[InternalRow] = new SweepIterator(rows) {
+    private val run = new KeyRun(in.cols(0))
+    private val fwd = in.cols(1)
+    private val bwd = in.cols(2)
+    private val n = in.types.length
+    // pending probes: detached fields + the backward values so far
+    private val pend =
+      mutable.ArrayBuffer.empty[(Array[Any], mutable.ArrayBuffer[Any])]
+    private val deque = mutable.ArrayDeque.from(carry.fwd)
+    private def done(vals: Array[Any], got: Iterable[Any]): Unit = {
+      vals(n + 1) = new GenericArrayData(got.toArray)
+      emit(new GenericInternalRow(vals))
+    }
+    private def flush(more: List[Any]): Unit = {
+      pend.foreach { case (vals, got) => done(vals, (got ++ more).take(k)) }
+      pend.clear()
+    }
+    protected def step(r: InternalRow): Unit = {
+      if (run.changed(r)) {
+        deque.clear()
+        flush(Nil) // the old key ended: no later values
+      }
+      if (!fwd.isNull(r)) {
+        deque.prepend(fwd.copy(r))
+        if (deque.length > k) deque.removeLast()
+      }
+      if (isProbe(r, in)) {
+        val vals = in.fields(r, extra = 2, detach = true)
+        vals(n) = new GenericArrayData(deque.toArray)
+        // enqueued with no values BEFORE this row's own bwd value is
+        // applied, so a probe that is also a reference row collects
+        // its own value exactly once (the inclusive at-or-after contract)
+        pend += ((vals, mutable.ArrayBuffer.empty[Any]))
+      } else emit(new GenericInternalRow(in.fields(r, extra = 2)))
+      if (!bwd.isNull(r)) {
+        val v = bwd.copy(r)
+        pend.foreach(_._2 += v)
+        val (full, waiting) = pend.partition(_._2.length >= k)
+        full.foreach { case (vals, got) => done(vals, got) }
+        pend.clear(); pend ++= waiting
       }
     }
-    PlanShim.internalCreateDataFrame(session, filled, outSchema)
+    override protected def finish(): Unit = flush(carry.bwd)
   }
 }

@@ -67,28 +67,35 @@ object ArrowShim {
     * `ColumnarToRow` executes in the row domain, so bypassing it would
     * silently drop that work — rejected with `IllegalArgumentException`
     * rather than computed wrong. Use [[toIpcBytes]] for arbitrary
-    * frames. */
+    * frames. A scan that plans no partition gives the schema-only
+    * stream, as [[toIpcBytes]] does. */
   def toIpcBytesColumnar(df: DataFrame,
       maxRecordsPerBatch: Int = 1 << 16): Array[Byte] = {
     // same guard as toIpcBytes: a non-positive cap would mean "never
     // flush" here (one giant batch) — the two faces must reject alike
     require(maxRecordsPerBatch > 0,
       s"maxRecordsPerBatch must be positive, got $maxRecordsPerBatch")
-    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     def unwrap(p: SparkPlan): SparkPlan = p match {
       case w: WholeStageCodegenExec => unwrap(w.child)
       case i: InputAdapter => unwrap(i.child)
+      case p: ProjectExec if p.projectList == p.child.output => unwrap(p.child)
       case other => other
     }
+    val schema = df.schema
+    val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
     val colPlan = unwrap(df.queryExecution.executedPlan) match {
       case c: ColumnarToRowExec if c.child.supportsColumnar => c.child
+      // a scan with no input partitions plans as a row scan (Spark's
+      // supportsColumnar is an `exists` over the partitions)
+      case s: BatchScanExec if s.inputPartitions.isEmpty =>
+        return joinStreams(Array.empty, schema, tz)
       case other => throw new IllegalArgumentException(
         "toIpcBytesColumnar requires a plan that is exactly a columnar " +
           s"scan under ColumnarToRow; got:\n$other\nUse toIpcBytes for " +
           "arbitrary frames.")
     }
-    val schema = df.schema
-    val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
     val maxRecs = maxRecordsPerBatch
     val parts = colPlan.executeColumnar().mapPartitions { batches =>
       Iterator.single(partitionIpc(batches, schema, tz, maxRecs))

@@ -413,10 +413,10 @@ class PlanAuditSpec extends SparkSuite {
     val out = graft.operators.IntervalOps.multiinter(df, partitions = 8)
     val plan = executedString(out)
     assert(!plan.contains("Window"), plan)
-    // the range shuffle lives in the RDD lineage (the sweep is a
-    // mapPartitions), so pin the OBSERVABLE property: the single
-    // contig's segments occupy most of the requested partitions
-    // instead of one window task
+    assertSweepPlan(plan)
+    // the sweep is planned as RangeSweep over the range shuffle; also
+    // pin the OBSERVABLE property: the single contig's segments occupy
+    // most of the requested partitions instead of one window task
     val nonEmpty = out.rdd
       .mapPartitions(it => Iterator.single(if (it.hasNext) 1 else 0))
       .collect().sum
@@ -437,14 +437,109 @@ class PlanAuditSpec extends SparkSuite {
       partitions = 8)
     val plan = executedString(out)
     assert(!plan.contains("Window"), plan)
-    // the range shuffle lives in the RDD lineage (the sweeps are
-    // mapPartitions), so pin the OBSERVABLE property: the single
-    // contig's merged groups occupy most of the requested partitions
+    assertSweepPlan(plan)
+    // the sweep is planned as RangeSweep over the range shuffle; also
+    // pin the OBSERVABLE property: the single contig's merged groups
+    // occupy most of the requested partitions
     val nonEmpty = out.rdd
       .mapPartitions(it => Iterator.single(if (it.hasNext) 1 else 0))
       .collect().sum
     assert(nonEmpty >= 4, s"groups funneled into $nonEmpty partitions")
     assert(out.count() == 3000L) // no-overlap: every row survives
+  }
+
+  /** The sweep is a named Catalyst operator over a planner-owned range
+    * exchange, not an RDD re-wrapped as a scan. */
+  private def assertSweepPlan(plan: String): Unit = {
+    assert(plan.contains("RangeSweep"), plan)
+    assert(plan.contains("Exchange rangepartitioning"), plan)
+    assert(!plan.contains("ExistingRDD"), plan)
+  }
+
+  test("range sweeps run no job until an action") {
+    val s = spark
+    import s.implicits._
+    val df = (1L to 500L).map(i => (s"chr${i % 2}", i * 10L, i * 10L + 25L,
+      if (i % 3 == 0) Some(i) else None))
+      .toDF("chrom", "start", "end", "v")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = "sweep-laziness-marker"
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == marker))
+          markerSeen = true
+        else if (!markerSeen) jobs.incrementAndGet()
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val built = Seq(
+        graft.operators.IntervalOps.coverage(df, partitions = 4),
+        graft.operators.IntervalOps.mergeIntervalsRange(df, partitions = 4),
+        graft.operators.RangeFill.fill(df, "chrom", "v",
+          Seq(org.apache.spark.sql.functions.col("start").asc), 4))
+      // the listener bus delivers events in order: once the marker
+      // job's start arrives, every job started while building has too
+      s.sparkContext.setJobDescription(marker)
+      try s.sparkContext.parallelize(Seq(1), 1).count()
+      finally s.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "the marker job never reached the listener")
+      assert(jobs.get() == 0,
+        s"building the sweep frames started ${jobs.get()} Spark jobs")
+      built.foreach(f => assert(f.count() > 0))
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  test("RangeSweep reports rows in and out after an action") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.{AsofJoin, IntervalOps}
+    val a = (1L to 300L).map(i => (i, s"chr${i % 2}", i * 40L, i * 40L + 30L))
+      .toDF("aid", "chrom", "start", "end")
+    val b = (1L to 100L).map(i => (i, s"chr${i % 2}", i * 97L, i * 97L + 15L))
+      .toDF("bid", "chrom", "start", "end")
+    val probes = (1L to 200L).map(i => (i % 5, i * 7L, i)).toDF("k", "t", "pid")
+    val refs = (1L to 80L).map(i => (i % 5, i * 11L, i * 100L))
+      .toDF("rk", "rt", "payload")
+    val cases = Seq(
+      "coverage" -> IntervalOps.coverage(a),
+      "mergeIntervalsRange" -> IntervalOps.mergeIntervalsRange(a),
+      "multiinter" -> IntervalOps.multiinter(
+        a.withColumn("set", ($"aid" % 3).cast("string"))),
+      "closest" -> IntervalOps.closest(a, b, "aid", "bid"),
+      "backwardRange" -> AsofJoin.backwardRange(probes, refs, "k", "rk",
+        "t", "rt"))
+    val helper =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    cases.foreach { case (name, df) =>
+      df.collect()
+      val sweeps = helper.collect(df.queryExecution.executedPlan) {
+        case p: org.apache.spark.sql.graftshim.RangeSweepExec => p
+      }
+      assert(sweeps.nonEmpty, s"$name: no RangeSweep in the executed plan")
+      sweeps.foreach { p =>
+        assert(p.metrics("numInputRows").value > 0, s"$name: rows in")
+        assert(p.metrics("numOutputRows").value > 0, s"$name: rows out")
+      }
+    }
+  }
+
+  test("a sweep frame joins with itself") {
+    val s = spark
+    import s.implicits._
+    val df = (1L to 200L).map(i => (s"chr${i % 2}", i * 10L, i * 10L + 25L,
+      if (i % 3 == 0) Some(i) else None, i))
+      .toDF("chrom", "start", "end", "v", "id")
+    val f = graft.operators.RangeFill.fill(df, "chrom", "v",
+      Seq(org.apache.spark.sql.functions.col("start").asc), 3)
+    assert(f.as("x").join(f.as("y"), $"x.id" === $"y.id").count() == 200)
+    val c = graft.operators.IntervalOps.coverage(df, partitions = 3)
+    assert(c.join(c.withColumnRenamed("depth", "d2"),
+      Seq("chrom", "start", "end")).count() == c.count())
   }
 
   test("decontamination joins stay hashed-gram equi-joins") {

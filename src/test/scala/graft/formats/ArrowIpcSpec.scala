@@ -275,4 +275,22 @@ class ArrowIpcSpec extends SparkSuite {
     assert(none.queryExecution.executedPlan.execute().getNumPartitions == 0)
     assert(plainIpc(shim.toIpcBytes(none)) == (Seq("qname", "pos"), Nil))
   }
+
+  test("columnar IPC of a scan that plans no partition is schema-only") {
+    val shim = org.apache.spark.sql.graftshim.ArrowShim
+    val dir = java.nio.file.Files.createTempDirectory("graft-ipc-empty-col")
+    val cramPath = dir.resolve("e.cram").toString
+    graft.fixtures.CramFixture.write(cramPath,
+      "@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:100000\n",
+      Seq((1 to 50).map(i => graft.fixtures.CramFixture.CRec(s"r$i", 0, 0,
+        i * 100, 60, 4))))
+    // no reference chrZZ: the scan plans zero partitions, so Spark plans
+    // it as a row scan even with columnar=true
+    val none = spark.read.format("cram").option("columnar", "true")
+      .option("regions", "chrZZ:1-100").load(cramPath)
+      .select("qname", "pos")
+    val col = shim.toIpcBytesColumnar(none)
+    assert(plainIpc(col) == (Seq("qname", "pos"), Nil))
+    assert(col.sameElements(shim.toIpcBytes(none)))
+  }
 }
