@@ -141,7 +141,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"table '$name' has a nondeterministic derivation (rand()/uuid()" +
         "/...); graft table functions resolve driver-side summaries " +
         "before their second pass, so recomputation under executor " +
-        "loss could disagree — cache/persist (and materialize) the table first")
+        "loss could disagree — cache/persist (and materialize) the " +
+        "table first")
     df
   }
 

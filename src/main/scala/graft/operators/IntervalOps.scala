@@ -2406,57 +2406,49 @@ object IntervalOps {
         "__c", "__cbL", "__cbR", "__Lk", "__Rk", k, ord, partitions,
         probeCol = Some("__probe"))
     }
-    def candCols(cb: Column, d: Column, src: String): Seq[Column] =
-      Seq(col("__aid"), d.as("__d"), cb.getField("__bs").as("__s"),
-        cb.getField("__bid").as("__i"), cb.getField("__be").as("__e"),
-        lit(src).as("__src"), col("__astr")) ++
-        (if (withBt) Seq(cb.getField("__bstr").as("__bt"))
-        else Seq(lit(null).cast("string").as("__bt")))
-    // `masked` (only in the -D b × -iu/-id class-split below): the
+    // ONE pass over a fill: each probe explodes its own side's deque
+    // (side 0 = left, the __Lk values; side 1 = right, __Rk). `maskedL`/
+    // `maskedR` (only in the -D b × -iu/-id class-split below): the
     // (side, class)'s d > 0 candidates are all disallowed, so only the
     // distance-0 prefix of the deque survives — still the true top of
     // the filtered set (deque order is ascending distance)
-    def leftCOf(filled: DataFrame, masked: Boolean): DataFrame = {
-      val ex = filled
-        .where(col("__kind") === 1 && col("__side") === 0)
-        .select(col("__aid"), col("__pos"), col("__astr"),
-          explode(col("__Lk")).as("__cb"))
-      (if (masked) ex.where(col("__pos") === col("__cb.__be")) else ex)
-        .select(candCols(col("__cb"),
-          col("__pos") - col("__cb.__be"), "L"): _*)
-    }
-    // a zero-length B book-ended at a zero-length A's point is BOTH a
-    // left and a right candidate (the only double-report case in the
-    // family); it stays via the left sweep and drops here
-    def rightCOf(filled: DataFrame, masked: Boolean): DataFrame = {
-      val ex = filled
-        .where(col("__kind") === 1 && col("__side") === 1)
-        .select(col("__aid"), col("__pos"), col("__astr"),
-          col("__apoint"), explode(col("__Rk")).as("__cb"))
-        .where(!(col("__apoint") &&
-          col("__cb.__bs") === col("__cb.__be") &&
-          col("__cb.__bs") === col("__pos")))
-      (if (masked) ex.where(col("__cb.__bs") === col("__pos")) else ex)
-        .select(candCols(col("__cb"),
-          col("__cb.__bs") - col("__pos"), "R"): _*)
+    def candsOf(filled: DataFrame, maskedL: Boolean,
+        maskedR: Boolean): DataFrame = {
+      val left = col("__side") === 0
+      val cb = col("__cb")
+      val d = when(left, col("__pos") - cb.getField("__be"))
+        .otherwise(cb.getField("__bs") - col("__pos"))
+      // a zero-length B book-ended at a zero-length A's point is BOTH a
+      // left and a right candidate (the only double-report case in the
+      // family); it stays on the left side and drops on the right
+      val rightDup = col("__apoint") &&
+        cb.getField("__bs") === cb.getField("__be") &&
+        cb.getField("__bs") === col("__pos")
+      filled.where(col("__kind") === 1)
+        .select(col("__aid"), col("__pos"), col("__astr"), col("__apoint"),
+          col("__side"), explode(when(left, col("__Lk"))
+            .otherwise(col("__Rk"))).as("__cb"))
+        .where(when(left, lit(!maskedL) || d === 0L)
+          .otherwise(!rightDup && (lit(!maskedR) || d === 0L)))
+        .select(Seq(col("__aid"), d.as("__d"), cb.getField("__bs").as("__s"),
+          cb.getField("__bid").as("__i"), cb.getField("__be").as("__e"),
+          when(left, lit("L")).otherwise(lit("R")).as("__src"),
+          col("__astr")) ++
+          (if (withBt) Seq(cb.getField("__bstr").as("__bt"))
+          else Seq(lit(null).cast("string").as("__bt"))): _*)
     }
     val classSplit =
       (opts.ignoreUpstream || opts.ignoreDownstream) && withBt
     val sweepC =
-      if (!classSplit) {
-        val filled = filledOf(b2)
-        leftCOf(filled, masked = false)
-          .unionByName(rightCOf(filled, masked = false))
-      } else {
+      if (!classSplit) candsOf(filledOf(b2), maskedL = false, maskedR = false)
+      else {
         def maskedFor(r: Int, f: Int): Boolean =
           (opts.ignoreUpstream && r * f < 0) ||
             (opts.ignoreDownstream && r * f > 0)
-        val fm = filledOf(b2.where(col("__bstr") === "-"))
-        val fo = filledOf(b2.where(!(col("__bstr") <=> "-")))
-        leftCOf(fm, maskedFor(-1, -1))
-          .unionByName(rightCOf(fm, maskedFor(1, -1)))
-          .unionByName(leftCOf(fo, maskedFor(-1, 1)))
-          .unionByName(rightCOf(fo, maskedFor(1, 1)))
+        candsOf(filledOf(b2.where(col("__bstr") === "-")),
+          maskedFor(-1, -1), maskedFor(1, -1))
+          .unionByName(candsOf(filledOf(b2.where(!(col("__bstr") <=> "-"))),
+            maskedFor(-1, 1), maskedFor(1, 1)))
       }
     val cands0 =
       if (opts.ignoreOverlaps) sweepC

@@ -80,7 +80,8 @@ object ArrowShim {
     def unwrap(p: SparkPlan): SparkPlan = p match {
       case w: WholeStageCodegenExec => unwrap(w.child)
       case i: InputAdapter => unwrap(i.child)
-      case p: ProjectExec if p.projectList == p.child.output => unwrap(p.child)
+      case pr: ProjectExec if pr.projectList == pr.child.output =>
+        unwrap(pr.child)
       case other => other
     }
     val schema = df.schema

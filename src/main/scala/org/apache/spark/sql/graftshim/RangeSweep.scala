@@ -2,8 +2,6 @@ package org.apache.spark.sql.graftshim
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.ShuffleDependency
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -165,19 +163,16 @@ case class RangeSweepExec(kernel: SweepKernel[_, _], inputs: Seq[Attribute],
       SweepCol(i, a.dataType)
     }.toIndexedSeq, child.output.map(_.dataType).toIndexedSeq)
     val rows = child.execute()
-    val executionId =
-      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)
-    val bc = RangeSweepExec.carriesOnce(executionId, rows, canonicalized) {
-      val summaries = rows.mapPartitionsWithIndexInternal((pid, it) =>
-        Iterator.single(pid -> k.summarize(it, in)))
-        .collect().toIndexedSeq.sortBy(_._1).map(_._2)
-      val carries = k.resolve(summaries)
-      metrics("summaryBytes").set(SizeEstimator.estimate(summaries))
-      metrics("carryBytes").set(SizeEstimator.estimate(carries))
-      SQLMetrics.postDriverMetricUpdates(sparkContext, executionId,
-        Seq(metrics("summaryBytes"), metrics("carryBytes")))
-      sparkContext.broadcast(carries)
-    }.asInstanceOf[Broadcast[IndexedSeq[C]]]
+    val summaries = rows.mapPartitionsWithIndexInternal((pid, it) =>
+      Iterator.single(pid -> k.summarize(it, in)))
+      .collect().toIndexedSeq.sortBy(_._1).map(_._2)
+    val carries = k.resolve(summaries)
+    metrics("summaryBytes").set(SizeEstimator.estimate(summaries))
+    metrics("carryBytes").set(SizeEstimator.estimate(carries))
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      Seq(metrics("summaryBytes"), metrics("carryBytes")))
+    val bc = sparkContext.broadcast(carries)
     val numIn = metrics("numInputRows")
     val numOut = metrics("numOutputRows")
     val schema = output
@@ -191,40 +186,6 @@ case class RangeSweepExec(kernel: SweepKernel[_, _], inputs: Seq[Attribute],
 
   override protected def withNewChildInternal(newChild: SparkPlan)
       : RangeSweepExec = copy(child = newChild)
-}
-
-object RangeSweepExec {
-
-  private final class Once { var carries: Broadcast[_] = null }
-
-  /** Carries of recent sweeps, keyed by execution, the shuffles the
-    * sweep reads and its canonical plan: a plan that references one
-    * sweep several times over one reused exchange (a self-join, an
-    * existence probe) runs pass A once, and a second instance waits for
-    * the first one's carries. Sweeps over different shuffles never
-    * share carries, since their range bounds may differ. */
-  private val shared = new java.util.LinkedHashMap[AnyRef, Once](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, Once])
-        : Boolean = size() > 16
-  }
-
-  private def shuffleIds(rdd: RDD[_]): Seq[Int] = rdd.dependencies.flatMap {
-    case s: ShuffleDependency[_, _, _] => Seq(s.shuffleId)
-    case d => shuffleIds(d.rdd)
-  }
-
-  private def carriesOnce(executionId: String, rows: RDD[_],
-      sweep: SparkPlan)(passA: => Broadcast[_]): Broadcast[_] = {
-    val shuffles = shuffleIds(rows)
-    if (executionId == null || shuffles.isEmpty) return passA
-    val once = shared.synchronized {
-      shared.computeIfAbsent((executionId, shuffles, sweep), _ => new Once)
-    }
-    once.synchronized {
-      if (once.carries == null) once.carries = passA
-      once.carries
-    }
-  }
 }
 
 /** Plans [[RangeSweep]]. [[graft.GraftExtensions]] injects it, and
