@@ -27,7 +27,6 @@ import graft.formats.Bgzf.VirtualPosition
 object GenomicIndex {
 
   final case class Chunk(begin: VirtualPosition, end: VirtualPosition)
-  final case class Bin(id: Int, chunks: Seq[Chunk], lOffset: Option[VirtualPosition])
 
   /** Per-reference statistics from the BAI/TBI/CSI metadata pseudo-bin
     * (SAM spec §5.2: bin id 37450 for the 14/5 scheme). Its first
@@ -38,9 +37,20 @@ object GenomicIndex {
   final case class RefMetadata(offBeg: VirtualPosition, offEnd: VirtualPosition,
       nMapped: Long, nUnmapped: Long)
 
-  final case class RefIndex(bins: Map[Int, Bin],
-      linear: IndexedSeq[VirtualPosition],
-      metadata: Option[RefMetadata] = None)
+  /** One reference's index in flat primitive arrays. `binIds` holds the
+    * real bins in ascending id order; bin `binIds(i)` owns the chunks
+    * `chunkFrom(i) until chunkFrom(i + 1)` of `begins`/`ends` (raw
+    * virtual positions, in file order). `lOffsets` holds each bin's CSI
+    * loffset and is empty for BAI/TBI; `linear` is the BAI/TBI 16 kbp
+    * linear index and is empty for CSI. */
+  final class RefIndex(val binIds: Array[Int], val chunkFrom: Array[Int],
+      val begins: Array[Long], val ends: Array[Long],
+      val lOffsets: Array[Long], val linear: Array[Long],
+      val metadata: Option[RefMetadata] = None) {
+    /** Position of bin `id` in `binIds`, or -1 when the index lacks it. */
+    def binIndex(id: Int): Int =
+      math.max(java.util.Arrays.binarySearch(binIds, id), -1)
+  }
 
   /** Parsed index, uniform across BAI/CSI/TBI. */
   final case class Index(
@@ -68,7 +78,7 @@ object GenomicIndex {
       val minOffset: Long = {
         val window = (begC >> minShift).toInt
         if (ref.linear.nonEmpty)
-          ref.linear(math.min(math.max(window, 0), ref.linear.size - 1)).value
+          ref.linear(math.min(math.max(window, 0), ref.linear.length - 1))
         else {
           // CSI has no linear index; its per-bin loffset carries the
           // same information (virtual offset of the first record
@@ -87,19 +97,27 @@ object GenomicIndex {
           var res = 0L
           var found = false
           while (!found && bin >= 0) {
-            ref.bins.get(bin).flatMap(_.lOffset) match {
-              case Some(lo) => res = lo.value; found = true
-              case None =>
-                if (bin == 0) found = true else bin = (bin - 1) >> 3
-            }
+            val i = if (ref.lOffsets.isEmpty) -1 else ref.binIndex(bin)
+            if (i >= 0) { res = ref.lOffsets(i); found = true }
+            else if (bin == 0) found = true
+            else bin = (bin - 1) >> 3
           }
           res
         }
       }
-      val cand = reg2bins(begC, endC, minShift, depth).flatMap(ref.bins.get)
-        .flatMap(_.chunks)
-        .filter(_.end.value > minOffset)
-      mergeChunks(cand)
+      val cand = mutable.ArrayBuffer.empty[Chunk]
+      reg2bins(begC, endC, minShift, depth).foreach { b =>
+        val i = ref.binIndex(b)
+        if (i >= 0) {
+          var k = ref.chunkFrom(i)
+          while (k < ref.chunkFrom(i + 1)) {
+            if (ref.ends(k) > minOffset) cand += Chunk(
+              VirtualPosition(ref.begins(k)), VirtualPosition(ref.ends(k)))
+            k += 1
+          }
+        }
+      }
+      mergeChunks(cand.toSeq)
     }
   }
 
@@ -217,55 +235,63 @@ object GenomicIndex {
     * per byte of BAI, and a JNI inflate call per byte of TBI/CSI. */
   def readBai(in: InputStream): Index = {
     val d = new LEData(in.readAllBytes())
-    require(d.readBytes(4).sameElements("BAI\u0001".getBytes), "bad BAI magic")
-    val nRef = d.readInt()
-    val refs = (0 until nRef).map(_ => readRef(d, csi = false, depth = 5))
-    Index(14, 5, refs.toIndexedSeq, Map.empty, None)
+    require(d.readBytes(4, "magic").sameElements("BAI\u0001".getBytes),
+      "bad BAI magic")
+    val nRef = d.readCount("n_ref", 8)
+    Index(14, 5, IndexedSeq.fill(nRef)(readRef(d, csi = false, depth = 5)),
+      Map.empty, None)
   }
 
   def readCsi(in: InputStream): Index = {
     val d = new LEData(inflate(in))
-    require(d.readBytes(4).sameElements("CSI\u0001".getBytes), "bad CSI magic")
-    val minShift = d.readInt()
-    val depth = d.readInt()
+    require(d.readBytes(4, "magic").sameElements("CSI\u0001".getBytes),
+      "bad CSI magic")
+    val minShift = d.readInt("min_shift")
+    val depth = d.readInt("depth")
     // htslib writes 14/5 by default; depth <= 10 covers 2^(shift+30)
     // positions. Implausible values are corruption — raise a parse
     // error (findFor degrades it to the next suffix / full scan)
     // rather than let the shift math wrap downstream.
     require(minShift > 0 && minShift < 32 && depth >= 0 && depth <= 10,
       s"implausible CSI parameters min_shift=$minShift depth=$depth")
-    val lAux = d.readInt()
-    val aux = d.readBytes(lAux)
-    val nRef = d.readInt()
-    val refs = (0 until nRef).map(_ => readRef(d, csi = true, depth = depth))
+    val aux = d.readBytes(d.readInt("l_aux"), "l_aux")
+    val nRef = d.readCount("n_ref", 4)
+    val refs = IndexedSeq.fill(nRef)(readRef(d, csi = true, depth = depth))
     // aux may carry a tabix-style config+names payload
     val (names, cfg) = parseCsiAux(aux)
-    Index(minShift, depth, refs.toIndexedSeq, names, cfg)
+    Index(minShift, depth, refs, names, cfg)
   }
 
   def readTbi(in: InputStream): Index = {
     val d = new LEData(inflate(in))
-    require(d.readBytes(4).sameElements("TBI\u0001".getBytes), "bad TBI magic")
-    val nRef = d.readInt()
-    val format = d.readInt()
-    val colSeq = d.readInt(); val colBeg = d.readInt(); val colEnd = d.readInt()
-    val meta = d.readInt(); val skip = d.readInt()
-    val _ = (meta, skip)
-    val lNm = d.readInt()
-    val nameBytes = d.readBytes(lNm)
+    require(d.readBytes(4, "magic").sameElements("TBI\u0001".getBytes),
+      "bad TBI magic")
+    val nRef = d.readCount("n_ref", 8)
+    val format = d.readInt("format")
+    val colSeq = d.readInt("col_seq")
+    val colBeg = d.readInt("col_beg")
+    val colEnd = d.readInt("col_end")
+    d.readInt("meta"); d.readInt("skip")
+    val nameBytes = d.readBytes(d.readInt("l_nm"), "l_nm")
     val names = new String(nameBytes, "UTF-8").split("\u0000")
       .filter(_.nonEmpty).zipWithIndex.toMap
-    val refs = (0 until nRef).map(_ => readRef(d, csi = false, depth = 5))
+    val refs = IndexedSeq.fill(nRef)(readRef(d, csi = false, depth = 5))
     val zeroBased = (format & 0x10000) != 0
-    Index(14, 5, refs.toIndexedSeq, names,
-      Some((colSeq, colBeg, colEnd, zeroBased)))
+    Index(14, 5, refs, names, Some((colSeq, colBeg, colEnd, zeroBased)))
   }
 
   /** The whole gzip (or BGZF: concatenated gzip members) stream `in`,
-    * read in one bulk read and inflated in one buffered pass. */
-  private def inflate(in: InputStream): Array[Byte] =
-    new GZIPInputStream(new ByteArrayInputStream(in.readAllBytes()), 1 << 16)
+    * read in one bulk read and inflated in one buffered pass. A stream
+    * cut inside a member is a parse error like any other truncation. */
+  private def inflate(in: InputStream): Array[Byte] = {
+    val raw = in.readAllBytes()
+    try new GZIPInputStream(new ByteArrayInputStream(raw), 1 << 16)
       .readAllBytes()
+    catch {
+      case e: java.io.EOFException => throw new IllegalArgumentException(
+        s"index gzip stream of ${raw.length} bytes ends inside a member", e)
+    }
+  }
 
   private def parseCsiAux(aux: Array[Byte]):
       (Map[String, Int], Option[(Int, Int, Int, Boolean)]) = {
@@ -293,32 +319,82 @@ object GenomicIndex {
     // in the file formats, so Int.MaxValue is the honest ceiling)
     math.min((((1L << ((depth + 1) * 3)) - 1) / 7), Int.MaxValue.toLong).toInt
 
+  /** One reference's bins and linear index, read straight into flat
+    * arrays: a first pass checks each bin's counts and notes where its
+    * record starts; the real bins are then ordered by id (the last of a
+    * repeated id wins; htslib writes bins in hash order) and read back
+    * from those offsets into the arrays. */
   private def readRef(d: LEData, csi: Boolean, depth: Int): RefIndex = {
     val pseudoFrom = maxRealBins(depth)
+    val head = if (csi) 16 else 8 // id, [loffset], n_chunk
+    val nBin = d.readCount("n_bin", head)
+    val at = new Array[Int](nBin)
+    var nReal = 0
     var metadata: Option[RefMetadata] = None
-    val nBin = d.readInt()
-    val bins = (0 until nBin).flatMap { _ =>
-      val id = d.readInt()
-      val lOffset = if (csi) Some(VirtualPosition(d.readLong())) else None
-      val nChunk = d.readInt()
-      val chunks = (0 until nChunk).map { _ =>
-        Chunk(VirtualPosition(d.readLong()), VirtualPosition(d.readLong()))
+    var i = 0
+    while (i < nBin) {
+      val p = d.position
+      val id = d.readInt("bin")
+      if (csi) d.readLong("loffset")
+      val nChunk = d.readCount("n_chunk", 16)
+      if (id < pseudoFrom) { at(nReal) = p; nReal += 1 }
+      // metadata pseudo-bin: chunk0 = record vpos span, chunk1 = counts
+      else if (nChunk >= 2) metadata = Some(RefMetadata(
+        VirtualPosition(d.longAt(p + head)),
+        VirtualPosition(d.longAt(p + head + 8)),
+        d.longAt(p + head + 16), d.longAt(p + head + 24)))
+      d.skip(16 * nChunk)
+      i += 1
+    }
+    val order = byId(d, at, nReal)
+    val n = order.length
+    val binIds = new Array[Int](n)
+    val lOffsets = new Array[Long](if (csi) n else 0)
+    val chunkFrom = new Array[Int](n + 1)
+    i = 0
+    while (i < n) {
+      binIds(i) = d.intAt(order(i))
+      if (csi) lOffsets(i) = d.longAt(order(i) + 4)
+      chunkFrom(i + 1) = chunkFrom(i) + d.intAt(order(i) + head - 4)
+      i += 1
+    }
+    val begins = new Array[Long](chunkFrom(n))
+    val ends = new Array[Long](chunkFrom(n))
+    i = 0
+    while (i < n) {
+      var p = order(i) + head
+      var k = chunkFrom(i)
+      while (k < chunkFrom(i + 1)) {
+        begins(k) = d.longAt(p); ends(k) = d.longAt(p + 8)
+        p += 16; k += 1
       }
-      if (id >= pseudoFrom) {
-        // metadata pseudo-bin: chunk0 = record vpos span, chunk1 = counts
-        if (chunks.size >= 2) metadata = Some(RefMetadata(
-          chunks(0).begin, chunks(0).end,
-          chunks(1).begin.value, chunks(1).end.value))
-        None
-      } else Some(id -> Bin(id, chunks, lOffset))
-    }.toMap
-    val linear =
-      if (csi) IndexedSeq.empty
-      else {
-        val nIntv = d.readInt()
-        (0 until nIntv).map(_ => VirtualPosition(d.readLong())).toIndexedSeq
+      i += 1
+    }
+    val linear = new Array[Long](if (csi) 0 else d.readCount("n_intv", 8))
+    i = 0
+    while (i < linear.length) { linear(i) = d.readLong("ioffset"); i += 1 }
+    new RefIndex(binIds, chunkFrom, begins, ends, lOffsets, linear, metadata)
+  }
+
+  /** The bin record offsets `at(0 until n)` ordered by bin id, keeping
+    * the last record of a repeated id. */
+  private def byId(d: LEData, at: Array[Int], n: Int): Array[Int] = {
+    // id in the high word, index in the low word: one primitive sort,
+    // linear on the ascending ids most writers emit
+    val keys = new Array[Long](n)
+    var i = 0
+    while (i < n) { keys(i) = (d.intAt(at(i)).toLong << 32) | i; i += 1 }
+    java.util.Arrays.sort(keys)
+    val out = new Array[Int](n)
+    var m = 0
+    i = 0
+    while (i < n) {
+      if (i == n - 1 || (keys(i) >> 32) != (keys(i + 1) >> 32)) {
+        out(m) = at(keys(i).toInt); m += 1
       }
-    RefIndex(bins, linear, metadata)
+      i += 1
+    }
+    java.util.Arrays.copyOf(out, m)
   }
 
   /** Auto-detect and load the companion index of `path`: tries
@@ -360,14 +436,14 @@ object GenomicIndex {
     * one greedy walk, with no per-offset boxing. `chunksize` is positive. */
   def partitionFromIndex(index: Index, chunksize: Long): Seq[VirtualPosition] = {
     require(chunksize > 0, s"split size must be positive, got $chunksize")
-    val offsets = new Array[Long](index.refs.iterator.map(r =>
-      r.bins.valuesIterator.map(_.chunks.size).sum + r.linear.size).sum)
+    val offsets = new Array[Long](
+      index.refs.iterator.map(r => r.begins.length + r.linear.length).sum)
     var n = 0
     index.refs.foreach { r =>
-      r.bins.valuesIterator.foreach(_.chunks.foreach { c =>
-        offsets(n) = c.begin.value; n += 1
-      })
-      r.linear.foreach { v => offsets(n) = v.value; n += 1 }
+      System.arraycopy(r.begins, 0, offsets, n, r.begins.length)
+      n += r.begins.length
+      System.arraycopy(r.linear, 0, offsets, n, r.linear.length)
+      n += r.linear.length
     }
     java.util.Arrays.sort(offsets)
     // a repeat is 0 bytes from its first copy, so it is never taken
@@ -382,18 +458,35 @@ object GenomicIndex {
     out.toSeq
   }
 
-  /** Little-endian primitive reader over an index held in memory. A
-    * truncated index raises `BufferUnderflowException`, a hostile length
-    * field an `IllegalArgumentException`: parse errors that [[findFor]]
-    * turns into a fallback. */
+  /** Little-endian primitive reader over an index held in memory. Every
+    * read checks the bytes left, and every count is checked against them
+    * before anything is sized from it, so a truncated or hostile index
+    * raises an `IllegalArgumentException` naming the field and its
+    * offset — a parse error that [[findFor]] turns into a fallback —
+    * instead of allocating from a declared count. */
   private[formats] final class LEData(bytes: Array[Byte]) {
     private val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def readBytes(n: Int): Array[Byte] = {
-      require(n >= 0 && n <= bb.remaining,
-        s"length field $n in index exceeds the ${bb.remaining} bytes left")
+    def position: Int = bb.position()
+    private def need(n: Long, field: String): Unit =
+      require(n >= 0 && n <= bb.remaining, s"index field $field at offset " +
+        s"${bb.position()} needs $n bytes, ${bb.remaining} left")
+    def readBytes(n: Int, field: String): Array[Byte] = {
+      need(n, field)
       val b = new Array[Byte](n); bb.get(b); b
     }
-    def readInt(): Int = bb.getInt()
-    def readLong(): Long = bb.getLong()
+    def readInt(field: String): Int = { need(4, field); bb.getInt() }
+    def readLong(field: String): Long = { need(8, field); bb.getLong() }
+    /** A count field whose entries take at least `entryBytes` each. */
+    def readCount(field: String, entryBytes: Int): Int = {
+      val n = readInt(field)
+      require(n >= 0 && n.toLong * entryBytes <= bb.remaining,
+        s"index field $field = $n at offset ${bb.position() - 4} exceeds " +
+          s"the ${bb.remaining} bytes left")
+      n
+    }
+    /** Skip or read, at an absolute offset, bytes a checked count covers. */
+    def skip(n: Int): Unit = bb.position(bb.position() + n)
+    def intAt(p: Int): Int = bb.getInt(p)
+    def longAt(p: Int): Long = bb.getLong(p)
   }
 }

@@ -712,11 +712,11 @@ object IntervalOps {
       case Some(sz) =>
         // coverage already enforced start/end type equality
         val coordT = df.schema(start).dataType
-        val szl = broadcast(sz
+        val szl = sz
           .select(col(chrom).cast("string").as("__c"),
             col("size").cast("long").as("__sz"))
           .where(col("__c").isNotNull && col("__sz").isNotNull &&
-            col("__sz") > 0L))
+            col("__sz") > 0L)
         // boundary spans from coverage's OWN segments (per chromosome,
         // [first breakpoint, last breakpoint] IS [first start, last
         // end] of the NET-covered span), not a second scan of the raw
@@ -733,14 +733,16 @@ object IntervalOps {
           .groupBy(col(chrom).cast("string").as("__c"))
           .agg(min(col("start").cast("long")).as("__first"),
             max(col("end").cast("long")).as("__last"))
-        val joined = spans.join(szl, Seq("__c"))
+        val joined = spans.join(broadcast(szl), Seq("__c"))
         val head = joined.where(col("__first") > 0L)
           .select(col("__c"), lit(0L).as("__s"),
             col("__first").as("__e"))
         val tail = joined.where(col("__last") < col("__sz"))
           .select(col("__c"), col("__last").as("__s"),
             col("__sz").as("__e"))
-        val whole = szl.join(spans, Seq("__c"), "left_anti")
+        // a left-anti join can build only its right side: broadcast the
+        // per-chromosome spans, O(contigs) rows like the sizes
+        val whole = szl.join(broadcast(spans), Seq("__c"), "left_anti")
           .select(col("__c"), lit(0L).as("__s"), col("__sz").as("__e"))
         val bounds = head.unionByName(tail).unionByName(whole)
           .select(col("__c").cast(df.schema(chrom).dataType).as(chrom),

@@ -188,7 +188,7 @@ class BamScan(fullSchema: StructType, paths: Seq[Path],
     extends GenomicScan("bam", fullSchema, paths, options, pushdown,
       BamPartitionReader.ctor) {
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override protected def planPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
     val unmappedOnly = options.get("unmapped").exists(_.toBoolean)
     val regions = GenomicScan.regions(options, pushdown.filters.toSeq, "rname")
@@ -243,9 +243,7 @@ class BamScan(fullSchema: StructType, paths: Seq[Path],
         // back to the max real chunk end for minimal indexes
         val lastMapped = index.flatMap { ix =>
           ix.refs.iterator.flatMap(_.metadata.map(_.offEnd.value)).maxOption
-            .orElse(ix.refs.iterator
-              .flatMap(_.bins.valuesIterator.flatMap(_.chunks.map(_.end.value)))
-              .maxOption)
+            .orElse(ix.refs.iterator.flatMap(_.ends.maxOption).maxOption)
         }.map(VirtualPosition(_)).getOrElse(headEnd)
         Seq(BamInputPartition(p.toString,
           Seq((lastMapped.value, VirtualPosition(fileLen, 0).value)),

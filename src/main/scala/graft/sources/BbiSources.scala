@@ -160,7 +160,7 @@ class BbiScan(wig: Boolean, fullSchema: StructType, paths: Seq[Path],
     extends GenomicScan(if (wig) "bigwig" else "bigbed", fullSchema, paths,
       options, pushdown, BbiPartitionReader.ctor) {
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override protected def planPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
     val regions = GenomicScan.regions(options, pushdown.filters.toSeq, "chrom")
     paths.flatMap { p =>

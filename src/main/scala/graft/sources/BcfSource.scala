@@ -125,7 +125,7 @@ class BcfScan(fullSchema: StructType, paths: Seq[Path],
     extends GenomicScan("bcf", fullSchema, paths, options, pushdown,
       BcfPartitionReader.ctor) {
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override protected def planPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
     val (pathLens, maxSplit) = LineSourceUtil
       .pathLensAndBudget(paths, conf, options, 64L * 1024 * 1024,

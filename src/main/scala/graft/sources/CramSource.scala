@@ -203,7 +203,7 @@ class CramScan(fullSchema: StructType, paths: Seq[Path],
     extends GenomicScan("cram", fullSchema, paths, options, pushdown,
       CramPartitionReader.ctor) {
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override protected def planPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
     val regions = GenomicScan.regions(options, pushdown.filters.toSeq, "rname")
     val unmappedOnly = options.get("unmapped").exists(_.toBoolean)

@@ -61,7 +61,7 @@ class FaiSliceScan(fullSchema: StructType, paths: Seq[Path],
     extends GenomicScan("fasta-fai", fullSchema, paths, options, pushdown,
       FaiSliceReader.ctor) {
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override protected def planPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
     val regions = LineSourceUtil.parseRegionsOption(options)
     val perFile = paths.map { p =>

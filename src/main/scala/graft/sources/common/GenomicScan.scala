@@ -15,7 +15,7 @@ import graft.formats.Bgzf.VirtualPosition
   * scanner pushdowns (`alignment/scanner/bam.rs:155-279`: projection,
   * genomic range, limit, range-partitioned scan) written once:
   * [[GenomicTable]] → [[GenomicScanBuilder]] → a [[GenomicScan]]
-  * subclass whose `planInputPartitions` turns [[GenomicScan.regions]]
+  * subclass whose `planPartitions` turns [[GenomicScan.regions]]
   * into partitions, through [[BgzfIndexPlanner]] for BGZF files with a
   * BAI/CSI/TBI index, and whose [[GenomicReaderFactory]] runs the
   * format's [[GenomicPartitionReader]]. Readers keep only their format's
@@ -84,13 +84,26 @@ class GenomicScanBuilder(fullSchema: StructType, chrom: Option[String],
 }
 
 /** Base of every genomic scan: the pruned read schema, the
-  * `graft-<label> <paths>[ pushed=[...]]` plan description and the
+  * `graft-<label> <paths>[ pushed=[...]]` plan description, the
+  * partitions the format's `planPartitions` returns and the
   * [[GenomicReaderFactory]] over the format's `reader`. */
 abstract class GenomicScan(label: String, fullSchema: StructType,
     paths: Seq[Path], options: Map[String, String], pushdown: Pushdown,
     reader: GenomicReaderFactory.Ctor) extends Scan with Batch {
   override def readSchema(): StructType = pushdown.required
   override def toBatch: Batch = this
+
+  /** The format's partitions: headers and indexes read, splits planned. */
+  protected def planPartitions(): Array[InputPartition]
+
+  /** Planned once per scan. Spark asks each query's scan twice: the
+    * planner's `BatchScanExec` answers `supportsColumnar` from its lazy
+    * `inputPartitions`, and `prepareForExecution` works on a copy of that
+    * exec with its own lazy val. Each query's optimizer builds a new
+    * scan, so a later query still plans the files as they are then. */
+  private lazy val partitions = planPartitions()
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
   override def createReaderFactory(): PartitionReaderFactory =
     new GenomicReaderFactory(fullSchema, pushdown, options, reader)
   override def description(): String = s"graft-$label ${paths.mkString(",")}" +

@@ -29,7 +29,7 @@ import graft.formats.{Bgzf, GenomicIndex}
   * of `partition_from_index`, `/root/reference/oxbow/src/util/index.rs:
   * 117-178`) → per-partition record readers.
   *
-  * Compression planning (three paths, `planInputPartitions` below):
+  * Compression planning (three paths, `planPartitions` below):
   * plain files split by newline-aligned byte range; BGZF files with a
   * sidecar index plan virtual-position partitions — region queries
   * coalesce+pack the index's chunk lists into multi-range partitions,
@@ -405,7 +405,7 @@ class LineScan(format: LineFormat, fullSchema: StructType, paths: Seq[Path],
   override def description(): String =
     s"graft-${format.shortName} ${paths.mkString(",")}"
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override protected def planPartitions(): Array[InputPartition] = {
     val conf = graft.sources.common.GraftHadoop.conf()
     val fallback = 128L * 1024 * 1024
     val (pathLens, maxSplit) =

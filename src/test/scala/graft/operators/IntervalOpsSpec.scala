@@ -244,6 +244,30 @@ class IntervalOpsSpec extends SparkSuite {
       ("chr1", 0L, 10L), ("chr1", 20L, 30L), ("chr1", 40L, 100L),
       ("chr3", 0L, 5L),
       ("chrM", 0L, 16L)))
+    // the whole-chromosome branch is a left-anti join, which can build
+    // only its right side: that side carries the broadcast hint and is
+    // the one built
+    val withSizes = IntervalOps.complement(iv, chromSizes = Some(sizes))
+    val antiHints = withSizes.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti =>
+        j.hint
+    }
+    assert(antiHints.map(h => (h.leftHint.flatMap(_.strategy),
+      h.rightHint.flatMap(_.strategy))) == Seq((None,
+      Some(org.apache.spark.sql.catalyst.plans.logical.BROADCAST))),
+      antiHints)
+    withSizes.collect()
+    val anti = new org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanHelper {}.collect(
+        withSizes.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    }
+    assert(anti.map(_.nodeName) == Seq("BroadcastHashJoin"), anti)
+    assert(anti.head.asInstanceOf[org.apache.spark.sql.execution.joins
+      .BroadcastHashJoinExec].buildSide ==
+      org.apache.spark.sql.catalyst.optimizer.BuildRight)
     // and the sizes-free call still returns only the interior gaps
     val bare = IntervalOps.complement(iv)
       .orderBy("chrom", "start")

@@ -117,8 +117,7 @@ class BamSourceSpec extends SparkSuite {
     val p = new org.apache.hadoop.fs.Path(bamPath)
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val index = GenomicIndex.findFor(fs, p).get
-    val starts = index.refs.flatMap(_.bins.values.flatMap(_.chunks))
-      .map(_.begin.value).distinct.sorted
+    val starts = index.refs.flatMap(_.begins).distinct.sorted
     val eof = fs.getFileStatus(p).getLen << 16
     val spec = (starts :+ eof).sliding(2)
       .map { case Seq(a, b) => s"$a-$b" }.mkString(";")

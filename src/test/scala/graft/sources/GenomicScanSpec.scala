@@ -1,11 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.fixtures.{BbiFixture, BcfFixture, BenchCorpus, CramFixture}
-import graft.fixtures.BbiFixture.BedItem
+import graft.fixtures.BbiFixture.{BedItem, WigSection}
 import graft.fixtures.BcfFixture.BcfRec
 import graft.fixtures.CramFixture.CRec
 
@@ -210,4 +211,48 @@ class GenomicScanSpec extends SparkSuite {
         assert(!got.exists(r => span(fx.fmt, r).exists(_._2 == last)))
       }
     }
+
+  private lazy val bigwigPath: String = {
+    val p = java.nio.file.Files.createTempDirectory("graft-scaffold-bw")
+      .resolve("s.bw").toString
+    BbiFixture.write(p, Seq(("chr1", 0), ("chr2", 1)),
+      wigSections = Seq(WigSection(0, 1, 100, 0, 0,
+        Seq((100L, 200L, 1.5f), (200L, 300L, 2.5f)))),
+      bedItems = Nil, zooms = Nil)
+    p
+  }
+
+  /** A FASTA with a .fai: a `regions` read takes the fasta-fai scan. */
+  private lazy val faiPath: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scaffold-fa")
+    java.nio.file.Files.write(dir.resolve("s.fa"),
+      ">chr1\nACGTACGTAC\nGT\n".getBytes("UTF-8"))
+    java.nio.file.Files.write(dir.resolve("s.fa.fai"),
+      "chr1\t12\t6\t10\t11\n".getBytes("UTF-8"))
+    dir.resolve("s.fa").toString
+  }
+
+  test("a query plans each scan once") {
+    // Spark asks for the partitions twice while it builds one query's
+    // executed plan: the scan must answer both from one planning pass
+    Seq(("bam", "bam", () => corpus.bam, None),
+        ("cram", "cram", () => corpus.cram, None),
+        ("vcf", "vcf", () => corpus.vcf, None),
+        ("bed", "bed", () => corpus.bed, None),
+        ("bcf", "bcf", () => bcfPath, None),
+        ("bigwig", "bigwig", () => bigwigPath, None),
+        ("fasta", "fasta-fai", () => faiPath, Some("chr1:2-5"))).foreach {
+      case (fmt, label, path, regions) =>
+        val r = spark.read.format(fmt)
+        val df = regions.fold(r)(r.option("regions", _)).load(path())
+        val scans = df.queryExecution.executedPlan.collect {
+          case b: BatchScanExec => b.scan
+        }
+        assert(scans.map(_.description.split(" ").head) == Seq(s"graft-$label"))
+        val batch = scans.head.toBatch
+        val parts = batch.planInputPartitions()
+        assert(parts.nonEmpty, fmt)
+        assert(batch.planInputPartitions() eq parts, fmt)
+    }
+  }
 }

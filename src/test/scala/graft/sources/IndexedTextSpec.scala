@@ -49,8 +49,7 @@ class IndexedTextSpec extends SparkSuite {
       .getFileSystem(new org.apache.hadoop.conf.Configuration())
     val index = graft.formats.GenomicIndex
       .findFor(fs, new org.apache.hadoop.fs.Path(gz)).get
-    val starts = index.refs.flatMap(_.bins.values.flatMap(_.chunks))
-      .map(_.begin.value).distinct.sorted
+    val starts = index.refs.flatMap(_.begins).distinct.sorted
     val eof = fs.getFileStatus(new org.apache.hadoop.fs.Path(gz)).getLen << 16
     val bounds = starts :+ eof
     val rangeSpec = bounds.sliding(2)
@@ -108,7 +107,7 @@ class IndexedTextSpec extends SparkSuite {
     val idx = GenomicIndex.findFor(fs, new org.apache.hadoop.fs.Path(p)).get
     // metadata captured, not exposed as a bin
     assert(idx.refs.forall(_.metadata.isDefined))
-    assert(idx.refs.flatMap(_.bins.keys).forall(_ < 37449))
+    assert(idx.refs.flatMap(_.binIds).forall(_ < 37449))
     assert(idx.refs.map(_.metadata.get.nMapped).sum == rows.size)
     // split planning must only yield real BGZF block starts
     val splits = GenomicIndex.partitionFromIndex(idx, 1L)

@@ -242,10 +242,10 @@ class SeqSourcesSpec extends SparkSuite {
     import graft.formats.GenomicIndex._
     import graft.formats.Bgzf.VirtualPosition
     val bin = reg2bin(0, 100)
-    val idx = Index(14, 5, IndexedSeq(RefIndex(
-      Map(bin -> Bin(bin, Seq(Chunk(VirtualPosition(0, 0),
-        VirtualPosition(1000, 0))), None)),
-      IndexedSeq(VirtualPosition(0, 0)))), Map.empty, None)
+    val idx = Index(14, 5, IndexedSeq(new RefIndex(Array(bin), Array(0, 1),
+      Array(VirtualPosition(0, 0).value), Array(VirtualPosition(1000, 0).value),
+      Array.emptyLongArray, Array(VirtualPosition(0, 0).value))),
+      Map.empty, None)
     assert(idx.query(0, 0, 100).nonEmpty)
     assert(idx.query(0, 100, 100).isEmpty, "empty interval must plan Nil")
     assert(idx.query(0, 200, 100).isEmpty, "inverted interval must plan Nil")

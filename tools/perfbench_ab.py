@@ -3,16 +3,19 @@
 this checkout.
 
     python3 tools/perfbench_ab.py <parent-rev> --workload scan_etl --pairs 10
+    python3 tools/perfbench_ab.py <parent-rev> \
+        --workload scan_etl,region_queries --pairs 10
 
 The parent revision's committed files are exported (`git archive`) into
 `.bench_build/ab/<rev>` — the same committed-files-only checkout the
 benchmark gate runs — and the genomic corpus already generated on either
 side is copied to the other instead of being generated twice. Pair i
 runs `perfbench/run.py --workload <w> --seed <first-seed + i> --seconds
-<s> --trace 0` once on each side; the parent goes first on odd pairs, the
-change on even ones.
+<s> --trace 0` once on each side for every listed workload in turn; the
+parent goes first on odd pairs, the change on even ones.
 
-For each end-to-end metric of BENCHMARK.json it prints both sides' median
+For each workload, and each end-to-end metric of BENCHMARK.json, it
+prints both sides' median
 and quartiles, the change's win count (ties count for neither side), and
 the verdict of the choosing-metrics rule: a gain needs wins in at least
 9/10 of the pairs and a median gap, in the better direction, wider than
@@ -22,7 +25,7 @@ latency per operation kind (the record's `kind_median_s`, read from
 `.bench_build/graft/records/<workload>-seed<n>-trace0.json` in that
 side's checkout), which ties a change in the latency quantiles to the
 kind of operation that carries it. Every run's figures go to
-`.bench_build/ab/<rev>-<workload>.json`.
+`.bench_build/ab/<rev>-<workload>.json`, one file per workload.
 """
 import argparse
 import json
@@ -95,49 +98,16 @@ def quartiles(xs):
     return tuple(statistics.quantiles(xs, n=4, method="inclusive"))
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("parent_rev")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=15)
-    ap.add_argument("--first-seed", type=int, default=1)
-    a = ap.parse_args()
-
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
-    sha, parent = export(a.parent_rev)
-    os.makedirs(AB, exist_ok=True)
-    out_path = os.path.join(AB, f"{sha}-{a.workload}.json")
-    runs = []
-    with open(os.path.join(AB, f"{sha}-{a.workload}.log"), "w") as log:
-        for i in range(a.pairs):
-            seed = a.first_seed + i
-            order = [("parent", parent), ("change", ROOT)]
-            if i % 2 == 1:
-                order.reverse()
-            pair = {"seed": seed, "first": order[0][0]}
-            for side, checkout in order:
-                share_corpus(parent, ROOT)
-                pair[side] = run(checkout, a.workload, seed, a.seconds, log)
-            runs.append(pair)
-            print(f"pair {i + 1}/{a.pairs} seed {seed} ({pair['first']} "
-                  "first): " + ", ".join(
-                      f"{m['name']} {pair['parent']['metrics'][m['name']]['value']:.4g}"
-                      f"->{pair['change']['metrics'][m['name']]['value']:.4g}"
-                      for m in metrics), flush=True)
-            with open(out_path, "w") as f:
-                json.dump({"parent": sha, "workload": a.workload,
-                           "seconds": a.seconds, "pairs": runs}, f, indent=1)
-
+def report(workload, runs, metrics, seconds, first_seed):
+    """The per-metric and per-kind tables of one workload's pairs."""
     for side in ("parent", "change"):
         bad = [(r["seed"], r[side]["failed"]) for r in runs
                if r[side]["failed"] or not r[side]["correct"]]
         print(f"{side}: {len(runs)} runs, failed or incorrect runs: "
               f"{bad or 'none'}")
     n = len(runs)
-    print(f"\n{a.workload}: {n} pairs of {a.seconds:g} s, seeds "
-          f"{a.first_seed}-{a.first_seed + n - 1}")
+    print(f"\n{workload}: {n} pairs of {seconds:g} s, seeds "
+          f"{first_seed}-{first_seed + n - 1}")
     print(f"{'metric':14} {'parent median [q1, q3]':30} "
           f"{'change median [q1, q3]':30} {'wins':>6}  verdict")
     for m in metrics:
@@ -175,7 +145,58 @@ def main():
         print(f"{k:14} {f'{pmed:.4g} [{pq1:.4g}, {pq3:.4g}]':30} "
               f"{f'{cmed:.4g} [{cq1:.4g}, {cq3:.4g}]':30} "
               f"{wins:>3}/{len(both):<2}")
-    print(f"\nevery run: {out_path}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("parent_rev")
+    ap.add_argument("--workload", required=True,
+                    help="one workload, or several separated by commas")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--first-seed", type=int, default=1)
+    a = ap.parse_args()
+    workloads = [w for w in a.workload.split(",") if w]
+    if not workloads:
+        sys.exit("--workload names no workload")
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        metrics = json.load(f)["end_to_end"]
+    sha, parent = export(a.parent_rev)
+    os.makedirs(AB, exist_ok=True)
+    runs = {w: [] for w in workloads}
+    logs = {w: open(os.path.join(AB, f"{sha}-{w}.log"), "w")
+            for w in workloads}
+    try:
+        for i in range(a.pairs):
+            seed = a.first_seed + i
+            order = [("parent", parent), ("change", ROOT)]
+            if i % 2 == 1:
+                order.reverse()
+            for w in workloads:
+                pair = {"seed": seed, "first": order[0][0]}
+                for side, checkout in order:
+                    share_corpus(parent, ROOT)
+                    pair[side] = run(checkout, w, seed, a.seconds, logs[w])
+                runs[w].append(pair)
+                print(f"pair {i + 1}/{a.pairs} {w} seed {seed} "
+                      f"({pair['first']} first): " + ", ".join(
+                          f"{m['name']} "
+                          f"{pair['parent']['metrics'][m['name']]['value']:.4g}"
+                          f"->{pair['change']['metrics'][m['name']]['value']:.4g}"
+                          for m in metrics), flush=True)
+                with open(os.path.join(AB, f"{sha}-{w}.json"), "w") as f:
+                    json.dump({"parent": sha, "workload": w,
+                               "seconds": a.seconds, "pairs": runs[w]}, f,
+                              indent=1)
+    finally:
+        for log in logs.values():
+            log.close()
+
+    for w in workloads:
+        print(f"\n=== {w}")
+        report(w, runs[w], metrics, a.seconds, a.first_seed)
+        print(f"\nevery run: {os.path.join(AB, f'{sha}-{w}.json')}")
 
 
 if __name__ == "__main__":
