@@ -43,36 +43,20 @@ object RansCodec {
     def bytes: Array[Byte] = buf.toByteArray
   }
 
-  /** Per-model decode tables: F/C per symbol + 4096-entry symbol lookup. */
-  private final class Model {
-    val F = new Array[Int](256)
-    val C = new Array[Int](256)
-    lazy val lookup: Array[Byte] = {
-      val t = new Array[Byte](TotFreq)
-      var s = 0
-      while (s < 256) {
-        var i = 0
-        while (i < F(s)) { t(C(s) + i) = s.toByte; i += 1 }
-        s += 1
-      }
-      t
-    }
-    def buildCumulative(): Unit = {
-      var x = 0
-      var s = 0
-      while (s < 256) { C(s) = x; x += F(s); s += 1 }
-    }
-  }
-
-  /** Shared sym/freq RLE loop of the spec's ReadFrequencies0/1. */
-  private def readFreqTable(in: In): Model = {
-    val m = new Model
+  /** Reads one frequency table in the spec's ReadFrequencies0/1 layout
+    * (a symbol announced as `last+1` is followed by a run byte counting
+    * the further consecutive symbols whose frequencies follow without
+    * announcement) into `freq`, and returns its sum. */
+  private def readFreqs(in: In, freq: Array[Int]): Int = {
     var sym = in.u8()
     var lastSym = sym
     var rle = 0
+    var total = 0
     var done = false
     while (!done) {
-      m.F(sym) = in.freq()
+      val f = in.freq()
+      freq(sym) = f
+      total += f
       if (rle > 0) { rle -= 1; sym += 1 }
       else {
         sym = in.u8()
@@ -81,8 +65,37 @@ object RansCodec {
       lastSym = sym
       if (sym == 0) done = true
     }
-    m.buildCumulative()
-    m
+    total
+  }
+
+  /** Decode tables of one model (the order-0 model, or one order-1
+    * context), read from the stream.
+    *
+    * `packed(s)` holds symbol `s`'s frequency and cumulative frequency
+    * as `freq << 12 | cum`; frequencies are at most 4096 (bits 12-24).
+    * `syms(slot)` is the symbol that owns each of the 4096 slots of the
+    * 12-bit state residue. A table summing to less than 4096 leaves its
+    * tail slots to symbol 0, as the spec's reference decoder does; one
+    * summing past 4096 is malformed. */
+  private final class Tables(in: In) {
+    val packed = new Array[Int](256)
+    val syms = new Array[Byte](TotFreq)
+    locally {
+      val freq = new Array[Int](256)
+      val total = readFreqs(in, freq)
+      if (total > TotFreq) throw new IllegalArgumentException(
+        s"rANS 4x8: corrupt payload, frequency table sums to $total " +
+          s"(past $TotFreq)")
+      var cum = 0
+      var s = 0
+      while (s < 256) {
+        val f = freq(s)
+        packed(s) = (f << 12) | (cum & (TotFreq - 1))
+        java.util.Arrays.fill(syms, cum, cum + f, s.toByte)
+        cum += f
+        s += 1
+      }
+    }
   }
 
   /** Mirror of readFreqTable's state machine: a symbol announced as
@@ -135,7 +148,16 @@ object RansCodec {
 
   /** Corrupt or truncated payloads raise [[IllegalArgumentException]]
     * naming the codec, never a bare index error — the same error
-    * contract as the 3.1 block codecs. */
+    * contract as the 3.1 block codecs.
+    *
+    * The four states are Int locals. A well-formed 4x8 state lies in
+    * [2^23, 2^31): initial states at or above 2^31 are rejected, a
+    * decode step maps a state below 2^31 to one below 2^31 (its frequency
+    * and cumulative frequency sum to at most 4096), and renormalization
+    * shifts in bytes only while the state is below 2^23. A step leaves a
+    * well-formed state at or above 2^11, so renormalization reads at
+    * most two bytes; every renormalization iteration consumes a byte, so
+    * a malformed stream ends in the truncation error, never a loop. */
   def decode(data: Array[Byte]): Array[Byte] =
     try decodeImpl(data)
     catch {
@@ -163,32 +185,68 @@ object RansCodec {
     }
   }
 
+  private def initialState(in: In): Int = {
+    val x = in.u32()
+    if (x >= (1L << 31)) throw new IllegalArgumentException(
+      f"rANS 4x8: corrupt payload, initial state 0x$x%08x is at or above 2^31")
+    x.toInt
+  }
+
   private def decode0(in: In, outSz: Int): Array[Byte] = {
-    val m = readFreqTable(in)
-    val R = Array.fill(4)(in.u32())
+    val t = new Tables(in)
+    val packed = t.packed
+    val syms = t.syms
+    val d = in.data
+    var x0 = initialState(in); var x1 = initialState(in)
+    var x2 = initialState(in); var x3 = initialState(in)
+    var p = in.pos
     val out = new Array[Byte](outSz)
+    val mask = TotFreq - 1
+    val end4 = outSz & ~3
     var i = 0
+    while (i < end4) {
+      val s0 = syms(x0 & mask); val s1 = syms(x1 & mask)
+      val s2 = syms(x2 & mask); val s3 = syms(x3 & mask)
+      out(i) = s0; out(i + 1) = s1; out(i + 2) = s2; out(i + 3) = s3
+      val f0 = packed(s0 & 0xff); val f1 = packed(s1 & 0xff)
+      val f2 = packed(s2 & 0xff); val f3 = packed(s3 & 0xff)
+      x0 = (f0 >>> 12) * (x0 >>> 12) + (x0 & mask) - (f0 & mask)
+      x1 = (f1 >>> 12) * (x1 >>> 12) + (x1 & mask) - (f1 & mask)
+      x2 = (f2 >>> 12) * (x2 >>> 12) + (x2 & mask) - (f2 & mask)
+      x3 = (f3 >>> 12) * (x3 >>> 12) + (x3 & mask) - (f3 & mask)
+      while (x0 < RansByteL) { x0 = (x0 << 8) | (d(p) & 0xff); p += 1 }
+      while (x1 < RansByteL) { x1 = (x1 << 8) | (d(p) & 0xff); p += 1 }
+      while (x2 < RansByteL) { x2 = (x2 << 8) | (d(p) & 0xff); p += 1 }
+      while (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      i += 4
+    }
+    // 1-3 tail bytes, on states 0, 1 and 2 in turn
     while (i < outSz) {
-      val j = i & 3
-      val mask = (R(j) & (TotFreq - 1)).toInt
-      val s = m.lookup(mask) & 0xff
-      out(i) = s.toByte
-      R(j) = m.F(s) * (R(j) >>> 12) + mask - m.C(s)
-      while (R(j) < RansByteL) R(j) = (R(j) << 8) | in.u8()
+      val x = if ((i & 3) == 0) x0 else if ((i & 3) == 1) x1 else x2
+      val s = syms(x & mask)
+      out(i) = s
+      val f = packed(s & 0xff)
+      var y = (f >>> 12) * (x >>> 12) + (x & mask) - (f & mask)
+      while (y < RansByteL) { y = (y << 8) | (d(p) & 0xff); p += 1 }
+      if ((i & 3) == 0) x0 = y else if ((i & 3) == 1) x1 = y else x2 = y
       i += 1
     }
     out
   }
 
   private def decode1(in: In, outSz: Int): Array[Byte] = {
-    // context-conditioned tables, outer RLE over contexts
-    val models = new Array[Model](256)
+    // context-conditioned tables, outer RLE over contexts; a context
+    // with no table stays null, and decoding in it is corruption
+    val packed = new Array[Array[Int]](256)
+    val syms = new Array[Array[Byte]](256)
     var ctx = in.u8()
     var lastCtx = ctx
     var rle = 0
     var done = false
     while (!done) {
-      models(ctx) = readFreqTable(in)
+      val t = new Tables(in)
+      packed(ctx) = t.packed
+      syms(ctx) = t.syms
       if (rle > 0) { rle -= 1; ctx += 1 }
       else {
         ctx = in.u8()
@@ -197,35 +255,44 @@ object RansCodec {
       lastCtx = ctx
       if (ctx == 0) done = true
     }
-    val R = Array.fill(4)(in.u32())
+    val d = in.data
+    var x0 = initialState(in); var x1 = initialState(in)
+    var x2 = initialState(in); var x3 = initialState(in)
+    var p = in.pos
     val out = new Array[Byte](outSz)
+    val mask = TotFreq - 1
     val isz4 = outSz >> 2
-    val l = new Array[Int](4)
+    // output quarter q decodes on state q in the context of its own
+    // previous byte (0 at the quarter start)
+    var l0 = 0; var l1 = 0; var l2 = 0; var l3 = 0
     var i = 0
     while (i < isz4) {
-      var j = 0
-      while (j < 4) {
-        val m = models(l(j))
-        val mask = (R(j) & (TotFreq - 1)).toInt
-        val s = m.lookup(mask) & 0xff
-        out(j * isz4 + i) = s.toByte
-        R(j) = m.F(s) * (R(j) >>> 12) + mask - m.C(s)
-        while (R(j) < RansByteL) R(j) = (R(j) << 8) | in.u8()
-        l(j) = s
-        j += 1
-      }
+      val s0 = syms(l0)(x0 & mask) & 0xff; val s1 = syms(l1)(x1 & mask) & 0xff
+      val s2 = syms(l2)(x2 & mask) & 0xff; val s3 = syms(l3)(x3 & mask) & 0xff
+      out(i) = s0.toByte; out(i + isz4) = s1.toByte
+      out(i + 2 * isz4) = s2.toByte; out(i + 3 * isz4) = s3.toByte
+      val f0 = packed(l0)(s0); val f1 = packed(l1)(s1)
+      val f2 = packed(l2)(s2); val f3 = packed(l3)(s3)
+      x0 = (f0 >>> 12) * (x0 >>> 12) + (x0 & mask) - (f0 & mask)
+      x1 = (f1 >>> 12) * (x1 >>> 12) + (x1 & mask) - (f1 & mask)
+      x2 = (f2 >>> 12) * (x2 >>> 12) + (x2 & mask) - (f2 & mask)
+      x3 = (f3 >>> 12) * (x3 >>> 12) + (x3 & mask) - (f3 & mask)
+      while (x0 < RansByteL) { x0 = (x0 << 8) | (d(p) & 0xff); p += 1 }
+      while (x1 < RansByteL) { x1 = (x1 << 8) | (d(p) & 0xff); p += 1 }
+      while (x2 < RansByteL) { x2 = (x2 << 8) | (d(p) & 0xff); p += 1 }
+      while (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      l0 = s0; l1 = s1; l2 = s2; l3 = s3
       i += 1
     }
     // tail bytes decode on state 3
     var t = 4 * isz4
     while (t < outSz) {
-      val m = models(l(3))
-      val mask = (R(3) & (TotFreq - 1)).toInt
-      val s = m.lookup(mask) & 0xff
+      val s = syms(l3)(x3 & mask) & 0xff
       out(t) = s.toByte
-      R(3) = m.F(s) * (R(3) >>> 12) + mask - m.C(s)
-      while (R(3) < RansByteL) R(3) = (R(3) << 8) | in.u8()
-      l(3) = s
+      val f = packed(l3)(s)
+      x3 = (f >>> 12) * (x3 >>> 12) + (x3 & mask) - (f & mask)
+      while (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      l3 = s
       t += 1
     }
     out

@@ -195,11 +195,12 @@ class RansCodecSpec extends AnyFunSuite {
 
   // ------------------------------------------------------ hostile payloads
 
-  private def assertRejected(payload: Array[Byte], what: String): Unit = {
+  private def assertRejected(payload: Array[Byte], what: String): String = {
     val e =
       try { RansCodec.decode(payload); fail(s"$what: decoded") }
       catch { case e: IllegalArgumentException => e }
     assert(e.getMessage.contains("rANS 4x8"), s"$what: ${e.getMessage}")
+    e.getMessage
   }
 
   test("an order-1 stream cut every 7 bytes raises IAE naming the codec") {
@@ -215,6 +216,18 @@ class RansCodecSpec extends AnyFunSuite {
       Seq(0 -> Seq('A'.toInt -> 3000, 'B'.toInt -> 2000)))
     assertRejected(head ++ Array.fill(4)(RansStreams.le32(1 << 23)).flatten ++
       new Array[Byte](64), "sum 5000")
+  }
+
+  test("an initial state at or above 2^31 raises IAE naming the codec") {
+    // valid 4x8 states stay below 2^31; the states follow the 9-byte
+    // prefix and the one-symbol table (symbol, 2-byte frequency, end)
+    val enc = RansCodec.encode(Array.fill[Byte](64)('A'.toByte), 0)
+    val statesAt = 9 + 4
+    (0 until 4).foreach { k =>
+      val bad = enc.clone()
+      bad(statesAt + 4 * k + 3) = (bad(statesAt + 4 * k + 3) | 0x80).toByte
+      assert(assertRejected(bad, s"state $k").contains("2^31"))
+    }
   }
 
   test("a symbol decoded in a context with no table raises IAE") {
