@@ -440,48 +440,59 @@ object CramCodec {
     }
   }
 
-  /** Evaluates one data series' encoding against the slice streams. */
+  /** Evaluates one data series' encoding against the slice streams. The
+    * external block it reads and the readers of a BYTE_ARRAY_LEN's parts
+    * are resolved once, not on every read. */
   final class SeriesReader(enc: Encoding, core: BitReader,
       ext: Map[Int, ByteCursor]) {
     private val huff = enc match {
-      case h: Huffman => Some(new HuffmanDecoder(h.alphabet, h.lengths))
-      case _ => None
+      case h: Huffman => new HuffmanDecoder(h.alphabet, h.lengths)
+      case _ => null
     }
-    private def cursor(id: Int): ByteCursor =
-      ext.getOrElse(id, throw new IllegalStateException(
-        s"missing CRAM external block $id"))
+    // null when the slice has no such block: reading then fails, but a
+    // series that is never read needs no block
+    private val cursor: ByteCursor = enc match {
+      case External(id) => ext.getOrElse(id, null)
+      case ByteArrayStop(_, id) => ext.getOrElse(id, null)
+      case _ => null
+    }
+    private val lenReader: SeriesReader = enc match {
+      case ByteArrayLen(lenEnc, _) => new SeriesReader(lenEnc, core, ext)
+      case _ => null
+    }
+    private val valReader: SeriesReader = enc match {
+      case ByteArrayLen(_, valEnc) => new SeriesReader(valEnc, core, ext)
+      case _ => null
+    }
+    private def cur(): ByteCursor =
+      if (cursor != null) cursor
+      else throw new IllegalStateException(
+        s"missing CRAM external block ${externalIds(enc).mkString(",")}")
     def readInt(): Int = enc match {
-      case External(id) => cursor(id).readItf8Value()
-      case _: Huffman => huff.get.read(core)
+      case _: External => cur().readItf8Value()
+      case _: Huffman => huff.read(core)
       case Beta(offset, bits) => core.readBits(bits) - offset
       case Skipped => 0
       case other => throw new UnsupportedOperationException(
         s"encoding $other for int series")
     }
     def readByte(): Int = enc match {
-      case External(id) => cursor(id).readByte()
-      case _: Huffman => huff.get.read(core)
+      case _: External => cur().readByte()
+      case _: Huffman => huff.read(core)
       case Beta(offset, bits) => core.readBits(bits) - offset
       case Skipped => 0
       case other => throw new UnsupportedOperationException(
         s"encoding $other for byte series")
     }
     def readBytes(): Array[Byte] = enc match {
-      case ByteArrayStop(stop, id) => cursor(id).readUntil(stop)
-      case ByteArrayLen(lenEnc, valEnc) =>
-        val n = new SeriesReader(lenEnc, core, ext).readInt()
-        valEnc match {
-          case External(id) => cursor(id).readBytes(n)
-          case other =>
-            val r = new SeriesReader(other, core, ext)
-            Array.fill(n)(r.readByte().toByte)
-        }
+      case ByteArrayStop(stop, _) => cur().readUntil(stop)
+      case _: ByteArrayLen => valReader.readBytesN(lenReader.readInt())
       case Skipped => Array.emptyByteArray
       case other => throw new UnsupportedOperationException(
         s"encoding $other for byte-array series")
     }
     def readBytesN(n: Int): Array[Byte] = enc match {
-      case External(id) => cursor(id).readBytes(n)
+      case _: External => cur().readBytes(n)
       case Skipped => null
       case _ => Array.fill(n)(readByte().toByte)
     }
@@ -510,33 +521,19 @@ object CramCodec {
   final case class Feature(code: Char, pos: Int, intVal: Int,
       bytes: Array[Byte])
 
+  /** One decoded record. `readName` is the RN bytes (null when the
+    * slice stores no names); `referenceLength` is the reference bases
+    * its features consume (the M/D/N span, end1 = start + this - 1),
+    * computed once in [[decodeSlice]]. */
   final case class CramRecord(bamFlags: Int, cramFlags: Int, refId: Int,
-      readLength: Int, alignmentStart: Int, readGroup: Int, readName: String,
-      mateRefId: Int, matePos: Int, templateSize: Int,
+      readLength: Int, alignmentStart: Int, readGroup: Int,
+      readName: Array[Byte], mateRefId: Int, matePos: Int, templateSize: Int,
       features: collection.Seq[Feature], mappingQuality: Int,
       qualityScores: Array[Byte], bases: Array[Byte],
+      referenceLength: Int,
       /** (tag, SAM type char, BAM-binary value bytes) per TD line order. */
       tags: Seq[(String, Char, Array[Byte])] = Nil) {
     def isUnmapped: Boolean = (bamFlags & 0x4) != 0
-    /** reference bases consumed (M/D/N span); end1 = start + this - 1. */
-    def referenceLength: Int = {
-      var readPos = 1
-      var refLen = 0
-      features.sortBy(_.pos).foreach { f =>
-        refLen += f.pos - readPos // matched stretch before this feature
-        readPos = f.pos
-        val n = if (f.bytes != null) f.bytes.length else 0
-        f.code match {
-          case 'X' | 'B' => refLen += 1; readPos += 1
-          case 'i' => readPos += 1
-          case 'I' | 'S' => readPos += n
-          case 'b' => refLen += n; readPos += n
-          case 'D' | 'N' => refLen += f.intVal
-          case _ => () // H, P, Q, q consume neither (q is quality-only)
-        }
-      }
-      refLen + (readLength + 1 - readPos) // trailing matched stretch
-    }
   }
 
   /** Decode all records of one slice. `decodeTags=false` skips tag-value
@@ -580,7 +577,7 @@ object CramCodec {
     val tagDict = comp.tagDictionary.toIndexedSeq
     var i = 0
     while (i < slice.nRecords) {
-      val bamFlags = bf.readInt()
+      var bamFlags = bf.readInt()
       val cramFlags = cf.readInt()
       val refId = if (slice.refSeqId == -2) ri.readInt() else slice.refSeqId
       val readLength = rl.readInt()
@@ -588,22 +585,18 @@ object CramCodec {
         if (comp.apDelta) { prevAlignmentStart += ap.readInt(); prevAlignmentStart }
         else ap.readInt()
       val readGroup = rg.readInt()
-      var readName: String =
-        if (comp.readNamesIncluded) new String(rnS.readBytes(), "ASCII") else null
+      var readName: Array[Byte] =
+        if (comp.readNamesIncluded) rnS.readBytes() else null
       var mateRefId = -1
       var matePos = 0
       var templateSize = 0
       if ((cramFlags & 0x2) != 0) { // detached
-        // KNOWN GAP: MF (mate flags) is consumed but not OR-ed back
-        // into bamFlags. htslib/htsjdk translate MF's mate-unmapped/
-        // mate-reverse bits into BF 0x8/0x20 for detached records; a
-        // writer that relies on MF alone (the spec permits it) loses
-        // those two flag bits here. Every fixture in this repo and
-        // htslib's own output duplicate them into BF, which is why the
-        // gates stay green — closing this needs an MF-only fixture.
-        mf.readInt()
-        if (!comp.readNamesIncluded)
-          readName = new String(rnS.readBytes(), "ASCII")
+        // MF's mate-reverse (0x1) and mate-unmapped (0x2) bits are the
+        // BAM flags 0x20 and 0x8, as htslib and htsjdk restore them
+        val mateFlags = mf.readInt()
+        if ((mateFlags & 0x1) != 0) bamFlags |= 0x20
+        if ((mateFlags & 0x2) != 0) bamFlags |= 0x8
+        if (!comp.readNamesIncluded) readName = rnS.readBytes()
         mateRefId = ns.readInt()
         matePos = np.readInt()
         templateSize = ts.readInt()
@@ -651,10 +644,15 @@ object CramCodec {
       var mappingQuality = -1
       var quals: Array[Byte] = null
       var bases: Array[Byte] = null
+      // reference span, walked as the features arrive: FP is a delta, so
+      // they come in read order
+      var refLen = 0
+      var spanPos = 1
       if ((bamFlags & 0x4) == 0) {
         val nFeat = fn.readInt()
         var readPos = 0
-        val fs = mutable.ArrayBuffer.empty[Feature]
+        // a read with no features (the common all-match case) shares Nil
+        val fs = if (nFeat > 0) mutable.ArrayBuffer.empty[Feature] else null
         var j = 0
         while (j < nFeat) {
           val code = fc.readByte().toChar
@@ -679,20 +677,32 @@ object CramCodec {
               s"CRAM read feature '$other'")
           }
           fs += feat
+          refLen += readPos - spanPos // matched stretch before the feature
+          spanPos = readPos
+          val n = if (feat.bytes != null) feat.bytes.length else 0
+          code match {
+            case 'X' | 'B' => refLen += 1; spanPos += 1
+            case 'i' => spanPos += 1
+            case 'I' | 'S' => spanPos += n
+            case 'b' => refLen += n; spanPos += n
+            case 'D' | 'N' => refLen += feat.intVal
+            case _ => () // H, P, Q, q consume neither (q is quality-only)
+          }
           j += 1
         }
         // the buffer is never mutated after this point; skipping toSeq
         // avoids one copy per mapped record
-        features = fs
+        if (fs != null) features = fs
         mappingQuality = mq.readInt()
         if ((cramFlags & 0x1) != 0) quals = qs.readBytesN(readLength)
       } else {
         bases = ba.readBytesN(readLength)
         if ((cramFlags & 0x1) != 0) quals = qs.readBytesN(readLength)
       }
+      refLen += readLength + 1 - spanPos // trailing matched stretch
       out += CramRecord(bamFlags, cramFlags, refId, readLength,
         alignmentStart, readGroup, readName, mateRefId, matePos,
-        templateSize, features, mappingQuality, quals, bases, tags)
+        templateSize, features, mappingQuality, quals, bases, refLen, tags)
       i += 1
     }
     out
@@ -702,22 +712,40 @@ object CramCodec {
 
   private val Bases = "ACGTN"
 
-  /** Substitution decode: matrix byte for the ref base ranks the other
-    * four bases (ACGTN order) in 2-bit fields. */
-  def substitute(matrix: Array[Byte], refBase: Char, code: Int): Char = {
-    val r = Bases.indexOf(refBase.toUpper) match {
-      case -1 => 4 // treat unknown as N
-      case idx => idx
+  /** Index of a reference base in ACGTN, either case; anything else is N. */
+  private val BaseIndex: Array[Byte] = {
+    val t = Array.fill[Byte](256)(4)
+    "ACGT".indices.foreach { i =>
+      t(Bases(i)) = i.toByte; t(Bases(i).toLower) = i.toByte
     }
-    val alts = Bases.filter(_ != Bases(r))
-    val b = matrix(r) & 0xff
-    var i = 0
-    while (i < 4) {
-      if (((b >> (6 - 2 * i)) & 0x3) == code) return alts(i)
-      i += 1
-    }
-    'N'
+    t
   }
+
+  /** The substitution matrix as a lookup: entry `4 * ref + code` is the
+    * read base substituted for reference base `ref` (ACGTN index) under
+    * BS code `code`. The matrix byte for a reference base ranks the
+    * other four bases (ACGTN order) in 2-bit fields; a code no field
+    * holds decodes as N. */
+  def substitutionTable(matrix: Array[Byte]): Array[Byte] = {
+    val t = Array.fill[Byte](20)('N')
+    (0 until 5).foreach { r =>
+      val alts = Bases.filter(_ != Bases(r))
+      val b = matrix(r) & 0xff
+      (3 to 0 by -1).foreach { i =>
+        t(4 * r + ((b >> (6 - 2 * i)) & 0x3)) = alts(i).toByte
+      }
+    }
+    t
+  }
+
+  private def substituted(table: Array[Byte], refBase: Int, code: Int): Byte =
+    if (code < 0 || code > 3) 'N'
+    else table(4 * BaseIndex(refBase & 0xff) + code)
+
+  /** Substitution decode of one base (see [[substitutionTable]]). */
+  def substitute(matrix: Array[Byte], refBase: Char, code: Int): Char =
+    (substituted(substitutionTable(matrix),
+      if (refBase > 0xff) 'N' else refBase, code) & 0xff).toChar
 
   /** Encode side of [[substitute]] (fixture writers). */
   def substitutionCode(matrix: Array[Byte], refBase: Char, readBase: Char): Int = {
@@ -728,66 +756,85 @@ object CramCodec {
     ((matrix(r) & 0xff) >> (6 - 2 * i)) & 0x3
   }
 
-  /** Reconstruct (cigar, seq) for a mapped record. `refSlice(pos0)` must
-    * return the reference base at 0-based position `pos0` (absolute). */
-  def reconstruct(rec: CramRecord, matrix: Array[Byte],
-      refSlice: Option[Long => Char]): (String, String) = {
-    val cigar = new StringBuilder
-    var cigarOp = ' '
-    var cigarLen = 0
-    def emit(op: Char, n: Int): Unit = {
-      if (n == 0) return
-      if (op == cigarOp) cigarLen += n
-      else {
-        if (cigarLen > 0) cigar.append(cigarLen).append(cigarOp)
-        cigarOp = op; cigarLen = n
+  /** ASCII cigar text built op by op; adjacent ops of one kind merge. */
+  private final class CigarBuilder {
+    private var buf = new Array[Byte](16)
+    private var n = 0
+    private var op = ' '
+    private var len = 0
+    def emit(o: Char, k: Int): Unit =
+      if (k != 0) {
+        if (o == op) len += k
+        else { flush(); op = o; len = k }
       }
-    }
-    val seq = Array.fill(rec.readLength)('N')
+    private def flush(): Unit =
+      if (len > 0) {
+        if (n + 11 > buf.length) buf = java.util.Arrays.copyOf(buf, 2 * buf.length + 11)
+        var digits = 1
+        var v = len / 10
+        while (v > 0) { digits += 1; v /= 10 }
+        v = len
+        var i = n + digits - 1
+        while (i >= n) { buf(i) = ('0' + v % 10).toByte; v /= 10; i -= 1 }
+        buf(n + digits) = op.toByte
+        n += digits + 1
+      }
+    def result(): Array[Byte] = { flush(); java.util.Arrays.copyOf(buf, n) }
+  }
+
+  /** Reconstruct (cigar, seq) of a mapped record as ASCII bytes.
+    * `substitutions` is the container's [[substitutionTable]]; `ref`
+    * holds the reference bases from 0-based position `refStart` on
+    * (null when there is no reference). Matched bases outside `ref`
+    * decode as N. */
+  def reconstruct(rec: CramRecord, substitutions: Array[Byte],
+      ref: Array[Byte], refStart: Long): (Array[Byte], Array[Byte]) = {
+    val cigar = new CigarBuilder
+    val seq = new Array[Byte](rec.readLength)
+    java.util.Arrays.fill(seq, 'N'.toByte)
     var readPos = 1 // 1-based position in the read
     var refPos = rec.alignmentStart.toLong - 1 // 0-based reference position
+    def refBase(pos: Long): Int = {
+      val i = pos - refStart
+      if (ref != null && i >= 0 && i < ref.length) ref(i.toInt) else 'N'
+    }
     def fillMatch(n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        refSlice.foreach(f => seq(readPos - 1 + i) = f(refPos + i))
-        i += 1
+      if (n > 0 && ref != null) {
+        // the part of [refPos, refPos + n) that `ref` covers
+        val lo = math.max(refPos, refStart)
+        val hi = math.min(refPos + n, refStart + ref.length)
+        if (lo < hi) System.arraycopy(ref, (lo - refStart).toInt, seq,
+          (readPos - 1 + lo - refPos).toInt, (hi - lo).toInt)
       }
-      emit('M', n)
+      cigar.emit('M', n)
       readPos += n
       refPos += n
     }
-    rec.features.sortBy(_.pos).foreach { f =>
+    def put(bytes: Array[Byte]): Unit =
+      System.arraycopy(bytes, 0, seq, readPos - 1, bytes.length)
+    val fs = rec.features
+    var k = 0
+    while (k < fs.length) {
+      val f = fs(k)
       fillMatch(f.pos - readPos)
       f.code match {
         case 'X' =>
-          val refBase = refSlice.map(g => g(refPos)).getOrElse('N')
-          seq(readPos - 1) = substitute(matrix, refBase, f.intVal)
-          emit('M', 1); readPos += 1; refPos += 1
+          seq(readPos - 1) = substituted(substitutions, refBase(refPos), f.intVal)
+          cigar.emit('M', 1); readPos += 1; refPos += 1
         case 'B' =>
-          seq(readPos - 1) = f.intVal.toChar
-          emit('M', 1); readPos += 1; refPos += 1
-        case 'I' =>
-          f.bytes.zipWithIndex.foreach { case (b, i) =>
-            seq(readPos - 1 + i) = b.toChar
-          }
-          emit('I', f.bytes.length); readPos += f.bytes.length
+          seq(readPos - 1) = f.intVal.toByte
+          cigar.emit('M', 1); readPos += 1; refPos += 1
+        case 'I' => put(f.bytes); cigar.emit('I', f.bytes.length); readPos += f.bytes.length
         case 'i' =>
-          seq(readPos - 1) = f.intVal.toChar
-          emit('I', 1); readPos += 1
-        case 'S' =>
-          f.bytes.zipWithIndex.foreach { case (b, i) =>
-            seq(readPos - 1 + i) = b.toChar
-          }
-          emit('S', f.bytes.length); readPos += f.bytes.length
-        case 'D' => emit('D', f.intVal); refPos += f.intVal
-        case 'N' => emit('N', f.intVal); refPos += f.intVal
-        case 'P' => emit('P', f.intVal)
-        case 'H' => emit('H', f.intVal)
+          seq(readPos - 1) = f.intVal.toByte
+          cigar.emit('I', 1); readPos += 1
+        case 'S' => put(f.bytes); cigar.emit('S', f.bytes.length); readPos += f.bytes.length
+        case 'D' => cigar.emit('D', f.intVal); refPos += f.intVal
+        case 'N' => cigar.emit('N', f.intVal); refPos += f.intVal
+        case 'P' => cigar.emit('P', f.intVal)
+        case 'H' => cigar.emit('H', f.intVal)
         case 'b' =>
-          f.bytes.zipWithIndex.foreach { case (b, i) =>
-            seq(readPos - 1 + i) = b.toChar
-          }
-          emit('M', f.bytes.length)
+          put(f.bytes); cigar.emit('M', f.bytes.length)
           readPos += f.bytes.length; refPos += f.bytes.length
         // 'q'/'Q' carry quality only: bases stay reference matches, so the
         // span is covered as M by the surrounding fillMatch (hts-specs CRAM
@@ -796,10 +843,10 @@ object CramCodec {
         case other => throw new UnsupportedOperationException(
           s"CRAM read feature '$other'")
       }
+      k += 1
     }
     fillMatch(rec.readLength + 1 - readPos)
-    if (cigarLen > 0) cigar.append(cigarLen).append(cigarOp)
-    (cigar.toString, new String(seq))
+    (cigar.result(), seq)
   }
 
   /** Decode a tag value from its BAM-binary byte-array form (the CRAM

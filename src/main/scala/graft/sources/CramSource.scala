@@ -280,6 +280,14 @@ object CramPartitionReader {
       part.asInstanceOf[CramInputPartition])
 }
 
+/** Reads one data container. Each slice decodes in one pass
+  * ([[CramCodec.decodeSlice]]), and its reference bases are one byte
+  * array from the slice's start: the embedded-reference block, or the
+  * span read once from the indexed FASTA. Rows are built from bytes: seq
+  * and cigar are ASCII arrays ([[CramCodec.reconstruct]]), qual is the
+  * phred bytes plus 33, qname the RN bytes, and rname/rnext are built
+  * once per reference id. Series and blocks no projected column needs
+  * are skipped. */
 class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     options: Map[String, String], part: CramInputPartition)
     extends GenomicPartitionReader(fullSchema, pushdown) {
@@ -342,6 +350,7 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
         CramCodec.readCompressionHeader(b.data)
       }
       val doTags = tagSchema.isDefined && wantTags
+      val substitutions = CramCodec.substitutionTable(comp.substitutionMatrix)
       def dataEnc(k: String) =
         comp.dataSeries.getOrElse(k, CramCodec.NullEncoding)
       // Skip candidates: series whose values no projected column consumes
@@ -419,7 +428,10 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
         private var si = 0
         private var records: collection.IndexedSeq[CramCodec.CramRecord] = null
         private var ri = 0
-        private var refSlice: Option[Long => Char] = None
+        // the slice's reference bases from 0-based position refStart on,
+        // null when the slice has none
+        private var ref: Array[Byte] = null
+        private var refStart = 0L
 
         private def loadSlice(): Unit = {
           val (slice, core, ext) = slices(si)
@@ -428,32 +440,24 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
             decodeTags = doTags, skipSeries = skipKeys,
             skipTagKeys = skipTagKeys)
           ri = 0
-          val start0 = math.max(0L, slice.start - 1L)
+          refStart = math.max(0L, slice.start - 1L)
           // reference bases for this slice: an embedded-reference block
           // takes precedence (self-contained slices), else seek the span
           // out of the indexed FASTA once
-          val embedded: Option[Long => Char] =
-            if (slice.embeddedRefId < 0) None
-            else ext.get(slice.embeddedRefId).map { bytes => (pos0: Long) =>
-              val i = (pos0 - start0).toInt
-              if (i >= 0 && i < bytes.length) (bytes(i) & 0xff).toChar else 'N'
-            }
-          refSlice =
-            if (slice.refSeqId < 0) None
+          val embedded =
+            if (slice.embeddedRefId < 0) None else ext.get(slice.embeddedRefId)
+          ref =
+            if (slice.refSeqId < 0) null
             else embedded.orElse(reference.flatMap { case (rp, entries) =>
               val name = refNames.lift(slice.refSeqId).getOrElse("")
               entries.find(_.name == name).map { e =>
-                val end0 = math.min(e.length, start0 + slice.span.toLong)
+                val end0 = math.min(e.length, refStart + slice.span.toLong)
                 val rin = SeekableInputs.forHadoop(rp.getFileSystem(conf), rp)
-                val text =
-                  try FaiIndex.slice(rin, e, Region(name, start0, Some(end0)))
-                  finally rin.close()
-                (pos0: Long) => {
-                  val i = (pos0 - start0).toInt
-                  if (i >= 0 && i < text.length) text.charAt(i) else 'N'
-                }
+                try FaiIndex.slice(rin, e, Region(name, refStart, Some(end0)))
+                  .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+                finally rin.close()
               }
-            })
+            }).orNull
         }
 
         override def apply(): InternalRow = {
@@ -463,7 +467,7 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
             if (records == null || ri >= records.length) return null
             val rec = records(ri)
             ri += 1
-            if (keep(rec)) return toRow(rec, comp, refSlice)
+            if (keep(rec)) return toRow(rec, substitutions, ref, refStart)
           }
           null
         }
@@ -489,9 +493,11 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     m
   }
 
+  private val refNamesUtf8: Array[UTF8String] =
+    refNames.map(UTF8String.fromString).toArray
+
   private def refNameUtf8(id: Int): UTF8String =
-    UTF8String.fromString(
-      if (id >= 0 && id < refNames.length) refNames(id) else "")
+    if (id < refNamesUtf8.length) refNamesUtf8(id) else UTF8String.EMPTY_UTF8
 
   private def buildTagsRow(rec: CramCodec.CramRecord): GenericInternalRow = {
     val ts = tagStructOrNull
@@ -507,50 +513,48 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     new GenericInternalRow(arr)
   }
 
-  private def toRow(rec: CramCodec.CramRecord,
-      comp: CramCodec.CompressionHeader,
-      refSlice: Option[Long => Char]): InternalRow = {
+  /** Phred bytes as SAM qual text (each + 33); null when absent or all
+    * 0xFF (the BAM "no qualities" marker). */
+  private def qualText(qs: Array[Byte]): UTF8String = {
+    if (qs == null) return null
+    var all255 = true
+    var i = 0
+    while (all255 && i < qs.length) {
+      if (qs(i) != 0xff.toByte) all255 = false
+      i += 1
+    }
+    if (all255) null
+    else {
+      val text = new Array[Byte](qs.length)
+      var j = 0
+      while (j < qs.length) { text(j) = (qs(j) + 33).toByte; j += 1 }
+      UTF8String.fromBytes(text)
+    }
+  }
+
+  private def toRow(rec: CramCodec.CramRecord, substitutions: Array[Byte],
+      ref: Array[Byte], refStart: Long): InternalRow = {
     val mapped = !rec.isUnmapped && rec.refId >= 0
     val (cigar, seq) =
       if (!wantSeq && !wantCigar) (null, null) // un-projected: skip rebuild
       else if (mapped)
-        CramCodec.reconstruct(rec, comp.substitutionMatrix, refSlice)
-      else (null,
-        if (rec.bases != null) new String(rec.bases.map(_.toChar)) else null)
-    val refLen = if (mapped) rec.referenceLength else 0
-    val qual: String =
-      if (!wantQual || rec.qualityScores == null) null
-      else {
-        val qs = rec.qualityScores
-        var all255 = true
-        var i = 0
-        while (all255 && i < qs.length) {
-          if (qs(i) != 0xff.toByte) all255 = false
-          i += 1
-        }
-        if (all255) null
-        else {
-          val cs = new Array[Char](qs.length)
-          var j = 0
-          while (j < qs.length) { cs(j) = (qs(j) + 33).toChar; j += 1 }
-          new String(cs)
-        }
-      }
+        CramCodec.reconstruct(rec, substitutions, ref, refStart)
+      else (null, rec.bases)
     val out = new Array[Any](outWidth)
-    if (rec.readName != null) out(0) = UTF8String.fromString(rec.readName)
+    if (rec.readName != null) out(0) = UTF8String.fromBytes(rec.readName)
     out(1) = rec.bamFlags
     if (rec.refId >= 0) out(2) = refNameUtf8(rec.refId)
     if (mapped) out(3) = rec.alignmentStart.toLong + posShift
     if (rec.mappingQuality >= 0) out(4) = rec.mappingQuality
-    if (cigar != null && cigar.nonEmpty) out(5) = UTF8String.fromString(cigar)
+    if (cigar != null && cigar.length > 0) out(5) = UTF8String.fromBytes(cigar)
     if (rec.mateRefId >= 0) out(6) = refNameUtf8(rec.mateRefId)
     if (rec.matePos > 0) out(7) = rec.matePos.toLong + posShift
     out(8) = rec.templateSize
-    if (seq != null && seq.nonEmpty) out(9) = UTF8String.fromString(seq)
-    if (qual != null) out(10) = UTF8String.fromString(qual)
+    if (seq != null && seq.length > 0) out(9) = UTF8String.fromBytes(seq)
+    if (wantQual) out(10) = qualText(rec.qualityScores)
     // end is invariant across coord systems (1-based closed end equals
     // the 0-based half-open end), matching the BAM reader
-    if (mapped) out(11) = rec.alignmentStart.toLong + refLen - 1
+    if (mapped) out(11) = rec.alignmentStart.toLong + rec.referenceLength - 1
     if (tagStructOrNull != null && wantTags) out(12) = buildTagsRow(rec)
     new GenericInternalRow(out)
   }
