@@ -17,11 +17,13 @@ object CramFixture {
       bytes: Array[Byte] = null)
 
   /** One record; `pos1` 1-based. Unmapped (flag & 4): `bases` stored.
-    * `tags`: (tag, SAM type char in {i, f, Z, A}, value). */
+    * `tags`: (tag, SAM type char in {i, f, Z, A}, value). `mateFlags` is
+    * the MF series value (0x1 mate reverse, 0x2 mate unmapped); every
+    * record is written detached. */
   final case class CRec(qname: String, flag: Int, refId: Int, pos1: Int,
       mapq: Int, readLen: Int, feats: Seq[Feat] = Nil,
       quals: Array[Byte] = null, bases: String = null,
-      tags: Seq[(String, Char, Any)] = Nil)
+      tags: Seq[(String, Char, Any)] = Nil, mateFlags: Int = 0)
 
   // content ids, one per data series
   private val Ids: Map[String, Int] = Map(
@@ -340,7 +342,7 @@ object CramFixture {
         w("BF", r.flag); w("CF", cf)
         w("RL", r.readLen); w("AP", r.pos1); w("RG", -1)
         wStop("RN", r.qname.getBytes("ASCII"))
-        w("MF", 0); w("NS", -1); w("NP", 0); w("TS", 0)
+        w("MF", r.mateFlags); w("NS", -1); w("NP", 0); w("TS", 0)
         w("TL", tdLines.indexOf(sig(r)))
         r.tags.foreach { case (tag, tpe, v) =>
           val bytes = tagBytes(tpe, v)

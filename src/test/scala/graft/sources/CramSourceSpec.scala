@@ -176,6 +176,27 @@ class CramSourceSpec extends SparkSuite {
       .fieldNames.toSeq == Seq("NM"))
   }
 
+  test("cram: MF mate flags of detached records set BAM flags 0x20 and 0x8") {
+    val p = dir.resolve("mate-flags.cram").toString
+    CramFixture.write(p, samHeader, Seq(Seq(
+      CRec("f1", 0x1, 0, 5, 60, 8, mateFlags = 0x1),
+      CRec("f2", 0x1, 0, 6, 60, 8, mateFlags = 0x2),
+      CRec("f3", 0x1 | 0x20, 0, 7, 60, 8, mateFlags = 0x1 | 0x2),
+      CRec("f4", 0x1 | 0x8, 0, 8, 60, 8))))
+    val df = spark.read.format("cram").load(p)
+    val flags = df.orderBy("qname").select("flag").collect().map(_.getInt(0))
+    assert(flags.toSeq == Seq(0x1 | 0x20, 0x1 | 0x8, 0x1 | 0x20 | 0x8, 0x1 | 0x8))
+    // other columns are as without MF
+    val cols = Seq("qname", "pos", "end", "cigar", "seq")
+    val plain = dir.resolve("mate-flags-none.cram").toString
+    CramFixture.write(plain, samHeader, Seq(Seq(
+      CRec("f1", 0x1, 0, 5, 60, 8), CRec("f2", 0x1, 0, 6, 60, 8),
+      CRec("f3", 0x1 | 0x20, 0, 7, 60, 8), CRec("f4", 0x1 | 0x8, 0, 8, 60, 8))))
+    assert(df.orderBy("qname").select(cols.map(col): _*).collect().toSeq ==
+      spark.read.format("cram").load(plain).orderBy("qname")
+        .select(cols.map(col): _*).collect().toSeq)
+  }
+
   test("cram: gzip- and rans-compressed data blocks scan identically") {
     val recs = Seq(
       Seq(
