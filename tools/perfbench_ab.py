@@ -20,7 +20,10 @@ and quartiles, the change's win count (ties count for neither side), and
 the verdict of the choosing-metrics rule: a gain needs wins in at least
 9/10 of the pairs and a median gap, in the better direction, wider than
 the parent's interquartile range; a median worse than the parent's by more
-than the metric's bound is flagged. It then prints each side's median
+than the metric's bound is flagged. Under `setup_s` it prints each
+side's first set-up run and the median of its later ones (the record's
+`setup_runs_s`): work the warm-up left pending shows as a gap in the
+first run. It then prints each side's median
 latency per operation kind (the record's `kind_median_s`, read from
 `.bench_build/graft/records/<workload>-seed<n>-trace0.json` in that
 side's checkout), which ties a change in the latency quantiles to the
@@ -74,7 +77,7 @@ def share_corpus(a, b):
 
 def run(checkout, workload, seed, seconds, log):
     """One benchmark run: its final JSON line plus the record's
-    `kind_median_s`."""
+    `kind_median_s` and `setup_runs_s`."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -87,8 +90,17 @@ def run(checkout, workload, seed, seconds, log):
     record = os.path.join(checkout, ".bench_build", "graft", "records",
                           f"{workload}-seed{seed}-trace0.json")
     with open(record) as f:
-        result["kind_median_s"] = json.load(f)["kind_median_s"]
+        rec = json.load(f)
+    result["kind_median_s"] = rec["kind_median_s"]
+    result["setup_runs_s"] = rec["setup_runs_s"]
     return result
+
+
+def setup_split(result):
+    """(first set-up run, median of the later ones): work the warm-up left
+    pending lands in the first run."""
+    runs = result["setup_runs_s"]
+    return runs[0], statistics.median(runs[1:]) if len(runs) > 1 else runs[0]
 
 
 def quartiles(xs):
@@ -128,6 +140,16 @@ def report(workload, runs, metrics, seconds, first_seed):
         print(f"{name:14} {f'{pmed:.4g} [{pq1:.4g}, {pq3:.4g}]':30} "
               f"{f'{cmed:.4g} [{cq1:.4g}, {cq3:.4g}]':30} "
               f"{wins:>3}/{n:<2}  {verdict}")
+        if name == "setup_s":
+            for i, label in ((0, "  first run"), (1, "  later runs")):
+                p = [setup_split(r["parent"])[i] for r in runs]
+                c = [setup_split(r["change"])[i] for r in runs]
+                wins = sum((y < x) for x, y in zip(p, c))
+                pq1, pmed, pq3 = quartiles(p)
+                cq1, cmed, cq3 = quartiles(c)
+                print(f"{label:14} {f'{pmed:.4g} [{pq1:.4g}, {pq3:.4g}]':30} "
+                      f"{f'{cmed:.4g} [{cq1:.4g}, {cq3:.4g}]':30} "
+                      f"{wins:>3}/{n:<2}")
     kinds = sorted({k for r in runs for side in ("parent", "change")
                     for k in r[side]["kind_median_s"]})
     print(f"\n{'kind (ms)':14} {'parent median [q1, q3]':30} "
@@ -184,7 +206,10 @@ def main():
                           f"{m['name']} "
                           f"{pair['parent']['metrics'][m['name']]['value']:.4g}"
                           f"->{pair['change']['metrics'][m['name']]['value']:.4g}"
-                          for m in metrics), flush=True)
+                          for m in metrics) +
+                      ", setup first/later " + ", ".join(
+                          "{:.3g}/{:.3g}".format(*setup_split(pair[side]))
+                          for side in ("parent", "change")), flush=True)
                 with open(os.path.join(AB, f"{sha}-{w}.json"), "w") as f:
                     json.dump({"parent": sha, "workload": w,
                                "seconds": a.seconds, "pairs": runs[w]}, f,
