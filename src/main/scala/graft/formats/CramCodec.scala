@@ -456,13 +456,10 @@ object CramCodec {
       case ByteArrayStop(_, id) => ext.getOrElse(id, null)
       case _ => null
     }
-    private val lenReader: SeriesReader = enc match {
-      case ByteArrayLen(lenEnc, _) => new SeriesReader(lenEnc, core, ext)
-      case _ => null
-    }
-    private val valReader: SeriesReader = enc match {
-      case ByteArrayLen(_, valEnc) => new SeriesReader(valEnc, core, ext)
-      case _ => null
+    private val (lenReader, valReader) = enc match {
+      case ByteArrayLen(l, v) =>
+        (new SeriesReader(l, core, ext), new SeriesReader(v, core, ext))
+      case _ => (null, null)
     }
     private def cur(): ByteCursor =
       if (cursor != null) cursor

@@ -43,33 +43,9 @@ object RansCodec {
     def bytes: Array[Byte] = buf.toByteArray
   }
 
-  /** Reads one frequency table in the spec's ReadFrequencies0/1 layout
-    * (a symbol announced as `last+1` is followed by a run byte counting
-    * the further consecutive symbols whose frequencies follow without
-    * announcement) into `freq`, and returns its sum. */
-  private def readFreqs(in: In, freq: Array[Int]): Int = {
-    var sym = in.u8()
-    var lastSym = sym
-    var rle = 0
-    var total = 0
-    var done = false
-    while (!done) {
-      val f = in.freq()
-      freq(sym) = f
-      total += f
-      if (rle > 0) { rle -= 1; sym += 1 }
-      else {
-        sym = in.u8()
-        if (sym == lastSym + 1) rle = in.u8()
-      }
-      lastSym = sym
-      if (sym == 0) done = true
-    }
-    total
-  }
-
   /** Decode tables of one model (the order-0 model, or one order-1
-    * context), read from the stream.
+    * context), read from a frequency table in the spec's
+    * ReadFrequencies0/1 layout.
     *
     * `packed(s)` holds symbol `s`'s frequency and cumulative frequency
     * as `freq << 12 | cum`; frequencies are at most 4096 (bits 12-24).
@@ -81,8 +57,25 @@ object RansCodec {
     val packed = new Array[Int](256)
     val syms = new Array[Byte](TotFreq)
     locally {
+      // sym/freq RLE: a symbol announced as `last+1` is followed by a run
+      // byte counting the further consecutive symbols whose frequencies
+      // follow without announcement
       val freq = new Array[Int](256)
-      val total = readFreqs(in, freq)
+      var sym = in.u8()
+      var lastSym = sym
+      var rle = 0
+      var done = false
+      while (!done) {
+        freq(sym) = in.freq()
+        if (rle > 0) { rle -= 1; sym += 1 }
+        else {
+          sym = in.u8()
+          if (sym == lastSym + 1) rle = in.u8()
+        }
+        lastSym = sym
+        if (sym == 0) done = true
+      }
+      val total = freq.sum
       if (total > TotFreq) throw new IllegalArgumentException(
         s"rANS 4x8: corrupt payload, frequency table sums to $total " +
           s"(past $TotFreq)")
@@ -98,7 +91,7 @@ object RansCodec {
     }
   }
 
-  /** Mirror of readFreqTable's state machine: a symbol announced as
+  /** Mirror of the [[Tables]] reader's state machine: a symbol announced as
     * `last+1` is followed by a run byte counting the FURTHER consecutive
     * symbols whose freqs follow without announcements. */
   private def writeFreqTable(out: Out, f: Array[Int]): Unit = {
