@@ -144,13 +144,14 @@ object RansCodec {
     * contract as the 3.1 block codecs.
     *
     * The four states are Int locals. A well-formed 4x8 state lies in
-    * [2^23, 2^31): initial states at or above 2^31 are rejected, a
+    * [2^23, 2^31): initial states at or above 2^31 are rejected, and a
     * decode step maps a state below 2^31 to one below 2^31 (its frequency
-    * and cumulative frequency sum to at most 4096), and renormalization
-    * shifts in bytes only while the state is below 2^23. A step leaves a
-    * well-formed state at or above 2^11, so renormalization reads at
-    * most two bytes; every renormalization iteration consumes a byte, so
-    * a malformed stream ends in the truncation error, never a loop. */
+    * and cumulative frequency sum to at most 4096). A step leaves a state
+    * of at least 2^23 at or above 2^11, so renormalization shifts in at
+    * most two bytes, with no loop. A state that falls lower only comes
+    * from a stream no encoder wrote (an initial state below 2^23, or a
+    * slot past a table's sum); it decodes as garbage or runs into the
+    * truncation error, like any corruption the format cannot detect. */
   def decode(data: Array[Byte]): Array[Byte] =
     try decodeImpl(data)
     catch {
@@ -207,10 +208,22 @@ object RansCodec {
       x1 = (f1 >>> 12) * (x1 >>> 12) + (x1 & mask) - (f1 & mask)
       x2 = (f2 >>> 12) * (x2 >>> 12) + (x2 & mask) - (f2 & mask)
       x3 = (f3 >>> 12) * (x3 >>> 12) + (x3 & mask) - (f3 & mask)
-      while (x0 < RansByteL) { x0 = (x0 << 8) | (d(p) & 0xff); p += 1 }
-      while (x1 < RansByteL) { x1 = (x1 << 8) | (d(p) & 0xff); p += 1 }
-      while (x2 < RansByteL) { x2 = (x2 << 8) | (d(p) & 0xff); p += 1 }
-      while (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      if (x0 < RansByteL) {
+        x0 = (x0 << 8) | (d(p) & 0xff); p += 1
+        if (x0 < RansByteL) { x0 = (x0 << 8) | (d(p) & 0xff); p += 1 }
+      }
+      if (x1 < RansByteL) {
+        x1 = (x1 << 8) | (d(p) & 0xff); p += 1
+        if (x1 < RansByteL) { x1 = (x1 << 8) | (d(p) & 0xff); p += 1 }
+      }
+      if (x2 < RansByteL) {
+        x2 = (x2 << 8) | (d(p) & 0xff); p += 1
+        if (x2 < RansByteL) { x2 = (x2 << 8) | (d(p) & 0xff); p += 1 }
+      }
+      if (x3 < RansByteL) {
+        x3 = (x3 << 8) | (d(p) & 0xff); p += 1
+        if (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      }
       i += 4
     }
     // 1-3 tail bytes, on states 0, 1 and 2 in turn
@@ -220,7 +233,10 @@ object RansCodec {
       out(i) = s
       val f = packed(s & 0xff)
       var y = (f >>> 12) * (x >>> 12) + (x & mask) - (f & mask)
-      while (y < RansByteL) { y = (y << 8) | (d(p) & 0xff); p += 1 }
+      if (y < RansByteL) {
+        y = (y << 8) | (d(p) & 0xff); p += 1
+        if (y < RansByteL) { y = (y << 8) | (d(p) & 0xff); p += 1 }
+      }
       if ((i & 3) == 0) x0 = y else if ((i & 3) == 1) x1 = y else x2 = y
       i += 1
     }
@@ -270,10 +286,22 @@ object RansCodec {
       x1 = (f1 >>> 12) * (x1 >>> 12) + (x1 & mask) - (f1 & mask)
       x2 = (f2 >>> 12) * (x2 >>> 12) + (x2 & mask) - (f2 & mask)
       x3 = (f3 >>> 12) * (x3 >>> 12) + (x3 & mask) - (f3 & mask)
-      while (x0 < RansByteL) { x0 = (x0 << 8) | (d(p) & 0xff); p += 1 }
-      while (x1 < RansByteL) { x1 = (x1 << 8) | (d(p) & 0xff); p += 1 }
-      while (x2 < RansByteL) { x2 = (x2 << 8) | (d(p) & 0xff); p += 1 }
-      while (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      if (x0 < RansByteL) {
+        x0 = (x0 << 8) | (d(p) & 0xff); p += 1
+        if (x0 < RansByteL) { x0 = (x0 << 8) | (d(p) & 0xff); p += 1 }
+      }
+      if (x1 < RansByteL) {
+        x1 = (x1 << 8) | (d(p) & 0xff); p += 1
+        if (x1 < RansByteL) { x1 = (x1 << 8) | (d(p) & 0xff); p += 1 }
+      }
+      if (x2 < RansByteL) {
+        x2 = (x2 << 8) | (d(p) & 0xff); p += 1
+        if (x2 < RansByteL) { x2 = (x2 << 8) | (d(p) & 0xff); p += 1 }
+      }
+      if (x3 < RansByteL) {
+        x3 = (x3 << 8) | (d(p) & 0xff); p += 1
+        if (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      }
       l0 = s0; l1 = s1; l2 = s2; l3 = s3
       i += 1
     }
@@ -284,7 +312,10 @@ object RansCodec {
       out(t) = s.toByte
       val f = packed(l3)(s)
       x3 = (f >>> 12) * (x3 >>> 12) + (x3 & mask) - (f & mask)
-      while (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      if (x3 < RansByteL) {
+        x3 = (x3 << 8) | (d(p) & 0xff); p += 1
+        if (x3 < RansByteL) { x3 = (x3 << 8) | (d(p) & 0xff); p += 1 }
+      }
       l3 = s
       t += 1
     }
