@@ -17,7 +17,8 @@ object CramFixture {
       bytes: Array[Byte] = null)
 
   /** One record; `pos1` 1-based. Unmapped (flag & 4): `bases` stored.
-    * `tags`: (tag, SAM type char in {i, f, Z, A}, value). `mateFlags` is
+    * `tags`: (tag, SAM type char in {i, f, Z, A, B}, value; a B value is
+    * a Seq[Int], written as a B:i array). `mateFlags` is
     * the MF series value (0x1 mate reverse, 0x2 mate unmapped); every
     * record is written detached. */
   final case class CRec(qname: String, flag: Int, refId: Int, pos1: Int,
@@ -112,6 +113,13 @@ object CramFixture {
       bb.putFloat(v.asInstanceOf[Float]); bb.array()
     case 'Z' => v.asInstanceOf[String].getBytes("ASCII") :+ 0.toByte
     case 'A' => Array(v.asInstanceOf[Char].toByte)
+    case 'B' =>
+      val vs = v.asInstanceOf[Seq[Int]]
+      val bb = java.nio.ByteBuffer.allocate(5 + 4 * vs.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put('i'.toByte).putInt(vs.length)
+      vs.foreach(bb.putInt)
+      bb.array()
     case other =>
       throw new IllegalArgumentException(s"fixture tag type '$other'")
   }

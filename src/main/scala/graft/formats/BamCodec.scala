@@ -4,15 +4,16 @@ import java.io.{DataInputStream, EOFException, InputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** BAM binary record codec, implemented from the published SAM/BAM spec
   * (§4): header, reference dictionary, record block layout, 4-bit packed
-  * sequence, binary tag values. Produces rows in the same 12-column +
-  * `tags` shape as the SAM text reader, so the two sources are drop-in
-  * interchangeable (reference parity: `oxbow/src/alignment/scanner/bam.rs`).
+  * sequence. Rows take the shape of the one alignment model the SAM, BAM
+  * and CRAM readers share (12 fixed columns + `tags`), with tag values
+  * from [[TagValues]] and reference names from [[RefNames]], the pieces
+  * the CRAM reader also uses, so the three are drop-in interchangeable
+  * (reference parity: `oxbow/src/alignment/scanner/bam.rs`).
   */
 object BamCodec {
 
@@ -73,40 +74,19 @@ object BamCodec {
     * qname flag rname pos mapq cigar rnext pnext tlen seq qual end [tags].
     * `need` marks which of the 12 fixed columns must be materialized
     * (pruned columns are skipped, not decoded — reference P1 semantics).
-    * `parseTags = false` keeps the row shape (null tags slot) but skips
-    * the per-tag scan+convert — the projection-aware reader passes it
-    * when the tags struct is not consumed. */
+    * A `tagSchema` gives the row its tags slot; `tagSlots` names the tag
+    * slots to fill, and None leaves the slot null without scanning the
+    * tags (the projection-aware reader passes None when the tags struct
+    * is not consumed). Tag values convert through [[TagValues]], the
+    * decoder the CRAM reader shares. */
   final class RecordDecoder(header: BamHeader, tagSchema: Option[StructType],
-      need: Array[Boolean], posShift: Long, parseTags: Boolean = true,
-      neededTags: Option[Set[String]] = None) {
+      need: Array[Boolean], posShift: Long,
+      tagSlots: Option[TagSlots] = None) {
 
-    // slot index limited to the tags whose values are actually consumed
-    // (nested pruning); un-requested tags are still WALKED (their sizes
-    // drive the cursor) but never converted/boxed. Shared helper: the
-    // SAM text parser must fill the identical slots.
-    private val tagIndex: Map[String, Int] =
-      graft.sources.SamTags.tagSlotIndex(tagSchema, neededTags)
-
-    // the same slots keyed by the two raw tag bytes ((t0<<8)|t1): the
-    // per-tag `new String` + `Map.get` Option of the name-keyed lookup
-    // were per-record allocations even for SKIPPED tags (r14
-    // JIT-stability audit). 64Ki Int slots = 256 KiB per decoder
-    // instance — one per partition, not per record.
-    private val tagSlotByKey: Array[Int] = {
-      val arr = Array.fill(1 << 16)(-1)
-      tagIndex.foreach { case (t, i) =>
-        arr(((t.charAt(0) & 0xff) << 8) | (t.charAt(1) & 0xff)) = i
-      }
-      arr
-    }
-    private val CgKey = ('C' << 8) | 'G'
-
-    // chromosome names UTF-8-encoded ONCE per decoder: refName ran
-    // UTF8String.fromString per record (twice — rname and rnext);
-    // UTF8String is immutable, so sharing one instance across rows is
-    // safe (the same sharing Literal columns rely on)
-    private val refNamesU8: Array[UTF8String] =
-      header.refNames.iterator.map(UTF8String.fromString).toArray
+    require(tagSlots.isEmpty || tagSchema.isDefined,
+      "tag slots need a tags column")
+    private val slots: TagSlots = tagSlots.orNull
+    private val refNames = new RefNames(header.refNames)
 
     /** Read one record from the stream; null at EOF (an Option wrapper
       * here would box every record — see the scaladoc on
@@ -201,40 +181,31 @@ object BamCodec {
         val save = bb.position()
         while (!cigarReconstructed && bb.remaining() >= 3) {
           val t0 = bb.get(); val t1 = bb.get(); val tpe = bb.get().toChar
-          if (t0 == 'C' && t1 == 'G' && tpe == 'B') {
-            val sub = bb.get().toChar
+          if (t0 == 'C' && t1 == 'G' && tpe == 'B' &&
+              bb.get(bb.position()) == 'I') {
+            bb.get() // subtype
             val n = bb.getInt
-            if (sub == 'I') {
-              val sb = new java.lang.StringBuilder
-              var rl = 0L
-              var j = 0
-              while (j < n) {
-                val v = bb.getInt
-                val op = CigarOps.charAt(v & 0xf)
-                val len = v >>> 4
-                if (op == 'M' || op == 'D' || op == 'N' ||
-                    op == '=' || op == 'X') rl += len
-                sb.append(len); sb.append(op)
-                j += 1
-              }
-              cigarStr = sb.toString
-              refLen = rl
-              cigarReconstructed = true
-            } else {
-              val w = sub match {
-                case 'c' | 'C' => 1; case 's' | 'S' => 2; case _ => 4
-              }
-              bb.position(bb.position() + n * w)
+            val sb = new java.lang.StringBuilder
+            var rl = 0L
+            var j = 0
+            while (j < n) {
+              val v = bb.getInt
+              val op = CigarOps.charAt(v & 0xf)
+              val len = v >>> 4
+              if (op == 'M' || op == 'D' || op == 'N' ||
+                  op == '=' || op == 'X') rl += len
+              sb.append(len); sb.append(op)
+              j += 1
             }
-          } else skipTagValue(bb, tpe)
+            cigarStr = sb.toString
+            refLen = rl
+            cigarReconstructed = true
+          } else TagValues.skip(bb, tpe)
         }
         bb.position(save)
       }
 
       val unmapped = (flag & 0x4) != 0 || refId < 0 || pos0 < 0
-      def refName(id: Int): Any =
-        if (id < 0 || id >= refNamesU8.length) null
-        else refNamesU8(id)
 
       // exact-width row array filled by index (the previous 12-slot
       // `base :+ tags` copied the whole array per record)
@@ -248,13 +219,13 @@ object BamCodec {
       // real data (the SAM text parser keeps them — '*'/0 are the
       // only null spellings there); nulling on the flag lost the
       // placement and broke SAM/BAM row parity
-      base(2) = if (refId < 0) null else refName(refId)
+      base(2) = refNames(refId)
       base(3) =
         if (pos0 < 0) null else pos0 + 1 + posShift // 1-based out ("11")
       base(4) = mapq
       base(5) =
         if (cigarStr == null) null else UTF8String.fromString(cigarStr)
-      base(6) = refName(nextRefId)
+      base(6) = refNames(nextRefId)
       base(7) =
         if (nextRefId < 0 || nextPos0 < 0) null
         else nextPos0 + 1 + posShift
@@ -266,119 +237,27 @@ object BamCodec {
         if (unmapped || refLen == 0) null
         else pos0 + refLen // closed 1-based
 
-      tagSchema match {
-        case None => ()
-        case Some(_) if !parseTags => () // slot 12 stays null
-        case Some(ts) =>
-          val tags = new Array[Any](ts.length)
-          while (bb.remaining() >= 3) {
-            val key = ((bb.get() & 0xff) << 8) | (bb.get() & 0xff)
-            val tpe = bb.get().toChar
-            // a record carrying the long-CIGAR placeholder holds its
-            // real CIGAR in CG:B,I — that tag is never reported as a
-            // tag (htslib's convention), and the gate must be the
-            // RECORD property (placeholder present), not whether the
-            // cigar column happened to be projected: tags.CG must not
-            // change value with the projection
-            if (key == CgKey && cigarPlaceholder) skipTagValue(bb, tpe)
-            else {
-              val idx = tagSlotByKey(key)
-              if (idx >= 0)
-                tags(idx) = coerce(readTagValue(bb, tpe), ts(idx).dataType)
-              else skipTagValue(bb, tpe) // advance, never box
-            }
-          }
-          base(12) = new GenericInternalRow(tags)
+      if (slots != null) {
+        val tags = new Array[Any](slots.schema.length)
+        while (bb.remaining() >= 3) {
+          val t0 = bb.get() & 0xff
+          val t1 = bb.get() & 0xff
+          val tpe = bb.get().toChar
+          // a record carrying the long-CIGAR placeholder holds its real
+          // CIGAR in CG:B,I — that tag is never reported as a tag
+          // (htslib's convention), and the gate must be the RECORD
+          // property (placeholder present), not whether the cigar column
+          // happened to be projected: tags.CG must not change value with
+          // the projection
+          val slot =
+            if (cigarPlaceholder && t0 == 'C' && t1 == 'G') -1
+            else slots.slot(t0, t1)
+          if (slot >= 0) tags(slot) = slots.read(bb, tpe, slot)
+          else TagValues.skip(bb, tpe) // advance, never box
+        }
+        base(12) = new GenericInternalRow(tags)
       }
       RawRecord(refId, pos0, flag, refLen, new GenericInternalRow(base))
     }
-
-    private def readTagValue(bb: java.nio.ByteBuffer, tpe: Char): Any = tpe match {
-      case 'A' => bb.get().toChar.toString
-      case 'c' => bb.get().toLong
-      case 'C' => (bb.get() & 0xff).toLong
-      case 's' => bb.getShort.toLong
-      case 'S' => (bb.getShort & 0xffff).toLong
-      case 'i' => bb.getInt.toLong
-      case 'I' => bb.getInt.toLong & 0xffffffffL
-      case 'f' => bb.getFloat
-      case 'Z' | 'H' =>
-        val sb = new java.lang.StringBuilder
-        var b = bb.get()
-        while (b != 0) { sb.append(b.toChar); b = bb.get() }
-        sb.toString
-      case 'B' =>
-        val sub = bb.get().toChar
-        val n = bb.getInt
-        // the subtype letter rides along so a string-coerced B array
-        // renders the SAM text form ("c,1,2"), not a Scala toString
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) { out(i) = readTagValue(bb, sub); i += 1 }
-        BArray(sub,
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
-      case other =>
-        throw new IllegalArgumentException(s"unknown BAM tag type '$other'")
-    }
-
-    /** Advance past a tag value without materializing it. */
-    private def skipTagValue(bb: java.nio.ByteBuffer, tpe: Char): Unit =
-      tpe match {
-        case 'A' | 'c' | 'C' => bb.position(bb.position() + 1)
-        case 's' | 'S' => bb.position(bb.position() + 2)
-        case 'i' | 'I' | 'f' => bb.position(bb.position() + 4)
-        case 'Z' | 'H' => while (bb.get() != 0) ()
-        case 'B' =>
-          val sub = bb.get().toChar
-          val n = bb.getInt
-          val w = sub match {
-            case 'c' | 'C' => 1
-            case 's' | 'S' => 2
-            case 'i' | 'I' | 'f' => 4
-            case other => throw new IllegalArgumentException(
-              s"unknown BAM tag array type '$other'")
-          }
-          bb.position(bb.position() + n * w)
-        case other =>
-          throw new IllegalArgumentException(s"unknown BAM tag type '$other'")
-      }
-
-    private def coerce(v: Any, dt: DataType): Any = (v, dt) match {
-      case (s: String, StringType) => UTF8String.fromString(s)
-      case (l: Long, LongType) => l
-      case (f: Float, FloatType) => f
-      // scalar type drift across records (a tag typed Long by the
-      // schema meeting an f record, or vice versa) degrades by
-      // conversion like the SAM text face — silently nulling the value
-      // made the "drop-in interchangeable" sources disagree
-      case (f: Float, LongType) => f.toLong
-      case (l: Long, FloatType) => l.toFloat
-      case (l: Long, StringType) => UTF8String.fromString(l.toString)
-      case (f: Float, StringType) => UTF8String.fromString(f.toString)
-      case (a: BArray, ArrayType(LongType, _)) =>
-        // a record whose B-array subtype drifted to 'f' against a
-        // long-typed schema degrades by truncation like the scalar
-        // cases, instead of a task-killing ClassCastException
-        ArrayData.toArrayData(a.values.map {
-          case l: Long => l
-          case f: Float => f.toLong
-        }.toArray)
-      case (a: BArray, ArrayType(FloatType, _)) =>
-        ArrayData.toArrayData(a.values.map {
-          case f: Float => f
-          case l: Long => l.toFloat
-        }.toArray)
-      case (a: BArray, StringType) =>
-        // conflict-widened ('Z' sink) column: the SAM text form of a B
-        // value is "sub,v1,v2,..." — what the text parser emits for the
-        // same record
-        UTF8String.fromString((a.sub +: a.values).mkString(","))
-      case (other, StringType) => UTF8String.fromString(other.toString)
-      case _ => null
-    }
   }
-
-  /** A decoded B-array tag value with its subtype letter (needed to
-    * render the SAM text form when coerced to a string column). */
-  private final case class BArray(sub: Char, values: Seq[Any])
 }

@@ -846,49 +846,6 @@ object CramCodec {
     (cigar.result(), seq)
   }
 
-  /** Decode a tag value from its BAM-binary byte-array form (the CRAM
-    * convention: tag values are stored exactly as BAM aux values,
-    * little-endian). Returns Long / Float / String / Array[Long] /
-    * Array[Float]. */
-  def tagValue(tpe: Char, bytes: Array[Byte]): Any = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def str(): String = {
-      val end = bytes.indexOf(0.toByte) match {
-        case -1 => bytes.length
-        case i => i
-      }
-      new String(bytes, 0, end, "ASCII")
-    }
-    tpe match {
-      case 'A' => new String(Array(bytes(0)), "ASCII")
-      case 'c' => bb.get().toLong
-      case 'C' => (bb.get() & 0xff).toLong
-      case 's' => bb.getShort.toLong
-      case 'S' => (bb.getShort & 0xffff).toLong
-      case 'i' => bb.getInt.toLong
-      case 'I' => bb.getInt.toLong & 0xffffffffL
-      case 'f' => bb.getFloat
-      case 'Z' | 'H' => str()
-      case 'B' =>
-        val sub = bb.get().toChar
-        val n = bb.getInt
-        sub match {
-          case 'f' => Array.fill(n)(bb.getFloat)
-          case 'c' => Array.fill(n)(bb.get().toLong)
-          case 'C' => Array.fill(n)((bb.get() & 0xff).toLong)
-          case 's' => Array.fill(n)(bb.getShort.toLong)
-          case 'S' => Array.fill(n)((bb.getShort & 0xffff).toLong)
-          case 'i' => Array.fill(n)(bb.getInt.toLong)
-          case 'I' => Array.fill(n)(bb.getInt.toLong & 0xffffffffL)
-          case other => throw new UnsupportedOperationException(
-            s"tag B subtype '$other'")
-        }
-      case other => throw new UnsupportedOperationException(
-        s"tag type '$other'")
-    }
-  }
-
   // ----------------------------------------------------------------- CRAI
 
   /** One CRAI line: region → (container offset, slice offset, size). */

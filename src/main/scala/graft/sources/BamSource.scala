@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
@@ -10,8 +8,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.CoordSystem
-import graft.formats.{BamCodec, BgzfRangeInputStream, GenomicIndex, SeekableInputs}
+import graft.formats.{BamCodec, BgzfRangeInputStream, GenomicIndex, SeekableInputs, TagValues}
 import graft.formats.Bgzf.VirtualPosition
 import graft.sources.common.{BgzfIndexPlanner, GenomicPartitionReader, GenomicReaderFactory, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown, RegionResidual}
 
@@ -28,6 +25,8 @@ import graft.sources.common.{BgzfIndexPlanner, GenomicPartitionReader, GenomicRe
   *  - `unmapped=true`: scan from the index's last mapped offset (S4)
   *  - column pruning skips decode of unneeded fields, limit pushdown,
   *    tag schema via `tags` option or sampling discovery
+  *  - rows in the one alignment model shared with SAM and CRAM
+  *    ([[AlignmentModel]]); a user schema must keep its layout
   *
   * Options: `tags` ("NM:i,MD:Z"), `tag_scan_rows` (default 64, 0=none),
   * `regions`, `unmapped`, `coords` ("11" default), `maxpartitionbytes`.
@@ -44,23 +43,8 @@ class BamDataSource extends TableProvider
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
+    AlignmentModel.requireLayout(schema, "BAM")
     val opts = new CaseInsensitiveStringMap(properties)
-    // supportsExternalMetadata lets callers SKIP inference (e.g. a
-    // catalog-supplied schema), not reorder or subset columns: the
-    // decoder emits rows in FixedFields order, so a reordered user
-    // schema would silently misalign every value ('rname' reading
-    // qname bytes). Reject loudly; projection belongs in select().
-    val fixed = BamSource.FixedFields
-    val core =
-      if (schema.fieldNames.lastOption.contains("tags"))
-        schema.fields.dropRight(1).toSeq
-      else schema.fields.toSeq
-    require(core.map(f => (f.name, f.dataType)) ==
-        fixed.map(f => (f.name, f.dataType)),
-      "user-supplied BAM schema must match the source layout " +
-        s"(${fixed.map(_.name).mkString(",")}[, tags]); got " +
-        s"${schema.fieldNames.mkString(",")} — project with select() " +
-        "instead of a reordered/subset schema")
     val paths = LineSourceUtil.resolvePaths(opts)
     // M5 catalog surface: chrom names/sizes from the header dictionary,
     // record counts from the index pseudo-bins (bam.rs:74-89).
@@ -73,27 +57,9 @@ class BamDataSource extends TableProvider
 }
 
 object BamSource {
-  val FixedFields: Seq[StructField] = Seq(
-    StructField("qname", StringType), StructField("flag", IntegerType),
-    StructField("rname", StringType), StructField("pos", LongType),
-    StructField("mapq", IntegerType), StructField("cigar", StringType),
-    StructField("rnext", StringType), StructField("pnext", LongType),
-    StructField("tlen", IntegerType), StructField("seq", StringType),
-    StructField("qual", StringType), StructField("end", LongType))
-
-  def schema(options: Map[String, String], paths: Seq[Path]): StructType = {
-    val tagDefs: Seq[(String, Char)] = options.get("tags") match {
-      case Some(spec) => SamTags.parseTagSpec(spec)
-      case None =>
-        val n = options.get("tag_scan_rows").map(_.toInt).getOrElse(64)
-        if (n == 0) Nil else discoverTags(paths.head, n)
-    }
-    if (tagDefs.isEmpty) StructType(FixedFields.toIndexedSeq)
-    else StructType((FixedFields :+ StructField("tags",
-      StructType(tagDefs.map { case (name, c) =>
-        StructField(name, SamTags.sparkType(c))
-      }.toIndexedSeq))).toIndexedSeq)
-  }
+  def schema(options: Map[String, String], paths: Seq[Path]): StructType =
+    AlignmentModel.schema(options, defaultScanRows = 64)(
+      discoverTags(paths.head, _))
 
   /** Sample the first `scanRows` records for (tag, type) pairs. */
   private def discoverTags(path: Path, scanRows: Int): Seq[(String, Char)] = {
@@ -101,11 +67,10 @@ object BamSource {
     val fs = path.getFileSystem(conf)
     val in = new BgzfRangeInputStream(SeekableInputs.forHadoop(fs, path),
       VirtualPosition(0L), None)
-    val seen = mutable.LinkedHashMap.empty[String, Char]
+    val types = new AlignmentModel.TagTypes
     try {
       val le = new BamCodec.LEInput(in)
-      val header = BamCodec.readHeader(le)
-      val _ = header
+      BamCodec.readHeader(le)
       var n = 0
       var done = false
       while (n < scanRows && !done) {
@@ -125,49 +90,17 @@ object BamSource {
             while (bb.remaining() >= 3) {
               val tag = new String(Array(bb.get(), bb.get()), "ASCII")
               val tpe = bb.get().toChar
-              val code: Char = tpe match {
-                case 'B' =>
-                  val sub = bb.get().toChar
-                  val cnt = bb.getInt
-                  skipTagArray(bb, sub, cnt)
-                  if (sub == 'f') 'G' else 'L'
-                case other => skipTagScalar(bb, other); normalize(other)
-              }
-              seen.get(tag) match {
-                case Some(prev) if SamTags.sparkType(prev) !=
-                  SamTags.sparkType(code) => seen(tag) = 'Z'
-                case Some(_) => ()
-                case None => seen(tag) = code
-              }
+              // a B array types by its subtype, the byte after 'B'
+              types.add(tag,
+                if (tpe != 'B') tpe else if (bb.get(bb.position()) == 'f') 'G'
+                else 'L')
+              TagValues.skip(bb, tpe)
             }
             n += 1
         }
       }
     } finally in.close()
-    seen.toSeq
-  }
-
-  private def normalize(c: Char): Char = c match {
-    case 'c' | 'C' | 's' | 'S' | 'i' | 'I' => 'i'
-    case 'A' | 'H' => 'Z'
-    case other => other
-  }
-
-  private def skipTagScalar(bb: java.nio.ByteBuffer, t: Char): Unit = t match {
-    case 'A' | 'c' | 'C' => bb.get()
-    case 's' | 'S' => bb.getShort
-    case 'i' | 'I' | 'f' => bb.getInt
-    case 'Z' | 'H' => while (bb.get() != 0) ()
-    case other => throw new IllegalArgumentException(s"tag type '$other'")
-  }
-  private def skipTagArray(bb: java.nio.ByteBuffer, t: Char, n: Int): Unit = {
-    val w = t match {
-      case 'c' | 'C' => 1
-      case 's' | 'S' => 2
-      case 'i' | 'I' | 'f' => 4
-      case other => throw new IllegalArgumentException(s"B subtype '$other'")
-    }
-    bb.position(bb.position() + w * n)
+    types.result
   }
 }
 
@@ -292,28 +225,17 @@ class BamPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     graft.sources.common.RangeStreams.bgzfRanges(fs, path, part.ranges)
   private val le = new BamCodec.LEInput(stream)
 
-  private val required = pushdown.required
-  private val tagSchema: Option[StructType] =
-    if (fullSchema.fieldNames.contains("tags"))
-      Some(fullSchema("tags").dataType.asInstanceOf[StructType])
-    else None
   // the region residual reads RawRecord.refId/pos0/refLen, which the
   // decoder extracts unconditionally — region checks need no column
   // materialization, so the projection is used as-is
   private val need: Array[Boolean] = {
-    val req = required.fieldNames.toSet
-    BamSource.FixedFields.map(f => req(f.name)).toArray
+    val req = pushdown.required.fieldNames.toSet
+    AlignmentModel.FixedFields.map(f => req(f.name)).toArray
   }
-  private val coords =
-    CoordSystem.fromCode(options.getOrElse("coords", "11"))
-  private val decoder = new BamCodec.RecordDecoder(header, tagSchema, need,
-    posShift = coords match {
-      case CoordSystem.OneBasedClosed => 0L
-      case CoordSystem.ZeroBasedHalfOpen => -1L
-    },
-    parseTags = required.fieldNames.contains("tags"),
-    neededTags = graft.sources.common.LineSourceUtil
-      .nestedStruct(pushdown.requiredNested, "tags").map(_.fieldNames.toSet))
+  private val decoder = new BamCodec.RecordDecoder(header,
+    AlignmentModel.tagSchema(fullSchema), need,
+    AlignmentModel.posShift(options),
+    AlignmentModel.tagSlots(fullSchema, pushdown.requiredNested))
 
   private val residual =
     new RegionResidual(part.regions, header.refNames.zipWithIndex)

@@ -12,21 +12,26 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{CoordSystem, Region}
-import graft.formats.{CramCodec, FaiIndex, SeekableInputs}
+import graft.core.Region
+import graft.formats.{CramCodec, FaiIndex, RefNames, SeekableInputs, TagSlots}
 import graft.sources.common.{GenomicPartitionReader, GenomicReaderFactory, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown, RegionResidual}
 
 /** DSv2 CRAM reader (SURVEY §2.1 S7) — the reference's CRAM scanner
   * surface (`/root/reference/oxbow/src/alignment/scanner/cram.rs:42-120`)
   * re-expressed as a Spark source: full scan, CRAI-indexed region
   * queries, unmapped-only scan, reference-based sequence reconstruction
-  * via an indexed FASTA, BAM-compatible output shape.
+  * via an indexed FASTA. Rows take the one alignment model shared with
+  * SAM and BAM ([[AlignmentModel]]): its schema, tag slots and position
+  * shift; tag values decode through `graft.formats.TagValues` (CRAM
+  * stores them in BAM's encoding) and reference names through
+  * `graft.formats.RefNames`.
   *
   * Options:
   *  - `reference`: FASTA path (with `.fai`) used to rebuild SEQ for
   *    mapped records; without it SEQ positions not covered by read
   *    features decode as `N` (bases live in the reference, not the CRAM)
-  *  - `regions`, `unmapped`, `coords` ("11" default)
+  *  - `tags`, `tag_scan_rows` (0 drops the tags column), `regions`,
+  *    `unmapped`, `coords` ("11" default)
   *
   * Partitioning: one partition per data container (CRAM's own write-time
   * batching, like the BBI section partitioner); region queries select
@@ -44,6 +49,7 @@ class CramDataSource extends TableProvider
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
+    AlignmentModel.requireLayout(schema, "CRAM")
     val opts = new CaseInsensitiveStringMap(properties)
     val paths = LineSourceUtil.resolvePaths(opts)
     // M5 catalog surface: @SQ dictionary from the SAM header container
@@ -55,33 +61,15 @@ class CramDataSource extends TableProvider
 }
 
 object CramSource {
-  /** Fixed columns match the BAM reader (alignment model parity); the
-    * optional `tags` struct comes from the `tags` option ("NM:i,MD:Z")
-    * or, by default, from the first data container's tag dictionary —
+  /** The alignment model's schema ([[AlignmentModel]]); by default the
+    * `tags` struct comes from the first data container's tag dictionary —
     * CRAM's TD IS the tag discovery, no record sampling needed.
     * `tag_scan_rows=0` disables the column (BAM-compatible switch). */
-  def schema(options: Map[String, String], paths: Seq[Path]): StructType = {
-    val base = BamSource.FixedFields
-    val tagDefs: Seq[(String, Char)] = options.get("tags") match {
-      case Some(spec) => SamTags.parseTagSpec(spec)
-      case None =>
-        if (options.get("tag_scan_rows").exists(_.toInt == 0)) Nil
-        else paths.headOption.map(discoverTags).getOrElse(Nil)
-    }
-    if (tagDefs.isEmpty) StructType(base.toIndexedSeq)
-    else StructType((base :+ StructField("tags",
-      StructType(tagDefs.map { case (name, c) =>
-        StructField(name, SamTags.sparkType(normalize(c)))
-      }.toIndexedSeq))).toIndexedSeq)
-  }
+  def schema(options: Map[String, String], paths: Seq[Path]): StructType =
+    AlignmentModel.schema(options, defaultScanRows = 1)(_ =>
+      paths.headOption.map(discoverTags).getOrElse(Nil))
 
-  private def normalize(c: Char): Char = c match {
-    case 'B' => 'L' // array subtype lives in values; integers assumed
-    case other => other
-  }
-
-  /** Union of the first data container's TD lines, in appearance order;
-    * tags seen with conflicting Spark types sink to string. */
+  /** Union of the first data container's TD lines, in appearance order. */
   private def discoverTags(path: Path): Seq[(String, Char)] = {
     val fs = path.getFileSystem(graft.sources.common.GraftHadoop.conf())
     val in = SeekableInputs.forHadoop(fs, path)
@@ -93,17 +81,11 @@ object CramSource {
       val block = CramCodec.readBlock(s)
       if (block.contentType != 1) return Nil
       val comp = CramCodec.readCompressionHeader(block.data)
-      val seen = scala.collection.mutable.LinkedHashMap.empty[String, Char]
+      val types = new AlignmentModel.TagTypes
       comp.tagDictionary.flatten.foreach { case (tag, tpe) =>
-        seen.get(tag) match {
-          case Some(prev)
-            if SamTags.sparkType(normalize(prev)) !=
-              SamTags.sparkType(normalize(tpe)) => seen(tag) = 'Z'
-          case Some(_) => ()
-          case None => seen(tag) = tpe
-        }
+        types.add(tag, tpe)
       }
-      seen.toSeq
+      types.result
     } catch {
       case _: Exception => Nil
     } finally in.close()
@@ -285,9 +267,10 @@ object CramPartitionReader {
   * array from the slice's start: the embedded-reference block, or the
   * span read once from the indexed FASTA. Rows are built from bytes: seq
   * and cigar are ASCII arrays ([[CramCodec.reconstruct]]), qual is the
-  * phred bytes plus 33, qname the RN bytes, and rname/rnext are built
-  * once per reference id. Series and blocks no projected column needs
-  * are skipped. */
+  * phred bytes plus 33, qname the RN bytes, and rname/rnext come from
+  * one [[graft.formats.RefNames]] table (null past the dictionary). Tags
+  * fill only the projected tag slots. Series and blocks no projected
+  * column needs are skipped. */
 class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     options: Map[String, String], part: CramInputPartition)
     extends GenomicPartitionReader(fullSchema, pushdown) {
@@ -297,22 +280,18 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
   private val fs = path.getFileSystem(conf)
   private val in = SeekableInputs.forHadoop(fs, path)
 
-  private val posShift: Long =
-    CoordSystem.fromCode(options.getOrElse("coords", "11")) match {
-      case CoordSystem.OneBasedClosed => 0L
-      case CoordSystem.ZeroBasedHalfOpen => -1L
-    }
+  private val posShift = AlignmentModel.posShift(options)
 
   // reference dictionary from the SAM header container
   private val refNames: IndexedSeq[String] =
     CramSource.refDictionary(CramSource.readHeaderText(in)).map(_._1)
       .toIndexedSeq
   private val residual = new RegionResidual(part.regions, refNames.zipWithIndex)
+  private val refNamesUtf8 = new RefNames(refNames)
 
-  private val tagSchema: Option[StructType] =
-    if (fullSchema.fieldNames.contains("tags"))
-      Some(fullSchema("tags").dataType.asInstanceOf[StructType])
-    else None
+  // the tag slots a projected tags struct fills (nested pruning), or null
+  private val slots: TagSlots =
+    AlignmentModel.tagSlots(fullSchema, pushdown.requiredNested).orNull
 
   // projection-aware decode: quality scores, read names and tags are the
   // bulkiest CRAM series; when un-projected their reads are skipped and
@@ -322,7 +301,6 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
   private val required = pushdown.required
   private val wantQual = required.fieldNames.contains("qual")
   private val wantQname = required.fieldNames.contains("qname")
-  private val wantTags = required.fieldNames.contains("tags")
   // seq/cigar reconstruction (per-base reference fill + cigar assembly)
   // is the dominant per-record CPU after block decode; `end` only needs
   // the feature-derived reference length, so a coordinate projection
@@ -349,7 +327,7 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
         require(b.contentType == 1, s"expected compression header block")
         CramCodec.readCompressionHeader(b.data)
       }
-      val doTags = tagSchema.isDefined && wantTags
+      val doTags = slots != null
       val substitutions = CramCodec.substitutionTable(comp.substitutionMatrix)
       def dataEnc(k: String) =
         comp.dataSeries.getOrElse(k, CramCodec.NullEncoding)
@@ -475,40 +453,19 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     }
   }
 
-  // per-record hot-path layout, resolved once (same JIT-stability rule
-  // as the text-scan path: no Option.toSeq.map lambdas, no array ++,
-  // no .lift allocation per record)
-  private val tagStructOrNull: StructType = tagSchema.orNull
-  private val outWidth: Int = 12 + (if (tagStructOrNull != null) 1 else 0)
-  // schema slot per tag name: rec.tags is small, the discovered tag
-  // schema can be wide — iterate the record's tags, not the schema
-  private val tagFieldIdx: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
-    if (tagStructOrNull != null) {
-      var i = 0
-      while (i < tagStructOrNull.length) {
-        m.put(tagStructOrNull.fields(i).name, Integer.valueOf(i)); i += 1
-      }
-    }
-    m
-  }
+  private val outWidth: Int =
+    12 + (if (AlignmentModel.tagSchema(fullSchema).isDefined) 1 else 0)
 
-  private val refNamesUtf8: Array[UTF8String] =
-    refNames.map(UTF8String.fromString).toArray
-
-  private def refNameUtf8(id: Int): UTF8String =
-    if (id < refNamesUtf8.length) refNamesUtf8(id) else UTF8String.EMPTY_UTF8
-
+  /** The record's tags in its slots: rec.tags is small, the tag schema
+    * can be wide, so iterate the record's tags. Duplicate tags last-win. */
   private def buildTagsRow(rec: CramCodec.CramRecord): GenericInternalRow = {
-    val ts = tagStructOrNull
-    val arr = new Array[Any](ts.length)
+    val arr = new Array[Any](slots.schema.length)
     val it = rec.tags.iterator
     while (it.hasNext) {
       val (tag, tpe, bytes) = it.next()
-      val idx = tagFieldIdx.get(tag)
-      // duplicate tags last-win, matching the toMap this loop replaced
-      if (idx != null) arr(idx.intValue()) = toCatalystTag(
-        ts.fields(idx.intValue()).dataType, CramCodec.tagValue(tpe, bytes))
+      val slot = slots.slot(tag.charAt(0), tag.charAt(1))
+      if (slot >= 0) arr(slot) = slots.read(java.nio.ByteBuffer.wrap(bytes)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN), tpe, slot)
     }
     new GenericInternalRow(arr)
   }
@@ -543,11 +500,11 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     val out = new Array[Any](outWidth)
     if (rec.readName != null) out(0) = UTF8String.fromBytes(rec.readName)
     out(1) = rec.bamFlags
-    if (rec.refId >= 0) out(2) = refNameUtf8(rec.refId)
+    out(2) = refNamesUtf8(rec.refId)
     if (mapped) out(3) = rec.alignmentStart.toLong + posShift
     if (rec.mappingQuality >= 0) out(4) = rec.mappingQuality
     if (cigar != null && cigar.length > 0) out(5) = UTF8String.fromBytes(cigar)
-    if (rec.mateRefId >= 0) out(6) = refNameUtf8(rec.mateRefId)
+    out(6) = refNamesUtf8(rec.mateRefId)
     if (rec.matePos > 0) out(7) = rec.matePos.toLong + posShift
     out(8) = rec.templateSize
     if (seq != null && seq.length > 0) out(9) = UTF8String.fromBytes(seq)
@@ -555,26 +512,8 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     // end is invariant across coord systems (1-based closed end equals
     // the 0-based half-open end), matching the BAM reader
     if (mapped) out(11) = rec.alignmentStart.toLong + rec.referenceLength - 1
-    if (tagStructOrNull != null && wantTags) out(12) = buildTagsRow(rec)
+    if (slots != null) out(12) = buildTagsRow(rec)
     new GenericInternalRow(out)
-  }
-
-  private def toCatalystTag(dt: DataType, v: Any): Any = (dt, v) match {
-    case (LongType, l: Long) => l
-    case (LongType, f: Float) => f.toLong
-    case (FloatType, f: Float) => f
-    case (FloatType, l: Long) => l.toFloat
-    case (StringType, s: String) => UTF8String.fromString(s)
-    case (StringType, other) => UTF8String.fromString(other.toString)
-    case (ArrayType(LongType, _), a: Array[Long]) =>
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(a)
-    case (ArrayType(LongType, _), a: Array[Float]) =>
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(a.map(_.toLong))
-    case (ArrayType(FloatType, _), a: Array[Float]) =>
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(a)
-    case (ArrayType(FloatType, _), a: Array[Long]) =>
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(a.map(_.toFloat))
-    case _ => null
   }
 
   // an unmapped record has no position, so no region keeps it; placed

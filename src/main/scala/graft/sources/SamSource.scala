@@ -4,30 +4,25 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
-import scala.collection.mutable
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.formats.TagSlots
 import graft.sources.common.{LineFormat, LineParser, LineSourceUtil, LineTableProvider}
 
-/** SAM text reader (SURVEY §2.1 S1).
-  *
-  * Twelve standard columns (`qname flag rname pos mapq cigar rnext pnext
-  * tlen seq qual end`; reference field set `alignment/model/field.rs:17-76`
-  * — `end` is the computed alignment end, pos + CIGAR reference length − 1
-  * in 1-based closed coords) plus an optional `tags` struct.
+/** SAM text reader (SURVEY §2.1 S1) over the one alignment model
+  * ([[AlignmentModel]]: twelve fixed columns plus an optional `tags`
+  * struct, shared with the BAM and CRAM readers).
   *
   * Tag schema comes from the `tags` option (`"NM:i,MD:Z"` — the reference's
   * tag-def grammar) or from sampling `tag_scan_rows` records (TagScanner
-  * pattern, `alignment/model/tag.rs:593-640`). Tag type widening per the
-  * reference grid (`tag.rs:124-165`): A/Z/H → string, c/C/s/S/i/I → long,
-  * f → float, B:* → array of long/float.
+  * pattern, `alignment/model/tag.rs:593-640`).
   *
   * Options: `tags` / `tag_scan_rows` (default 1024, 0 = no tags column),
   * `coords` (`11` default), `regions`, `maxpartitionbytes`.
@@ -56,34 +51,14 @@ class SamFormat extends LineFormat {
     }
   }
 
-  private val fixed = Seq(
-    StructField("qname", StringType), StructField("flag", IntegerType),
-    StructField("rname", StringType), StructField("pos", LongType),
-    StructField("mapq", IntegerType), StructField("cigar", StringType),
-    StructField("rnext", StringType), StructField("pnext", LongType),
-    StructField("tlen", IntegerType), StructField("seq", StringType),
-    StructField("qual", StringType), StructField("end", LongType))
-
   override def schema(options: Map[String, String], paths: Seq[Path],
-      conf: Configuration): StructType = {
-    val tagDefs: Seq[(String, Char)] = options.get("tags") match {
-      case Some(spec) => SamTags.parseTagSpec(spec)
-      case None =>
-        val n = options.get("tag_scan_rows").map(_.toInt).getOrElse(1024)
-        if (n == 0) Nil else discoverTags(paths, n)
-    }
-    if (tagDefs.isEmpty) StructType(fixed)
-    else StructType(fixed :+ StructField("tags",
-      StructType(tagDefs.map { case (name, c) =>
-        StructField(name, SamTags.sparkType(c))
-      }.toIndexedSeq)))
-  }
+      conf: Configuration): StructType =
+    AlignmentModel.schema(options, defaultScanRows = 1024)(
+      discoverTags(paths, _))
 
   private def discoverTags(paths: Seq[Path], scanRows: Int): Seq[(String, Char)] = {
     val conf = graft.sources.common.GraftHadoop.conf()
-    // name → type code; conflicts widen to String sink ('Z'), like the
-    // reference's conflict rule
-    val seenTags = mutable.LinkedHashMap.empty[String, Char]
+    val types = new AlignmentModel.TagTypes
     var seen = 0
     paths.iterator.takeWhile(_ => seen < scanRows).foreach { p =>
       val fs = p.getFileSystem(conf)
@@ -101,20 +76,11 @@ class SamFormat extends LineFormat {
               // crash schema inference with head-of-empty — the row
               // parser itself skips the same token, and discovery must
               // never be MORE fragile than parsing
-              if (parts.length == 3 && parts(1).nonEmpty) {
-                val name = parts(0)
-                val code: Char =
+              if (parts.length == 3 && parts(1).nonEmpty)
+                types.add(parts(0),
                   if (parts(1) == "B") // B:f,… → float array, else int array
                     (if (parts(2).startsWith("f")) 'G' else 'L')
-                  else parts(1).head
-                seenTags.get(name) match {
-                  case Some(prev)
-                    if SamTags.sparkType(prev) != SamTags.sparkType(code) =>
-                    seenTags(name) = 'Z' // type conflict → string sink
-                  case Some(_) => ()
-                  case None => seenTags(name) = code
-                }
-              }
+                  else parts(1).head)
             }
             seen += 1
           }
@@ -122,106 +88,36 @@ class SamFormat extends LineFormat {
         }
       } finally r.close()
     }
-    seenTags.toSeq
+    types.result
   }
 
   override def newParser(fullSchema: StructType,
       options: Map[String, String]): LineParser =
-    new SamParser(fullSchema, coordSystem(options).startOffset)
+    newParser(fullSchema, options, fullSchema)
 
   /** Projection-aware down to nested fields: tag parsing is skipped
     * when the `tags` struct is not consumed, and limited to the
     * Catalyst-requested tag names otherwise. */
   override def newParser(fullSchema: StructType,
-      options: Map[String, String], parseNeeded: StructType): LineParser = {
-    val needed = graft.sources.common.LineSourceUtil
-      .nestedStruct(parseNeeded, "tags").map(_.fieldNames.toSet)
-    new SamParser(fullSchema, coordSystem(options).startOffset,
-      parseTags = needed.isDefined, neededTags = needed)
-  }
+      options: Map[String, String], parseNeeded: StructType): LineParser =
+    new SamParser(fullSchema, AlignmentModel.posShift(options),
+      AlignmentModel.tagSlots(fullSchema, parseNeeded))
 }
 
-object SamTags {
-  /** Parse a `tags` option: comma list of `NAME:code`, plus the
-    * spec-style array form `NAME:B:sub` (→ internal codes 'L' integer
-    * array / 'G' float array, the same codes discovery produces). A
-    * bare `NAME:B` is ambiguous and rejected with a usable message
-    * instead of a MatchError. Shared by the SAM, BAM and CRAM sources. */
-  def parseTagSpec(spec: String): Seq[(String, Char)] =
-    spec.split(",").toSeq.filter(_.nonEmpty).map { td =>
-      td.trim.split(":") match {
-        case Array(name, "B", sub)
-            if Set("c", "C", "s", "S", "i", "I", "f").contains(sub) =>
-          (name, if (sub == "f") 'G' else 'L')
-        case Array(name, code) if code.nonEmpty && code != "B" =>
-          (name, code.head)
-        case _ => throw new IllegalArgumentException(
-          s"cannot parse tag declaration '$td' " +
-            "(use NAME:code or NAME:B:sub with sub in c,C,s,S,i,I,f)")
-      }
-    }
-
-  /** Tag type code → Spark type (reference grid `tag.rs:124-165`).
-    * Internal codes: 'L' = B:integer array, 'G' = B:float array. */
-  def sparkType(code: Char): DataType = code match {
-    case 'A' | 'Z' | 'H' => StringType
-    case 'c' | 'C' | 's' | 'S' | 'i' | 'I' => LongType
-    case 'f' => FloatType
-    case 'L' => ArrayType(LongType)
-    case 'G' => ArrayType(FloatType)
-    case other =>
-      throw new IllegalArgumentException(s"unknown SAM tag type '$other'")
-  }
-
-  /** Slot index limited to the tags whose values are actually consumed
-    * (nested pruning). ONE implementation shared by the SAM text parser
-    * and the BAM binary decoder — the pair must never drift on which
-    * tag slots get filled (the SAM/BAM parity class of bug). */
-  def tagSlotIndex(tagSchema: Option[StructType],
-      neededTags: Option[Set[String]]): Map[String, Int] =
-    tagSchema.map { ts =>
-      val all = ts.fieldNames.zipWithIndex.toMap
-      neededTags.fold(all)(keep => all.filter(kv => keep(kv._1)))
-    }.getOrElse(Map.empty)
-
-  /** Reference bases consumed by a CIGAR string; -1 when unavailable. */
-  def cigarRefLen(cigar: String): Long = {
-    if (cigar == "*" || cigar.isEmpty) return -1L
-    var total = 0L; var n = 0L; var i = 0
-    while (i < cigar.length) {
-      val ch = cigar.charAt(i)
-      if (ch >= '0' && ch <= '9') n = n * 10 + (ch - '0')
-      else {
-        ch match {
-          case 'M' | 'D' | 'N' | '=' | 'X' => total += n
-          case _ => ()
-        }
-        n = 0
-      }
-      i += 1
-    }
-    total
-  }
-}
-
-class SamParser(fullSchema: StructType, outOffset: Long,
-    parseTags: Boolean = true,
-    neededTags: Option[Set[String]] = None) extends LineParser {
-  private val tagSchema: Option[StructType] =
-    if (fullSchema.fieldNames.contains("tags"))
-      Some(fullSchema("tags").dataType.asInstanceOf[StructType])
-    else None
-  private val tagIndex: Map[String, Int] =
-    SamTags.tagSlotIndex(tagSchema, neededTags)
-  // native SAM pos is 1-based closed → output delta ("11"→0, "01"→-1)
-  private val shift = -1L - outOffset
+/** One SAM text line to a row. `posShift` comes from the `coords`
+  * option; `tagSlots` names the tag slots to fill (None skips tag
+  * parsing and leaves the tags slot null). */
+class SamParser(fullSchema: StructType, posShift: Long,
+    tagSlots: Option[TagSlots]) extends LineParser {
+  private val hasTags = AlignmentModel.tagSchema(fullSchema).isDefined
+  private val slots: TagSlots = tagSlots.orNull
 
   override def parse(line: String): InternalRow = {
     val c = line.split("\t", -1)
     require(c.length >= 11, s"malformed SAM line (${c.length} cols)")
     def str(v: String) = if (v == "*" || v.isEmpty) null else UTF8String.fromString(v)
     val pos = c(3).toLong
-    val cigarLen = SamTags.cigarRefLen(c(5))
+    val cigarLen = AlignmentModel.cigarRefLen(c(5))
     val unmapped = (c(1).toInt & 0x4) != 0 || c(2) == "*" || pos == 0
     // 1-based-closed end == 0-based-half-open end numerically, so no
     // shift. cigarLen <= 0 (not just '*' = -1): a zero-reference-length
@@ -234,69 +130,43 @@ class SamParser(fullSchema: StructType, outOffset: Long,
 
     val base = Array[Any](
       str(c(0)), c(1).toInt, str(c(2)),
-      if (pos == 0) null else pos + shift,
+      if (pos == 0) null else pos + posShift,
       c(4).toInt, str(c(5)),
       // RNEXT "=" means "same contig as RNAME" (SAM §1.4) — resolve it
       // like the BAM/CRAM decoders do, so the three faces agree on
       // every same-contig paired read
       if (c(6) == "=") str(c(2)) else str(c(6)),
-      if (c(7).toLong == 0) null else c(7).toLong + shift,
+      if (c(7).toLong == 0) null else c(7).toLong + posShift,
       c(8).toInt, str(c(9)), str(c(10)), endVal)
 
-    tagSchema match {
-      case None => new GenericInternalRow(base)
-      case Some(ts) if !parseTags =>
-        // un-projected tags column: emit the slot as null, skip parsing
-        new GenericInternalRow(base :+ (null: Any))
-      case Some(ts) =>
-        val tags = new Array[Any](ts.length)
-        var i = 11
-        while (i < c.length) {
-          // "XX:T:value" — identify the 2-char tag without splitting, so
-          // un-requested tags cost no allocation at all
-          val t = c(i)
-          if (t.length >= 5 && t.charAt(2) == ':' && t.charAt(4) == ':') {
-            tagIndex.get(t.substring(0, 2)).foreach { idx =>
-              tags(idx) = convertTag(ts(idx).dataType, t.substring(5))
-            }
-          }
-          i += 1
+    if (!hasTags) new GenericInternalRow(base)
+    else if (slots == null)
+      // un-projected tags column: emit the slot as null, skip parsing
+      new GenericInternalRow(base :+ (null: Any))
+    else {
+      val tags = new Array[Any](slots.schema.length)
+      var i = 11
+      while (i < c.length) {
+        // "XX:T:value" — identify the 2-char tag without splitting, so
+        // un-requested tags cost no allocation at all
+        val t = c(i)
+        if (t.length >= 5 && t.charAt(2) == ':' && t.charAt(4) == ':') {
+          val slot = slots.slot(t.charAt(0), t.charAt(1))
+          if (slot >= 0) tags(slot) = slots.fromText(t.substring(5), slot)
         }
-        new GenericInternalRow(base :+ (new GenericInternalRow(tags): Any))
+        i += 1
+      }
+      new GenericInternalRow(base :+ (new GenericInternalRow(tags): Any))
     }
-  }
-
-  /** Tag value → schema type, tolerating type drift PAST the discovery
-    * scan window (e.g. row 2000 carries XB:f:1.5 after 1024 XB:i rows
-    * typed the column Long): numeric families convert by truncation,
-    * anything unconvertible degrades to null — matching the BAM
-    * decoder's coerce instead of killing the whole query with a
-    * NumberFormatException on a file samtools reads fine. */
-  private def convertTag(dt: DataType, v: String): Any = dt match {
-    case StringType => UTF8String.fromString(v)
-    case LongType =>
-      try v.toLong catch {
-        case _: NumberFormatException =>
-          try v.toDouble.toLong
-          catch { case _: NumberFormatException => null }
-      }
-    case FloatType =>
-      try v.toFloat catch { case _: NumberFormatException => null }
-    case ArrayType(LongType, _) =>
-      try ArrayData.toArrayData(v.split(",").drop(1).map(_.toLong))
-      catch {
-        case _: NumberFormatException =>
-          try ArrayData.toArrayData(
-            v.split(",").drop(1).map(_.toDouble.toLong))
-          catch { case _: NumberFormatException => null }
-      }
-    case ArrayType(FloatType, _) =>
-      try ArrayData.toArrayData(v.split(",").drop(1).map(_.toFloat))
-      catch { case _: NumberFormatException => null }
-    case other => throw new IllegalArgumentException(s"bad tag type $other")
   }
 }
 
 class SamDataSource extends LineTableProvider {
   override def format: SamFormat = new SamFormat
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table = {
+    AlignmentModel.requireLayout(schema, "SAM")
+    super.getTable(schema, partitioning, properties)
+  }
 }

@@ -12,12 +12,17 @@ import graft.fixtures.CramFixture.{CRec, Feat}
   * compares whole collected rows (ordered by qname) and the schemas. */
 class AlignmentParitySpec extends SparkSuite {
 
+  // the third contig is outside the @SQ dictionary: the CRAM embeds its
+  // bases, the header does not name it
   private val contigs = IndexedSeq(
     ("ACGTTGCAAGCT" * 20).take(200),
-    ("GATTACA" * 20).take(100))
+    ("GATTACA" * 20).take(100),
+    ("CCGGTTAA" * 20).take(100))
+  private val dictionary = contigs.take(2).zipWithIndex.map { case (c, i) =>
+    (s"chr${i + 1}", c.length) }
 
-  private val header = "@HD\tVN:1.6\n" + contigs.zipWithIndex.map {
-    case (c, i) => s"@SQ\tSN:chr${i + 1}\tLN:${c.length}\n" }.mkString
+  private val header = "@HD\tVN:1.6\n" + dictionary.map {
+    case (n, l) => s"@SQ\tSN:$n\tLN:$l\n" }.mkString
 
   /** One read: `pos1` is the 1-based start of the first aligned base;
     * seq comes from the reference under M and is `T` under S and I.
@@ -93,41 +98,37 @@ class AlignmentParitySpec extends SparkSuite {
       tags = r.tags)
   }
 
-  private def write(name: String, rs: Seq[Read]): (String, String, String) = {
+  /** `rs` as SAM, BAM and CRAM files: (format, path) in that order. */
+  private def write(name: String, rs: Seq[Read]): Seq[(String, String)] = {
     val sam = dir.resolve(s"$name.sam")
     java.nio.file.Files.write(sam,
       (header + rs.map(samText).mkString("\n") + "\n").getBytes("UTF-8"))
     val bam = dir.resolve(s"$name.bam").toString
-    BamFixture.write(bam, contigs.zipWithIndex.map { case (c, i) =>
-      (s"chr${i + 1}", c.length) }, rs.map(bamRec))
+    BamFixture.write(bam, dictionary, rs.map(bamRec))
     val cram = dir.resolve(s"$name.cram").toString
     CramFixture.write(cram, header, rs.groupBy(_.refId).toSeq.sortBy(_._1)
       .map(_._2.map(cramRec)), embeddedRefs = contigs.indices.map(i =>
         i -> contigs(i)).toMap)
-    (sam.toString, bam, cram)
+    Seq("sam" -> sam.toString, "bam" -> bam, "cram" -> cram)
   }
 
   private lazy val files = write("reads", reads)
 
-  private def load(fmt: String, path: String,
-      opts: Map[String, String]): DataFrame =
-    spark.read.format(fmt).options(opts).load(path)
-
-  /** The three faces' rows of `q` over `paths`, each ordered by qname;
-    * asserts equal schemas and equal rows. */
-  private def assertParity(paths: (String, String, String),
+  /** Each face's rows of `q`, ordered by qname, must equal the first
+    * face's, with the same schema; returns the first face's rows. */
+  private def assertParity(faces: Seq[(String, String)],
       opts: Map[String, String] = Map.empty)(q: DataFrame => DataFrame)
       : Seq[Row] = {
-    val faces = Seq("sam" -> paths._1, "bam" -> paths._2, "cram" -> paths._3)
-      .map { case (fmt, p) => fmt -> q(load(fmt, p, opts)) }
-    val (_, sam) = faces.head
-    val want = sam.orderBy("qname").collect().toSeq
-    faces.tail.foreach { case (fmt, df) =>
-      assert(df.schema == sam.schema, s"$fmt schema differs from sam")
-      assert(df.orderBy("qname").collect().toSeq == want,
-        s"$fmt rows differ from sam")
+    val dfs = faces.map { case (fmt, p) =>
+      fmt -> q(spark.read.format(fmt).options(opts).load(p)) }
+    val (first, want) = dfs.head
+    val rows = want.orderBy("qname").collect().toSeq
+    dfs.tail.foreach { case (fmt, df) =>
+      assert(df.schema == want.schema, s"$fmt schema differs from $first")
+      assert(df.orderBy("qname").collect().toSeq == rows,
+        s"$fmt rows differ from $first")
     }
-    want
+    rows
   }
 
   test("parity: all columns with discovered tags") {
@@ -168,36 +169,31 @@ class AlignmentParitySpec extends SparkSuite {
     assert(asZ.map(_.getString(1)) == Seq("1.5", null, "2.25", "-0.5", null))
   }
 
-  // B:i arrays: SAM and BAM (the CRAM fixture writes i, f, Z and A tags)
-  private lazy val arrayFiles: (String, String) = {
-    val rs = Seq(
-      Read("b1", 0, 0, 5, 60, Seq((10, 'M')), null,
-        Seq(("XB", 'B', Seq(1, 2, 3)), ("XS", 'f', 0.25f))),
-      Read("b2", 0, 0, 30, 60, Seq((10, 'M')), null,
-        Seq(("XB", 'B', Seq(-7)), ("NM", 'i', 1))))
-    val sam = dir.resolve("arrays.sam")
-    java.nio.file.Files.write(sam,
-      (header + rs.map(samText).mkString("\n") + "\n").getBytes("UTF-8"))
-    val bam = dir.resolve("arrays.bam").toString
-    BamFixture.write(bam, contigs.zipWithIndex.map { case (c, i) =>
-      (s"chr${i + 1}", c.length) }, rs.map(bamRec))
-    (sam.toString, bam)
-  }
+  private lazy val arrayFiles = write("arrays", Seq(
+    Read("b1", 0, 0, 5, 60, Seq((10, 'M')), null,
+      Seq(("XB", 'B', Seq(1, 2, 3)), ("XS", 'f', 0.25f))),
+    Read("b2", 0, 0, 30, 60, Seq((10, 'M')), null,
+      Seq(("XB", 'B', Seq(-7)), ("NM", 'i', 1)))))
 
-  private def samBamRows(opts: Map[String, String]): Seq[Row] = {
-    val Seq(sam, bam) = Seq("sam" -> arrayFiles._1, "bam" -> arrayFiles._2)
-      .map { case (fmt, p) =>
-        load(fmt, p, opts).orderBy("qname").collect().toSeq }
-    assert(bam == sam)
-    sam
-  }
-
-  test("parity: float and B:i array tags, SAM and BAM") {
-    val rows = samBamRows(Map.empty)
+  test("parity: float and B:i array tags") {
+    val rows = assertParity(arrayFiles)(identity)
     val t = rows.head.getStruct(rows.head.fieldIndex("tags"))
     assert(t.getSeq[Long](0) == Seq(1L, 2L, 3L) && t.getFloat(1) == 0.25f)
-    val asZ = samBamRows(Map("tags" -> "XB:Z"))
-    assert(asZ.map(r => r.getStruct(r.fieldIndex("tags")).getString(0)) ==
-      Seq("i,1,2,3", "i,-7"))
+  }
+
+  test("parity: a B array in a string column reads as SAM text") {
+    val rows = assertParity(arrayFiles, Map("tags" -> "XB:Z"))(
+      _.select("qname", "tags.XB"))
+    assert(rows.map(_.getString(1)) == Seq("i,1,2,3", "i,-7"))
+  }
+
+  test("parity: a reference id past the dictionary reads a null rname") {
+    // SAM text names its reference, so only BAM and CRAM can hold this
+    val rows = assertParity(write("outside", Seq(
+      Read("o1", 0, 0, 5, 60, Seq((10, 'M')), null, Nil),
+      Read("o2", 0, 2, 8, 60, Seq((10, 'M')), null, Nil)))
+      .filter(_._1 != "sam"))(_.select("qname", "rname", "pos", "seq"))
+    assert(rows(1).isNullAt(1) && rows(1).getLong(2) == 8L)
+    assert(rows(1).getString(3) == contigs(2).substring(7, 17))
   }
 }

@@ -149,6 +149,15 @@ class CramSourceSpec extends SparkSuite {
     assert(r.getString(5) == "2S4M3D4M") // cigar never needs the reference
   }
 
+  test("cram: a reordered user-supplied schema is rejected loudly") {
+    val e = intercept[Exception] {
+      spark.read.format("cram").schema("rname STRING, pos LONG")
+        .load(cramPath).collect()
+    }
+    assert(e.getMessage.contains("select()"),
+      s"misaligned schema not rejected: ${e.getMessage}")
+  }
+
   test("cram: tag dictionary drives tags schema and values decode") {
     val p = dir.resolve("tagged.cram").toString
     CramFixture.write(p, samHeader, Seq(

@@ -31,6 +31,15 @@ class SamSourceSpec extends SparkSuite {
     assert(rows(2).getInt(1) == 4)
   }
 
+  test("sam: a reordered user-supplied schema is rejected loudly") {
+    val e = intercept[Exception] {
+      spark.read.format("sam").schema("rname STRING, pos LONG")
+        .load(tempFile("reordered.sam", sam)).collect()
+    }
+    assert(e.getMessage.contains("select()"),
+      s"misaligned schema not rejected: ${e.getMessage}")
+  }
+
   test("sam: explicit tag defs") {
     val df = spark.read.format("sam").option("tags", "NM:i,MD:Z")
       .load(tempFile("s2.sam", sam))
