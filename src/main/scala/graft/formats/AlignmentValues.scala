@@ -86,16 +86,18 @@ object TagValues {
   def fromText(v: String, target: Int): Any =
     try target match {
       case AsString => UTF8String.fromString(v)
-      case AsLong => textLong(v)
+      case AsLong =>
+        try v.toLong catch { case _: NumberFormatException => v.toDouble.toLong }
       case AsFloat => v.toFloat
-      case AsLongArray => ArrayData.toArrayData(v.split(",").drop(1).map(textLong))
+      case AsLongArray =>
+        val vs = v.split(",").drop(1)
+        ArrayData.toArrayData(
+          try vs.map(_.toLong) catch { case _: NumberFormatException =>
+            vs.map(_.toDouble.toLong) })
       case AsFloatArray => ArrayData.toArrayData(v.split(",").drop(1).map(_.toFloat))
       case _ => throw new IllegalArgumentException(
         s"unsupported tag column type for value '$v'")
     } catch { case _: NumberFormatException => null }
-
-  private def textLong(v: String): Long =
-    try v.toLong catch { case _: NumberFormatException => v.toDouble.toLong }
 
   private def readArray(bb: ByteBuffer, target: Int): Any = {
     val sub = bb.get().toChar
