@@ -11,7 +11,7 @@ import graft.formats.{Bgzf, GenomicIndex}
 object BcfFixture {
 
   /** Typed-value encoders (BCF2 spec §6.3.3). */
-  private def typedString(s: String): Array[Byte] = {
+  def typedString(s: String): Array[Byte] = {
     val b = s.getBytes("UTF-8")
     require(b.length < 15, "fixture strings must be short")
     (Array(((b.length << 4) | 7).toByte) ++ b)
@@ -21,7 +21,7 @@ object BcfFixture {
     bb.put(((1 << 4) | 3).toByte).putInt(v)
     bb.array()
   }
-  private def typedIntVec(vs: Seq[Int]): Array[Byte] = {
+  def typedIntVec(vs: Seq[Int]): Array[Byte] = {
     require(vs.length < 15)
     val bb = ByteBuffer.allocate(1 + 4 * vs.length)
       .order(ByteOrder.LITTLE_ENDIAN)
@@ -37,13 +37,17 @@ object BcfFixture {
     vs.foreach(bb.putFloat)
     bb.array()
   }
+  def typedFloat(v: Float): Array[Byte] = typedFloatVec(Seq(v))
   def typedFlag: Array[Byte] = Array(0x00.toByte) // len 0, type 0
 
   final case class BcfRec(contigId: Int, pos0: Int, rlen: Int,
       qual: Option[Float], ids: Seq[String], alleles: Seq[String],
       filterIdx: Seq[Int], info: Seq[(Int, Array[Byte])],
       /** (key dict idx, per-sample int8 vectors) — covers GT/DP shapes */
-      fmt: Seq[(Int, Seq[Seq[Int]])], nSample: Int)
+      fmt: Seq[(Int, Seq[Seq[Int]])], nSample: Int,
+      /** (key dict idx, per-sample strings), written after `fmt` as one
+        * char vector per sample, NUL-padded to the longest */
+      charFmt: Seq[(Int, Seq[String])] = Nil)
 
   private def encodeRecord(r: BcfRec): Array[Byte] = {
     val shared = new java.io.ByteArrayOutputStream()
@@ -52,7 +56,7 @@ object BcfFixture {
     sb.putInt(r.qual.map(java.lang.Float.floatToIntBits)
       .getOrElse(graft.formats.BcfCodec.MissingFloatBits))
     sb.putInt((r.alleles.length << 16) | r.info.length)
-    sb.putInt((r.fmt.length << 24) | r.nSample)
+    sb.putInt(((r.fmt.length + r.charFmt.length) << 24) | r.nSample)
     shared.write(sb.array())
     shared.write(typedString(r.ids.mkString(";")))
     r.alleles.foreach(a => shared.write(typedString(a)))
@@ -72,6 +76,14 @@ object BcfFixture {
         val padded = vals.padTo(width, graft.formats.BcfCodec.EovInt8)
         padded.foreach(v => indiv.write(Array(v.toByte)))
       }
+    }
+    r.charFmt.foreach { case (key, perSample) =>
+      indiv.write(typedInt(key))
+      val bytes = perSample.map(_.getBytes("UTF-8"))
+      val width = bytes.map(_.length).max
+      require(width < 15, s"FORMAT string width $width needs long-form typing")
+      indiv.write(Array(((width << 4) | 7).toByte))
+      bytes.foreach(b => indiv.write(b.padTo(width, 0.toByte)))
     }
     val sBytes = shared.toByteArray
     val iBytes = indiv.toByteArray
