@@ -49,7 +49,7 @@ object BcfCodec {
       case HeaderLine(kind, body) =>
         // quote-aware: a comma inside Description must not create a
         // phantom attribute (which could shift implicit IDX numbering)
-        val attrs = graft.sources.VcfHeader.parseDefBody(body)
+        val attrs = VcfHeaderLines.attributes(body)
         attrs.get("ID").foreach { id =>
           val idx = attrs.get("IDX").flatMap(_.toIntOption)
           if (kind == "contig") contigDecls += (id -> idx)

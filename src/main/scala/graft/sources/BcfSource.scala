@@ -11,49 +11,32 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.CoordSystem
-import graft.formats.{BamCodec, BcfCodec, BgzfRangeInputStream, GenomicIndex, SeekableInputs}
+import graft.formats.{BamCodec, BcfCodec, BgzfRangeInputStream, GenomicIndex, SeekableInputs, VariantValues}
 import graft.formats.Bgzf.VirtualPosition
 import graft.sources.common.{BgzfIndexPlanner, GenomicPartitionReader, GenomicReaderFactory, GenomicScan, GenomicScanBuilder, GenomicTable, GraftTableProps, LineSourceUtil, Pushdown, RegionResidual}
 
-/** DSv2 binary BCF reader (SURVEY §2.1 S9).
-  *
-  * Same row shape as the VCF text reader (drop-in interchangeable, like
-  * the reference's vcf/bcf scanner pair `variant/scanner/{vcf,bcf}.rs`):
-  * fixed columns + header-driven `info` struct + `samples` struct with GT
-  * special-casing, both genotype layouts. BGZF + CSI partitioning and
-  * region queries ride the same index machinery as BAM.
+/** DSv2 binary BCF reader (SURVEY §2.1 S9). It reads through the one
+  * variant model it shares with the VCF text reader, [[VariantModel]]
+  * (like the reference's vcf/bcf scanner pair over one model,
+  * `variant/scanner/{vcf,bcf}.rs`): the same schema, multi-file sample
+  * guard, per-partition [[VariantLayout]] and value rules
+  * ([[graft.formats.VariantValues]]), so a BCF reads as the same rows as
+  * its VCF text. This file keeps the typed-value decode
+  * ([[graft.formats.BcfCodec]]) and the BGZF + CSI partitioning and
+  * region queries, which ride the same index machinery as BAM.
   *
   * Options: `include_samples`, `genotype_by`, `samples`, `info_fields`,
-  * `coords` ("11" default), `regions`, `maxpartitionbytes`.
+  * `coords` ("11" default), `regions`, `maxpartitionbytes`, `mode`.
   */
 class BcfDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "bcf"
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val paths = LineSourceUtil.resolvePaths(options)
-    val opts = LineSourceUtil.optionsMap(options)
-    val header = VcfHeader.fromLines(
-      BcfSource.readHeaderText(paths.head).linesIterator)
-    // same guard as VcfFormat.schema: the sample slot mapping comes
-    // from ONE header — a file with a different sample order would
-    // silently swap genotype columns
-    // no samples.nonEmpty short-circuit: a sites-only FIRST file would
-    // otherwise skip the check and silently drop the other files'
-    // genotype columns ([] vs [A,B] is exactly a differing header)
-    if (paths.length > 1 &&
-        opts.getOrElse("include_samples", "true").toBoolean)
-      paths.tail.foreach { p =>
-        val other = BcfSource.sampleColumns(BcfSource.readHeaderText(p))
-        require(other == header.samples,
-          s"sample columns of $p (${other.mkString(",")}) differ from " +
-            s"${paths.head} (${header.samples.mkString(",")}); load " +
-            "files with differing sample headers separately")
-      }
-    VcfHeader.buildSchema(header, opts)
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    VariantModel.schema(LineSourceUtil.resolvePaths(options),
+      LineSourceUtil.optionsMap(options))(p =>
+      VariantModel.header(BcfSource.readHeaderText(p).linesIterator))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
@@ -101,20 +84,6 @@ object BcfSource {
       s.alignedVirtualPosition
     } finally si.close()
   }
-
-  /** The #CHROM line's sample columns (empty when the file has none). */
-  def sampleColumns(headerText: String): Seq[String] =
-    VcfHeader.fromLines(headerText.linesIterator).samples
-
-  /** One schema builder with the VCF text source: the header block of a
-    * BCF is VCF header text, so [[VcfHeader.fromLines]] +
-    * [[VcfHeader.buildSchema]] guarantee the two sources emit identical
-    * schemas (a near-verbatim local copy drifted once — the multi-file
-    * sample guard existed only in the VCF copy). */
-  def schemaFromHeader(headerText: String,
-      options: Map[String, String]): StructType =
-    VcfHeader.buildSchema(
-      VcfHeader.fromLines(headerText.linesIterator), options)
 }
 
 case class BcfInputPartition(pathStr: String, ranges: Seq[(Long, Long)],
@@ -154,15 +123,14 @@ object BcfPartitionReader {
 
 class BcfPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     options: Map[String, String], part: BcfInputPartition)
-    extends GenomicPartitionReader(fullSchema, pushdown) {
+    extends GenomicPartitionReader(fullSchema, pushdown)
+    with VariantLayout.Cells {
 
   private val path = new Path(part.pathStr)
   private val fs = path.getFileSystem(graft.sources.common.GraftHadoop.conf())
   private val headerText = BcfSource.readHeaderText(path)
   private val dict = BcfCodec.dictionaries(headerText)
-  private val byField = options.getOrElse("genotype_by", "sample") == "field"
-  private val shift = -1L - CoordSystem.fromCode(
-    options.getOrElse("coords", "11")).startOffset
+  private val shift = VariantModel.posShift(options)
 
   // ranges are record-aligned; lazily concatenate one BGZF range stream
   // per range (multi-range partitions — graft.sources.common.RangeStreams)
@@ -170,100 +138,40 @@ class BcfPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     graft.sources.common.RangeStreams.bgzfRanges(fs, path, part.ranges)
   private val le = new BamCodec.LEInput(stream)
 
-  private val infoSchema: Option[StructType] =
-    fullSchema.fieldNames.find(_ == "info").map(_ =>
-      fullSchema("info").dataType.asInstanceOf[StructType])
-  private val samplesSchema: Option[StructType] =
-    fullSchema.fieldNames.find(_ == "samples").map(_ =>
-      fullSchema("samples").dataType.asInstanceOf[StructType])
-
   private val residual =
     new RegionResidual(part.regions, dict.contigs.zipWithIndex)
 
+  private val layout = new VariantLayout(fullSchema, pushdown.requiredNested,
+    options.getOrElse("genotype_by", "sample") == "field", "BCF")
+
   // projection-aware decode: un-projected INFO values / the whole
-  // per-sample block skip typed decoding (region residual checks use
-  // contigId/pos0/rlen, which are always decoded, so this is safe even
-  // under region queries)
-  private val wantInfo = pushdown.required.fieldNames.contains("info")
-  private val wantSamples = pushdown.required.fieldNames.contains("samples")
-  // nested pruning → string-dictionary index predicates: un-requested
-  // INFO keys / FORMAT fields are size-skipped in the codec, never boxed
-  private def nestedStruct(name: String): Option[StructType] =
-    LineSourceUtil.nestedStruct(pushdown.requiredNested, name)
-  private def dictIdx(names: Set[String]): Set[Int] =
-    names.flatMap(n => Some(dict.strings.indexOf(n)).filter(_ >= 0))
-  private val wantedInfoIdx: Option[Set[Int]] =
-    nestedStruct("info").map(st => dictIdx(st.fieldNames.toSet))
-  private val wantedFmtIdx: Option[Set[Int]] =
-    nestedStruct("samples").map { st =>
-      val keys =
-        if (byField) st.fieldNames.toSet
-        else st.fields.flatMap(
-          _.dataType.asInstanceOf[StructType].fieldNames).toSet
-      dictIdx(keys)
-    }
-  private val wantInfoKey: Int => Boolean =
-    k => wantedInfoIdx.forall(_(k))
-  private val wantFmtKey: Int => Boolean =
-    k => wantedFmtIdx.forall(_(k))
-
-  // ---- per-partition precomputation: the hot row loop must never
-  // touch field metadata, fieldNames arrays (each call allocates), or
-  // string maps per record — the text-path VcfParser upholds the same
-  // contract, and this reader paid all three per record before
-  private val infoSlotByDict: Array[Int] = {
-    val nameToSlot: Map[String, Int] =
-      infoSchema.map(_.fieldNames.zipWithIndex.toMap).getOrElse(Map.empty)
-    Array.tabulate(dict.strings.size) { i =>
-      val n = dict.strings(i)
-      if (n == null) -1 else nameToSlot.getOrElse(n, -1)
-    }
-  }
-  private def metaSlot(f: StructField, default: Int): Int =
-    if (f.metadata.contains("vcf_sample_idx"))
-      f.metadata.getLong("vcf_sample_idx").toInt
-    else default
+  // per-sample block skip typed decoding, and un-requested INFO keys and
+  // FORMAT fields are size-skipped in the codec, never boxed (region
+  // residual checks use contigId/pos0/rlen, which are always decoded)
   private val dictIdxOfName: Map[String, Int] =
-    dict.strings.zipWithIndex
-      .collect { case (s, i) if s != null => s -> i }.toMap
-  // byField layout: outer field = FORMAT key (dict idx per field),
-  // inner = samples (slot per inner field)
-  private val byFieldDictIdx: Array[Int] = samplesSchema match {
-    case Some(ss) if byField =>
-      ss.fields.map(f => dictIdxOfName.getOrElse(f.name, -1))
-    case _ => Array.empty
+    dict.strings.zipWithIndex.collect { case (s, i) if s != null => s -> i }.toMap
+  private def byDict(names: Iterable[(String, Int)]): Array[Int] = {
+    val arr = Array.fill(dict.strings.size)(-1)
+    names.foreach { case (n, i) => dictIdxOfName.get(n).foreach(arr(_) = i) }
+    arr
   }
-  private val byFieldInnerSlots: Array[Array[Int]] = samplesSchema match {
-    case Some(ss) if byField =>
-      ss.fields.map(_.dataType.asInstanceOf[StructType].fields
-        .zipWithIndex.map { case (sf, j) => metaSlot(sf, j) })
-    case _ => Array.empty
-  }
-  // bySample layout: outer field = sample (its value slot), inner =
-  // FORMAT keys (same struct for every sample → one dict-idx array)
-  private val bySampleSlots: Array[Int] = samplesSchema match {
-    case Some(ss) if !byField =>
-      ss.fields.zipWithIndex.map { case (f, j) => metaSlot(f, j) }
-    case _ => Array.empty
-  }
-  private val bySampleFieldDictIdx: Array[Int] = samplesSchema match {
-    case Some(ss) if !byField && ss.fields.nonEmpty =>
-      ss.fields.head.dataType.asInstanceOf[StructType].fields
-        .map(ff => dictIdxOfName.getOrElse(ff.name, -1))
-    case _ => Array.empty
-  }
+  // dictionary index → info slot / layout FORMAT key, -1 when not read
+  private val infoSlotByDict = byDict(layout.infoIndex)
+  private val formatKeyByDict = byDict(layout.formatKeys.zipWithIndex)
+  private def lookup(table: Array[Int], k: Int): Int =
+    if (k >= 0 && k < table.length) table(k) else -1
+  private val wantInfoKey: Int => Boolean = lookup(infoSlotByDict, _) >= 0
+  private val wantFmtKey: Int => Boolean = lookup(formatKeyByDict, _) >= 0
 
-  // same malformed-record policy as the text reader (VcfSource
-  // promises "FAILFAST raises, PERMISSIVE skips the record" for the
-  // shared Number=n enforcement — the BCF face must honor the option
-  // too, not silently ignore it)
+  // same malformed-record policy as the text reader (FAILFAST raises,
+  // PERMISSIVE skips the record)
   private val permissive =
     options.getOrElse("mode", "FAILFAST").equalsIgnoreCase("permissive")
   private var skipped = 0L
 
   override protected def nextRow(): InternalRow = {
     while (true) {
-      BcfCodec.readRecord(le, wantInfo, wantSamples,
+      BcfCodec.readRecord(le, layout.infoSlot >= 0, layout.samplesSlot >= 0,
         wantInfoKey, wantFmtKey) match {
         case None => return null
         case Some(rec) if residual.isEmpty || residual.overlaps(
@@ -286,104 +194,41 @@ class BcfPartitionReader(fullSchema: StructType, pushdown: Pushdown,
 
   private def utf8(s: String) = UTF8String.fromString(s)
 
-  // per-record row layout, resolved once — same JIT-stability rule as
-  // the VCF text parser: the hot path must not run Option.toSeq.map
-  // lambdas or an array ++ whose steady-state cost depends on whether
-  // C2 happens to inline the generic collection machinery
-  private val infoStructOrNull: StructType = infoSchema.orNull
-  private val samplesStructOrNull: StructType = samplesSchema.orNull
-  private val samplesOutSlot: Int =
-    if (samplesStructOrNull == null) -1
-    else 7 + (if (infoStructOrNull != null) 1 else 0)
-  private val outRowWidth: Int = 7 +
-    (if (infoStructOrNull != null) 1 else 0) +
-    (if (samplesStructOrNull != null) 1 else 0)
-
-  // formats are few per record: a linear probe beats building a
-  // string-keyed map per record
-  private def valsFor(rec: BcfCodec.BcfRecord,
-      dictIdx: Int): IndexedSeq[Any] =
-    if (dictIdx < 0) null
-    else {
-      var i = 0
-      var res: IndexedSeq[Any] = null
-      while (res == null && i < rec.formats.length) {
-        if (rec.formats(i)._1 == dictIdx) res = rec.formats(i)._2
-        i += 1
-      }
-      res
-    }
-
-  private def infoRowOf(rec: BcfCodec.BcfRecord): GenericInternalRow = {
-    val is = infoStructOrNull
-    val arr = new Array[Any](is.length)
+  private def infoRow(rec: BcfCodec.BcfRecord): GenericInternalRow = {
+    val arr = new Array[Any](layout.infoWidth)
     val it = rec.info.iterator
     while (it.hasNext) {
       val (keyIdx, v) = it.next()
-      val fi =
-        if (keyIdx >= 0 && keyIdx < infoSlotByDict.length)
-          infoSlotByDict(keyIdx)
-        else -1
-      if (fi >= 0) arr(fi) = enforceCount(is(fi),
-        convert(is(fi).dataType, v))
+      val slot = lookup(infoSlotByDict, keyIdx)
+      if (slot >= 0) arr(slot) = layout.info(slot,
+        VariantValues.fromTyped(v, layout.infoTargets(slot)))
     }
     new GenericInternalRow(arr)
   }
 
-  private def samplesRowByField(
-      rec: BcfCodec.BcfRecord): GenericInternalRow = {
-    val ss = samplesStructOrNull
-    val arr = new Array[Any](ss.length)
-    var i = 0
-    while (i < ss.length) {
-      val fieldF = ss.fields(i)
-      val sampleStruct = fieldF.dataType.asInstanceOf[StructType]
-      val inner = new Array[Any](sampleStruct.length)
-      val vals = valsFor(rec, byFieldDictIdx(i))
-      if (vals != null) {
-        val slots = byFieldInnerSlots(i)
-        var j = 0
-        while (j < sampleStruct.length) {
-          val slot = slots(j)
-          if (slot < vals.size)
-            inner(j) = enforceCount(sampleStruct.fields(j),
-              convertSample(fieldF.name,
-                sampleStruct.fields(j).dataType, vals(slot)))
-          j += 1
-        }
-      }
-      arr(i) = new GenericInternalRow(inner)
-      i += 1
-    }
-    new GenericInternalRow(arr)
+  // the record's per-sample vectors by layout FORMAT key, for cell()
+  private val formatVals = new Array[IndexedSeq[Any]](layout.formatKeys.length)
+
+  override def cell(key: Int, sample: Int, target: Int): Any = {
+    val vals = formatVals(key)
+    if (vals == null || sample >= vals.size) null
+    else VariantValues.fromTyped(vals(sample), target)
   }
 
-  private def samplesRowBySample(
-      rec: BcfCodec.BcfRecord): GenericInternalRow = {
-    val ss = samplesStructOrNull
-    val arr = new Array[Any](ss.length)
-    var j = 0
-    while (j < ss.length) {
-      val fieldStruct = ss.fields(j).dataType.asInstanceOf[StructType]
-      val inner = new Array[Any](fieldStruct.length)
-      val slot = bySampleSlots(j)
-      var i = 0
-      while (i < fieldStruct.length) {
-        val ff = fieldStruct.fields(i)
-        val vals = valsFor(rec, bySampleFieldDictIdx(i))
-        if (vals != null && slot < vals.size)
-          inner(i) = enforceCount(ff,
-            convertSample(ff.name, ff.dataType, vals(slot)))
-        i += 1
-      }
-      arr(j) = new GenericInternalRow(inner)
-      j += 1
+  private def samplesRow(rec: BcfCodec.BcfRecord): GenericInternalRow = {
+    java.util.Arrays.fill(formatVals.asInstanceOf[Array[AnyRef]], null)
+    val it = rec.formats.iterator
+    while (it.hasNext) {
+      val (keyIdx, vals) = it.next()
+      val key = lookup(formatKeyByDict, keyIdx)
+      // a duplicated FORMAT key resolves to its first occurrence
+      if (key >= 0 && formatVals(key) == null) formatVals(key) = vals
     }
-    new GenericInternalRow(arr)
+    layout.samplesRow(this)
   }
 
   private def toRow(rec: BcfCodec.BcfRecord): InternalRow = {
-    val out = new Array[Any](outRowWidth)
+    val out = new Array[Any](layout.width)
     if (rec.contigId >= 0 && rec.contigId < dict.contigs.size)
       out(0) = utf8(dict.contigs(rec.contigId))
     out(1) = rec.pos0 + 1 + shift
@@ -402,108 +247,9 @@ class BcfPartitionReader(fullSchema: StructType, pushdown: Pushdown,
           s"FILTER index $i not in the header dictionary")
         utf8(dict.strings(i))
       }.toArray)
-    if (infoStructOrNull != null && wantInfo) out(7) = infoRowOf(rec)
-    if (samplesOutSlot >= 0 && wantSamples)
-      out(samplesOutSlot) =
-        if (byField) samplesRowByField(rec) else samplesRowBySample(rec)
+    if (layout.infoSlot >= 0) out(layout.infoSlot) = infoRow(rec)
+    if (layout.samplesSlot >= 0) out(layout.samplesSlot) = samplesRow(rec)
     new GenericInternalRow(out)
-  }
-
-  /** Enforce a declared fixed Number=n carried as field metadata (the
-    * reference's FixedSizeList semantics, `variant/model/info.rs:81-113`):
-    * a BCF value longer than the declaration is malformed. Shorter is
-    * legal — htslib encodes missing sample values as MISSING +
-    * END_OF_VECTOR padding, which the codec strips, so under-length
-    * vectors are how '.' looks after decode. */
-  private def enforceCount(f: StructField, value: Any): Any =
-    VcfHeader.enforceNumber(f, value, "BCF")
-
-  private def convert(dt: DataType, v: Any): Any = (dt, v) match {
-    case (BooleanType, _) => true // Flag: presence means true, value is void
-    case (_, null) => null
-    case (LongType, l: java.lang.Long) => l.longValue()
-    case (LongType, xs: Seq[_]) =>
-      // Number=1 with a multi-value vector is malformed — the VCF text
-      // reader fails on the same data, silently keeping the head would
-      // diverge from it
-      require(xs.lengthCompare(1) <= 0,
-        s"scalar-typed BCF value carries ${xs.length} elements")
-      xs.headOption.map {
-        case l: java.lang.Long => l.longValue()
-        case _ => null
-      }.orNull
-    // int-encoded values against a Float-declared field convert (the
-    // text reader parses "3" as 3.0f — parity demands the same here)
-    case (FloatType, f: java.lang.Float) => f.floatValue()
-    case (FloatType, l: java.lang.Long) => l.floatValue()
-    case (FloatType, xs: Seq[_]) =>
-      require(xs.lengthCompare(1) <= 0,
-        s"scalar-typed BCF value carries ${xs.length} elements")
-      xs.headOption.map {
-        case f: java.lang.Float => f.floatValue()
-        case l: java.lang.Long => l.floatValue()
-        case _ => null
-      }.orNull
-    case (StringType, s: String) => utf8(s)
-    case (StringType, other) => utf8(other.toString)
-    case (ArrayType(LongType, _), xs: Seq[_]) =>
-      ArrayData.toArrayData(xs.map {
-        case l: java.lang.Long => l
-        case _ => null
-      }.toArray)
-    case (ArrayType(LongType, _), l: java.lang.Long) =>
-      ArrayData.toArrayData(Array(l))
-    case (ArrayType(FloatType, _), xs: Seq[_]) =>
-      ArrayData.toArrayData(xs.map {
-        case f: java.lang.Float => f
-        case l: java.lang.Long => java.lang.Float.valueOf(l.floatValue())
-        case _ => null
-      }.toArray)
-    case (ArrayType(FloatType, _), f: java.lang.Float) =>
-      ArrayData.toArrayData(Array(f))
-    case (ArrayType(FloatType, _), l: java.lang.Long) =>
-      ArrayData.toArrayData(Array(l.floatValue()))
-    case (ArrayType(StringType, _), s: String) =>
-      ArrayData.toArrayData(s.split(",").map(utf8))
-    case (ArrayType(StringType, _), xs: Seq[_]) =>
-      ArrayData.toArrayData(xs.map {
-        case s: String => utf8(s)
-        case other if other != null => utf8(other.toString)
-        case _ => null
-      }.toArray)
-    // loud, like the text reader: a record whose encoded type cannot
-    // satisfy the header-declared schema type used to fall through to
-    // silent null — silent data loss where the same data through the
-    // VCF text path raises at parse time. PERMISSIVE mode turns this
-    // into a skipped record; FAILFAST surfaces it.
-    case (dt2, other) => throw new IllegalArgumentException(
-      s"BCF value of type ${other.getClass.getSimpleName} does not " +
-        s"match the header-declared ${dt2.simpleString}")
-  }
-
-  /** FORMAT conversion with the GT special case: BCF encodes GT as int
-    * vector (allele+1)<<1 | phased. */
-  private def convertSample(name: String, dt: DataType, v: Any): Any = {
-    dt match {
-      case ArrayType(st: StructType, _) if name == "GT" &&
-          st.fieldNames.sameElements(Array("allele", "phased")) =>
-        val ints: Seq[Any] = v match {
-          case l: java.lang.Long => Seq(l)
-          case xs: Seq[_] => xs
-          case _ => return null
-        }
-        if (ints.isEmpty) null
-        else ArrayData.toArrayData(ints.map {
-          case l: java.lang.Long =>
-            val enc = l.toInt
-            val allele = (enc >> 1) - 1
-            new GenericInternalRow(Array[Any](
-              if (allele < 0) null else allele, (enc & 1) == 1))
-          case _ =>
-            new GenericInternalRow(Array[Any](null, false))
-        }.toArray)
-      case other => convert(other, v)
-    }
   }
 
   override def close(): Unit = stream.close()

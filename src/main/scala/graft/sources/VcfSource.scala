@@ -4,8 +4,6 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
-import scala.collection.mutable
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
@@ -14,27 +12,21 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.formats.VariantValues
 import graft.sources.common.{LineFormat, LineParser, LineSourceUtil, LineTableProvider}
 
-/** VCF text reader (SURVEY §2.1 S8).
-  *
-  * Fixed columns per the reference's variant model
-  * (`/root/reference/oxbow/src/variant/model/field.rs:17-65`):
-  * `chrom, pos, id: array<string>, ref, alt: array<string>, qual: float,
-  * filter: array<string>`, plus:
-  *  - `info` struct typed from the header's `##INFO` definitions
-  *    (`variant/model/info.rs:81-177`): Number=1 → scalar, anything else →
-  *    array; Type Integer→long (widened), Float→float, String/Character→
-  *    string, Flag→boolean (true when present, null when absent)
-  *  - `samples` struct from `##FORMAT` + the sample columns
-  *    (`variant/model.rs:230-270`): `genotype_by=sample` (default) nests
-  *    sample→field; `genotype_by=field` pivots to field→sample. `GT` is
-  *    special-cased to `array<struct<allele:int, phased:boolean>>`
-  *    (`variant/model/genotype.rs:169-180`).
+/** VCF text reader (SURVEY §2.1 S8). It reads through the one variant
+  * model it shares with the BCF reader, [[VariantModel]]: the schema
+  * (seven fixed columns, the header-typed `info` struct, the `samples`
+  * struct in either `genotype_by` layout, GT as
+  * `array<struct<allele:int, phased:boolean>>`), the multi-file sample
+  * guard, the per-partition [[VariantLayout]] and, through
+  * [[graft.formats.VariantValues]], the missing, Flag, GT and Number
+  * rules. This file keeps only the text decode, [[VcfParser]].
   *
   * Options: `include_samples` (default true), `genotype_by` (sample|field),
   * `samples` (comma list subset), `info_fields` (comma list subset),
-  * `coords` (`11` default), `regions`, `maxpartitionbytes`.
+  * `coords` (`11` default), `regions`, `maxpartitionbytes`, `mode`.
   */
 class VcfFormat extends LineFormat {
   override def shortName: String = "vcf"
@@ -85,27 +77,23 @@ class VcfFormat extends LineFormat {
   }
 
   override def schema(options: Map[String, String], paths: Seq[Path],
-      conf: Configuration): StructType = {
-    val header = VcfHeader.read(paths.head, conf)
-    // the sample-column mapping comes from ONE header but is applied to
-    // every file: a file with a different sample order would silently
-    // assign one sample's genotypes to another. Planning-time check —
-    // a header read per file, far cheaper than wrong data. (FORMAT
-    // divergence is safe: the per-row FORMAT string drives that
-    // parsing; differing INFO types fail loudly at parse time.)
-    // no samples.nonEmpty short-circuit: a sites-only FIRST file would
-    // otherwise skip the check and silently drop the other files'
-    // genotype columns ([] vs [A,B] is exactly a differing header)
-    if (paths.length > 1 &&
-        options.getOrElse("include_samples", "true").toBoolean)
-      paths.tail.foreach { p =>
-        val other = VcfHeader.read(p, conf).samples
-        require(other == header.samples,
-          s"sample columns of $p (${other.mkString(",")}) differ from " +
-            s"${paths.head} (${header.samples.mkString(",")}); load " +
-            "files with differing sample headers separately")
-      }
-    VcfHeader.buildSchema(header, options)
+      conf: Configuration): StructType =
+    VariantModel.schema(paths, options)(readHeader(_, conf))
+
+  private def readHeader(path: Path, conf: Configuration): VcfHeaderInfo = {
+    val raw = path.getFileSystem(conf).open(path)
+    // the GZIP constructor reads the stream header and throws on
+    // empty/corrupt input BEFORE the reader's try/finally exists —
+    // without this guard `raw` (a connection-holding filesystem
+    // stream) leaks on every such file during schema inference
+    val in =
+      try {
+        if (LineSourceUtil.isGzip(path)) new GZIPInputStream(raw) else raw
+      } catch { case e: Throwable => raw.close(); throw e }
+    val r = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    try VariantModel.header(Iterator.continually(r.readLine())
+      .takeWhile(l => l != null && l.startsWith("#")))
+    finally r.close()
   }
 
   override def newParser(fullSchema: StructType,
@@ -120,360 +108,73 @@ class VcfFormat extends LineFormat {
     * are parsed (selecting `samples.s1.GT` out of a 1000-sample file
     * parses one sample column, not a thousand). */
   override def newParser(fullSchema: StructType,
-      options: Map[String, String], parseNeeded: StructType): LineParser = {
-    def nested(name: String): Option[StructType] =
-      graft.sources.common.LineSourceUtil.nestedStruct(parseNeeded, name)
-    val top = parseNeeded.fieldNames.toSet
-    new VcfParser(fullSchema,
-      byField = options.getOrElse("genotype_by", "sample") == "field",
-      shift = -1L - coordSystem(options).startOffset,
-      infoNeeded = nested("info"),
-      samplesNeeded = nested("samples"),
-      fixedNeeded = VcfParser.FixedNames.map(top.contains))
-  }
+      options: Map[String, String], parseNeeded: StructType): LineParser =
+    new VcfParser(new VariantLayout(fullSchema, parseNeeded,
+      options.getOrElse("genotype_by", "sample") == "field", "VCF"),
+      VariantModel.posShift(options))
 }
 
-final case class VcfTypeDef(id: String, number: String, vcfType: String) {
+/** The VCF text decode: a tab-offset scan of each line, INFO's `key=value`
+  * scan and the sample columns split at ':', filling the slots `layout`
+  * names (rows keep the full schema's shape; other slots stay null). */
+class VcfParser(layout: VariantLayout, shift: Long)
+    extends LineParser with VariantLayout.Cells {
 
-  /** Declared fixed cardinality when Number=n with n > 1 (the
-    * reference's FixedSizeList case, `variant/model/info.rs:81-113`).
-    * Spark has no fixed-size array type, so the count is carried as
-    * field metadata and enforced by the parser: a record carrying more
-    * values than declared is malformed (FAILFAST raises, PERMISSIVE
-    * skips the record); fewer is legal (missing-value conventions).
-    * Flags, GT and the A/R/G/. symbolic numbers are unconstrained. */
-  def fixedCount: Option[Int] =
-    if (vcfType == "Flag" || id == "GT") None
-    else number.toIntOption.filter(_ > 1)
-
-  /** StructField metadata carrying [[fixedCount]] (key `vcf_number`). */
-  def fieldMetadata: Metadata =
-    fixedCount.map(n => new MetadataBuilder()
-      .putLong("vcf_number", n.toLong).build()).getOrElse(Metadata.empty)
-
-  /** Spark type per the reference mapping; GT is special-cased. */
-  def sparkType: DataType = {
-    if (id == "GT") return ArrayType(StructType(Seq(
-      StructField("allele", IntegerType), StructField("phased", BooleanType))))
-    val scalar: DataType = vcfType match {
-      case "Integer" => LongType
-      case "Float" => FloatType
-      case "Flag" => BooleanType
-      case _ => StringType // String | Character
-    }
-    if (vcfType == "Flag") scalar
-    else if (number == "1" || number == "0") scalar
-    else ArrayType(scalar)
-  }
-}
-
-final case class VcfHeaderInfo(info: Seq[VcfTypeDef], format: Seq[VcfTypeDef],
-    samples: Seq[String])
-
-object VcfHeader {
-  private val DefRe = """##(INFO|FORMAT)=<(.+)>""".r
-
-  /** THE Number=n FixedSizeList enforcement shared by the VCF text
-    * parser and the BCF binary reader (the reference's semantics,
-    * `variant/model/info.rs:81-113`): a value longer than the declared
-    * fixed count is malformed. Shorter is legal — '.'-padded /
-    * END_OF_VECTOR-stripped vectors are how missing looks after
-    * decode. One definition so the two faces cannot drift (a
-    * near-verbatim local copy drifted once before). */
-  def enforceNumber(f: StructField, value: Any, what: String): Any = {
-    if (value != null && f.metadata.contains("vcf_number")) {
-      val n = f.metadata.getLong("vcf_number")
-      value match {
-        case a: org.apache.spark.sql.catalyst.util.ArrayData
-            if a.numElements() > n =>
-          throw new IllegalArgumentException(
-            s"$what field ${f.name} declares Number=$n but the record " +
-              s"carries ${a.numElements()} values")
-        case _ => ()
-      }
-    }
-    value
-  }
-
-  def read(path: Path, conf: Configuration): VcfHeaderInfo = {
-    val fs = path.getFileSystem(conf)
-    val raw = fs.open(path)
-    // the GZIP constructor reads the stream header and throws on
-    // empty/corrupt input BEFORE the reader's try/finally exists —
-    // without this guard `raw` (a connection-holding filesystem
-    // stream) leaks on every such file during schema inference
-    val in =
-      try {
-        if (LineSourceUtil.isGzip(path)) new GZIPInputStream(raw) else raw
-      } catch { case e: Throwable => raw.close(); throw e }
-    val r = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-    try {
-      val lines = Iterator.continually(r.readLine())
-        .takeWhile(l => l != null && l.startsWith("#"))
-      fromLines(lines)
-    } finally r.close()
-  }
-
-  /** Parse the `##`/`#CHROM` header lines into the typed model — shared
-    * by the text reader (file head) and the BCF reader (header block
-    * text), so the two sources cannot drift on header semantics. */
-  def fromLines(lines: Iterator[String]): VcfHeaderInfo = {
-    val info = mutable.ArrayBuffer.empty[VcfTypeDef]
-    val format = mutable.ArrayBuffer.empty[VcfTypeDef]
-    var samples: Seq[String] = Nil
-    lines.foreach {
-      case DefRe(kind, body) =>
-        val attrs = parseDefBody(body)
-        val d = VcfTypeDef(attrs.getOrElse("ID", ""),
-          attrs.getOrElse("Number", "."), attrs.getOrElse("Type", "String"))
-        if (d.id.nonEmpty) {
-          if (kind == "INFO") info += d else format += d
-        }
-      case l if l.startsWith("#CHROM") =>
-        val cols = l.split("\t")
-        if (cols.length > 9) samples = cols.drop(9).toSeq
-      case _ => ()
-    }
-    VcfHeaderInfo(info.toSeq, format.toSeq, samples)
-  }
-
-  /** The output StructType for a parsed header — fixed columns, the
-    * header-typed `info` struct and the `genotype_by`-shaped `samples`
-    * struct (with `vcf_sample_idx` slot metadata). One builder for the
-    * VCF text AND BCF binary sources: the schemas must be identical for
-    * the documented drop-in interchangeability, and a second copy has
-    * already drifted once. */
-  def buildSchema(header: VcfHeaderInfo,
-      options: Map[String, String]): StructType = {
-    val fixed = Seq(
-      StructField("chrom", StringType), StructField("pos", LongType),
-      StructField("id", ArrayType(StringType)), StructField("ref", StringType),
-      StructField("alt", ArrayType(StringType)),
-      StructField("qual", FloatType),
-      StructField("filter", ArrayType(StringType)))
-
-    val infoSubset = options.get("info_fields")
-      .map(_.split(",").map(_.trim).toSet)
-    val infoDefs = header.info.filter(d =>
-      infoSubset.forall(_.contains(d.id)))
-    val infoField =
-      if (infoDefs.isEmpty) None
-      else Some(StructField("info", StructType(infoDefs.map(d =>
-        StructField(d.id, d.sparkType,
-          metadata = d.fieldMetadata)).toIndexedSeq)))
-
-    val includeSamples =
-      options.getOrElse("include_samples", "true").toBoolean
-    val sampleSubset = options.get("samples")
-      .map(_.split(",").map(_.trim).toSet)
-    val samples = header.samples.filter(s => sampleSubset.forall(_.contains(s)))
-    val samplesField =
-      if (!includeSamples || samples.isEmpty || header.format.isEmpty) None
-      else {
-        // each kept sample remembers its position in the FULL header
-        // sample list: with a `samples` subset, schema position j does
-        // not equal file column 9+j
-        def sampleMeta(s: String, base: Metadata): Metadata =
-          new MetadataBuilder().withMetadata(base)
-            .putLong("vcf_sample_idx", header.samples.indexOf(s).toLong)
-            .build()
-        val fieldStruct = StructType(header.format.map(d =>
-          StructField(d.id, d.sparkType,
-            metadata = d.fieldMetadata)).toIndexedSeq)
-        val byField = options.getOrElse("genotype_by", "sample") == "field"
-        val st =
-          if (byField)
-            StructType(header.format.map(d => StructField(d.id,
-              StructType(samples.map(s => StructField(s, d.sparkType,
-                metadata = sampleMeta(s, d.fieldMetadata)))
-                .toIndexedSeq))).toIndexedSeq)
-          else
-            StructType(samples.map(s =>
-              StructField(s, fieldStruct,
-                metadata = sampleMeta(s, Metadata.empty))).toIndexedSeq)
-        Some(StructField("samples", st))
-      }
-
-    StructType((fixed ++ infoField ++ samplesField).toIndexedSeq)
-  }
-
-  /** Parse `ID=DP,Number=1,Type=Integer,Description="..."` respecting
-    * quoted commas (shared with the BCF header/dictionary parsers —
-    * a naive split(",") mis-keys attributes when a Description
-    * contains commas). */
-  private[graft] def parseDefBody(body: String): Map[String, String] = {
-    val out = mutable.Map.empty[String, String]
-    var i = 0; val sb = new StringBuilder; var inQuote = false
-    val parts = mutable.ArrayBuffer.empty[String]
-    while (i < body.length) {
-      val ch = body.charAt(i)
-      if (ch == '"') { inQuote = !inQuote; sb.append(ch) }
-      else if (ch == ',' && !inQuote) { parts += sb.toString; sb.clear() }
-      else sb.append(ch)
-      i += 1
-    }
-    if (sb.nonEmpty) parts += sb.toString
-    parts.foreach { p =>
-      val eq = p.indexOf('=')
-      if (eq > 0) out(p.substring(0, eq)) = p.substring(eq + 1)
-    }
-    out.toMap
-  }
-}
-
-/** `infoNeeded`/`samplesNeeded`: the Catalyst-pruned sub-structs whose
-  * values will actually be consumed — `None` skips the column entirely,
-  * a present struct limits parsing to its fields. Rows are always
-  * emitted in FULL schema shape; un-requested slots stay null.
-  * Parse-everything is expressed by passing the full schema's structs
-  * (as `VcfFormat.newParser` does when a predicate is active). */
-object VcfParser {
-  /** The seven fixed columns, in schema slot order. */
-  val FixedNames: Array[String] =
-    Array("chrom", "pos", "id", "ref", "alt", "qual", "filter")
-}
-
-class VcfParser(fullSchema: StructType, byField: Boolean,
-    shift: Long, infoNeeded: Option[StructType],
-    samplesNeeded: Option[StructType],
-    fixedNeeded: Array[Boolean] = Array.fill(7)(true)) extends LineParser {
-
-  private val infoSchema: Option[StructType] =
-    fullSchema.fieldNames.find(_ == "info").map(_ =>
-      fullSchema("info").dataType.asInstanceOf[StructType])
-  private val parseInfo = infoNeeded.isDefined
-  private val parseSamples = samplesNeeded.isDefined
-  // full-schema slot index per info key, limited to the requested keys
-  private val infoIndex: Map[String, Int] = (infoSchema, infoNeeded) match {
-    case (Some(full), Some(need)) =>
-      val keep = need.fieldNames.toSet
-      full.fieldNames.zipWithIndex.filter(kv => keep(kv._1)).toMap
-    case _ => Map.empty
-  }
-  private val samplesSchema: Option[StructType] =
-    fullSchema.fieldNames.find(_ == "samples").map(_ =>
-      fullSchema("samples").dataType.asInstanceOf[StructType])
-  // per full-schema outer position: the requested inner field names, or
-  // None when that outer entry (sample, or FORMAT field in `byField`
-  // mode) is not consumed at all
-  private val outerNeed: Array[Option[Set[String]]] =
-    (samplesSchema, samplesNeeded) match {
-      case (Some(full), Some(need)) =>
-        full.fields.map(f => need.fields.find(_.name == f.name)
-          .map(_.dataType.asInstanceOf[StructType].fieldNames.toSet))
-      case _ => Array.empty
-    }
-
-  private def sampleColOf(f: StructField, default: Int): Int =
-    if (f.metadata.contains("vcf_sample_idx"))
-      f.metadata.getLong("vcf_sample_idx").toInt
-    else default
-
-  // per-row loop plans, precomputed so the hot path never touches field
-  // metadata or name sets: in sample mode, each outer sample's VCF
-  // column and the consumed inner FORMAT-field indices (null = sample
-  // skipped); in byField mode, each FORMAT field's consumed sample
-  // slots and their VCF columns (null = field skipped)
-  private val sampleModeCols: Array[Int] = samplesSchema match {
-    case Some(ss) if !byField =>
-      ss.fields.zipWithIndex.map { case (f, j) => 9 + sampleColOf(f, j) }
-    case _ => Array.empty
-  }
-  private val sampleModeInner: Array[Array[Int]] = samplesSchema match {
-    case Some(ss) if !byField && parseSamples =>
-      ss.fields.zipWithIndex.map { case (f, j) =>
-        outerNeed(j) match {
-          case Some(need) =>
-            f.dataType.asInstanceOf[StructType].fields.zipWithIndex
-              .collect { case (ff, i) if need(ff.name) => i }
-          case None => null
-        }
-      }
-    case _ => Array.empty
-  }
-  private val byFieldInner: Array[Array[Int]] = samplesSchema match {
-    case Some(ss) if byField && parseSamples =>
-      ss.fields.zipWithIndex.map { case (f, i) =>
-        outerNeed(i) match {
-          case Some(needSamples) =>
-            f.dataType.asInstanceOf[StructType].fields.zipWithIndex
-              .collect { case (sf, j) if needSamples(sf.name) => j }
-          case None => null
-        }
-      }
-    case _ => Array.empty
-  }
-  private val byFieldCols: Array[Array[Int]] = samplesSchema match {
-    case Some(ss) if byField && parseSamples =>
-      ss.fields.zipWithIndex.map { case (f, i) =>
-        if (byFieldInner(i) == null) null
-        else {
-          val sampleStruct = f.dataType.asInstanceOf[StructType]
-          byFieldInner(i).map(j => 9 + sampleColOf(sampleStruct.fields(j), j))
-        }
-      }
-    case _ => Array.empty
-  }
+  private val fixedNeeded = layout.fixed
+  private val infoSlot = layout.infoSlot
+  private val infoIndex = layout.infoIndex
+  private val infoTargets = layout.infoTargets
+  private val samplesSlot = layout.samplesSlot
 
   // memoized FORMAT-column parse: real files carry very few distinct
-  // FORMAT strings, so the split + key-position map is computed once
-  // per distinct value instead of per row (parsers are per-partition
-  // and single-threaded, so plain mutable fields are safe)
+  // FORMAT strings, so the split and the layout keys' positions are
+  // computed once per distinct value instead of per row (parsers are
+  // per-partition and single-threaded, so plain mutable fields are safe)
+  private val keyIndex = new java.util.HashMap[String, Integer]()
+  layout.formatKeys.zipWithIndex.foreach { case (k, i) =>
+    keyIndex.put(k, Integer.valueOf(i)) }
   private var fmtCacheStr: String = null
-  private var fmtCacheIdx: java.util.HashMap[String, Integer] = null
-  private def formatIndex(fmt: String): java.util.HashMap[String, Integer] = {
+  private var fmtCachePos: Array[Int] = null
+  private def formatPositions(fmt: String): Array[Int] = {
     if (fmt != fmtCacheStr) {
-      val m = new java.util.HashMap[String, Integer]()
+      val pos = Array.fill(layout.formatKeys.length)(-1)
       if (fmt != "." && fmt.nonEmpty) {
         val keys = fmt.split(":")
         var i = 0
-        // putIfAbsent: a duplicated FORMAT key resolves to its FIRST
-        // position, matching the indexOf semantics this map replaced
+        // a duplicated FORMAT key resolves to its FIRST position
         while (i < keys.length) {
-          m.putIfAbsent(keys(i), Integer.valueOf(i)); i += 1
+          val k = keyIndex.get(keys(i))
+          if (k != null && pos(k.intValue()) < 0) pos(k.intValue()) = i
+          i += 1
         }
       }
       fmtCacheStr = fmt
-      fmtCacheIdx = m
+      fmtCachePos = pos
     }
-    fmtCacheIdx
+    fmtCachePos
   }
 
   // reusable tab-offset buffer for the column scan
   private var tabBuf = new Array[Int](12)
 
-  /** Enforce a declared fixed Number=n (carried as field metadata):
-    * the reference's FixedSizeList semantics — a record carrying MORE
-    * values than declared is malformed rather than silently shaped
-    * differently. Fewer values are tolerated: both the text convention
-    * (trailing missing values omitted) and BCF's END_OF_VECTOR padding
-    * legally produce short vectors, and rejecting them would refuse
-    * spec-valid files. */
-  private def enforceCount(f: StructField, value: Any): Any =
-    VcfHeader.enforceNumber(f, value, "VCF")
+  // the record whose samples struct is being built, for cell(): each
+  // sample column read is split once per row
+  private var line: String = null
+  private var nTabs = 0
+  private var nCols = 0
+  private var keyPos: Array[Int] = null
+  private val partsCache = new Array[Array[String]](layout.sampleCount)
 
-  private def dot(v: String) = v == "." || v.isEmpty
   private def strList(v: String, sep: Char): Any =
-    if (dot(v)) null
+    if (VariantValues.isMissing(v)) null
     else ArrayData.toArrayData(v.split(sep).map(UTF8String.fromString))
 
-  // Hot-path row layout, resolved once. The per-row path deliberately
-  // avoids generic collection combinators (the previous
-  // `infoSchema.toSeq.map { ... }` / `fixed ++ info ++ samples` shape):
-  // whether C2 inlined List.map into parse was a per-JVM coin flip, and
-  // the losing mode ran full-file scans 2.5-3x slower — on a large
-  // cluster that is a random per-executor straggler, so the hot loop
-  // must not depend on inlining luck.
-  private val infoStructOrNull: StructType = infoSchema.orNull
-  private val samplesStructOrNull: StructType = samplesSchema.orNull
-  private val infoSlot: Int = if (infoStructOrNull != null) 7 else -1
-  private val samplesSlot: Int =
-    if (samplesStructOrNull == null) -1
-    else 7 + (if (infoStructOrNull != null) 1 else 0)
-  private val rowWidth: Int = 7 +
-    (if (infoStructOrNull != null) 1 else 0) +
-    (if (samplesStructOrNull != null) 1 else 0)
-
+  // The per-row path deliberately avoids generic collection combinators
+  // (an earlier `infoSchema.toSeq.map { ... }` / `fixed ++ info ++
+  // samples` shape): whether C2 inlined List.map into parse was a
+  // per-JVM coin flip, and the losing mode ran full-file scans 2.5-3x
+  // slower — on a large cluster that is a random per-executor
+  // straggler, so the hot loop must not depend on inlining luck.
   private def colAt(line: String, nTabs: Int, i: Int): String = {
     val a = if (i == 0) 0 else tabBuf(i - 1) + 1
     val b = if (i == nTabs) line.length else tabBuf(i)
@@ -496,196 +197,76 @@ class VcfParser(fullSchema: StructType, byField: Boolean,
     val nCols = nTabs + 1
     require(nCols >= 8, s"malformed VCF line ($nCols cols)")
 
-    val out = new Array[Any](rowWidth)
+    val out = new Array[Any](layout.width)
     if (fixedNeeded(0)) { val v = colAt(line, nTabs, 0)
-      if (!dot(v)) out(0) = UTF8String.fromString(v) }
+      if (!VariantValues.isMissing(v)) out(0) = UTF8String.fromString(v) }
     if (fixedNeeded(1)) { val v = colAt(line, nTabs, 1)
-      if (!dot(v)) out(1) = v.toLong + shift }
+      if (!VariantValues.isMissing(v)) out(1) = v.toLong + shift }
     if (fixedNeeded(2)) out(2) = strList(colAt(line, nTabs, 2), ';')
     if (fixedNeeded(3)) { val v = colAt(line, nTabs, 3)
-      if (!dot(v)) out(3) = UTF8String.fromString(v) }
+      if (!VariantValues.isMissing(v)) out(3) = UTF8String.fromString(v) }
     if (fixedNeeded(4)) out(4) = strList(colAt(line, nTabs, 4), ',')
     if (fixedNeeded(5)) { val v = colAt(line, nTabs, 5)
-      if (!dot(v)) out(5) = v.toFloat }
+      if (!VariantValues.isMissing(v)) out(5) = v.toFloat }
     if (fixedNeeded(6)) out(6) = strList(colAt(line, nTabs, 6), ';')
 
-    if (infoSlot >= 0 && parseInfo)
-      out(infoSlot) = parseInfoValue(infoStructOrNull, line, nTabs)
-    if (samplesSlot >= 0 && parseSamples)
-      out(samplesSlot) =
-        if (byField) parseSamplesByField(samplesStructOrNull, line,
-          nTabs, nCols)
-        else parseSamplesBySample(samplesStructOrNull, line, nTabs, nCols)
+    if (infoSlot >= 0) out(infoSlot) = infoRow(line, nTabs)
+    if (samplesSlot >= 0) {
+      this.line = line
+      this.nTabs = nTabs
+      this.nCols = nCols
+      keyPos = formatPositions(if (nCols > 8) colAt(line, nTabs, 8) else "")
+      java.util.Arrays.fill(partsCache.asInstanceOf[Array[AnyRef]], null)
+      out(samplesSlot) = layout.samplesRow(this)
+      this.line = null
+    }
     new GenericInternalRow(out)
   }
 
-  private def parseInfoValue(is: StructType, line: String,
-      nTabs: Int): GenericInternalRow = {
-      // single pass over the INFO string, filling schema slots directly:
-      // no split array, no intermediate map, and value substrings are
-      // extracted only for keys the schema keeps (duplicate keys
-      // last-win, matching the previous map behavior)
-      val arr = new Array[Any](is.length)
-      val s = colAt(line, nTabs, 7)
-      if (!dot(s)) {
-        val n = s.length
-        var start = 0
-        while (start < n) {
-          var semi = s.indexOf(';', start)
-          if (semi < 0) semi = n
-          // scan for '=' only within the segment: an unbounded indexOf
-          // would re-scan the whole tail for every flag-style key
-          var eq = start
-          while (eq < semi && s.charAt(eq) != '=') eq += 1
-          val idx = infoIndex.getOrElse(s.substring(start, eq), -1)
-          if (idx >= 0) {
-            val dt = is(idx).dataType
-            if (eq == semi) {
-              // bare key: a Flag is present; a typed key with no value
-              // carries nothing and stays null
-              if (dt == BooleanType) arr(idx) = true
-            } else {
-              val v = s.substring(eq + 1, semi)
-              // '.' is the spec's missing marker for ANY typed value
-              // ('DP=.'): null, same as the fixed and sample paths
-              if (!dot(v))
-                arr(idx) = enforceCount(is(idx), convert(dt, v))
-            }
-          }
-          start = semi + 1
+  private def infoRow(line: String, nTabs: Int): GenericInternalRow = {
+    // single pass over the INFO string, filling schema slots directly:
+    // no split array, no intermediate map, and value substrings are
+    // extracted only for keys the schema keeps (duplicate keys
+    // last-win)
+    val arr = new Array[Any](layout.infoWidth)
+    val s = colAt(line, nTabs, 7)
+    if (!VariantValues.isMissing(s)) {
+      val n = s.length
+      var start = 0
+      while (start < n) {
+        var semi = s.indexOf(';', start)
+        if (semi < 0) semi = n
+        // scan for '=' only within the segment: an unbounded indexOf
+        // would re-scan the whole tail for every flag-style key
+        var eq = start
+        while (eq < semi && s.charAt(eq) != '=') eq += 1
+        val idx = infoIndex.getOrElse(s.substring(start, eq), -1)
+        if (idx >= 0) {
+          // bare key: a Flag is present; a typed key with no value
+          // carries nothing and stays null
+          if (eq == semi) {
+            if (infoTargets(idx) == VariantValues.AsFlag) arr(idx) = true
+          } else arr(idx) = layout.info(idx,
+            VariantValues.fromText(s.substring(eq + 1, semi), infoTargets(idx)))
         }
+        start = semi + 1
       }
-      new GenericInternalRow(arr)
-  }
-
-  private def parseSamplesByField(ss: StructType, line: String,
-      nTabs: Int, nCols: Int): GenericInternalRow = {
-      val fmtIdx =
-        formatIndex(if (nCols > 8) colAt(line, nTabs, 8) else "")
-        // struct{field → struct{sample → value}}; the plan arrays limit
-        // both which FORMAT fields and which samples within them are
-        // parsed; each consumed sample column is split at most once per
-        // row (cached), not once per FORMAT field
-        val arr = new Array[Any](ss.length)
-        val partsCache = new Array[Array[String]](nCols)
-        var i = 0
-        while (i < ss.length) {
-          val innerIdx = byFieldInner(i)
-          if (innerIdx != null) {
-            val sampleStruct =
-              ss.fields(i).dataType.asInstanceOf[StructType]
-            val inner = new Array[Any](sampleStruct.length)
-            val key = fmtIdx.get(ss.fields(i).name)
-            if (key != null) {
-              val keyIdx = key.intValue()
-              val cols = byFieldCols(i)
-              var k = 0
-              while (k < innerIdx.length) {
-                val ci = cols(k)
-                if (ci < nCols) {
-                  var parts = partsCache(ci)
-                  if (parts == null) {
-                    parts = colAt(line, nTabs, ci).split(":", -1)
-                    partsCache(ci) = parts
-                  }
-                  if (keyIdx < parts.length && !dot(parts(keyIdx))) {
-                    val sf = sampleStruct.fields(innerIdx(k))
-                    inner(innerIdx(k)) = enforceCount(sf,
-                      convert(sf.dataType, parts(keyIdx)))
-                  }
-                }
-                k += 1
-              }
-            }
-            arr(i) = new GenericInternalRow(inner)
-          }
-          i += 1
-        }
-        new GenericInternalRow(arr)
-  }
-
-  private def parseSamplesBySample(ss: StructType, line: String,
-      nTabs: Int, nCols: Int): GenericInternalRow = {
-      val fmtIdx =
-        formatIndex(if (nCols > 8) colAt(line, nTabs, 8) else "")
-        // struct{sample → struct{field → value}}; un-requested samples
-        // never even materialize their column substring
-        val arr = new Array[Any](ss.length)
-        var j = 0
-        while (j < ss.length) {
-          val innerIdx = sampleModeInner(j)
-          if (innerIdx != null) {
-            val fieldStruct =
-              ss.fields(j).dataType.asInstanceOf[StructType]
-            val inner = new Array[Any](fieldStruct.length)
-            val ci = sampleModeCols(j)
-            if (ci < nCols) {
-              val parts = colAt(line, nTabs, ci).split(":", -1)
-              var k = 0
-              while (k < innerIdx.length) {
-                val ff = fieldStruct.fields(innerIdx(k))
-                val key = fmtIdx.get(ff.name)
-                if (key != null) {
-                  val keyIdx = key.intValue()
-                  if (keyIdx < parts.length && !dot(parts(keyIdx)))
-                    inner(innerIdx(k)) = enforceCount(ff,
-                      convert(ff.dataType, parts(keyIdx)))
-                }
-                k += 1
-              }
-            }
-            arr(j) = new GenericInternalRow(inner)
-          }
-          j += 1
-        }
-        new GenericInternalRow(arr)
-  }
-
-  private def convert(dt: DataType, v: String): Any = dt match {
-    case LongType => v.toLong
-    case FloatType => v.toFloat
-    case BooleanType => true // Flag present
-    case StringType => UTF8String.fromString(v)
-    case ArrayType(LongType, _) =>
-      ArrayData.toArrayData(v.split(",").map(x =>
-        if (x == "." || x.isEmpty) null else java.lang.Long.valueOf(x.toLong)))
-    case ArrayType(FloatType, _) =>
-      ArrayData.toArrayData(v.split(",").map(x =>
-        if (x == "." || x.isEmpty) null else java.lang.Float.valueOf(x.toFloat)))
-    case ArrayType(StringType, _) =>
-      ArrayData.toArrayData(v.split(",").map(UTF8String.fromString))
-    case ArrayType(st: StructType, _) if st.fieldNames.sameElements(
-        Array("allele", "phased")) =>
-      parseGenotype(v)
-    case other =>
-      throw new IllegalArgumentException(s"unsupported VCF value type $other")
-  }
-
-  /** `"0/1"` → [{0,false},{1,false}]; `"0|1"` → [{0,false},{1,true}];
-    * leading `|` phases the first allele; `.` alleles → null allele. */
-  private def parseGenotype(v: String): Any = {
-    val entries = mutable.ArrayBuffer.empty[InternalRow]
-    var i = 0
-    var phased = false
-    if (v.nonEmpty && v.charAt(0) == '|') { phased = true; i = 1 }
-    val sb = new StringBuilder
-    def emit(p: Boolean): Unit = {
-      val s = sb.toString; sb.clear()
-      val allele: Any =
-        if (s == "." || s.isEmpty) null else s.toInt
-      entries += new GenericInternalRow(Array[Any](allele, p))
     }
-    var curPhased = phased
-    while (i < v.length) {
-      val ch = v.charAt(i)
-      if (ch == '/' || ch == '|') {
-        emit(curPhased)
-        curPhased = ch == '|'
-      } else sb.append(ch)
-      i += 1
+    new GenericInternalRow(arr)
+  }
+
+  override def cell(key: Int, sample: Int, target: Int): Any = {
+    val pos = keyPos(key)
+    val ci = 9 + sample
+    if (pos < 0 || ci >= nCols) null
+    else {
+      var parts = partsCache(sample)
+      if (parts == null) {
+        parts = colAt(line, nTabs, ci).split(":", -1)
+        partsCache(sample) = parts
+      }
+      if (pos < parts.length) VariantValues.fromText(parts(pos), target) else null
     }
-    emit(curPhased)
-    ArrayData.toArrayData(entries.toArray)
   }
 }
 
