@@ -40,6 +40,7 @@ class BcfDataSource extends TableProvider
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
+    VariantModel.requireLayout(schema, "BCF")
     val opts = new CaseInsensitiveStringMap(properties)
     val paths = LineSourceUtil.resolvePaths(opts)
     // M5 catalog surface: ##contig dictionary + CSI record stats

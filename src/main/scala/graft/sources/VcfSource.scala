@@ -9,6 +9,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -272,4 +274,10 @@ class VcfParser(layout: VariantLayout, shift: Long)
 
 class VcfDataSource extends LineTableProvider {
   override def format: VcfFormat = new VcfFormat
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table = {
+    VariantModel.requireLayout(schema, "VCF")
+    super.getTable(schema, partitioning, properties)
+  }
 }

@@ -155,4 +155,13 @@ class BcfSourceSpec extends SparkSuite {
       "##FILTER=<ID=PASS,Description=\"ok\">").mkString("\n"))
     assert(implicitD.strings(0) == "PASS" && implicitD.strings(1) == "DP")
   }
+
+  test("bcf: a reordered user-supplied schema is rejected loudly") {
+    val e = intercept[Exception] {
+      spark.read.format("bcf").schema("pos LONG, chrom STRING")
+        .load(bcfPath).collect()
+    }
+    assert(e.getMessage.contains("select()"),
+      s"misaligned schema not rejected: ${e.getMessage}")
+  }
 }

@@ -283,4 +283,13 @@ class VcfSourceSpec extends SparkSuite {
       d(1).getSeq[Float](2) == Seq(0.5f) && d(1).isNullAt(3))
     assert(d(2).getLong(1) == 7L)
   }
+
+  test("vcf: a reordered user-supplied schema is rejected loudly") {
+    val e = intercept[Exception] {
+      spark.read.format("vcf").schema("pos LONG, chrom STRING")
+        .load(tempFile("reordered.vcf", vcf)).collect()
+    }
+    assert(e.getMessage.contains("select()"),
+      s"misaligned schema not rejected: ${e.getMessage}")
+  }
 }
