@@ -126,7 +126,11 @@ object BcfCodec {
     case TypeChar =>
       val b = new Array[Byte](len)
       bb.get(b)
-      new String(b, "UTF-8")
+      // a char value ends at its first NUL: per-sample FORMAT strings
+      // are NUL-padded to the longest sample's length
+      var n = 0
+      while (n < len && b(n) != 0) n += 1
+      new String(b, 0, n, "UTF-8")
     case TypeFloat =>
       val bits = (0 until len).map(_ => bb.getInt)
       val vals: Seq[Any] = bits.takeWhile(_ != EovFloatBits).map(b =>

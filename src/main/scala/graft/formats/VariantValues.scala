@@ -135,7 +135,12 @@ object VariantValues {
       case _ => mismatch(v)
     }
 
-  private def missing(v: Any): Boolean = v == null
+  private def missing(v: Any): Boolean = v match {
+    case null => true
+    case s: String => isMissing(s)
+    case xs: Seq[_] => xs.isEmpty || xs.lengthCompare(1) == 0 && xs.head == null
+    case _ => false
+  }
 
   /** The one value of a vector in a scalar column: it may hold at most
     * one. */

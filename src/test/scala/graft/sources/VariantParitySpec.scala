@@ -232,4 +232,34 @@ class VariantParitySpec extends SparkSuite {
     assert(rows.map(r => (r.getLong(1), r.getSeq[Long](2))) ==
       Seq((10L, Seq(1L, 2L))))
   }
+
+  /** One site on chr1 whose FORMAT field `key` carries `perSample`, and
+    * whose INFO carries `info`. */
+  private def oneSite(info: Seq[(String, Value)], key: String,
+      perSample: Seq[Value]): Seq[Site] = Seq(Site(0, 100, Nil, "A",
+    Seq("G", "T"), None, Seq("PASS"), info,
+    Seq("GT" -> Seq(gt(u0, u1), gt(u0, u1), gt(u0, u1)), key -> perSample)))
+
+  test("parity: a char FORMAT value NUL-padded to the longest sample") {
+    val rows = assertParity(write("padded", oneSite(Nil, "FT",
+      Seq(Str("PASS"), Str("q1"), Str("LowQual")))))(
+      _.select(col("chrom"), col("pos"), col("samples.NA2.FT")))
+    assert(rows.head.getString(2) == "q1")
+  }
+
+  test("parity: a '.' string value reads null") {
+    val rows = assertParity(write("dotted", oneSite(Seq("SV" -> Str(".")),
+      "FT", Seq(Str("."), Str("."), Str(".")))))(
+      _.select(col("chrom"), col("pos"), col("info.SV"), col("samples.NA1.FT")))
+    assert(rows.head.isNullAt(2) && rows.head.isNullAt(3))
+  }
+
+  test("parity: a FORMAT vector of MISSING then END_OF_VECTOR reads null") {
+    val rows = assertParity(write("eov", oneSite(Nil, "AD", Seq(
+      Ints(Some(4), Some(3), Some(1)), Ints(None), Ints(Some(9), None, None)))))(
+      _.select(col("chrom"), col("pos"), col("samples")))
+    val samples = rows.head.getStruct(2)
+    assert(samples.getStruct(1).isNullAt(2))
+    assert(samples.getStruct(2).getSeq[Any](2) == Seq(9L, null, null))
+  }
 }
