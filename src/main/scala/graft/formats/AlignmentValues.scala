@@ -80,11 +80,13 @@ object TagValues {
     case _ => bb.position(bb.position() + width(tpe))
   }
 
-  /** A SAM text value (the part after `TAG:T:`) into `target`: numbers
-    * that do not parse as the column's type go through a double, and what
-    * still does not parse is null. */
-  def fromText(v: String, target: Int): Any =
-    try target match {
+  /** A SAM text value of type `tpe` (the part after `TAG:T:`) into
+    * `target`: numbers that do not parse as the column's type go through
+    * a double, and what still does not parse is null, as is a value other
+    * than a B array in an array column. */
+  def fromText(tpe: Char, v: String, target: Int): Any =
+    if ((target == AsLongArray || target == AsFloatArray) && tpe != 'B') null
+    else try target match {
       case AsString => UTF8String.fromString(v)
       case AsLong =>
         try v.toLong catch { case _: NumberFormatException => v.toDouble.toLong }
@@ -182,8 +184,8 @@ final class TagSlots(val schema: StructType, index: Map[String, Int]) {
     TagValues.read(bb, tpe, targets(slot))
 
   /** [[TagValues.fromText]] into `slot`'s target. */
-  def fromText(v: String, slot: Int): Any =
-    TagValues.fromText(v, targets(slot))
+  def fromText(tpe: Char, v: String, slot: Int): Any =
+    TagValues.fromText(tpe, v, targets(slot))
 }
 
 /** Reference names as UTF8String, encoded once per reference id and shared

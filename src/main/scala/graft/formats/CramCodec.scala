@@ -638,7 +638,8 @@ object CramCodec {
         }
 
       var features: collection.Seq[Feature] = Nil
-      var mappingQuality = -1
+      // an unmapped record stores no MQ; it reads 0, as in htslib
+      var mappingQuality = 0
       var quals: Array[Byte] = null
       var bases: Array[Byte] = null
       // reference span, walked as the features arrive: FP is a delta, so

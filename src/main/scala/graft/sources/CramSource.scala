@@ -501,8 +501,10 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     if (rec.readName != null) out(0) = UTF8String.fromBytes(rec.readName)
     out(1) = rec.bamFlags
     out(2) = refNamesUtf8(rec.refId)
-    if (mapped) out(3) = rec.alignmentStart.toLong + posShift
-    if (rec.mappingQuality >= 0) out(4) = rec.mappingQuality
+    // placement, not mappedness, as in the BAM decoder: a flag-0x4 read
+    // with a position keeps it
+    if (rec.alignmentStart > 0) out(3) = rec.alignmentStart.toLong + posShift
+    out(4) = rec.mappingQuality
     if (cigar != null && cigar.length > 0) out(5) = UTF8String.fromBytes(cigar)
     out(6) = refNamesUtf8(rec.mateRefId)
     if (rec.matePos > 0) out(7) = rec.matePos.toLong + posShift
@@ -510,8 +512,10 @@ class CramPartitionReader(fullSchema: StructType, pushdown: Pushdown,
     if (seq != null && seq.length > 0) out(9) = UTF8String.fromBytes(seq)
     if (wantQual) out(10) = qualText(rec.qualityScores)
     // end is invariant across coord systems (1-based closed end equals
-    // the 0-based half-open end), matching the BAM reader
-    if (mapped) out(11) = rec.alignmentStart.toLong + rec.referenceLength - 1
+    // the 0-based half-open end), matching the BAM reader; a read that
+    // covers no reference base has none
+    if (mapped && rec.referenceLength > 0)
+      out(11) = rec.alignmentStart.toLong + rec.referenceLength - 1
     if (slots != null) out(12) = buildTagsRow(rec)
     new GenericInternalRow(out)
   }

@@ -152,7 +152,7 @@ class SamParser(fullSchema: StructType, posShift: Long,
         val t = c(i)
         if (t.length >= 5 && t.charAt(2) == ':' && t.charAt(4) == ':') {
           val slot = slots.slot(t.charAt(0), t.charAt(1))
-          if (slot >= 0) tags(slot) = slots.fromText(t.substring(5), slot)
+          if (slot >= 0) tags(slot) = slots.fromText(t.charAt(3), t.substring(5), slot)
         }
         i += 1
       }

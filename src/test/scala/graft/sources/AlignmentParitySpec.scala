@@ -25,13 +25,13 @@ class AlignmentParitySpec extends SparkSuite {
     case (n, l) => s"@SQ\tSN:$n\tLN:$l\n" }.mkString
 
   /** One read: `pos1` is the 1-based start of the first aligned base;
-    * seq comes from the reference under M and is `T` under S and I.
-    * Tag values: Int for 'i', Float for 'f', String for 'Z', Seq[Int] for
-    * a B:i array ('B'). */
+    * seq comes from the reference under M and is `T` under S and I, or is
+    * `bases` (an unmapped read's). Tag values: Int for 'i', Float for 'f',
+    * String for 'Z', Seq[Int] for a B:i array ('B'). */
   private final case class Read(qname: String, flag: Int, refId: Int,
       pos1: Int, mapq: Int, cigar: Seq[(Int, Char)], qual: String,
-      tags: Seq[(String, Char, Any)]) {
-    lazy val seq: String = {
+      tags: Seq[(String, Char, Any)], bases: String = null) {
+    lazy val seq: String = if (bases != null) bases else {
       val sb = new StringBuilder
       var ref0 = pos1 - 1
       cigar.foreach {
@@ -65,7 +65,8 @@ class AlignmentParitySpec extends SparkSuite {
       case (t, c, v) => s"$t:$c:$v"
     }
     (Seq(r.qname, r.flag.toString, s"chr${r.refId + 1}", r.pos1.toString,
-      r.mapq.toString, r.cigar.map { case (n, op) => s"$n$op" }.mkString,
+      r.mapq.toString,
+      if (r.cigar.isEmpty) "*" else r.cigar.map { case (n, op) => s"$n$op" }.mkString,
       "*", "0", "0", r.seq, Option(r.qual).getOrElse("*")) ++ tags)
       .mkString("\t")
   }
@@ -95,7 +96,7 @@ class AlignmentParitySpec extends SparkSuite {
     }
     CRec(r.qname, r.flag, r.refId, r.pos1, r.mapq, r.seq.length, feats,
       quals = Option(r.qual).map(_.map(c => (c - 33).toByte).toArray).orNull,
-      tags = r.tags)
+      bases = if ((r.flag & 0x4) != 0) r.seq else null, tags = r.tags)
   }
 
   /** `rs` as SAM, BAM and CRAM files: (format, path) in that order. */
@@ -195,5 +196,30 @@ class AlignmentParitySpec extends SparkSuite {
       .filter(_._1 != "sam"))(_.select("qname", "rname", "pos", "seq"))
     assert(rows(1).isNullAt(1) && rows(1).getLong(2) == 8L)
     assert(rows(1).getString(3) == contigs(2).substring(7, 17))
+  }
+
+  test("parity: a placed unmapped read keeps its pos, and mapq 0") {
+    val rows = assertParity(write("placed", Seq(
+      Read("m1", 0, 0, 5, 60, Seq((10, 'M')), null, Nil),
+      Read("u1", 4, 0, 10, 0, Nil, null, Nil, bases = "ACGTA"))))(
+      _.select("qname", "rname", "pos", "mapq", "end"))
+    assert(rows(1) == Row("u1", "chr1", 10L, 0, null))
+  }
+
+  test("parity: a read with no reference span has a null end") {
+    val rows = assertParity(write("clipped", Seq(
+      Read("c1", 0, 0, 5, 60, Seq((10, 'M')), null, Nil),
+      Read("c2", 0, 0, 21, 60, Seq((4, 'S')), null, Nil))))(
+      _.select("qname", "rname", "pos", "end"))
+    assert(rows(1) == Row("c2", "chr1", 21L, null))
+  }
+
+  test("parity: a scalar tag in an array column reads null") {
+    val rows = assertParity(write("scalar", Seq(
+      Read("x1", 0, 0, 5, 60, Seq((10, 'M')), null, Seq(("XB", 'i', 5))),
+      Read("x2", 0, 0, 30, 60, Seq((10, 'M')), null,
+        Seq(("XB", 'B', Seq(4, 2)))))), Map("tags" -> "XB:B:i"))(
+      _.select("qname", "tags.XB"))
+    assert(rows.head.isNullAt(1) && rows(1).getSeq[Long](1) == Seq(4L, 2L))
   }
 }
