@@ -165,13 +165,11 @@ object VariantModel {
     * Rejected loudly; projection belongs in select(). */
   def requireLayout(schema: StructType, format: String): Unit = {
     val (fixed, rest) = schema.fields.toSeq.splitAt(FixedFields.length)
-    def struct(dt: DataType) = dt.isInstanceOf[StructType]
+    def struct(f: StructField) = f.dataType.isInstanceOf[StructType]
     val restOk = rest.map(_.name) match {
-      case Seq() => true
-      case Seq("info") => struct(rest.head.dataType)
-      case Seq("samples") | Seq("info", "samples") =>
-        rest.forall(f => struct(f.dataType)) && rest.last.dataType
-          .asInstanceOf[StructType].forall(f => struct(f.dataType))
+      case Seq() | Seq("info") => rest.forall(struct)
+      case Seq("samples") | Seq("info", "samples") => rest.forall(struct) &&
+        rest.last.dataType.asInstanceOf[StructType].forall(struct)
       case _ => false
     }
     require(restOk && fixed.map(f => (f.name, f.dataType)) ==
@@ -189,7 +187,7 @@ object VariantModel {
 
   /** The declared Number=n of a field (its `vcf_number` metadata), or -1
     * when unconstrained. */
-  def maxCount(f: StructField): Int =
+  private[sources] def maxCount(f: StructField): Int =
     if (f.metadata.contains("vcf_number")) f.metadata.getLong("vcf_number").toInt
     else -1
 

@@ -123,18 +123,12 @@ class VcfParser(layout: VariantLayout, shift: Long)
     extends LineParser with VariantLayout.Cells {
 
   private val fixedNeeded = layout.fixed
-  private val infoSlot = layout.infoSlot
-  private val infoIndex = layout.infoIndex
-  private val infoTargets = layout.infoTargets
-  private val samplesSlot = layout.samplesSlot
 
   // memoized FORMAT-column parse: real files carry very few distinct
   // FORMAT strings, so the split and the layout keys' positions are
   // computed once per distinct value instead of per row (parsers are
   // per-partition and single-threaded, so plain mutable fields are safe)
-  private val keyIndex = new java.util.HashMap[String, Integer]()
-  layout.formatKeys.zipWithIndex.foreach { case (k, i) =>
-    keyIndex.put(k, Integer.valueOf(i)) }
+  private val keyIndex: Map[String, Int] = layout.formatKeys.zipWithIndex.toMap
   private var fmtCacheStr: String = null
   private var fmtCachePos: Array[Int] = null
   private def formatPositions(fmt: String): Array[Int] = {
@@ -145,8 +139,8 @@ class VcfParser(layout: VariantLayout, shift: Long)
         var i = 0
         // a duplicated FORMAT key resolves to its FIRST position
         while (i < keys.length) {
-          val k = keyIndex.get(keys(i))
-          if (k != null && pos(k.intValue()) < 0) pos(k.intValue()) = i
+          val k = keyIndex.getOrElse(keys(i), -1)
+          if (k >= 0 && pos(k) < 0) pos(k) = i
           i += 1
         }
       }
@@ -212,14 +206,14 @@ class VcfParser(layout: VariantLayout, shift: Long)
       if (!VariantValues.isMissing(v)) out(5) = v.toFloat }
     if (fixedNeeded(6)) out(6) = strList(colAt(line, nTabs, 6), ';')
 
-    if (infoSlot >= 0) out(infoSlot) = infoRow(line, nTabs)
-    if (samplesSlot >= 0) {
+    if (layout.infoSlot >= 0) out(layout.infoSlot) = infoRow(line, nTabs)
+    if (layout.samplesSlot >= 0) {
       this.line = line
       this.nTabs = nTabs
       this.nCols = nCols
       keyPos = formatPositions(if (nCols > 8) colAt(line, nTabs, 8) else "")
       java.util.Arrays.fill(partsCache.asInstanceOf[Array[AnyRef]], null)
-      out(samplesSlot) = layout.samplesRow(this)
+      out(layout.samplesSlot) = layout.samplesRow(this)
       this.line = null
     }
     new GenericInternalRow(out)
@@ -242,14 +236,14 @@ class VcfParser(layout: VariantLayout, shift: Long)
         // would re-scan the whole tail for every flag-style key
         var eq = start
         while (eq < semi && s.charAt(eq) != '=') eq += 1
-        val idx = infoIndex.getOrElse(s.substring(start, eq), -1)
+        val idx = layout.infoIndex.getOrElse(s.substring(start, eq), -1)
         if (idx >= 0) {
           // bare key: a Flag is present; a typed key with no value
           // carries nothing and stays null
           if (eq == semi) {
-            if (infoTargets(idx) == VariantValues.AsFlag) arr(idx) = true
-          } else arr(idx) = layout.info(idx,
-            VariantValues.fromText(s.substring(eq + 1, semi), infoTargets(idx)))
+            if (layout.infoTargets(idx) == VariantValues.AsFlag) arr(idx) = true
+          } else arr(idx) = layout.info(idx, VariantValues.fromText(
+            s.substring(eq + 1, semi), layout.infoTargets(idx)))
         }
         start = semi + 1
       }
