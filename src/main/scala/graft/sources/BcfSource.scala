@@ -149,16 +149,11 @@ class BcfPartitionReader(fullSchema: StructType, pushdown: Pushdown,
   // per-sample block skip typed decoding, and un-requested INFO keys and
   // FORMAT fields are size-skipped in the codec, never boxed (region
   // residual checks use contigId/pos0/rlen, which are always decoded)
-  private val dictIdxOfName: Map[String, Int] =
-    dict.strings.zipWithIndex.collect { case (s, i) if s != null => s -> i }.toMap
-  private def byDict(names: Iterable[(String, Int)]): Array[Int] = {
-    val arr = Array.fill(dict.strings.size)(-1)
-    names.foreach { case (n, i) => dictIdxOfName.get(n).foreach(arr(_) = i) }
-    arr
-  }
+  private def byDict(index: Map[String, Int]): Array[Int] =
+    dict.strings.map(n => if (n == null) -1 else index.getOrElse(n, -1)).toArray
   // dictionary index → info slot / layout FORMAT key, -1 when not read
   private val infoSlotByDict = byDict(layout.infoIndex)
-  private val formatKeyByDict = byDict(layout.formatKeys.zipWithIndex)
+  private val formatKeyByDict = byDict(layout.formatKeys.zipWithIndex.toMap)
   private def lookup(table: Array[Int], k: Int): Int =
     if (k >= 0 && k < table.length) table(k) else -1
   private val wantInfoKey: Int => Boolean = lookup(infoSlotByDict, _) >= 0
